@@ -64,7 +64,9 @@ for name in sorted(expected - seen):
 for n, m in ok: print("OK  ", n, m)
 for n, m in bad: print("BAD ", n, m)
 print(f"== {len(ok)} ok, {len(bad)} bad")
+sys.exit(1 if bad else 0)
 
 # Usage (replicates the driver's correctness gate locally):
 #   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/vout"
 #   python3 dev/compare_oracle.py /root/testdata/sf0.01 /tmp/vout
+# or both in one step, with the output dir cleared first: dev/oracle.sh

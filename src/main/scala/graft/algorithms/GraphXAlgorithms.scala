@@ -132,7 +132,7 @@ object GraphXAlgorithms {
     val clamped = math.min(localThreshold, 100000000L)
     val probeCap = math.min(clamped, probeBudget.toLong).toInt
     val local: Option[(Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row])] =
-      if (localThreshold < 0) None
+      if (localThreshold < 0 || !GraphAlgorithms.localRegimesEnabled(spark)) None
       else {
         val nodeProbe = g.nodes.select(col("id")).limit(probeCap + 1).collect()
         if (nodeProbe.length <= probeCap) {

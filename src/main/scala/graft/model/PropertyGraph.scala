@@ -1,5 +1,6 @@
 package graft.model
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,11 +48,45 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame, isDirected: B
   lazy val vertexCount: Long = nodes.count()
   lazy val edgeCount: Long = edges.count()
 
-  def cache(): PropertyGraph = { nodes.cache(); edges.cache(); this }
+  /**
+   * Cache both frames, each narrowed to a partition count that fits its
+   * size ([[PropertyGraph.rightSized]]). Returns a NEW graph whose frames
+   * are the cached ones: callers must use the return value, since queries
+   * built on this graph's frames do not read the cache.
+   */
+  def cache(): PropertyGraph =
+    copy(nodes = PropertyGraph.rightSized(nodes).cache(),
+      edges = PropertyGraph.rightSized(edges).cache())
+
   def unpersist(): PropertyGraph = { nodes.unpersist(); edges.unpersist(); this }
 }
 
 object PropertyGraph {
+
+  /**
+   * Narrow `df` to the partition count Spark's adaptive execution would
+   * give a shuffle of the same size, so a small resident frame is not
+   * scanned in as many near-empty tasks as its source had file splits.
+   * The target partition size is AQE's rule, `max(minPartitionSize,
+   * min(advisoryPartitionSizeInBytes, size / defaultParallelism))`,
+   * read from `spark.sql.adaptive.coalescePartitions.minPartitionSize`
+   * and `spark.sql.adaptive.advisoryPartitionSizeInBytes`; the size is
+   * the optimizer's estimate. `coalesce` never adds partitions and never
+   * shuffles, so large frames keep their partitioning, and a frame with
+   * unknown stats (estimated at `spark.sql.defaultSizeInBytes`) is
+   * returned as is.
+   */
+  private[graft] def rightSized(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    def bytes(key: String) = BigInt(JavaUtils.byteStringAsBytes(spark.conf.get(key)))
+    def ceilDiv(a: BigInt, b: BigInt) = (a + b - 1) / b
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val target = bytes("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+      .max(bytes("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        .min(ceilDiv(size, spark.sparkContext.defaultParallelism)))
+    val n = ceilDiv(size, target).max(1)
+    if (n.isValidInt) df.coalesce(n.toInt) else df
+  }
 
   /** Emit both orientations of every edge, keeping the shared eid. */
   def bothOrientations(edges: DataFrame): DataFrame = {

@@ -1454,8 +1454,10 @@ object Sparql {
     // 200k default, and the global local-regime kill-switch disables the
     // probe job entirely; localThreshold = 0 forces the distributed
     // fixpoint (the parity-spec convention of the batch regimes)
-    val kleeneLt = math.min(triples.sparkSession.conf
-      .getOption("spark.graft.kleene.localThreshold").map(_.toLong)
+    val kleeneKey = "spark.graft.kleene.localThreshold"
+    val kleeneLt = math.min(triples.sparkSession.conf.getOption(kleeneKey)
+      .map(v => v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$kleeneKey should be a whole number of rows, but was '$v'")))
       .getOrElse(200000L), 100000000L)
     if (kleeneLt > 0 &&
         graft.algorithms.GraphAlgorithms.localRegimesEnabled(triples.sparkSession) &&

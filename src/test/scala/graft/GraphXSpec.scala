@@ -30,18 +30,23 @@ class GraphXSpec extends SparkSpec {
     assert(cc.select("component").distinct().count() === 1L)
   }
 
-  test("strongly connected components: cycle vs acyclic tail") {
+  /** 1→2→3→1 cycle; 3→4→5 tail: SCCs {1,2,3}, {4}, {5}. */
+  private def cycleAndTail: graft.model.PropertyGraph = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.model.PropertyGraph
-    // 1→2→3→1 cycle; 3→4→5 tail: SCCs {1,2,3}, {4}, {5}
     val raw = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("3", "4"), ("4", "5"))
       .toDF("src", "dst")
       .select(col("src"), col("dst"), lit("E").as("type"),
         map().cast("map<string,string>").as("properties"))
     val nodes = Seq("1", "2", "3", "4", "5").toDF("id")
       .select(col("id"), lit("").as("label"), map().cast("map<string,string>").as("properties"))
-    val g = PropertyGraph(nodes, PropertyGraph.withEid(raw), isDirected = true)
+    PropertyGraph(nodes, PropertyGraph.withEid(raw), isDirected = true)
+  }
+
+  test("strongly connected components: cycle vs acyclic tail") {
+    import org.apache.spark.sql.functions._
+    val g = cycleAndTail
     // both execution paths (driver Tarjan ≤ threshold, GraphX above)
     // must agree after the min-id remap
     for (thr <- Seq(10000000L, 0L)) {
@@ -56,20 +61,11 @@ class GraphXSpec extends SparkSpec {
 
   test("scc count-gate escalation: probe overflow with an explicit budget") {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
-    import graft.model.PropertyGraph
-    // same cycle+tail fixture as above; the probe-cap hook shrinks the
-    // probe so these 10 rows (5 nodes + 5 oriented edges) OVERFLOW it,
-    // exercising the count-then-collect escalation branches that a
-    // production run only reaches past 1M rows
-    val raw = Seq(("1", "2"), ("2", "3"), ("3", "1"), ("3", "4"), ("4", "5"))
-      .toDF("src", "dst")
-      .select(col("src"), col("dst"), lit("E").as("type"),
-        map().cast("map<string,string>").as("properties"))
-    val nodes = Seq("1", "2", "3", "4", "5").toDF("id")
-      .select(col("id"), lit("").as("label"),
-        map().cast("map<string,string>").as("properties"))
-    val g = PropertyGraph(nodes, PropertyGraph.withEid(raw), isDirected = true)
+    // the probe-cap hook shrinks the probe so the fixture's 10 rows (5
+    // nodes + 5 oriented edges) OVERFLOW it, exercising the
+    // count-then-collect escalation branches that a production run only
+    // reaches past 1M rows
+    val g = cycleAndTail
     val want = Map("1" -> "1", "2" -> "1", "3" -> "1", "4" -> "4", "5" -> "5")
     def run(thr: Long, probe: Int): Map[String, String] = {
       val scc = GraphXAlgorithms
@@ -89,6 +85,48 @@ class GraphXSpec extends SparkSpec {
     // sentinel budget: hard 100M clamp keeps the gate well-defined and
     // the tiny graph still resolves locally, exactly
     assert(run(thr = Long.MaxValue, probe = 2) === want)
+  }
+
+  test("scc honours the localRegimes kill-switch: no probe or collect job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    // shuffled, so a probe collect launches a job (a local relation needs none)
+    val g = {
+      val f = cycleAndTail
+      f.copy(nodes = f.nodes.repartition(2), edges = f.edges.repartition(2))
+    }
+    def components(scc: org.apache.spark.sql.DataFrame): Set[Set[String]] =
+      scc.collect().groupBy(_.get(1)).values.map(_.map(_.getString(0)).toSet).toSet
+    // jobs the call itself launches, before its result is read; the
+    // marker job drains the listener queue, which delivers in order
+    val sc = spark.sparkContext
+    def jobsDuring(body: => org.apache.spark.sql.DataFrame) = {
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          groups.add(Option(js.properties.getProperty("spark.jobGroup.id")).getOrElse(""))
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("scc-call", "one scc call")
+        val result = try body finally sc.clearJobGroup()
+        sc.setJobGroup("scc-marker", "listener drain")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        eventually(timeout(30.seconds)) { assert(groups.contains("scc-marker")) }
+        (groups.toArray.count(_ == "scc-call"), result)
+      } finally sc.removeSparkListener(listener)
+    }
+    val (_, local) = jobsDuring(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5))
+    // a negative threshold skips the gate: the GraphX path's own jobs only
+    val (distJobs, _) = jobsDuring(
+      GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5, localThreshold = -1L))
+    spark.conf.set("spark.graft.localRegimes", "off")
+    val (offJobs, off) = try jobsDuring(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5))
+      finally spark.conf.unset("spark.graft.localRegimes")
+    assert(offJobs === distJobs)
+    assert(components(off) === components(local))
+    assert(components(off) === Set(Set("1", "2", "3"), Set("4"), Set("5")))
   }
 
   test("tarjan scc: self-loops, long chains, nested cycles") {

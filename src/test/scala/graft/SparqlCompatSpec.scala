@@ -688,4 +688,15 @@ class SparqlCompatSpec extends SparkSpec {
       finally spark.conf.unset("spark.graft.localRegimes")
     }
   }
+
+  test("Kleene localThreshold: a malformed value fails with a message naming the key") {
+    val t = triples(("a","knows","b"),("b","knows","c"))
+    spark.conf.set("spark.graft.kleene.localThreshold", "200k")
+    val e = try intercept[IllegalArgumentException] {
+      rowsOf(Sparql.run(t, "SELECT ?y WHERE { <a> <knows>+ ?y }"))
+    } finally spark.conf.unset("spark.graft.kleene.localThreshold")
+    assert(!e.isInstanceOf[NumberFormatException])
+    assert(e.getMessage.contains("spark.graft.kleene.localThreshold"))
+    assert(e.getMessage.contains("200k"))
+  }
 }
