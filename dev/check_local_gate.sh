@@ -1,0 +1,51 @@
+#!/usr/bin/env bash
+# Keep the local-regime policy in one place. Fails (exit 1) when
+# src/main/scala has
+#   - a call to localRegimesEnabled( outside GraphAlgorithms.localRowCap,
+#   - more than one `def intern(` (the shared GraphAlgorithms.Interner),
+#   - a localThreshold parameter outside StreamingTriangles,
+#   - the removed spark.graft.kleene.localThreshold conf.
+#
+#   dev/check_local_gate.sh
+set -euo pipefail
+cd "$(dirname "$0")/.."
+src=src/main/scala
+fail=0
+
+# every localRegimesEnabled( that is not its own def must sit in the body
+# of `def localRowCap` (the last def opened above the call)
+calls=$(find "$src" -name '*.scala' -print0 | xargs -0 awk '
+  FNR == 1 { cur = "" }
+  /def [A-Za-z_]+/ { match($0, /def [A-Za-z_]+/); cur = substr($0, RSTART + 4, RLENGTH - 4) }
+  /localRegimesEnabled\(/ && !/def localRegimesEnabled/ && cur != "localRowCap" {
+    print FILENAME ":" FNR ": " $0 }')
+if [ -n "$calls" ]; then
+  echo "localRegimesEnabled( read outside GraphAlgorithms.localRowCap:"
+  echo "$calls"
+  fail=1
+fi
+
+interns=$(grep -rn --include='*.scala' 'def intern(' "$src" || true)
+if [ "$(printf '%s' "$interns" | grep -c .)" -gt 1 ]; then
+  echo "more than one interner (use GraphAlgorithms.Interner):"
+  echo "$interns"
+  fail=1
+fi
+
+knobs=$(grep -rnE --include='*.scala' 'localThreshold[[:space:]]*:' "$src" \
+  | grep -v '/streaming/StreamingTriangles.scala:' || true)
+if [ -n "$knobs" ]; then
+  echo "localThreshold parameter outside StreamingTriangles:"
+  echo "$knobs"
+  fail=1
+fi
+
+confs=$(grep -rn --include='*.scala' 'spark\.graft\.kleene\.localThreshold' "$src" || true)
+if [ -n "$confs" ]; then
+  echo "removed conf spark.graft.kleene.localThreshold is back:"
+  echo "$confs"
+  fail=1
+fi
+
+if [ "$fail" -eq 0 ]; then echo "local gate: ok"; fi
+exit "$fail"

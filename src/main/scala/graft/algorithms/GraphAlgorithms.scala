@@ -40,61 +40,54 @@ object GraphAlgorithms {
       ids: scala.collection.mutable.ArrayBuffer[Any],
       idx: scala.collection.mutable.HashMap[Any, Int])
 
-  /** Probe-collect: `limit(threshold+1).collect()` gates and loads in the
-    * SAME single pass — None means over threshold (take the distributed
-    * path; the probe work was bounded by the limit), Some means every raw
-    * row is already on the driver. This beats a separate count job (which
-    * recomputes an unpersisted upstream once more for the collect) and
-    * beats persist→count→collect (cache write + columnar decode both
-    * measured slower than the straight collect). */
-  /** Driver-safe local-regime gate (the SCC probe-cap pattern): up to
-    * `probeCap` rows, one limit(probe+1).collect() both GATES and LOADS
-    * — a huge frame ships at most ~probeCap rows to the driver before
-    * the distributed path is chosen. Only when the caller EXPLICITLY
-    * budgeted beyond the probe cap does an overflowing probe escalate
-    * to a count-only aggregate (no row transfer), and the full collect
-    * happens only after the count proves the frame is within that
-    * budget — itself hard-clamped at 100M rows, the sanity ceiling for
-    * a driver-side adjacency (a Long.MaxValue "sentinel" threshold can
-    * therefore never trigger a multi-billion-row collect). */
-  /** Global kill-switch for every adaptive local regime (r18 verdict
-    * item 7). The raw limit-probe pre-gates and gated collects are
-    * per-query jobs that a deployment whose data is always above the
-    * gates pays without ever entering a local regime — at extreme
-    * partition counts even a LocalLimit probe launches a task wave.
-    * Set session conf `spark.graft.localRegimes=off` (or env
-    * `SPARK_GRAFT_LOCAL_REGIMES=off`) to disable every probe and force
-    * the distributed path everywhere in ONE place. Default on — the
-    * local-mode / bench posture, where the probes are cheap and the
-    * local regimes win (r18 measurements). Checked before any probe
-    * job is launched, so "off" removes the probes entirely. */
-  private[graft] def localRegimesEnabled(spark: org.apache.spark.sql.SparkSession): Boolean = {
+  /** The local-regime policy, the ONE place the path choice is made:
+    * the number of rows a regime may bring to the driver, or None for
+    * the distributed path. Each regime passes its fixed row threshold; a
+    * non-positive threshold means "never local", and every threshold is
+    * hard-clamped at 100M rows, the sanity ceiling for a driver-side
+    * adjacency.
+    *
+    * Global kill-switch (r18 verdict item 7): session conf
+    * `spark.graft.localRegimes=off` (or env `SPARK_GRAFT_LOCAL_REGIMES=off`)
+    * returns None for every regime, so the gates launch no probe or
+    * count job at all and every operator takes its distributed path —
+    * the posture for a deployment whose data is always above the gates,
+    * and how the parity specs force the distributed path. Default on:
+    * the local-mode / bench posture, where the probes are cheap and the
+    * local regimes win (r18 measurements). */
+  private[graft] def localRowCap(spark: SparkSession, threshold: Long): Option[Long] =
+    if (threshold > 0 && localRegimesEnabled(spark)) Some(math.min(threshold, 100000000L))
+    else None
+
+  private def localRegimesEnabled(spark: SparkSession): Boolean = {
     val v = spark.conf.getOption("spark.graft.localRegimes")
       .orElse(sys.env.get("SPARK_GRAFT_LOCAL_REGIMES"))
     v.forall(s => !(s.equalsIgnoreCase("off") || s.equalsIgnoreCase("false") || s == "0"))
   }
 
-  private[graft] def collectInternedGated(raw: DataFrame, canonical: Boolean,
-      threshold: Long, probeCap: Int = 1000000): Option[InternedEdges] = {
-    if (!localRegimesEnabled(raw.sparkSession)) return None
-    val cap = math.min(threshold, 100000000L)
-    if (cap < 0) return None
-    val probe = math.min(cap, probeCap.toLong).toInt
-    val rows = raw.limit(probe + 1).collect()
-    if (rows.length <= probe) return Some(collectInterned(rows, canonical))
-    if (cap <= probe) return None
-    if (raw.count() > cap) None
-    else Some(collectInterned(raw.collect(), canonical))
-  }
+  /** Count gate: true iff [[localRowCap]] admits `df` by its row count —
+    * one count job (`bounded`: an early-out `limit(cap+1)` count, so a
+    * huge frame is never fully counted), none when the switch is off. */
+  private[graft] def countGated(df: DataFrame, threshold: Long,
+      bounded: Boolean = false): Boolean =
+    localRowCap(df.sparkSession, threshold).exists { cap =>
+      (if (bounded) df.limit(cap.toInt + 1) else df).count() <= cap
+    }
 
-  /** [[collectInternedGated]]'s probe/count-gate for RAW rows — no pair
-    * interning or dedup, for operators where multi-edges carry meaning
-    * (weighted PageRank). Same probe-cap and 100M hard clamp. */
+  /** Probe-collect gate: up to `probeCap` rows, one
+    * `limit(probe+1).collect()` both GATES and LOADS in the same single
+    * pass — None means over threshold (take the distributed path; the probe
+    * work was bounded by the limit), Some means every raw row is already
+    * on the driver. This beats a separate count job (which recomputes an
+    * unpersisted upstream once more for the collect) and beats
+    * persist→count→collect (cache write + columnar decode both measured
+    * slower than the straight collect). Only a threshold beyond the probe
+    * cap lets an overflowing probe escalate to a count-only aggregate (no
+    * row transfer); the full collect happens only after the count proves
+    * the frame is within the threshold. */
   private[graft] def collectRowsGated(raw: DataFrame, threshold: Long,
       probeCap: Int = 1000000): Option[Array[org.apache.spark.sql.Row]] = {
-    if (!localRegimesEnabled(raw.sparkSession)) return None
-    val cap = math.min(threshold, 100000000L)
-    if (cap < 0) return None
+    val cap = localRowCap(raw.sparkSession, threshold).getOrElse(return None)
     val probe = math.min(cap, probeCap.toLong).toInt
     val rows = raw.limit(probe + 1).collect()
     if (rows.length <= probe) return Some(rows)
@@ -102,22 +95,35 @@ object GraphAlgorithms {
     if (raw.count() > cap) None else Some(raw.collect())
   }
 
-  private[graft] def collectInterned(rows: Array[org.apache.spark.sql.Row],
-      canonical: Boolean): InternedEdges = {
+  /** [[collectRowsGated]] with the rows interned to pairs (see
+    * [[InternedEdges]]). */
+  private[graft] def collectInternedGated(raw: DataFrame, canonical: Boolean,
+      threshold: Long, probeCap: Int = 1000000): Option[InternedEdges] =
+    collectRowsGated(raw, threshold, probeCap).map(collectInterned(_, canonical))
+
+  /** First-seen id interner shared by every local regime: the i-th
+    * distinct id met gets index i, so a replay's output order is the
+    * collected row order. */
+  private[graft] final class Interner {
     val idx = scala.collection.mutable.HashMap.empty[Any, Int]
     val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
     def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+  }
+
+  private[graft] def collectInterned(rows: Array[org.apache.spark.sql.Row],
+      canonical: Boolean): InternedEdges = {
+    val in = new Interner
     val seen = new java.util.HashSet[Long]()
     val out = new scala.collection.mutable.ArrayBuffer[(Int, Int)]()
     rows.foreach { r =>
-      val s0 = intern(r.get(0)); val d0 = intern(r.get(1))
+      val s0 = in.intern(r.get(0)); val d0 = in.intern(r.get(1))
       if (s0 != d0) {
         val (s, d) = if (canonical && s0 > d0) (d0, s0) else (s0, d0)
         val k = (s.toLong << 32) | (d.toLong & 0xffffffffL)
         if (seen.add(k)) out += ((s, d))
       }
     }
-    InternedEdges(out.toArray, ids, idx)
+    InternedEdges(out.toArray, in.ids, in.idx)
   }
 
   /**
@@ -143,22 +149,19 @@ object GraphAlgorithms {
     * minhash-signature lesson, measured 3× the whole scan+orient cost).
     * localCheckpoint materializes it once (row-store blocks, cleaned by
     * the ContextCleaner when the frame is GC'd); the returned 3-join
-    * frame itself stays lazy/composable. */
-  def triangleCountDF(edges: DataFrame): DataFrame =
-    triangleCountDF(edges, 10000000L)
-
-  /** Adaptive (the kCore/closeness/LPA pattern): ≤ `localThreshold`
-    * canonical edges count driver-side by sorted-adjacency intersection
-    * over the SAME low-degree→high-degree orientation — the three-way
-    * self-join's shuffles are the dominant term on small graphs. Parity
-    * spec-pinned via `localThreshold = 0` plus the powergrid golden 651. */
-  def triangleCountDF(edges: DataFrame, localThreshold: Long): DataFrame = {
+    * frame itself stays lazy/composable.
+    *
+    * Adaptive (the kCore/closeness/LPA pattern): ≤ 10M raw edges count
+    * driver-side by sorted-adjacency intersection over the SAME
+    * low-degree→high-degree orientation — the three-way self-join's
+    * shuffles are the dominant term on small graphs. */
+  def triangleCountDF(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     val raw = edges.select(col("src"), col("dst"))
     // local regime gates on the RAW count (upper bound on the canonical
     // count); canonicalization + dedup fuse into the driver-side intern
     // pass — see collectInternedGated
-    collectInternedGated(raw, canonical = true, localThreshold).foreach { in =>
+    collectInternedGated(raw, canonical = true, 10000000L).foreach { in =>
       import spark.implicits._
       return Seq(localTriangleCount(in.pairs)).toDF("triangles")
     }
@@ -310,13 +313,7 @@ object GraphAlgorithms {
    */
   def weightedPageRank(edges: DataFrame, alphaNum: Int = 85,
                        alphaDen: Int = 100, iterations: Int = 10,
-                       checkpointInterval: Int = 6,
-                       // 2M, the convention the r18 regimes standardized
-                       // on (r18 verdict item 7): a 10M-row default
-                       // collect of 3-long rows is hundreds of MB of
-                       // driver heap — callers with bigger drivers can
-                       // still raise it explicitly
-                       localThreshold: Long = 2000000L): DataFrame = {
+                       checkpointInterval: Int = 6): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(alphaDen > 0 && alphaNum >= 0 && alphaNum <= alphaDen,
       s"need 0 <= alphaNum <= alphaDen: $alphaNum/$alphaDen")
@@ -327,9 +324,10 @@ object GraphAlgorithms {
     // arithmetic — per edge r·w DIV wout, per vertex base + (αnum·Σ)
     // DIV αden — so a ≤threshold WEIGHTED edge list (multi-edges kept,
     // hence the row gate, not the interning pair-dedup one) replays
-    // exactly on the driver. Distributed parity spec-pinned via
-    // localThreshold = 0.
-    collectRowsGated(e, localThreshold).foreach { rows =>
+    // exactly on the driver. 2M rows, the convention the r18 regimes
+    // standardized on (r18 verdict item 7): 10M rows of 3 longs would be
+    // hundreds of MB of driver heap.
+    collectRowsGated(e, 2000000L).foreach { rows =>
       return localWeightedPageRank(rows, edges.schema("src").dataType,
         alphaNum, alphaDen, iterations, edges.sparkSession)
     }
@@ -406,20 +404,18 @@ object GraphAlgorithms {
   private def localWeightedPageRank(rows: Array[org.apache.spark.sql.Row],
       idType: org.apache.spark.sql.types.DataType, alphaNum: Int,
       alphaDen: Int, iterations: Int, spark: SparkSession): DataFrame = {
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val in = new Interner
     val m = rows.length
     val srcs = new Array[Int](m); val dsts = new Array[Int](m)
     val ws = new Array[Long](m)
     var i = 0
     while (i < m) {
       val row = rows(i)
-      srcs(i) = intern(row.get(0)); dsts(i) = intern(row.get(1))
+      srcs(i) = in.intern(row.get(0)); dsts(i) = in.intern(row.get(1))
       ws(i) = row.getLong(2)
       i += 1
     }
-    val n = ids.length
+    val n = in.ids.length
     val wout = new Array[Long](n)
     i = 0; while (i < m) { wout(srcs(i)) += ws(i); i += 1 }
     val base = 1000000L * (alphaDen - alphaNum) / alphaDen
@@ -438,7 +434,7 @@ object GraphAlgorithms {
       rk = nr
       it += 1
     }
-    rankFrame(spark, ids, idType, rk, "rank_micro", "rank")
+    rankFrame(spark, in.ids, idType, rk, "rank_micro", "rank")
   }
 
   /**
@@ -460,8 +456,7 @@ object GraphAlgorithms {
    * kept flat by checkpointing every `checkpointInterval` iterations.
    */
   def katz(edges: DataFrame, alphaNum: Int = 1, alphaDen: Int = 10,
-           iterations: Int = 6, checkpointInterval: Int = 6,
-           localThreshold: Long = 10000000L): DataFrame = {
+           iterations: Int = 6, checkpointInterval: Int = 6): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(alphaDen > 0 && alphaNum >= 0 && alphaNum < alphaDen,
       s"need 0 <= alphaNum < alphaDen: $alphaNum/$alphaDen")
@@ -469,10 +464,10 @@ object GraphAlgorithms {
     // arithmetic — β + (αnum·Σ) DIV αden — so a ≤threshold edge list
     // replays exactly on driver adjacency arrays, skipping iterations ×
     // (join + agg + join) shuffle-stage latency that dominates small
-    // graphs. Distributed parity is spec-pinned via localThreshold = 0.
+    // graphs.
     collectInternedGated(edges.select(col("src"), col("dst"))
         .where(col("src") =!= col("dst")), canonical = false,
-        localThreshold).foreach { in =>
+        10000000L).foreach { in =>
       return localKatz(in, edges.schema("src").dataType,
         alphaNum, alphaDen, iterations, edges.sparkSession)
     }
@@ -517,21 +512,20 @@ object GraphAlgorithms {
    * Returns (id, dist) for every vertex reached within `maxHops`.
    */
   def shortestPaths(edges: DataFrame, sourceId: String, maxHops: Int = 10,
-                    undirected: Boolean = true,
-                    localThreshold: Long = 10000000L): DataFrame = {
+                    undirected: Boolean = true): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     // Adaptive (the closeness/kCore/LPA pattern): string-id graphs below
     // the threshold BFS on driver adjacency arrays — each distributed hop
-    // costs a join + anti-join of fixed job latency. Parity spec-pinned.
-    // The gate counts the RAW base orientation (one cheap scan); the
-    // reverse direction for undirected mode is added in memory.
+    // costs a join + anti-join of fixed job latency. The 10M-row gate
+    // counts the RAW base orientation (one cheap scan); the reverse
+    // direction for undirected mode is added in memory.
     if (e0.schema("u").dataType == org.apache.spark.sql.types.StringType) {
       // canonical dedup for undirected (one pair per unordered edge,
       // reverse added in memory); ordered dedup when directed
       collectInternedGated(e0, canonical = undirected,
-          localThreshold / (if (undirected) 2 else 1)).foreach { in =>
+          10000000L / (if (undirected) 2 else 1)).foreach { in =>
         return localBfs(in, undirected, sourceId, maxHops, spark)
       }
     }
@@ -653,7 +647,7 @@ object GraphAlgorithms {
    *
    * Adaptive execution (the [[GraphXAlgorithms.stronglyConnectedComponents]]
    * / [[graft.pipeline.Dedup.nearDupClusters]] pattern): up to
-   * `localThreshold` oriented edges the BFS sweep runs driver-side over an
+   * 10M oriented edges the BFS sweep runs driver-side over an
    * array adjacency — each distributed hop costs several Spark jobs of
    * fixed scheduling latency regardless of data volume, which dominates on
    * small graphs. Identical semantics (same hop bound, same fixed-order
@@ -661,8 +655,7 @@ object GraphAlgorithms {
    */
   def closenessCentrality(edges: DataFrame, maxHops: Int = 10,
                           undirected: Boolean = true,
-                          sources: Option[DataFrame] = None,
-                          localThreshold: Long = 10000000L): DataFrame = {
+                          sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
@@ -670,7 +663,7 @@ object GraphAlgorithms {
       .where(col("u") =!= col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val eCnt = e.count()
-    if (eCnt <= localThreshold) {
+    if (localRowCap(edges.sparkSession, 10000000L).exists(eCnt <= _)) {
       val out = localCloseness(e, maxHops, sources)
       e.unpersist()
       return out
@@ -729,20 +722,18 @@ object GraphAlgorithms {
     val spark = e.sparkSession
     val dt = e.schema("u").dataType
     val edgeRows = e.collect()
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val in = new Interner
     val adjBuf = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[Int]]
     edgeRows.foreach { r =>
-      val (a, b) = (intern(r.get(0)), intern(r.get(1)))
+      val (a, b) = (in.intern(r.get(0)), in.intern(r.get(1)))
       while (adjBuf.length <= math.max(a, b)) adjBuf += scala.collection.mutable.ArrayBuffer.empty[Int]
       adjBuf(a) += b
     }
-    val n = ids.length
+    val n = in.ids.length
     val adj = adjBuf.map(_.toArray).toArray
     val srcList: Seq[Any] = sources match {
       case Some(df) => df.select(col("id")).collect().map(_.get(0)).toSeq
-      case None => ids.toSeq
+      case None => in.ids.toSeq
     }
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -753,7 +744,7 @@ object GraphAlgorithms {
       var reached = 0L
       var sumDist = 0L
       val perDist = new Array[Long](maxHops + 1)
-      idx.get(src).foreach { s0 =>
+      in.idx.get(src).foreach { s0 =>
         stamp += 1
         var head = 0; var tail = 0
         queue(tail) = s0; tail += 1; seen(s0) = stamp
@@ -814,14 +805,12 @@ object GraphAlgorithms {
    *
    * δ sums are data-ordered doubles, so the result contract is
    * round-to-4 (the pageRank precedent: ~1e-13 cross-engine drift vs a
-   * 5e-5 rounding margin). Adaptive: ≤ `localThreshold` oriented edges →
-   * driver-side Brandes sweep, parity spec-asserted via
-   * `localThreshold = 0`.
+   * 5e-5 rounding margin). Adaptive: ≤ 10M oriented edges →
+   * driver-side Brandes sweep.
    */
   def betweennessCentrality(edges: DataFrame, maxHops: Int = 6,
                             undirected: Boolean = true,
-                            sources: Option[DataFrame] = None,
-                            localThreshold: Long = 10000000L): DataFrame = {
+                            sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
@@ -829,7 +818,7 @@ object GraphAlgorithms {
       .where(col("u") =!= col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val eCnt = e.count()
-    if (eCnt <= localThreshold) {
+    if (localRowCap(edges.sparkSession, 10000000L).exists(eCnt <= _)) {
       val out = localBetweenness(e, maxHops, sources)
       e.unpersist()
       return out
@@ -920,17 +909,15 @@ object GraphAlgorithms {
                                sources: Option[DataFrame]): DataFrame = {
     val spark = e.sparkSession
     val dt = e.schema("u").dataType
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
-    val pairs = e.collect().map(r => (intern(r.get(0)), intern(r.get(1))))
-    val n = ids.length
+    val in = new Interner
+    val pairs = e.collect().map(r => (in.intern(r.get(0)), in.intern(r.get(1))))
+    val n = in.ids.length
     val outAdj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
     val inAdj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
     pairs.foreach { case (u, v) => outAdj(u) += v; inAdj(v) += u }
     val srcList: Seq[Int] = sources match {
       case Some(df) => df.select(col("id")).collect().map(_.get(0))
-        .flatMap(idx.get).toSeq
+        .flatMap(in.idx.get).toSeq
       case None => 0 until n
     }
     val bc = new Array[Double](n)
@@ -967,7 +954,7 @@ object GraphAlgorithms {
     }
     def round4(x: Double): Double =
       BigDecimal(x).setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    val rows = (0 until n).map(i => org.apache.spark.sql.Row(ids(i), round4(bc(i))))
+    val rows = (0 until n).map(i => org.apache.spark.sql.Row(in.ids(i), round4(bc(i))))
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("id", dt), StructField("betweenness", DoubleType)))
@@ -994,8 +981,7 @@ object GraphAlgorithms {
    * never exceeds |starts| rows, localCheckpointed per step.
    */
   def randomWalks(edges: DataFrame, starts: DataFrame, steps: Int,
-                  undirected: Boolean = true,
-                  localThreshold: Long = 10000000L): DataFrame = {
+                  undirected: Boolean = true): DataFrame = {
     require(steps >= 1, s"steps must be >= 1: $steps")
     import org.apache.spark.sql.expressions.Window
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
@@ -1011,7 +997,7 @@ object GraphAlgorithms {
     })
     if (integralIds) {
       collectInternedGated(e0.where(col("u") =!= col("v")),
-          canonical = undirected, localThreshold / (if (undirected) 2 else 1)).foreach { in =>
+          canonical = undirected, 10000000L / (if (undirected) 2 else 1)).foreach { in =>
         // starts probe-cap: ≤1M walk rows replay locally; a bigger
         // start set stays distributed (ships at most 1M+1 rows here)
         val startRows = starts.select(col("wid").cast("long").as("wid"), col("id"))
@@ -1302,8 +1288,7 @@ object GraphAlgorithms {
    * localCheckpointed per step to bound plan depth.
    */
   def node2vecWalks(edges: DataFrame, starts: DataFrame, steps: Int,
-                    p: Int = 1, q: Int = 2, undirected: Boolean = true,
-                    localThreshold: Long = 10000000L): DataFrame = {
+                    p: Int = 1, q: Int = 2, undirected: Boolean = true): DataFrame = {
     require(steps >= 1, s"steps must be >= 1: $steps")
     require(p >= 1 && q >= 1, s"p and q must be positive integers: p=$p q=$q")
     import org.apache.spark.sql.expressions.Window
@@ -1317,7 +1302,7 @@ object GraphAlgorithms {
     })
     if (integralIds) {
       collectInternedGated(e0.where(col("u") =!= col("v")),
-          canonical = undirected, localThreshold / (if (undirected) 2 else 1)).foreach { in =>
+          canonical = undirected, 10000000L / (if (undirected) 2 else 1)).foreach { in =>
         // starts probe-cap: ≤1M walk rows replay locally (see randomWalks)
         val startRows = starts.select(col("wid").cast("long").as("wid"), col("id"))
           .limit(1000001).collect()
@@ -1461,18 +1446,16 @@ object GraphAlgorithms {
    * anti-joins, all localCheckpointed — O(1) plan depth per round, and
    * the live set only shrinks.
    */
-  def maximalIndependentSet(edges: DataFrame, rounds: Int = 20,
-                            localThreshold: Long = 10000000L): DataFrame = {
+  def maximalIndependentSet(edges: DataFrame, rounds: Int = 20): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     val both = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
       .where(col("u") =!= col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Adaptive (the kCore/kTruss/HITS pattern): each distributed round
-    // costs several fixed-latency jobs; below the threshold the
+    // costs several fixed-latency jobs; below 10M oriented edges the
     // synchronous rounds run driver-side with identical semantics
-    // (parity spec-asserted via localThreshold = 0)
-    if (both.count() <= localThreshold) {
+    if (countGated(both, 10000000L)) {
       val out = localMis(both, rounds)
       both.unpersist()
       return out
@@ -1487,10 +1470,7 @@ object GraphAlgorithms {
     var done = false
     while (r < rounds && !done) {
       r += 1
-      def prio(c: Column): Column = pmod(
-        lit(1103515245L) * (c.cast("long") * lit(1000003L) + lit(r.toLong) * lit(101L))
-          + lit(12345L), lit(2147483647L))
-      val pri = live.select(col("id"), prio(col("id")).as("p"))
+      val pri = live.select(col("id"), lcgPriority(col("id"), r * 101L).as("p"))
       // ties break on the BIGINT id (matching the LCG's numeric domain,
       // the local path, and the oracle) — never on raw string order
       val minN = liveE
@@ -1523,6 +1503,23 @@ object GraphAlgorithms {
     mis
   }
 
+  /** The vertex priority LCG of [[maximalIndependentSet]] and
+    * [[jpColoring]], floorMod(1103515245·(id·1000003 + salt) + 12345,
+    * 2³¹−1) under Java's wrapping Long arithmetic — the local replays'
+    * expression — for every BIGINT id. Evaluated exactly in
+    * DECIMAL(38,0) and wrapped to 64 bits once (wrapping is a ring map
+    * mod 2⁶⁴, so one wrap equals the step-wise ones); plain BIGINT
+    * arithmetic would raise an ANSI overflow for ids past ~8k. */
+  private def lcgPriority(id: Column, salt: Long): Column = {
+    val two63 = BigDecimal(2).pow(63)
+    val exact = lit(BigDecimal(1103515245L)) *
+      (id.cast("long").cast("decimal(20,0)") * lit(BigDecimal(1000003L)) + lit(BigDecimal(salt))) +
+      lit(BigDecimal(12345L))
+    val m64 = pmod(exact, lit(two63 * 2))
+    pmod(when(m64 >= lit(two63), m64 - lit(two63 * 2)).otherwise(m64),
+      lit(BigDecimal(2147483647L))).cast("long")
+  }
+
   /** Driver-side Luby rounds for [[maximalIndependentSet]]'s small
     * regime — identical synchronous semantics over interned arrays.
     * Ids must cast to Long (the priority LCG input), matching the
@@ -1530,12 +1527,10 @@ object GraphAlgorithms {
   private def localMis(both: DataFrame, rounds: Int): DataFrame = {
     val spark = both.sparkSession
     val dt = both.schema("u").dataType
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val in = new Interner
     val pairs = both.selectExpr("u", "v", "CAST(u AS BIGINT) AS ul")
-      .collect().map(r => (intern(r.get(0)), intern(r.get(1)), r.getLong(2)))
-    val n = ids.length
+      .collect().map(r => (in.intern(r.get(0)), in.intern(r.get(1)), r.getLong(2)))
+    val n = in.ids.length
     val num = new Array[Long](n)
     pairs.foreach { case (a, _, ul) => num(a) = ul }
     val nbrs = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
@@ -1555,7 +1550,7 @@ object GraphAlgorithms {
         }
       }
       winners.foreach { i =>
-        out += ((ids(i), r))
+        out += ((in.ids(i), r))
         alive(i) = false; liveCount -= 1
         nbrs(i).foreach { j => if (alive(j)) { alive(j) = false; liveCount -= 1 } }
       }
@@ -1586,29 +1581,24 @@ object GraphAlgorithms {
    * ready), one join of ready vertices against colored neighbors + a
    * grouped color-set, and two anti/semi-joins to shrink the live set —
    * all localCheckpointed, O(1) plan depth per round. Below
-   * `localThreshold` edges the identical synchronous semantics run
-   * driver-side (the adaptive kCore/HITS/MIS pattern; parity
-   * spec-asserted via localThreshold = 0).
+   * 10M oriented edges the identical synchronous semantics run
+   * driver-side (the adaptive kCore/HITS/MIS pattern).
    */
-  def jpColoring(edges: DataFrame, rounds: Int = 30,
-                 localThreshold: Long = 10000000L): DataFrame = {
+  def jpColoring(edges: DataFrame, rounds: Int = 30): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     val both = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
       .where(col("u") =!= col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (both.count() <= localThreshold) {
+    if (countGated(both, 10000000L)) {
       val out = localJp(both, rounds)
       both.unpersist()
       return out
     }
     val allE = both.localCheckpoint(true)
     both.unpersist()
-    def prio(c: Column): Column = pmod(
-      lit(1103515245L) * (c.cast("long") * lit(1000003L) + lit(101L))
-        + lit(12345L), lit(2147483647L))
     var live = allE.select(col("u").as("id")).distinct()
-      .select(col("id"), prio(col("id")).as("p")).localCheckpoint(true)
+      .select(col("id"), lcgPriority(col("id"), 101L).as("p")).localCheckpoint(true)
     var liveE = allE
     var colored = live.limit(0).select(col("id"), lit(0).as("color"))
       .localCheckpoint(true)
@@ -1658,12 +1648,10 @@ object GraphAlgorithms {
   private def localJp(both: DataFrame, rounds: Int): DataFrame = {
     val spark = both.sparkSession
     val dt = both.schema("u").dataType
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val in = new Interner
     val pairs = both.selectExpr("u", "v", "CAST(u AS BIGINT) AS ul")
-      .collect().map(r => (intern(r.get(0)), intern(r.get(1)), r.getLong(2)))
-    val n = ids.length
+      .collect().map(r => (in.intern(r.get(0)), in.intern(r.get(1)), r.getLong(2)))
+    val n = in.ids.length
     val num = new Array[Long](n)
     pairs.foreach { case (a, _, ul) => num(a) = ul }
     val nbrs = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
@@ -1688,7 +1676,7 @@ object GraphAlgorithms {
         var c = 0
         while (used(c)) c += 1
         color(i) = c
-        out += ((ids(i), c, r))
+        out += ((in.ids(i), c, r))
         liveCount -= 1
       }
     }
@@ -1723,17 +1711,14 @@ object GraphAlgorithms {
    * edge list (edges explode to exactly 2 endpoint rows) + one
    * two-sided equi-join back + two anti-joins, all localCheckpointed —
    * O(1) plan depth per round, and the live edge set only shrinks.
-   * Below `localThreshold` edges the identical synchronous semantics
-   * run driver-side (the adaptive kCore/HITS/MIS pattern; parity
-   * spec-asserted via localThreshold = 0).
+   * Below 10M canonical edges the identical synchronous semantics
+   * run driver-side (the adaptive kCore/HITS/MIS pattern).
    */
   def maximalMatching(edges: DataFrame, rounds: Int = 20,
-                      localThreshold: Long = 10000000L,
                       weightCol: Option[String] = None): DataFrame = {
     val canon = canonicalSimpleEdges(edges, weightCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val out = matchingOnCanon(canon, rounds, localThreshold,
-      weighted = weightCol.isDefined)
+    val out = matchingOnCanon(canon, rounds, weighted = weightCol.isDefined)
     canon.unpersist() // both paths materialize eagerly (collect / localCheckpoint)
     out
   }
@@ -1782,10 +1767,9 @@ object GraphAlgorithms {
   /** [[maximalMatching]]'s adaptive dispatch over an already-canonical
     * (persisted) edge frame. */
   private def matchingOnCanon(canon: DataFrame, rounds: Int,
-                              localThreshold: Long,
                               weighted: Boolean = false): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    if (canon.count() <= localThreshold) {
+    if (countGated(canon, 10000000L)) {
       return localMatching(canon, rounds, weighted)
     }
     var liveE = canon.localCheckpoint(true)
@@ -1923,9 +1907,8 @@ object GraphAlgorithms {
    * grouped count — no iteration beyond the matching's own rounds.
    */
   def coarsenGraph(edges: DataFrame, rounds: Int = 20,
-                   localThreshold: Long = 10000000L,
                    weightCol: Option[String] = None): DataFrame =
-    coarsenWithMap(edges, rounds, localThreshold, weightCol)._1
+    coarsenWithMap(edges, rounds, weightCol)._1
 
   /** [[coarsenGraph]] plus the contraction map it used: the second
     * frame is (id, rep) for every MATCHED non-representative vertex
@@ -1933,19 +1916,16 @@ object GraphAlgorithms {
     * omitted) — what a multilevel consumer needs to project a coarse
     * solution back onto the fine graph. */
   private[graft] def coarsenWithMap(edges: DataFrame, rounds: Int = 20,
-                   localThreshold: Long = 10000000L,
                    weightCol: Option[String] = None): (DataFrame, DataFrame) = {
     // adaptive local regime (the multilevelPartition pattern): matching
-    // already ran driver-side below the threshold, but the contraction
+    // already ran driver-side below its 10M gate, but the contraction
     // joins + grouped merge were still 4-6 eager jobs over edge-sized
-    // frames. Below the raw limit-count pre-gate the whole level replays
-    // locally from the collected canonical rows — the ul/vl numeric
-    // order keys arrive pre-computed, so no id-type gate is needed.
-    val lt = math.min(math.min(localThreshold, 2000000L), 100000000L)
+    // frames. Below the raw 2M-row limit-count pre-gate the whole level
+    // replays locally from the collected canonical rows — the ul/vl
+    // numeric order keys arrive pre-computed, so no id-type gate is needed.
     val idt = edges.schema("src").dataType
-    if (lt > 0 && localRegimesEnabled(edges.sparkSession) &&
-        idt == edges.schema("dst").dataType &&
-        edges.select(col("src")).limit(lt.toInt + 1).count() <= lt) {
+    if (idt == edges.schema("dst").dataType &&
+        countGated(edges.select(col("src")), 2000000L, bounded = true)) {
       val rows = canonicalSimpleEdges(edges, weightCol)
         .select(col("u"), col("v"), col("ul"), col("vl"), col("w")).collect()
       val key = scala.collection.mutable.HashMap.empty[Any, Long]
@@ -1977,8 +1957,7 @@ object GraphAlgorithms {
     // level absorbs) and coarse edges SUM the fine weights they absorb,
     // so levels chain: coarsenGraph(coarsenGraph(e, weightCol=...),
     // weightCol = Some("weight")) is the multilevel loop
-    val m = matchingOnCanon(canon, rounds, localThreshold,
-      weighted = weightCol.isDefined)
+    val m = matchingOnCanon(canon, rounds, weighted = weightCol.isDefined)
     val mapped = canon
       .join(m.select(col("v").as("u"), col("u").as("su")), Seq("u"), "left")
       .join(m.select(col("v"), col("u").as("sv")), Seq("v"), "left")
@@ -2026,14 +2005,12 @@ object GraphAlgorithms {
    * coarse edge list (per-label best edge), a handful of label-sized
    * self-joins for the pointer jumps (labels at least halve per round),
    * and one grouped min to merge parallel coarse edges — all
-   * localCheckpointed, O(1) plan depth per step. Below `localThreshold`
+   * localCheckpointed, O(1) plan depth per step. Below 10M canonical
    * edges the identical synchronous semantics run driver-side (the
-   * adaptive kCore/HITS/MIS pattern; parity spec-asserted via
-   * localThreshold = 0).
+   * adaptive kCore/HITS/MIS pattern).
    */
   def minimumSpanningForest(edges: DataFrame, weightCol: String = "weight",
-                            rounds: Int = 12,
-                            localThreshold: Long = 10000000L): DataFrame = {
+                            rounds: Int = 12): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     // canonical fine edges with the min weight among parallel edges;
     // (ou, ov) keep the original id type for the output
@@ -2055,7 +2032,7 @@ object GraphAlgorithms {
       .select(col("m.ou").as("ou"), col("m.ov").as("ov"),
         col("ul"), col("vl"), col("m.w").as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (canon.count() <= localThreshold) {
+    if (countGated(canon, 10000000L)) {
       val out = localBoruvka(canon, rounds)
       canon.unpersist()
       return out
@@ -2213,8 +2190,7 @@ object GraphAlgorithms {
    * of graph density, the whole point of sketching the balls.
    */
   def neighborhoodRegisters(edges: DataFrame, hops: Int,
-                            undirected: Boolean = true,
-                            localThreshold: Long = 2000000L): DataFrame = {
+                            undirected: Boolean = true): DataFrame = {
     require(hops >= 1, s"hops must be >= 1: $hops")
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
       .where(col("u") =!= col("v"))
@@ -2225,13 +2201,11 @@ object GraphAlgorithms {
     // leading zero bits of the 64-bit value in bytes 1..8, 65 when
     // zero — the hex-digit arithmetic of Sketches.hllBucket/hllRho in
     // byte form), gated on id types whose toString mirrors
-    // cast-to-string; the raw limit-count pre-gate keeps the large
-    // regime's cost identical. Register max-merge is idempotent, so
+    // cast-to-string; the raw 2M-row limit-count pre-gate keeps the
+    // large regime's cost identical. Register max-merge is idempotent, so
     // collected duplicate edges need no local distinct.
-    val lt = math.min(localThreshold, 100000000L)
-    if (lt > 0 && localRegimesEnabled(edges.sparkSession) &&
-        stringCastReplayable(e0.schema("u").dataType) &&
-        edges.select(col("src")).limit(lt.toInt + 1).count() <= lt) {
+    if (stringCastReplayable(e0.schema("u").dataType) &&
+        countGated(edges.select(col("src")), 2000000L, bounded = true)) {
       val rows = e0.collect()
       val local = localNeighborhoodRegisters(edges.sparkSession, rows,
         e0.schema("u").dataType, hops, undirected)
@@ -2266,13 +2240,12 @@ object GraphAlgorithms {
   private def localNeighborhoodArrays(
       rows: Array[org.apache.spark.sql.Row], hops: Int, undirected: Boolean)
       : Option[(scala.collection.mutable.ArrayBuffer[Any], Array[Array[Array[Byte]]])] = {
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val in = new Interner
+    val ids = in.ids
     val m = rows.length
     val ea = new Array[Int](m); val eb = new Array[Int](m)
     var i = 0
-    while (i < m) { ea(i) = intern(rows(i).get(0)); eb(i) = intern(rows(i).get(1)); i += 1 }
+    while (i < m) { ea(i) = in.intern(rows(i).get(0)); eb(i) = in.intern(rows(i).get(1)); i += 1 }
     val n = ids.length
     if (n.toLong * 256L * (hops + 1) > 16000000L) return None
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -2362,8 +2335,7 @@ object GraphAlgorithms {
    * the chosen t.
    */
   def effectiveDiameter(edges: DataFrame, hops: Int = 8, q: Double = 0.9,
-                        undirected: Boolean = true,
-                        localThreshold: Long = 2000000L): DataFrame = {
+                        undirected: Boolean = true): DataFrame = {
     require(q > 0 && q <= 1, s"q must be in (0,1]: $q")
     val spark = edges.sparkSession
     // small regime: read the per-hop estimates straight off the local
@@ -2373,11 +2345,9 @@ object GraphAlgorithms {
     // read path at bench scale: row conversion, not computation)
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
       .where(col("u") =!= col("v"))
-    val lt = math.min(localThreshold, 100000000L)
     val localArrays =
-      if (lt > 0 && localRegimesEnabled(edges.sparkSession) &&
-          stringCastReplayable(e0.schema("u").dataType) &&
-          edges.select(col("src")).limit(lt.toInt + 1).count() <= lt)
+      if (stringCastReplayable(e0.schema("u").dataType) &&
+          countGated(edges.select(col("src")), 2000000L, bounded = true))
         localNeighborhoodArrays(e0.collect(), hops, undirected)
       else None
     localArrays match {
@@ -2411,7 +2381,7 @@ object GraphAlgorithms {
           .toDF("hop", "n_estimate", "effective")
       case None => ()
     }
-    val regs = neighborhoodRegisters(edges, hops, undirected, localThreshold)
+    val regs = neighborhoodRegisters(edges, hops, undirected)
     // N(t) = Σ_v estimate(v, t): ONE two-level aggregation job over the
     // whole register frame — grouped by (hop, id) for the per-vertex
     // estimate, then by hop for the totals; only the hops+1 numbers
@@ -2527,15 +2497,14 @@ object GraphAlgorithms {
    * bound then changes meaning from "converged" to "budgeted").
    */
   def weightedShortestPaths(edges: DataFrame, sourceId: String, maxHops: Int,
-                            undirected: Boolean = true,
-                            localThreshold: Long = 10000000L): DataFrame = {
+                            undirected: Boolean = true): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"),
       col("weight").cast("long").as("w"))
-    // Adaptive: driver-side synchronous Bellman-Ford rounds below the
-    // threshold — same hop-bounded min-relaxation semantics, parity
-    // spec-pinned via localThreshold = 0. The local path skips the
+    // Adaptive: driver-side synchronous Bellman-Ford rounds below 10M
+    // raw edges — same hop-bounded min-relaxation semantics. The local
+    // path skips the
     // min-per-pair dedup entirely: relaxing over duplicate (u,v) entries
     // is equivalent to relaxing over their min, so one plain collect of
     // the raw triples suffices (see collectInterned for why that beats
@@ -2544,7 +2513,7 @@ object GraphAlgorithms {
       // probe-capped row gate (multi-edges kept — relaxation over
       // duplicates is relaxation over their min)
       collectRowsGated(e0,
-          localThreshold / (if (undirected) 2 else 1)).foreach { rows =>
+          10000000L / (if (undirected) 2 else 1)).foreach { rows =>
         return localWeightedSp(rows, undirected, sourceId, maxHops, spark)
       }
     }
@@ -2595,16 +2564,14 @@ object GraphAlgorithms {
                               sourceId: String, maxHops: Int,
                               spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val idx = scala.collection.mutable.HashMap.empty[String, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[String]
-    def intern(x: String): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
-    val es = rows.map(r => (intern(r.getString(0)), intern(r.getString(1)), r.getLong(2)))
-    val n = ids.length
+    val in = new Interner
+    val es = rows.map(r => (in.intern(r.getString(0)), in.intern(r.getString(1)), r.getLong(2)))
+    val n = in.ids.length
     val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(Int, Long)])
     es.foreach { case (u, v, w) =>
       if (u != v) { adj(u) += ((v, w)); if (undirected) adj(v) += ((u, w)) }
     }
-    idx.get(sourceId) match {
+    in.idx.get(sourceId) match {
       case None => Seq((sourceId, 0L)).toDF("id", "dist")
       case Some(src) =>
         val unreached = Long.MaxValue
@@ -2631,7 +2598,7 @@ object GraphAlgorithms {
           frontier = improved
         }
         val rows = (0 until n).iterator.filter(dist(_) != unreached)
-          .map(i => (ids(i), dist(i))).toSeq
+          .map(i => (in.ids(i).asInstanceOf[String], dist(i))).toSeq
         spark.createDataFrame(rows).toDF("id", "dist")
     }
   }
@@ -2650,8 +2617,7 @@ object GraphAlgorithms {
    * the pageRank pattern.
    */
   def labelPropagation(edges: DataFrame, iterations: Int,
-                       undirected: Boolean = true,
-                       localThreshold: Long = 10000000L): DataFrame = {
+                       undirected: Boolean = true): DataFrame = {
     // The "(count DESC, label ASC)" argmax is one grouped aggregate:
     // min(struct(-count, label)) — the count is always numeric so its
     // negation handles the DESC leg, and the label rides in its OWN type.
@@ -2682,14 +2648,13 @@ object GraphAlgorithms {
       case Some(r) => r.select(col("u").cast("long").as("u"), col("v").cast("long").as("v"))
       case None => edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
     }
-    // Adaptive (the kCore/closeness/SCC pattern): below the threshold
+    // Adaptive (the kCore/closeness/SCC pattern): below 10M raw edges
     // the synchronous rounds run driver-side over adjacency arrays —
     // each distributed round is two shuffles of fixed job latency, the
-    // dominant term on small graphs. Parity spec via localThreshold = 0.
-    // Gate on the RAW count; the canonical dedup fuses into the
+    // dominant term on small graphs. Gate on the RAW count; the canonical dedup fuses into the
     // driver-side intern pass (see collectInterned).
     val rawPairs = e0.where(col("u") =!= col("v"))
-    collectInternedGated(rawPairs, canonical = undirected, localThreshold).foreach { in =>
+    collectInternedGated(rawPairs, canonical = undirected, 10000000L).foreach { in =>
       raw.foreach(_.unpersist())
       return localLabelPropagation(in, e0.schema("u").dataType,
         edges.sparkSession, iterations, undirected)
@@ -2798,9 +2763,8 @@ object GraphAlgorithms {
    * subgraph semi-join pair + a degree aggregate over the persisted
    * canonical edge list, survivors localCheckpointed — O(1) plan depth.
    */
-  def kCore(edges: DataFrame, k: Int, rounds: Int,
-            localThreshold: Long = 10000000L): DataFrame =
-    kCoreImpl(edges, k, rounds, localThreshold)._1
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    kCoreImpl(edges, k, rounds)._1
 
   /** k-core to the FIXPOINT: peel until the survivor set stops changing
     * (maxRounds is a runaway bound, not a semantic knob). */
@@ -2813,16 +2777,15 @@ object GraphAlgorithms {
     * is an unchanged SET — and every later round is the identity, which
     * keeps the bounded form's round-by-round oracle contract intact
     * while a converged peel stops paying per-round materializations. */
-  private[graft] def kCoreImpl(edges: DataFrame, k: Int, rounds: Int,
-                               localThreshold: Long = 10000000L): (DataFrame, Int) = {
-    // Adaptive (the kTruss/closeness/SCC pattern): below the threshold the
-    // synchronous peel runs driver-side over an adjacency map — each
+  private[graft] def kCoreImpl(edges: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
+    // Adaptive (the kTruss/closeness/SCC pattern): below 10M raw edges
+    // the synchronous peel runs driver-side over an adjacency map — each
     // distributed round costs several fixed-latency Spark jobs, the
-    // dominant term on small graphs. Parity spec-asserted via
-    // localThreshold = 0. Gate on the RAW count; canonicalization fuses
-    // into the driver-side intern pass (see collectInterned).
+    // dominant term on small graphs. Gate on the RAW count;
+    // canonicalization fuses into the driver-side intern pass (see
+    // collectInterned).
     val raw = edges.select(col("src"), col("dst"))
-    collectInternedGated(raw, canonical = true, localThreshold).foreach { in =>
+    collectInternedGated(raw, canonical = true, 10000000L).foreach { in =>
       return localKCore(in, edges.schema("src").dataType, edges.sparkSession, k, rounds)
     }
     // src-partitioned canonical set (the graphStats layout, r17): the
@@ -2928,27 +2891,25 @@ object GraphAlgorithms {
     * identity). Returns surviving canonical edges (src < dst) with their
     * support in the surviving graph.
     *
-    * Adaptive (the [[closenessCentrality]]/SCC pattern): ≤
-    * `localThreshold` canonical edges → driver-side peel over adjacency
-    * sets (each distributed round costs several fixed-latency jobs, the
-    * dominant term on small graphs); above → the DataFrame loop. Parity
-    * spec-asserted via `localThreshold = 0`. */
-  def kTruss(edges: DataFrame, k: Int, rounds: Int,
-             localThreshold: Long = 10000000L): DataFrame =
-    kTrussImpl(edges, k, rounds, localThreshold)._1
+    * Adaptive (the [[closenessCentrality]]/SCC pattern): ≤ 10M
+    * canonical edges → driver-side peel over adjacency sets (each
+    * distributed round costs several fixed-latency jobs, the dominant
+    * term on small graphs); above → the DataFrame loop. */
+  def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    kTrussImpl(edges, k, rounds)._1
 
   /** k-truss to the fixpoint (maxRounds is a runaway bound — peeling
     * removes ≥1 edge per non-final round, so it binds only on graphs
     * with more edges than rounds). */
   def kTrussFixpoint(edges: DataFrame, k: Int, maxRounds: Int = 1000): DataFrame =
-    kTrussImpl(edges, k, maxRounds, 10000000L)._1
+    kTrussImpl(edges, k, maxRounds)._1
 
-  private[graft] def kTrussImpl(edges: DataFrame, k: Int, rounds: Int,
-                                localThreshold: Long = 10000000L): (DataFrame, Int) = {
+  private[graft] def kTrussImpl(edges: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
     require(k >= 2, s"k must be >= 2: $k")
     var e = PropertyGraph.canonicalUndirected(edges).localCheckpoint(true)
     var n = e.count()
-    if (n <= localThreshold) return localKTruss(e, k, rounds)
+    if (localRowCap(edges.sparkSession, 10000000L).exists(n <= _))
+      return localKTruss(e, k, rounds)
     var executed = 0
     var converged = false
     while (executed < rounds && !converged) {
@@ -2969,9 +2930,8 @@ object GraphAlgorithms {
   private def localKTruss(cn: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
     val spark = cn.sparkSession
     val dt = cn.schema("src").dataType
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val in = new Interner
+    import in.{ids, intern}
     var live = cn.collect().map(r => (intern(r.get(0)), intern(r.get(1)))).toSet
     val nbrs = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.HashSet[Int]]
     def link(a: Int, b: Int): Unit = {
@@ -3066,11 +3026,10 @@ object GraphAlgorithms {
    *
    * Shape: two (join + aggregate) passes over the persisted edge list per
    * iteration — the [[pageRank]] posture, survives the same scale-up.
-   * Adaptive (the [[closenessCentrality]]/[[kCore]] pattern): ≤
-   * `localThreshold` distinct edges run the recurrence driver-side over
-   * index arrays — each distributed iteration costs several fixed-latency
-   * jobs, the dominant term on small graphs. Parity spec-asserted via
-   * `localThreshold = 0`.
+   * Adaptive (the [[closenessCentrality]]/[[kCore]] pattern): ≤ 10M
+   * raw edges run the recurrence driver-side over index arrays — each
+   * distributed iteration costs several fixed-latency jobs, the
+   * dominant term on small graphs.
    *
    * LAZY contract (like [[pageRank]]): the distributed regime returns an
    * unmaterialized plan — consume it once, or `localCheckpoint`/`persist`
@@ -3078,12 +3037,11 @@ object GraphAlgorithms {
    * the full 2k-join recurrence. The internal edge persist's lifetime is
    * GC/ContextCleaner-managed.
    */
-  def hits(edges: DataFrame, iterations: Int = 3,
-           localThreshold: Long = 10000000L): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int = 3): DataFrame = {
     require(iterations >= 1 && iterations <= 6,
       s"iterations must be in [1, 6] (integer scores grow like deg^(2k)): $iterations")
     val raw = edges.select(col("src"), col("dst")).where(col("src") =!= col("dst"))
-    collectInternedGated(raw, canonical = false, localThreshold).foreach { in =>
+    collectInternedGated(raw, canonical = false, 10000000L).foreach { in =>
       return localHits(in, edges.schema("src").dataType, edges.sparkSession, iterations)
     }
     // src-keyed exchange before the distinct (a subset of the distinct
@@ -3382,15 +3340,13 @@ object GraphAlgorithms {
    * `maxHops` ≥ the graph diameter. At 100 TB pass `sources` (landmarks)
    * — all-sources state is |V| · reach, exactly like closeness.
    *
-   * Adaptive: ≤ `localThreshold` oriented edges runs the BFS sweep
-   * driver-side (each distributed hop costs several fixed-latency Spark
-   * jobs); identical semantics, parity spec-pinned via
-   * `localThreshold = 0`.
+   * Adaptive: ≤ 10M oriented edges runs the BFS sweep driver-side
+   * (each distributed hop costs several fixed-latency Spark jobs);
+   * identical semantics.
    */
   def eccentricity(edges: DataFrame, maxHops: Int = 10,
                    undirected: Boolean = true,
-                   sources: Option[DataFrame] = None,
-                   localThreshold: Long = 10000000L): DataFrame = {
+                   sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
@@ -3398,7 +3354,7 @@ object GraphAlgorithms {
       .where(col("u") =!= col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val eCnt = e.count()
-    if (eCnt <= localThreshold) {
+    if (localRowCap(edges.sparkSession, 10000000L).exists(eCnt <= _)) {
       val out = localEccentricity(e, maxHops, sources)
       e.unpersist()
       return out
@@ -3773,18 +3729,16 @@ object GraphAlgorithms {
    *
    * Shape: each round is two alive-set semi-joins + one degree
    * aggregate over the CURRENT induced edge set, which only shrinks;
-   * levels early-stop once a round removes nothing. Adaptive: ≤
-   * `localThreshold` raw edges replays the schedule driver-side
-   * (parity spec-pinned via `localThreshold = 0`).
+   * levels early-stop once a round removes nothing. Adaptive: ≤ 10M
+   * raw edges replays the schedule driver-side.
    */
-  def coreNumbers(edges: DataFrame, maxK: Int = 8, roundsPerK: Int = 6,
-                  localThreshold: Long = 10000000L): DataFrame = {
+  def coreNumbers(edges: DataFrame, maxK: Int = 8, roundsPerK: Int = 6): DataFrame = {
     require(maxK >= 1, s"maxK must be >= 1: $maxK")
     require(roundsPerK >= 1, s"roundsPerK must be >= 1: $roundsPerK")
     val spark = edges.sparkSession
     val raw = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")) // keep the local intern pass loop-free
-    collectInternedGated(raw, canonical = true, localThreshold).foreach { in =>
+    collectInternedGated(raw, canonical = true, 10000000L).foreach { in =>
       return localCoreNumbers(spark, in, maxK, roundsPerK,
         raw.schema("src").dataType)
     }
@@ -3916,12 +3870,11 @@ object GraphAlgorithms {
    * Integer gains overflow past 2m·k ≈ 2^63 (≈ 10^9 edges × 10^9
    * degree) — swap to DECIMAL(38,0) beyond that.
    */
-  def louvainCommunities(edges: DataFrame, rounds: Int = 4,
-                         localThreshold: Long = 10000000L): DataFrame = {
+  def louvainCommunities(edges: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val raw = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
-    collectInternedGated(raw, canonical = true, localThreshold).foreach { in =>
+    collectInternedGated(raw, canonical = true, 10000000L).foreach { in =>
       return localLouvain(edges.sparkSession, in, rounds,
         raw.schema("src").dataType)
     }
@@ -3975,8 +3928,7 @@ object GraphAlgorithms {
     * identical integer gains, identical (gain DESC, label ASC)
     * tie-break (label ordering mirrors the column type: numeric for
     * integral ids, binary-lexicographic for strings), identical
-    * alternating-parity gate. Parity spec-pinned via
-    * `localThreshold = 0`. */
+    * alternating-parity gate. */
   private def localLouvain(spark: SparkSession, in: InternedEdges, rounds: Int,
                            dt: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.types._
@@ -4049,17 +4001,16 @@ object GraphAlgorithms {
    * (unreachable cycle → detected by a final vertex-count check); both
    * throw IllegalArgumentException rather than returning wrong levels.
    *
-   * Adaptive: ≤ `localThreshold` edges runs Kahn's algorithm driver-side
-   * (same cycle contract); parity spec-pinned via `localThreshold = 0`.
+   * Adaptive: ≤ 10M raw edges runs Kahn's algorithm driver-side
+   * (same cycle contract).
    */
-  def topologicalLevels(edges: DataFrame, maxRounds: Int = 100,
-                        localThreshold: Long = 10000000L): DataFrame = {
+  def topologicalLevels(edges: DataFrame, maxRounds: Int = 100): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
     val spark = edges.sparkSession
     val raw = edges.select(col("src"), col("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-    collectInternedGated(raw, canonical = false, localThreshold).foreach { in =>
+    collectInternedGated(raw, canonical = false, 10000000L).foreach { in =>
       return localTopoLevels(spark, in, raw.schema("src").dataType)
     }
     val e = raw.distinct().persist(StorageLevel.MEMORY_AND_DISK)
@@ -4213,9 +4164,8 @@ object GraphAlgorithms {
       numParts: Int, rounds: Int, slackPct: Int,
       seed: Any => Option[Int], vw: Any => Long, vwProvided: Boolean)
       : scala.collection.mutable.LinkedHashMap[Any, Int] = {
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val in = new Interner
+    import in.{ids, intern}
     val m = eu.length
     val ia = new Array[Int](m); val ib = new Array[Int](m)
     var e = 0
@@ -4290,8 +4240,7 @@ object GraphAlgorithms {
                         broadcastRowGate: Long = 2000000L,
                         init: Option[DataFrame] = None,
                         edgeWeightCol: Option[String] = None,
-                        vertexWeights: Option[DataFrame] = None,
-                        localThreshold: Long = 2000000L): DataFrame = {
+                        vertexWeights: Option[DataFrame] = None): DataFrame = {
     require(numParts >= 2, s"numParts must be >= 2: $numParts")
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     require(slackPct >= 0, s"slackPct must be >= 0: $slackPct")
@@ -4312,7 +4261,7 @@ object GraphAlgorithms {
         .groupBy("src", "dst").agg(sum(col("__w")).as("__w"))
     }
     // adaptive local regime (the fastRP/kCore/matching pattern): below
-    // `localThreshold` canonical edges every BLP round is a latency-floor
+    // 2M raw edges every BLP round is a latency-floor
     // eager checkpoint job over a frame the driver holds easily, so the
     // IDENTICAL synchronous semantics replay driver-side. The
     // canonicalization plan still computes (src, dst, __w); the only
@@ -4324,17 +4273,15 @@ object GraphAlgorithms {
     // the large regime's cost identical to before: no probe shuffle, no
     // extra pass. Seeds and vertex weights are themselves gated collects
     // (vertex-sized); any overflow falls through to distributed rounds.
-    val lt = math.min(localThreshold, 100000000L)
-    val rawSmall = lt > 0 && localRegimesEnabled(edges.sparkSession) &&
-      stringCastReplayable(cnPlan.schema("src").dataType) &&
-      edges.select(col("src")).limit(lt.toInt + 1).count() <= lt
+    val rawSmall = stringCastReplayable(cnPlan.schema("src").dataType) &&
+      countGated(edges.select(col("src")), 2000000L, bounded = true)
     if (rawSmall) {
       val seedOpt: Option[Any => Option[Int]] = init match {
         case None => Some((_: Any) => None)
         case Some(s0) => collectRowsGated(
             s0.select(col(s0.columns.head).as("id"),
               col(s0.columns(1)).cast("int").as("__seed")).dropDuplicates("id"),
-            localThreshold).flatMap { rows =>
+            2000000L).flatMap { rows =>
           // a seed outside [0, numParts) would index the local load/cnt/k
           // arrays out of bounds; the distributed rounds treat any int
           // part as a plain group key, so fall back to them instead
@@ -4352,7 +4299,7 @@ object GraphAlgorithms {
         case Some(vwDf) => collectRowsGated(
             vwDf.select(col(vwDf.columns.head).as("id"),
               col(vwDf.columns(1)).cast("long").as("__vwv")),
-            localThreshold).map { rows =>
+            2000000L).map { rows =>
           val mp = scala.collection.mutable.HashMap.empty[Any, Long]
           rows.foreach(r => if (!r.isNullAt(1)) mp(r.get(0)) = r.getLong(1))
           (x: Any) => mp.getOrElse(x, 1L)
@@ -4482,8 +4429,7 @@ object GraphAlgorithms {
                           matchRounds: Int = 12, coarseRounds: Int = 4,
                           refineRounds: Int = 2, slackPct: Int = 10,
                           broadcastRowGate: Long = 2000000L,
-                          levels: Int = 1,
-                          localThreshold: Long = 2000000L): DataFrame = {
+                          levels: Int = 1): DataFrame = {
     require(numParts >= 2, s"numParts must be >= 2: $numParts")
     require(matchRounds >= 1 && coarseRounds >= 1 && refineRounds >= 1,
       s"all round counts must be >= 1: $matchRounds/$coarseRounds/$refineRounds")
@@ -4497,10 +4443,8 @@ object GraphAlgorithms {
     // replay needs no key re-derivation; matching reuses the exact
     // localMatchCore; the only other local re-derivation is the BLP md5
     // bucket, gated by stringCastReplayable like balancedPartition.
-    val lt = math.min(localThreshold, 100000000L)
-    if (lt > 0 && localRegimesEnabled(edges.sparkSession) &&
-        stringCastReplayable(edges.schema("src").dataType) &&
-        edges.select(col("src")).limit(lt.toInt + 1).count() <= lt) {
+    if (stringCastReplayable(edges.schema("src").dataType) &&
+        countGated(edges.select(col("src")), 2000000L, bounded = true)) {
       // raw ≥ canonical (the balancedPartition raw pre-gate), so the
       // collect below is bounded by the limit-count that just passed
       val rows = canonicalSimpleEdges(edges, None)
@@ -4788,8 +4732,7 @@ object GraphAlgorithms {
    * additively, weights cast to BIGINT so coordinates stay exact.
    */
   def fastRP(edges: DataFrame, dims: Int = 4, iterations: Int = 2,
-             edgeWeightCol: Option[String] = None,
-             localThreshold: Long = 2000000L): DataFrame = {
+             edgeWeightCol: Option[String] = None): DataFrame = {
     require(dims >= 1 && dims <= 64, s"dims must be in [1, 64]: $dims")
     require(iterations >= 1 && iterations <= 3,
       s"iterations must be in [1, 3] (integer coords grow like deg^t): $iterations")
@@ -4815,7 +4758,7 @@ object GraphAlgorithms {
     }).persist(StorageLevel.MEMORY_AND_DISK)
     val nE = cn.count()
     // adaptive local regime (the kCore/HITS/matching/triangle pattern):
-    // below `localThreshold` canonical edges the whole recurrence is
+    // below 2M canonical edges the whole recurrence is
     // latency-floor-bound (each iterate is an eager edge⋈vertex shuffle
     // job over a frame that fits on the driver thousands of times over),
     // so replay the IDENTICAL synchronous semantics driver-side — the
@@ -4833,7 +4776,7 @@ object GraphAlgorithms {
            | org.apache.spark.sql.types.ShortType => true
       case _ => false
     }
-    if (localOk && nE <= math.min(localThreshold, 100000000L)) {
+    if (localOk && localRowCap(edges.sparkSession, 2000000L).exists(nE <= _)) {
       val rows = cn.collect()
       cn.unpersist()
       return localFastRP(edges.sparkSession, rows, idType, dims, iterations)
@@ -4881,9 +4824,8 @@ object GraphAlgorithms {
       rows: Array[org.apache.spark.sql.Row],
       idType: org.apache.spark.sql.types.DataType,
       dims: Int, iterations: Int): DataFrame = {
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+    val in = new Interner
+    import in.{ids, intern}
     val m = rows.length
     val es = new Array[Int](m); val ed = new Array[Int](m); val ew = new Array[Long](m)
     var i = 0

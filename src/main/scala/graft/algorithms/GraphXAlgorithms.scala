@@ -1,6 +1,6 @@
 package graft.algorithms
 
-import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
+import org.apache.spark.graphx.{Edge, Graph, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,13 +9,10 @@ import org.apache.spark.storage.StorageLevel
 import graft.model.PropertyGraph
 
 /**
- * GraphX-backed variants of the analytic algorithms (`pgrnk`, `trian`,
- * plus connected components, which the reference lacks). The DataFrame
- * implementations in [[GraphAlgorithms]] are the oracle-checked primary
- * path; these exist for workloads where GraphX's Pregel machinery wins —
- * many-iteration PageRank (vertex-cut partitioning amortizes the edge
- * join that the DataFrame loop pays per iteration) and algorithms that
- * are naturally message-passing.
+ * GraphX-backed connected and strongly connected components, which the
+ * reference lacks. The DataFrame implementations in [[GraphAlgorithms]]
+ * are the oracle-checked primary path; these exist for algorithms that
+ * are naturally message-passing, where GraphX's Pregel machinery wins.
  *
  * String vertex ids are dictionary-encoded to longs with a deterministic
  * zipWithIndex, the standard GraphX bridge for non-numeric ids.
@@ -53,26 +50,6 @@ object GraphXAlgorithms {
     (Graph(vertexRdd, edgeRdd), dict)
   }
 
-  /** PageRank via GraphX's static implementation; same unnormalized
-    * per-vertex formulation as [[GraphAlgorithms.pageRank]]
-    * (resetProb = 1 - alpha). Returns (id, rank). */
-  def pageRank(g: PropertyGraph, alpha: Double = 0.85, iterations: Int = 10): DataFrame = {
-    val spark = g.nodes.sparkSession
-    import spark.implicits._
-    val (gx, dict) = toGraphX(g)
-    val ranks = gx.staticPageRank(iterations, resetProb = 1 - alpha)
-      .vertices.toDF("vid", "rank")
-    ranks.join(dict, "vid").select(col("id"), col("rank"))
-  }
-
-  /** Triangle count via GraphX's TriangleCount (canonicalized). */
-  def triangleCount(g: PropertyGraph): Long = {
-    val (gx, _) = toGraphX(g)
-    val canon = gx.partitionBy(PartitionStrategy.RandomVertexCut)
-    // GraphX counts each triangle at all 3 vertices
-    canon.triangleCount().vertices.map(_._2.toLong).fold(0L)(_ + _) / 3
-  }
-
   /** Connected components (undirected reachability); returns
     * (id, component) where component is the minimal member vid. */
   def connectedComponents(g: PropertyGraph): DataFrame = {
@@ -87,53 +64,42 @@ object GraphXAlgorithms {
     * parity-plus); returns (id, component) where component is an
     * arbitrary-but-consistent member vid — remap to min(id) per
     * component for a stable labeling. `numIter` bounds the internal
-    * coloring iterations; it must cover the longest cycle for exactness. */
-  def stronglyConnectedComponents(g: PropertyGraph, numIter: Int): DataFrame =
-    stronglyConnectedComponents(g, numIter, 10000000L)
-
-  /** Adaptive execution (the [[graft.pipeline.Dedup.nearDupClusters]]
-    * pattern): up to `localThreshold` nodes+edges the SCCs are solved
+    * coloring iterations; it must cover the longest cycle for exactness.
+    *
+    * Adaptive execution (the [[graft.pipeline.Dedup.nearDupClusters]]
+    * pattern): up to 10M nodes+edges the SCCs are solved
     * exactly by driver-side iterative Tarjan — linear time, microseconds
     * on the graphs where GraphX's SCC costs seconds of per-superstep
     * job-scheduling latency (each Pregel iteration is several Spark jobs
-    * regardless of data volume). Beyond the threshold the GraphX
+    * regardless of data volume). Beyond 10M rows the GraphX
     * implementation takes over. Both paths label every vertex; the local
     * path labels components by their minimum member id (GraphX labels by
     * minimum internal vid — callers needing stable ids remap to
     * min(id) per component either way). */
-  def stronglyConnectedComponents(g: PropertyGraph, numIter: Int,
-                                  localThreshold: Long): DataFrame =
-    stronglyConnectedComponents(g, numIter, localThreshold, 1000000)
+  def stronglyConnectedComponents(g: PropertyGraph, numIter: Int): DataFrame =
+    stronglyConnectedComponents(g, numIter, 1000000)
 
   /** Probe-cap override for specs — exercises the count-gate escalation
     * branches without building a >1M-row fixture. */
   private[graft] def stronglyConnectedComponents(
-      g: PropertyGraph, numIter: Int, localThreshold: Long,
-      probeBudget: Int): DataFrame = {
+      g: PropertyGraph, numIter: Int, probeBudget: Int): DataFrame = {
     val spark = g.nodes.sparkSession
     import spark.implicits._
     // Regime gate with a DRIVER-SAFE probe budget. The gate semantics are
-    // "local iff |nodes| + |orientedEdges| ≤ localThreshold" (oriented
-    // rows — 2× the stored edges for an undirected graph — because they
-    // are what Tarjan consumes), with localThreshold hard-clamped at
-    // 100M rows — the sanity ceiling for a driver-side adjacency, so a
-    // Long.MaxValue "sentinel" threshold can never trigger a
-    // multi-billion-row collect. Up to probeCap = min(threshold, 1M)
-    // total rows, a limit(budget+1).collect() both GATES and LOADS in
-    // one bounded pass — no separate count actions, and a huge graph
-    // ships at most ~1M rows to the driver before the distributed path is
-    // chosen. Only when the caller EXPLICITLY budgeted beyond the probe
-    // cap does an overflowing probe escalate to two count-only aggregates
-    // (no row transfer), and the full collect happens only after the
-    // counts prove the graph is within that explicit budget. The default
-    // 10M budget therefore keeps the r9 exactness regime for 1M–10M-row
-    // graphs (driver Tarjan, exact at any cycle length) at the cost of
-    // one count job — never a >1M-row speculative transfer.
-    val clamped = math.min(localThreshold, 100000000L)
-    val probeCap = math.min(clamped, probeBudget.toLong).toInt
+    // "local iff |nodes| + |orientedEdges| ≤ 10M" (oriented rows — 2× the
+    // stored edges for an undirected graph — because they are what Tarjan
+    // consumes). Up to probeCap = 1M total rows, a
+    // limit(budget+1).collect() both GATES and LOADS in one bounded pass —
+    // no separate count actions, and a huge graph ships at most ~1M rows
+    // to the driver before the distributed path is chosen. An overflowing
+    // probe escalates to two count-only aggregates (no row transfer), and
+    // the full collect happens only after the counts prove the graph is
+    // within the 10M budget. That keeps the r9 exactness regime for
+    // 1M–10M-row graphs (driver Tarjan, exact at any cycle length) at the
+    // cost of one count job — never a >1M-row speculative transfer.
     val local: Option[(Array[org.apache.spark.sql.Row], Array[org.apache.spark.sql.Row])] =
-      if (localThreshold < 0 || !GraphAlgorithms.localRegimesEnabled(spark)) None
-      else {
+      GraphAlgorithms.localRowCap(spark, 10000000L).flatMap { clamped =>
+        val probeCap = math.min(clamped, probeBudget.toLong).toInt
         val nodeProbe = g.nodes.select(col("id")).limit(probeCap + 1).collect()
         if (nodeProbe.length <= probeCap) {
           // complete node set in hand; probe edges within the remainder
@@ -142,7 +108,7 @@ object GraphXAlgorithms {
             .limit(edgeProbeBudget + 1).collect()
           if (edgeProbe.length <= edgeProbeBudget) Some((nodeProbe, edgeProbe))
           else if (clamped <= probeCap) None
-          else { // explicit budget beyond the probe cap: count-gate edges
+          else { // budget beyond the probe cap: count-gate edges
             val nEdges = g.orientedEdges.count()
             if (nodeProbe.length + nEdges > clamped) None
             else Some((nodeProbe,

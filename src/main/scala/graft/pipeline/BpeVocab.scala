@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.algorithms.GraphAlgorithms
+
 /**
  * Distributed byte-pair-encoding vocabulary induction — the tokenizer-
  * training step of a large-scale training-data pipeline (Sennrich et al.
@@ -37,7 +39,7 @@ import org.apache.spark.sql.types._
  * shuffle. Each round is one `groupBy(lhs, rhs)` over the word table
  * (partial aggregation, ~vocab-sized) plus a 1-row argmax collect; the
  * piece column accrues two codegen'd `replace` projections per round on
- * top of the cached word table. Below `localThreshold` distinct words
+ * top of the cached word table. Below 4M distinct words
  * the whole table collects to the driver and the rounds run locally —
  * iterative Spark jobs cost fixed latency that dominates on small
  * vocabularies (the house adaptive pattern).
@@ -71,13 +73,12 @@ object BpeVocab {
 
   /** Train `rounds` merges over `df(textCol)`. Returns one row per merge:
     * (merge_round, lhs, rhs, merged, cnt), ordered by round. */
-  def train(df: DataFrame, textCol: String, rounds: Int,
-            localThreshold: Long = 4000000L): DataFrame = {
+  def train(df: DataFrame, textCol: String, rounds: Int): DataFrame = {
     require(rounds > 0, "rounds must be positive")
     val spark = df.sparkSession
     val words = wordCounts(df, textCol)
     val merges =
-      if (words.limit(math.min(localThreshold + 1, Int.MaxValue.toLong).toInt).count() <= localThreshold)
+      if (GraphAlgorithms.countGated(words, 4000000L, bounded = true))
         trainLocal(words, rounds)
       else trainDistributed(words, rounds)
     spark.createDataFrame(
@@ -178,9 +179,8 @@ object BpeVocab {
    * last piece or standalone). Documents with no admissible words (null
    * text, non-ASCII soup) report zeros rather than vanishing.
    */
-  def encode(df: DataFrame, textCol: String, idCol: String, rounds: Int,
-             localThreshold: Long = 4000000L): DataFrame = {
-    val merges = train(df, textCol, rounds, localThreshold).collect()
+  def encode(df: DataFrame, textCol: String, idCol: String, rounds: Int): DataFrame = {
+    val merges = train(df, textCol, rounds).collect()
       .map(r => (r.getString(1), r.getString(2)))
     val pieceCol = merges.foldLeft(initialPiece(col("w"))) { case (c, (l, rr)) =>
       val (pat, rep) = mergePattern(l, rr)

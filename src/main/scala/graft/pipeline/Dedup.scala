@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.algorithms.GraphAlgorithms
+
 /**
  * Deduplication operators for training-data pipelines, exact → fuzzy:
  *
@@ -812,7 +814,7 @@ object Dedup {
    *
    * Adaptive execution: the pair graph is SMALL relative to the corpus
    * by construction (only near-dup members appear), so up to
-   * `localThreshold` pairs the components are solved exactly by a
+   * 10M pairs the components are solved exactly by a
    * single-task union-find ON AN EXECUTOR (union-by-min-root + path
    * compression — the root invariant makes the final root the component
    * minimum, i.e. the same canonical the iterative form computes). 10M
@@ -832,13 +834,12 @@ object Dedup {
    * canonicals.
    */
   def nearDupClusters(pairs: DataFrame, idA: String = "idA", idB: String = "idB",
-                      maxRounds: Int = 50,
-                      localThreshold: Long = 10000000L): DataFrame = {
+                      maxRounds: Int = 50): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val rawEdges = pairs.select(col(idA).as("a"), col(idB).as("b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nPairs = rawEdges.count()
-    if (nPairs <= localThreshold) {
+    if (GraphAlgorithms.localRowCap(pairs.sparkSession, 10000000L).exists(nPairs <= _)) {
       // materialize BEFORE unpersisting: the union-find runs in one
       // coalesced task, and leaving it lazy meant the caller's terminal
       // action re-ran the entire upstream pair pipeline single-threaded

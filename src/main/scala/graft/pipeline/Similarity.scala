@@ -660,9 +660,7 @@ object Similarity {
     * gate overflow, non-ASCII string ids (UTF8 vs UTF-16 order), null
     * ids/scores, or duplicate corpus ids — distributed handles those. */
   private def localBeamSearch(scoredPlan: DataFrame, ePlan: DataFrame,
-      beamWidth: Int, hops: Int, localThreshold: Long): Option[DataFrame] = {
-    val lt = math.min(localThreshold, 100000000L)
-    if (lt <= 0) return None
+      beamWidth: Int, hops: Int): Option[DataFrame] = {
     val idType = scoredPlan.schema("id").dataType
     val idOrd: Ordering[Any] = idType match {
       case LongType => Ordering.by((x: Any) => x.asInstanceOf[Long])
@@ -675,9 +673,9 @@ object Similarity {
       case _ => true
     }
     val scoredRows = graft.algorithms.GraphAlgorithms
-      .collectRowsGated(scoredPlan, lt).getOrElse(return None)
+      .collectRowsGated(scoredPlan, 2000000L).getOrElse(return None)
     val eRows = graft.algorithms.GraphAlgorithms
-      .collectRowsGated(ePlan, lt).getOrElse(return None)
+      .collectRowsGated(ePlan, 2000000L).getOrElse(return None)
     val score = scala.collection.mutable.HashMap.empty[Any, Double]
     scoredRows.foreach { r =>
       if (r.isNullAt(0) || r.isNullAt(1)) return None
@@ -726,8 +724,7 @@ object Similarity {
 
   def beamSearch(nodeEmb: DataFrame, idCol: String, vecCol: String,
                  edges: DataFrame, queryVec: Seq[Float],
-                 beamWidth: Int, hops: Int,
-                 localThreshold: Long = 2000000L): DataFrame = {
+                 beamWidth: Int, hops: Int): DataFrame = {
     val qv = array(queryVec.map(v => lit(v)): _*)
     val scoredPlan = nodeEmb.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("score", cosine(col("vec"), qv))
@@ -740,7 +737,7 @@ object Similarity {
     // re-derivation); only the frontier/top-k loop replays locally, with
     // the exact (score DESC, id ASC) total order. Falls back on
     // non-replayable id orderings or duplicate corpus ids.
-    localBeamSearch(scoredPlan, ePlan, beamWidth, hops, localThreshold) match {
+    localBeamSearch(scoredPlan, ePlan, beamWidth, hops) match {
       case Some(df) => return df
       case None => ()
     }
@@ -800,15 +797,13 @@ object Similarity {
     * (score DESC, sig ASC) order with the same left-to-right score
     * additions. String ids only (the sig concat domain), ASCII-gated. */
   private def localPathBeamSearch(scoredPlan: DataFrame, ePlan: DataFrame,
-      beamWidth: Int, hops: Int, sep: String,
-      localThreshold: Long): Option[DataFrame] = {
-    val lt = math.min(localThreshold, 100000000L)
-    if (lt <= 0 || scoredPlan.schema("id").dataType != StringType) return None
+      beamWidth: Int, hops: Int, sep: String): Option[DataFrame] = {
+    if (scoredPlan.schema("id").dataType != StringType) return None
     def asciiOk(s: String): Boolean = s.forall(_ < 128)
     val scoredRows = graft.algorithms.GraphAlgorithms
-      .collectRowsGated(scoredPlan, lt).getOrElse(return None)
+      .collectRowsGated(scoredPlan, 2000000L).getOrElse(return None)
     val eRows = graft.algorithms.GraphAlgorithms
-      .collectRowsGated(ePlan, lt).getOrElse(return None)
+      .collectRowsGated(ePlan, 2000000L).getOrElse(return None)
     val ns = scala.collection.mutable.HashMap.empty[String, Double]
     scoredRows.foreach { r =>
       if (r.isNullAt(0) || r.isNullAt(1)) return None
@@ -868,8 +863,7 @@ object Similarity {
 
   def pathBeamSearch(nodeEmb: DataFrame, idCol: String, vecCol: String,
                      edges: DataFrame, typeEmb: DataFrame, queryVec: Seq[Float],
-                     beamWidth: Int, hops: Int,
-                     localThreshold: Long = 2000000L): DataFrame = {
+                     beamWidth: Int, hops: Int): DataFrame = {
     val qv = array(queryVec.map(v => lit(v)): _*)
     val scoredPlan = nodeEmb.select(col(idCol).as("id"), cosine(col(vecCol), qv).as("ns"))
     val tscores = typeEmb.select(col("type"), cosine(col("vec"), qv).as("ts"))
@@ -877,8 +871,7 @@ object Similarity {
     val ePlan = edges.select(col("src"), col("dst"), col("type"))
       .join(broadcast(tscores), Seq("type"), "left")
       .select(col("src"), col("dst"), coalesce(col("ts"), lit(0.0)).as("ts"))
-    localPathBeamSearch(scoredPlan, ePlan, beamWidth, hops, "\u0001",
-        localThreshold) match {
+    localPathBeamSearch(scoredPlan, ePlan, beamWidth, hops, "\u0001") match {
       case Some(df) => return df
       case None => ()
     }

@@ -1450,19 +1450,10 @@ object Sparql {
     // full-store scan, and a near-gate single-threaded closure loses to
     // the 32-core fixpoint (sf10 A/B: local at 1.5M step pairs read
     // ~13 s/run vs ~5.4 distributed; at ≤200k the local replay wins)
-    // threshold knob (r18 advice): session conf overrides the measured
-    // 200k default, and the global local-regime kill-switch disables the
-    // probe job entirely; localThreshold = 0 forces the distributed
-    // fixpoint (the parity-spec convention of the batch regimes)
-    val kleeneKey = "spark.graft.kleene.localThreshold"
-    val kleeneLt = math.min(triples.sparkSession.conf.getOption(kleeneKey)
-      .map(v => v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"$kleeneKey should be a whole number of rows, but was '$v'")))
-      .getOrElse(200000L), 100000000L)
-    if (kleeneLt > 0 &&
-        graft.algorithms.GraphAlgorithms.localRegimesEnabled(triples.sparkSession) &&
-        stepRaw.select(col("a")).limit(kleeneLt.toInt + 1).count() <= kleeneLt) {
-      localKleene(triples, pp, stepPlan, kleeneLt) match {
+    val kleeneRows = 200000L
+    if (graft.algorithms.GraphAlgorithms.countGated(
+        stepRaw.select(col("a")), kleeneRows, bounded = true)) {
+      localKleene(triples, pp, stepPlan, kleeneRows) match {
         case Some(pairs) => return bindVars(pairs, Seq("a" -> pp.s, "b" -> pp.o))
         case None => ()
       }

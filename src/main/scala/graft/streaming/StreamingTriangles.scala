@@ -83,9 +83,9 @@ final class StreamingTriangles(spark: SparkSession,
       rawEdges.select(col("src").cast(StringType).as("src"),
         col("dst").cast(StringType).as("dst")))
     if (localMode) {
-      val lt = math.min(localThreshold, 100000000L)
-      GraphAlgorithms.collectRowsGated(canonical, lt) match {
-        case Some(rows) if localPairs.size + rows.length <= lt =>
+      GraphAlgorithms.collectRowsGated(canonical, localThreshold) match {
+        case Some(rows) if GraphAlgorithms.localRowCap(spark, localThreshold)
+            .exists(localPairs.size + rows.length <= _) =>
           // intersection-work budget: sequential insertion costs
           // Σ min(deg a, deg b) per batch — O(|batch|) on sparse graphs
           // but O(|batch|·deg) on dense ones, where the distributed

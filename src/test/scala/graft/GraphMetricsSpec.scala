@@ -8,7 +8,7 @@ import graft.algorithms.GraphAlgorithms
 /**
  * Structural graph metrics: eccentricity, reciprocity, degree
  * assortativity, modularity, topological levels — hand-checked fixtures
- * plus local/distributed parity (`localThreshold = 0` forces the
+ * plus local/distributed parity (`withLocalRegimesOff` forces the
  * distributed loop, the closeness/SCC adaptive contract).
  */
 class GraphMetricsSpec extends SparkSpec {
@@ -39,9 +39,9 @@ class GraphMetricsSpec extends SparkSpec {
       Seq(("c", 2L)))
 
     // parity: distributed loop computes the identical frame
-    val dist = GraphAlgorithms.eccentricity(pathGraph, maxHops = 10,
-      localThreshold = 0L)
-    assert(dist.orderBy("id").collect().toSeq ===
+    val dist = withLocalRegimesOff(GraphAlgorithms.eccentricity(pathGraph, maxHops = 10)
+      .orderBy("id").collect().toSeq)
+    assert(dist ===
       GraphAlgorithms.eccentricity(pathGraph, maxHops = 10).orderBy("id").collect().toSeq)
   }
 
@@ -121,7 +121,7 @@ class GraphMetricsSpec extends SparkSpec {
   }
 
   test("katz/weightedPageRank: local replay matches the distributed loop") {
-    // adaptive parity (the BFS/kCore discipline): localThreshold = 0
+    // adaptive parity (the BFS/kCore discipline): the switch off
     // forces the distributed path; the driver replay must produce the
     // exact same micro-unit integers on a messy pseudo-random multigraph
     val edges = (0 until 400).map { i =>
@@ -131,16 +131,16 @@ class GraphMetricsSpec extends SparkSpec {
     val we = edges.toDF("src", "dst", "weight")
     val wLocal = GraphAlgorithms.weightedPageRank(we, 85, 100, iterations = 3)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val wDist = GraphAlgorithms.weightedPageRank(we, 85, 100, iterations = 3,
-        checkpointInterval = 6, localThreshold = 0L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val wDist = withLocalRegimesOff(GraphAlgorithms.weightedPageRank(we, 85, 100,
+        iterations = 3, checkpointInterval = 6).collect())
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(wLocal === wDist)
     val ke = edges.map { case (s, d, _) => (s, d) }.toDF("src", "dst")
     val kLocal = GraphAlgorithms.katz(ke, 1, 10, iterations = 4)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val kDist = GraphAlgorithms.katz(ke, 1, 10, iterations = 4,
-        checkpointInterval = 6, localThreshold = 0L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val kDist = withLocalRegimesOff(GraphAlgorithms.katz(ke, 1, 10, iterations = 4,
+        checkpointInterval = 6).collect())
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(kLocal === kDist)
   }
 
@@ -199,9 +199,8 @@ class GraphMetricsSpec extends SparkSpec {
       Seq((i, (i * 17 + 3) % 50), (i, (i + 6) % 50))
     }.toDF("src", "dst")
     for (und <- Seq(true, false)) {
-      val dist = GraphAlgorithms.neighborhoodRegisters(edges, hops = 3,
-        undirected = und, localThreshold = 0L)
-        .orderBy("hop", "id", "bucket").collect().toSeq
+      val dist = withLocalRegimesOff(GraphAlgorithms.neighborhoodRegisters(edges,
+        hops = 3, undirected = und).orderBy("hop", "id", "bucket").collect().toSeq)
       val loc = GraphAlgorithms.neighborhoodRegisters(edges, hops = 3,
         undirected = und).orderBy("hop", "id", "bucket").collect().toSeq
       assert(loc === dist, s"undirected=$und")
@@ -209,8 +208,8 @@ class GraphMetricsSpec extends SparkSpec {
     // string ids exercise the md5 byte mirror
     val eS = (0L until 30L).map(i => (s"v$i", s"v${(i * 7 + 1) % 30}"))
       .toDF("src", "dst")
-    val distS = GraphAlgorithms.neighborhoodRegisters(eS, hops = 2,
-      localThreshold = 0L).orderBy("hop", "id", "bucket").collect().toSeq
+    val distS = withLocalRegimesOff(GraphAlgorithms.neighborhoodRegisters(eS, hops = 2)
+      .orderBy("hop", "id", "bucket").collect().toSeq)
     val locS = GraphAlgorithms.neighborhoodRegisters(eS, hops = 2)
       .orderBy("hop", "id", "bucket").collect().toSeq
     assert(locS === distS)
@@ -279,11 +278,10 @@ class GraphMetricsSpec extends SparkSpec {
       GraphAlgorithms.louvainCommunities(e, rounds = 4))
     assert(q.collect()(0).getDouble(3) === 0.357143)
 
-    // local/distributed parity (localThreshold = 0 forces the
-    // distributed synchronous rounds)
-    val dist = GraphAlgorithms.louvainCommunities(e, rounds = 4,
-        localThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // local/distributed parity (the switch off forces the distributed
+    // synchronous rounds)
+    val dist = withLocalRegimesOff(GraphAlgorithms.louvainCommunities(e, rounds = 4)
+      .collect()).map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist === comm)
 
     // string ids: same partition through the lexicographic tie-break
@@ -291,9 +289,8 @@ class GraphMetricsSpec extends SparkSpec {
       col("dst").cast("string").as("dst"))
     val sLocal = GraphAlgorithms.louvainCommunities(se, rounds = 4)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val sDist = GraphAlgorithms.louvainCommunities(se, rounds = 4,
-        localThreshold = 0L)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val sDist = withLocalRegimesOff(GraphAlgorithms.louvainCommunities(se, rounds = 4)
+      .collect()).map(r => r.getString(0) -> r.getString(1)).toMap
     assert(sDist === sLocal)
     assert(Set(sLocal("0"), sLocal("1"), sLocal("2")).size === 1)
   }
@@ -313,9 +310,8 @@ class GraphMetricsSpec extends SparkSpec {
     assert(capped(0L) === 2L && capped(4L) === 1L)
 
     // local/distributed parity
-    val dist = GraphAlgorithms.coreNumbers(e, maxK = 8, roundsPerK = 6,
-        localThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = withLocalRegimesOff(GraphAlgorithms.coreNumbers(e, maxK = 8,
+        roundsPerK = 6).collect()).map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist === core)
   }
 
@@ -333,8 +329,8 @@ class GraphMetricsSpec extends SparkSpec {
     assert(lp("d") === 2L)
 
     // distributed parity
-    val dist = GraphAlgorithms.topologicalLevels(dag, localThreshold = 0L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dist = withLocalRegimesOff(GraphAlgorithms.topologicalLevels(dag).collect())
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(dist === lv)
 
     // reachable cycle throws in both regimes
@@ -343,7 +339,7 @@ class GraphMetricsSpec extends SparkSpec {
       GraphAlgorithms.topologicalLevels(cyc)
     }
     intercept[IllegalArgumentException] {
-      GraphAlgorithms.topologicalLevels(cyc, maxRounds = 5, localThreshold = 0L)
+      withLocalRegimesOff(GraphAlgorithms.topologicalLevels(cyc, maxRounds = 5).collect())
     }
     // unreachable cycle (no path from any source into it) also throws
     val stranded = Seq(("s", "x"), ("p", "q"), ("q", "p")).toDF("src", "dst")
@@ -351,7 +347,7 @@ class GraphMetricsSpec extends SparkSpec {
       GraphAlgorithms.topologicalLevels(stranded)
     }
     intercept[IllegalArgumentException] {
-      GraphAlgorithms.topologicalLevels(stranded, maxRounds = 20, localThreshold = 0L)
+      withLocalRegimesOff(GraphAlgorithms.topologicalLevels(stranded, maxRounds = 20).collect())
     }
   }
 
@@ -503,14 +499,14 @@ class GraphMetricsSpec extends SparkSpec {
     val eS = edgesS.toDF("src", "dst")
     val eL = edgesS.map { case (a, b) => (a.toLong, b.toLong) }.toDF("src", "dst")
     for (e <- Seq(eS, eL)) {
-      val dist = GraphAlgorithms.balancedPartition(e, numParts = 4, rounds = 3,
-        localThreshold = 0L).orderBy("id").collect().toSeq
+      val dist = withLocalRegimesOff(GraphAlgorithms.balancedPartition(e, numParts = 4,
+        rounds = 3).orderBy("id").collect().toSeq)
       val loc = GraphAlgorithms.balancedPartition(e, numParts = 4, rounds = 3)
         .orderBy("id").collect().toSeq
       assert(loc === dist, s"BLP parity for ${e.schema("src").dataType}")
-      val mlDist = GraphAlgorithms.multilevelPartition(e, numParts = 3,
-        matchRounds = 5, coarseRounds = 2, refineRounds = 2, levels = 2,
-        localThreshold = 0L).orderBy("id").collect().toSeq
+      val mlDist = withLocalRegimesOff(GraphAlgorithms.multilevelPartition(e, numParts = 3,
+        matchRounds = 5, coarseRounds = 2, refineRounds = 2, levels = 2)
+        .orderBy("id").collect().toSeq)
       val mlLoc = GraphAlgorithms.multilevelPartition(e, numParts = 3,
         matchRounds = 5, coarseRounds = 2, refineRounds = 2, levels = 2)
         .orderBy("id").collect().toSeq
@@ -520,9 +516,9 @@ class GraphMetricsSpec extends SparkSpec {
     val ew = eL.selectExpr("src", "dst", "(src + dst) % 5 + 1 AS w")
     val vw = (0L until 60L).map(i => (i, i % 3 + 1)).toDF("id", "vw")
     val seed = (0L until 20L).map(i => (i, (i % 4).toInt)).toDF("id", "part")
-    val wDist = GraphAlgorithms.balancedPartition(ew, numParts = 4, rounds = 3,
-      init = Some(seed), edgeWeightCol = Some("w"), vertexWeights = Some(vw),
-      localThreshold = 0L).orderBy("id").collect().toSeq
+    val wDist = withLocalRegimesOff(GraphAlgorithms.balancedPartition(ew, numParts = 4,
+      rounds = 3, init = Some(seed), edgeWeightCol = Some("w"), vertexWeights = Some(vw))
+      .orderBy("id").collect().toSeq)
     val wLoc = GraphAlgorithms.balancedPartition(ew, numParts = 4, rounds = 3,
       init = Some(seed), edgeWeightCol = Some("w"), vertexWeights = Some(vw))
       .orderBy("id").collect().toSeq
@@ -638,26 +634,26 @@ class GraphMetricsSpec extends SparkSpec {
       Seq((s"v$i", s"v${(i * 11 + 5) % 40}"), (s"v$i", s"v${(i + 3) % 40}"))
     }
     val e = edges.toDF("src", "dst")
-    // localThreshold = 0 forces the distributed recurrence; default takes
+    // the switch off forces the distributed recurrence; default takes
     // the driver-side replay — identical rows, identical schema
-    val dist = GraphAlgorithms.fastRP(e, dims = 3, iterations = 2,
-      localThreshold = 0L).orderBy("id").collect().toSeq
+    val dist = withLocalRegimesOff(GraphAlgorithms.fastRP(e, dims = 3, iterations = 2)
+      .orderBy("id").collect().toSeq)
     val loc = GraphAlgorithms.fastRP(e, dims = 3, iterations = 2)
       .orderBy("id").collect().toSeq
     assert(loc === dist)
     // weighted form parity too (validated long weights thread through)
     val ew = e.selectExpr("src", "dst",
       "(CAST(substr(src, 2) AS BIGINT) + CAST(substr(dst, 2) AS BIGINT)) % 5 + 1 AS w")
-    val distW = GraphAlgorithms.fastRP(ew, dims = 2, iterations = 2,
-      edgeWeightCol = Some("w"), localThreshold = 0L).orderBy("id").collect().toSeq
+    val distW = withLocalRegimesOff(GraphAlgorithms.fastRP(ew, dims = 2, iterations = 2,
+      edgeWeightCol = Some("w")).orderBy("id").collect().toSeq)
     val locW = GraphAlgorithms.fastRP(ew, dims = 2, iterations = 2,
       edgeWeightCol = Some("w")).orderBy("id").collect().toSeq
     assert(locW === distW)
     // LONG ids exercise the cast-to-string mirror in the local init
     val eL = edges.map { case (a, b) => (a.drop(1).toLong, b.drop(1).toLong) }
       .toDF("src", "dst")
-    val distL = GraphAlgorithms.fastRP(eL, dims = 2, iterations = 1,
-      localThreshold = 0L).orderBy("id").collect().toSeq
+    val distL = withLocalRegimesOff(GraphAlgorithms.fastRP(eL, dims = 2, iterations = 1)
+      .orderBy("id").collect().toSeq)
     val locL = GraphAlgorithms.fastRP(eL, dims = 2, iterations = 1)
       .orderBy("id").collect().toSeq
     assert(locL === distL)

@@ -1,29 +1,13 @@
 package graft
 
-import graft.algorithms.{GraphAlgorithms, GraphXAlgorithms}
+import graft.algorithms.GraphXAlgorithms
 import graft.sources.GraphSources
 
-/** GraphX variants agree with the DataFrame implementations. */
+/** GraphX components: connected components and the adaptive SCC. */
 class GraphXSpec extends SparkSpec {
 
   val powergrid = "/root/reference/tests/integration/env_init/data/powergrid.dl"
   lazy val pg = GraphSources.readEdgeList(spark, powergrid).cache()
-
-  test("GraphX triangle count matches golden 651") {
-    assert(GraphXAlgorithms.triangleCount(pg) === 651L)
-  }
-
-  test("GraphX static PageRank agrees with the DataFrame loop") {
-    val fixture = GraphSources.readJsonEdges(spark,
-      "/root/reference/tests/integration/env_init/data/graph_with_properties.txt")
-    val df = GraphAlgorithms.pageRank(fixture, alpha = 0.85, iterations = 10)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val gx = GraphXAlgorithms.pageRank(fixture, alpha = 0.85, iterations = 10)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(df.keySet === gx.keySet)
-    // same formulation → values agree to FP noise
-    df.foreach { case (id, r) => assert(math.abs(r - gx(id)) < 1e-6, s"node $id: $r vs ${gx(id)}") }
-  }
 
   test("connected components find the powergrid's single component") {
     val cc = GraphXAlgorithms.connectedComponents(pg)
@@ -47,50 +31,43 @@ class GraphXSpec extends SparkSpec {
   test("strongly connected components: cycle vs acyclic tail") {
     import org.apache.spark.sql.functions._
     val g = cycleAndTail
-    // both execution paths (driver Tarjan ≤ threshold, GraphX above)
-    // must agree after the min-id remap
-    for (thr <- Seq(10000000L, 0L)) {
-      val scc = GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5, thr)
+    // both execution paths (driver Tarjan, GraphX with the local regimes
+    // off) must agree after the min-id remap
+    def byId(): Map[String, String] = {
+      val scc = GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5)
       val labels = scc.groupBy("component").agg(min(col("id")).as("comp"))
-      val byId = scc.join(labels, "component").select(col("id"), col("comp"))
+      scc.join(labels, "component").select(col("id"), col("comp"))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(byId === Map("1" -> "1", "2" -> "1", "3" -> "1", "4" -> "4", "5" -> "5"),
-        s"threshold=$thr")
     }
+    val want = Map("1" -> "1", "2" -> "1", "3" -> "1", "4" -> "4", "5" -> "5")
+    assert(byId() === want)
+    assert(withLocalRegimesOff(byId()) === want)
   }
 
   test("scc count-gate escalation: probe overflow with an explicit budget") {
     import org.apache.spark.sql.functions._
     // the probe-cap hook shrinks the probe so the fixture's 10 rows (5
     // nodes + 5 oriented edges) OVERFLOW it, exercising the
-    // count-then-collect escalation branches that a production run only
-    // reaches past 1M rows
+    // count-then-collect escalation branches (up to the fixed 10M budget)
+    // that a production run only reaches past 1M rows
     val g = cycleAndTail
     val want = Map("1" -> "1", "2" -> "1", "3" -> "1", "4" -> "4", "5" -> "5")
-    def run(thr: Long, probe: Int): Map[String, String] = {
-      val scc = GraphXAlgorithms
-        .stronglyConnectedComponents(g, numIter = 5, thr, probe)
+    def run(probe: Int): Map[String, String] = {
+      val scc = GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5, probe)
       val labels = scc.groupBy("component").agg(min(col("id")).as("comp"))
       scc.join(labels, "component").select(col("id"), col("comp"))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     }
     // probe = 2: nodes alone overflow → count-gate both sides → local
-    assert(run(thr = 100L, probe = 2) === want)
+    assert(run(probe = 2) === want)
     // probe = 7: nodes fit (5), edges overflow the remainder (2) →
     // edge count-gate → local
-    assert(run(thr = 100L, probe = 7) === want)
-    // probe overflows AND the counts exceed the budget → distributed
-    assert(run(thr = 8L, probe = 2) === want)
-    assert(run(thr = 8L, probe = 7) === want)
-    // sentinel budget: hard 100M clamp keeps the gate well-defined and
-    // the tiny graph still resolves locally, exactly
-    assert(run(thr = Long.MaxValue, probe = 2) === want)
+    assert(run(probe = 7) === want)
+    // switch off: no probe, no count gate → GraphX
+    assert(withLocalRegimesOff(run(probe = 2)) === want)
   }
 
   test("scc honours the localRegimes kill-switch: no probe or collect job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.scalatest.concurrent.Eventually._
-    import org.scalatest.time.SpanSugar._
     // shuffled, so a probe collect launches a job (a local relation needs none)
     val g = {
       val f = cycleAndTail
@@ -98,33 +75,15 @@ class GraphXSpec extends SparkSpec {
     }
     def components(scc: org.apache.spark.sql.DataFrame): Set[Set[String]] =
       scc.collect().groupBy(_.get(1)).values.map(_.map(_.getString(0)).toSet).toSet
-    // jobs the call itself launches, before its result is read; the
-    // marker job drains the listener queue, which delivers in order
-    val sc = spark.sparkContext
-    def jobsDuring(body: => org.apache.spark.sql.DataFrame) = {
-      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit =
-          groups.add(Option(js.properties.getProperty("spark.jobGroup.id")).getOrElse(""))
-      }
-      sc.addSparkListener(listener)
-      try {
-        sc.setJobGroup("scc-call", "one scc call")
-        val result = try body finally sc.clearJobGroup()
-        sc.setJobGroup("scc-marker", "listener drain")
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        eventually(timeout(30.seconds)) { assert(groups.contains("scc-marker")) }
-        (groups.toArray.count(_ == "scc-call"), result)
-      } finally sc.removeSparkListener(listener)
-    }
-    val (_, local) = jobsDuring(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5))
-    // a negative threshold skips the gate: the GraphX path's own jobs only
-    val (distJobs, _) = jobsDuring(
-      GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5, localThreshold = -1L))
-    spark.conf.set("spark.graft.localRegimes", "off")
-    val (offJobs, off) = try jobsDuring(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5))
-      finally spark.conf.unset("spark.graft.localRegimes")
-    assert(offJobs === distJobs)
+    // jobs the call itself launches, before its result is read: the
+    // gate's node and edge probes are the only collects inside the call
+    def probes(jobs: Seq[String]) =
+      jobs.filter(_.startsWith("collect at GraphXAlgorithms")).distinct.size
+    val (onJobs, local) = jobsDuring(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5))
+    val (offJobs, off) = withLocalRegimesOff(
+      jobsDuring(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 5)))
+    assert(probes(onJobs) === 2)
+    assert(probes(offJobs) === 0 && offJobs.nonEmpty)
     assert(components(off) === components(local))
     assert(components(off) === Set(Set("1", "2", "3"), Set("4"), Set("5")))
   }

@@ -484,9 +484,8 @@ class PipelineSpec extends SparkSpec {
       ((col("vec_id") * 3 + 11) % 100).cast("string").as("dst"))
     val nodeEmb = embs.select(col("vec_id").cast("string").as("id"), col("embedding"))
     val q = embs.limit(1).collect()(0).getSeq[Float](1)
-    val dist = Similarity.beamSearch(nodeEmb, "id", "embedding", edges, q,
-        beamWidth = 8, hops = 3, localThreshold = 0L)
-      .orderBy("id").collect().toSeq
+    val dist = withLocalRegimesOff(Similarity.beamSearch(nodeEmb, "id", "embedding",
+        edges, q, beamWidth = 8, hops = 3).orderBy("id").collect().toSeq)
     val loc = Similarity.beamSearch(nodeEmb, "id", "embedding", edges, q,
         beamWidth = 8, hops = 3).orderBy("id").collect().toSeq
     assert(loc === dist)
@@ -495,9 +494,9 @@ class PipelineSpec extends SparkSpec {
       concat(lit("t"), pmod(col("src").cast("long") + col("dst").cast("long"), lit(3))))
     val typeEmb = embs.limit(3).select(
       concat(lit("t"), col("vec_id")).as("type"), col("embedding").as("vec"))
-    val pDist = Similarity.pathBeamSearch(nodeEmb, "id", "embedding", eT,
-        typeEmb, q, beamWidth = 6, hops = 3, localThreshold = 0L)
-      .orderBy("score", "id").collect()
+    val pDist = withLocalRegimesOff(Similarity.pathBeamSearch(nodeEmb, "id",
+        "embedding", eT, typeEmb, q, beamWidth = 6, hops = 3)
+      .orderBy("score", "id").collect())
       .map(r => (r.getSeq[String](0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
     val pLoc = Similarity.pathBeamSearch(nodeEmb, "id", "embedding", eT,
         typeEmb, q, beamWidth = 6, hops = 3)
@@ -563,15 +562,16 @@ class PipelineSpec extends SparkSpec {
     val cm = Dedup.nearDupClusters(chain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cm === (10L to 15L).map(_ -> 10L).toMap)
-    val cmDist = Dedup.nearDupClusters(chain, localThreshold = 0L).collect()
+    val cmDist = withLocalRegimesOff(Dedup.nearDupClusters(chain).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cmDist === cm)
     // string ids compare lexicographically in both paths
     val sPairs = Seq(("b", "a"), ("b", "c"), ("z", "y")).toDF("idA", "idB")
-    for (thr <- Seq(10L, 0L)) {
-      val sm = Dedup.nearDupClusters(sPairs, localThreshold = thr).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(sm === Map("a" -> "a", "b" -> "a", "c" -> "a", "y" -> "y", "z" -> "y"), s"thr=$thr")
+    val smLocal = Dedup.nearDupClusters(sPairs).collect()
+    val smDist = withLocalRegimesOff(Dedup.nearDupClusters(sPairs).collect())
+    for ((sm, path) <- Seq((smLocal, "local"), (smDist, "distributed"))) {
+      assert(sm.map(r => r.getString(0) -> r.getString(1)).toMap ===
+        Map("a" -> "a", "b" -> "a", "c" -> "a", "y" -> "y", "z" -> "y"), path)
     }
     // composes with minhash pairs over duplicated docs: dup joins its base
     val base = docs.limit(3).select(col("doc_id"), col("text"))
@@ -591,7 +591,7 @@ class PipelineSpec extends SparkSpec {
     // need 119 rounds; star contraction must converge within the default
     // 50-round runaway bound (it needs ~log2(n))
     val chain = (0L until 119L).map(i => (i, i + 1)).toDF("idA", "idB")
-    val cm = Dedup.nearDupClusters(chain, localThreshold = 0L).collect()
+    val cm = withLocalRegimesOff(Dedup.nearDupClusters(chain).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cm === (0L to 119L).map(_ -> 0L).toMap)
     // randomized parity: arbitrary pair soup, distributed == local
@@ -600,7 +600,7 @@ class PipelineSpec extends SparkSpec {
       .toDF("idA", "idB")
     val local = Dedup.nearDupClusters(soup).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Dedup.nearDupClusters(soup, localThreshold = 0L).collect()
+    val dist = withLocalRegimesOff(Dedup.nearDupClusters(soup).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist === local)
   }
@@ -1278,10 +1278,10 @@ class PipelineSpec extends SparkSpec {
     assert((m(1).getInt(0), m(1).getString(1), m(1).getString(2),
       m(1).getLong(4)) === ((2, "ab", BpeVocab.EOW, 3L)))
 
-    // adaptive parity on the real fixture: distributed loop
-    // (localThreshold = 0) emits the identical merge table
+    // adaptive parity on the real fixture: the distributed loop emits
+    // the identical merge table
     val loc = BpeVocab.train(docs, "text", rounds = 6).collect().toSeq
-    val dist = BpeVocab.train(docs, "text", rounds = 6, localThreshold = 0L).collect().toSeq
+    val dist = withLocalRegimesOff(BpeVocab.train(docs, "text", rounds = 6).collect().toSeq)
     assert(loc === dist)
     // merged is always lhs ++ rhs and merge counts never increase
     loc.foreach(r => assert(r.getString(3) === r.getString(1) + r.getString(2)))

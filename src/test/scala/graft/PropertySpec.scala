@@ -93,7 +93,7 @@ class PropertySpec extends SparkSpec {
       val df = pairs.toDF("idA", "idB")
       val local = Dedup.nearDupClusters(df).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val dist = Dedup.nearDupClusters(df, localThreshold = 0L).collect()
+      val dist = withLocalRegimesOff(Dedup.nearDupClusters(df).collect())
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist === local)
     }
@@ -167,8 +167,8 @@ class PropertySpec extends SparkSpec {
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val loc = BpeVocab.train(df, "text", rounds = 4)
         .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4))).toSeq
-      val dist = BpeVocab.train(df, "text", rounds = 4, localThreshold = 0L)
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4))).toSeq
+      val dist = withLocalRegimesOff(BpeVocab.train(df, "text", rounds = 4).collect())
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4))).toSeq
       assert(loc === dist, s"corpus: $docs")
     }
   }

@@ -59,7 +59,7 @@ class QueryPostureSpec extends SparkSpec {
 
   test("hits distributed regime: persisted src-partitioned canon, shared edge exchange") {
     import org.apache.spark.sql.functions._
-    // force the distributed path (localThreshold = 0) on the bridge
+    // force the distributed path (local regimes off) on the bridge
     // edges: the canonical edge frame must come back from the persist
     // (InMemoryTableScan) and the per-iteration dst-side edge exchange
     // must dedupe via ReusedExchange — losing either re-shuffles the
@@ -70,8 +70,8 @@ class QueryPostureSpec extends SparkSpec {
     val edges = sources.TpchBridge.graph(spark, sf0001).edges
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val df = algorithms.GraphAlgorithms.hits(edges, iterations = 3, localThreshold = 0)
-      val p = df.queryExecution.executedPlan.toString
+      val p = withLocalRegimesOff(algorithms.GraphAlgorithms.hits(edges, iterations = 3)
+        .queryExecution.executedPlan.toString)
       assert(p.contains("InMemoryTableScan"),
         s"hits lost its persisted canonical edge frame:\n${p.take(2000)}")
       assert(p.contains("ReusedExchange"),
@@ -323,7 +323,7 @@ class QueryPostureSpec extends SparkSpec {
     // The loops checkpoint eagerly, so the FINAL plan is just RDD scans —
     // capture every executed per-round plan through a listener instead
     // and assert no round degenerates to a nested-loop/cartesian
-    // (quadratic at scale). Forced distributed via localThreshold = 0.
+    // (quadratic at scale). Forced distributed via withLocalRegimesOff.
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val plans = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -340,13 +340,13 @@ class QueryPostureSpec extends SparkSpec {
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
         .toDF("src", "dst")
-      graft.algorithms.GraphAlgorithms
-        .maximalMatching(edges, rounds = 2, localThreshold = 0L).collect()
-      graft.algorithms.GraphAlgorithms
-        .coarsenGraph(edges, rounds = 2, localThreshold = 0L).collect()
-      graft.algorithms.GraphAlgorithms
-        .minimumSpanningForest(edges.withColumn("weight", col("src") + col("dst")),
-          rounds = 2, localThreshold = 0L).collect()
+      withLocalRegimesOff {
+        graft.algorithms.GraphAlgorithms.maximalMatching(edges, rounds = 2).collect()
+        graft.algorithms.GraphAlgorithms.coarsenGraph(edges, rounds = 2).collect()
+        graft.algorithms.GraphAlgorithms
+          .minimumSpanningForest(edges.withColumn("weight", col("src") + col("dst")),
+            rounds = 2).collect()
+      }
       // listener delivery is async; poll briefly for the bus to drain
       var waited = 0
       while (plans.synchronized(plans.size) < 3 && waited < 10000) {

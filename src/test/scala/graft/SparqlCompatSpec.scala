@@ -669,8 +669,8 @@ class SparqlCompatSpec extends SparkSpec {
       === Seq("c"))
   }
 
-  test("Kleene local regime parity: forced-distributed fixpoint (threshold " +
-      "knob and localRegimes kill-switch) matches the local replay") {
+  test("Kleene local regime parity: forced-distributed fixpoint " +
+      "(localRegimes kill-switch) matches the local replay") {
     val t = triples(("a","knows","b"),("b","knows","c"),("c","knows","d"),
       ("b","knows","a"),("d","other","e"),("e","knows","e"))
     val qs = Seq(
@@ -680,23 +680,8 @@ class SparqlCompatSpec extends SparkSpec {
       "SELECT ?y WHERE { <a> (<knows>|<other>)+ ?y }")   // alternation step
     for (q <- qs) {
       val local = rowsOf(Sparql.run(t, q)).sorted
-      spark.conf.set("spark.graft.kleene.localThreshold", "0")
-      try assert(rowsOf(Sparql.run(t, q)).sorted === local, s"knob=0: $q")
-      finally spark.conf.unset("spark.graft.kleene.localThreshold")
-      spark.conf.set("spark.graft.localRegimes", "off")
-      try assert(rowsOf(Sparql.run(t, q)).sorted === local, s"kill-switch: $q")
-      finally spark.conf.unset("spark.graft.localRegimes")
+      val off = withLocalRegimesOff(rowsOf(Sparql.run(t, q)).sorted)
+      assert(off === local, s"kill-switch: $q")
     }
-  }
-
-  test("Kleene localThreshold: a malformed value fails with a message naming the key") {
-    val t = triples(("a","knows","b"),("b","knows","c"))
-    spark.conf.set("spark.graft.kleene.localThreshold", "200k")
-    val e = try intercept[IllegalArgumentException] {
-      rowsOf(Sparql.run(t, "SELECT ?y WHERE { <a> <knows>+ ?y }"))
-    } finally spark.conf.unset("spark.graft.kleene.localThreshold")
-    assert(!e.isInstanceOf[NumberFormatException])
-    assert(e.getMessage.contains("spark.graft.kleene.localThreshold"))
-    assert(e.getMessage.contains("200k"))
   }
 }

@@ -38,7 +38,8 @@ class StreamingSpec extends SparkSpec {
       Seq(("2", "4"), ("4", "1"), ("4", "5"), ("5", "1")),
       Seq(("2", "1"), ("5", "2"), ("5", "3")))
     val loc = new StreamingTriangles(spark)
-    val dist = new StreamingTriangles(spark, localThreshold = 0L)
+    // fed with the local regimes off: distributed from the first batch
+    val dist = new StreamingTriangles(spark)
     // gate of 6: the 3rd batch pushes the store past it mid-stream
     val mixed = new StreamingTriangles(spark, localThreshold = 6L)
     // ops budget of 1: every batch switches to the joins after ONE
@@ -46,7 +47,7 @@ class StreamingSpec extends SparkSpec {
     val budget = new StreamingTriangles(spark, opsBudgetPerBatch = 1L)
     batches.foreach { b =>
       val df = b.toDF("src", "dst")
-      val tl = loc.addBatch(df); val td = dist.addBatch(df)
+      val tl = loc.addBatch(df); val td = withLocalRegimesOff(dist.addBatch(df))
       val tm = mixed.addBatch(df); val tb = budget.addBatch(df)
       assert(tl === td && tm === td && tb === td,
         s"batch $b: $tl / $tm / $tb vs $td")
