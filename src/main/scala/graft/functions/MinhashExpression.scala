@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
@@ -46,40 +47,17 @@ case class MinhashSignature(child: Expression, k: Int,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType) {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    } else {
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a STRING argument, got ${child.dataType.catalogString}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = CharWindows.checkString(prettyName, child)
 
   override protected def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
-    val numChars = s.numChars()
-    if (numChars < k) return null
-    val bytes = s.getBytes
-    // byte offset of every char start (+ end sentinel) — the k-char
-    // window [p, p+k) then hashes bytes[offs(p) until offs(p+k))
-    val offs = new Array[Int](numChars + 1)
-    var ci = 0
-    var bi = 0
-    while (ci < numChars) {
-      offs(ci) = bi
-      bi += UTF8String.numBytesForFirstByte(bytes(bi))
-      ci += 1
-    }
-    offs(numChars) = bytes.length
+    val w = CharWindows(input.asInstanceOf[UTF8String], k)
+    if (w == null) return null
     val numHashes = as.length
     val mins = new Array[Long](numHashes)
     java.util.Arrays.fill(mins, Long.MaxValue)
     var pos = 0
-    val last = numChars - k
-    while (pos <= last) {
-      val start = offs(pos)
-      val len = offs(pos + k) - start
-      val h0 = XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + start, len, 42L)
-      val h = java.lang.Math.floorMod(h0, p)
+    while (pos < w.count) {
+      val h = java.lang.Math.floorMod(w.hash(pos), p)
       var j = 0
       while (j < numHashes) {
         val v = java.lang.Math.floorMod(as(j) * h + bs(j), p)
@@ -93,4 +71,105 @@ case class MinhashSignature(child: Expression, k: Int,
 
   override protected def withNewChildInternal(newChild: Expression): MinhashSignature =
     copy(child = newChild)
+}
+
+/** The k-character windows of a string: byte offset of every char start
+  * (plus an end sentinel), walked per codepoint exactly like
+  * `UTF8String.substringSQL`, so window `p` is `substr(s, p + 1, k)`. */
+private[functions] final class CharWindows private (bytes: Array[Byte], offs: Array[Int], k: Int) {
+  /** Number of windows. */
+  def count: Int = offs.length - k
+
+  /** Spark's `xxhash64` (seed 42) of window `pos`. */
+  def hash(pos: Int): Long = {
+    val start = offs(pos)
+    XXH64.hashUnsafeBytes(bytes, Platform.BYTE_ARRAY_OFFSET + start, offs(pos + k) - start, 42L)
+  }
+}
+
+private[functions] object CharWindows {
+  /** The windows of `s`, or null when it is shorter than k characters. */
+  def apply(s: UTF8String, k: Int): CharWindows = {
+    val numChars = s.numChars()
+    if (numChars < k) return null
+    val bytes = s.getBytes
+    val offs = new Array[Int](numChars + 1)
+    var ci = 0
+    var bi = 0
+    while (ci < numChars) {
+      offs(ci) = bi
+      bi += UTF8String.numBytesForFirstByte(bytes(bi))
+      ci += 1
+    }
+    offs(numChars) = bytes.length
+    new CharWindows(bytes, offs, k)
+  }
+
+  def checkString(name: String, child: Expression): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$name requires a STRING argument, got ${child.dataType.catalogString}")
+}
+
+/**
+ * The shingle set of a string in one pass: the ascending, distinct
+ * `xxhash64` values of its k-character windows — the same windows and
+ * hash as [[MinhashSignature]], so it equals the distinct
+ * `(id, xxhash64(substr(norm, p + 1, k)))` posting of a document (the
+ * parity is spec-asserted). NULL for inputs shorter than k characters.
+ * Exact Jaccard of two documents is then [[SortedJaccard]] of their
+ * sets, with no posting rows to explode, shuffle or join.
+ */
+case class ShingleSet(child: Expression, k: Int) extends UnaryExpression with CodegenFallback {
+
+  override def prettyName: String = "shingle_set"
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = CharWindows.checkString(prettyName, child)
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val w = CharWindows(input.asInstanceOf[UTF8String], k)
+    if (w == null) return null
+    val hs = Array.tabulate(w.count)(w.hash)
+    java.util.Arrays.sort(hs)
+    var n = 0
+    var i = 0
+    while (i < hs.length) {
+      if (n == 0 || hs(i) != hs(n - 1)) { hs(n) = hs(i); n += 1 }
+      i += 1
+    }
+    new GenericArrayData(java.util.Arrays.copyOf(hs, n))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): ShingleSet =
+    copy(child = newChild)
+}
+
+/**
+ * Exact Jaccard |A∩B| / |A∪B| of two ascending, distinct BIGINT arrays
+ * (two [[ShingleSet]]s) by one sorted merge; NULL when either is NULL.
+ */
+case class SortedJaccard(left: Expression, right: Expression)
+    extends BinaryExpression with CodegenFallback {
+
+  override def prettyName: String = "sorted_jaccard"
+  override def dataType: DataType = DoubleType
+
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData].toLongArray()
+    val y = b.asInstanceOf[ArrayData].toLongArray()
+    var inter = 0
+    var i = 0
+    var j = 0
+    while (i < x.length && j < y.length) {
+      if (x(i) == y(j)) { inter += 1; i += 1; j += 1 }
+      else if (x(i) < y(j)) i += 1
+      else j += 1
+    }
+    inter.toDouble / (x.length + y.length - inter).toDouble
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedJaccard =
+    copy(left = l, right = r)
 }

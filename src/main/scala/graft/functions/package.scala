@@ -55,6 +55,15 @@ package object functions {
   def minhashSig(s: Column, k: Int, as: Array[Long], bs: Array[Long], p: Long): Column =
     column(MinhashSignature(ColumnBridge.expression(s), k, as, bs, p))
 
+  /** Ascending distinct `xxhash64` values of the k-character windows of a
+    * string — see [[ShingleSet]]. NULL for inputs shorter than k. */
+  def shingleSet(s: Column, k: Int): Column =
+    column(ShingleSet(ColumnBridge.expression(s), k))
+
+  /** Exact Jaccard of two [[shingleSet]] arrays by one sorted merge. */
+  def sortedJaccard(a: Column, b: Column): Column =
+    column(SortedJaccard(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
   /** 64-bit SimHash signature of a whitespace-tokenized string in one
     * pass — see [[SimhashSignature]]. NULL when there are no tokens. */
   def simhashSig(s: Column): Column =

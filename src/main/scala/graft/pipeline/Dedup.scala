@@ -10,15 +10,17 @@ import graft.algorithms.GraphAlgorithms
  * Deduplication operators for training-data pipelines, exact → fuzzy:
  *
  *  - exact / normalized-exact: hash-groupBy, one shuffle on the digest.
- *  - MinHash + LSH: shingles → k minhashes (columnar, no explode of the
- *    hash space) → banded bucket join → exact-Jaccard verification of
- *    candidates only. The classic near-dup pipeline at corpus scale: cost
- *    is one narrow map over documents plus a shuffle on (band, bucket),
- *    never an all-pairs product.
+ *  - MinHash + LSH: one-pass signature array per document → banded
+ *    bucket join on array-slice hashes → agreement prefilter on the
+ *    arrays → exact Jaccard of candidates only, by merging their sorted
+ *    shingle-hash sets in the row. The classic near-dup pipeline at
+ *    corpus scale: cost is one narrow map over documents plus a shuffle
+ *    on (band, bucket), never an all-pairs product or a shingle explode.
  *  - SimHash: 64-bit signature via per-bit token-hash voting; near-dups
  *    found by 16-bit chunk banding + Hamming verification (bit_count(xor)).
  *
- * Everything is built from codegen'd higher-order functions — zero UDFs.
+ * Everything is built from native Catalyst expressions
+ * ([[graft.functions]]) and built-in functions — zero UDFs.
  */
 object Dedup {
 
@@ -79,164 +81,115 @@ object Dedup {
 
   private val P = 1000000007L
 
-  /** The (id, s0..s{H-1}) signature table, computed by the one-pass
-    * [[graft.functions.MinhashSignature]] expression: no shingle explode,
-    * no 64-min aggregate, no exchange on the signature path (the explode +
-    * aggregate formulation it replaces measured ~2.5 s of the sf0.1
-    * pipeline's ~3.7 s — dominating banding and verification; parity with
-    * it is spec-asserted). Documents shorter than `shingleSize` chars
-    * have no shingles and are absent, exactly like the row formulation. */
-  private def sigTable(df: DataFrame, textCol: String, idCol: String,
-                       shingleSize: Int, numHashes: Int): DataFrame = {
-    val (as, bs) = hashParams(numHashes)
-    df.select(col(idCol).as("id"),
-        graft.functions.minhashSig(
-          regexp_replace(lower(trim(col(textCol))), "\\s+", " "),
-          shingleSize, as.toArray, bs.toArray, P).as("sig"))
-      .where(col("sig").isNotNull)
-      .select(col("id") +: (0 until numHashes).map(j =>
-        col("sig").getItem(j).as(s"s$j")): _*)
-  }
+  /** Trimmed, lower-cased text with whitespace runs collapsed: the string
+    * the signature and the shingle set window over. */
+  private def normalized(textCol: String): Column =
+    regexp_replace(lower(trim(col(textCol))), "\\s+", " ")
 
-  /** The one-pass MinHash signature as a column over RAW text (same
-    * normalization and deterministic hash params as [[sigTable]]); NULL
-    * for documents shorter than `shingleSize`. Shared with the streaming
-    * near-dup form ([[graft.streaming.StreamDedup.nearDupMinhash]]). */
+  /** The one-pass MinHash signature ([[graft.functions.MinhashSignature]])
+    * as a column over RAW text, with the deterministic hash params of
+    * [[hashParams]]; NULL for documents shorter than `shingleSize`. Shared
+    * with the streaming near-dup form
+    * ([[graft.streaming.StreamDedup.nearDupMinhash]]). */
   def minhashSigCol(textCol: String, shingleSize: Int, numHashes: Int): Column = {
     val (as, bs) = hashParams(numHashes)
-    graft.functions.minhashSig(
-      regexp_replace(lower(trim(col(textCol))), "\\s+", " "),
-      shingleSize, as.toArray, bs.toArray, P)
+    graft.functions.minhashSig(normalized(textCol), shingleSize, as.toArray, bs.toArray, P)
   }
 
-  /** MinHash signature (array of numHashes longs) over a shingle-array
-    * column. h_i(s) = (a_i * (xxhash64(s) mod P) + b_i) mod P; signature_i
-    * = min over shingles. Computed columnar with transform/array_min. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    val (as, bs) = hashParams(numHashes)
-    val aArr = array(as.map(lit): _*)
-    val bArr = array(bs.map(lit): _*)
-    val hashed = transform(shingles, s => pmod(xxhash64(s), lit(P)))
-    transform(sequence(lit(0), lit(numHashes - 1)), i =>
-      array_min(transform(hashed,
-        h => pmod(element_at(aArr, i + 1) * h + element_at(bArr, i + 1), lit(P)))))
-  }
+  /** (id, sig) for every document with at least one shingle. */
+  private def sigTable(df: DataFrame, textCol: String, idCol: String,
+                       shingleSize: Int, numHashes: Int): DataFrame =
+    df.select(col(idCol).as("id"), minhashSigCol(textCol, shingleSize, numHashes).as("sig"))
+      .where(col("sig").isNotNull)
 
   /**
-   * One row per distinct character shingle: (id, shingle). Built with
-   * explode-then-substr so the normalized text is computed ONCE per
-   * document — a lambda-captured expression would be re-evaluated per
-   * array element (observed quadratic blow-up), and higher-order
-   * functions don't participate in whole-stage codegen at all. Explode +
-   * projection + hash-aggregate do.
+   * Banded-LSH candidates between two signature tables (id, sig): pairs
+   * whose signatures are equal on every row of some band. A band's bucket
+   * is the xxhash64 of its slice of the signature array, so only (band,
+   * bucket, id) rows go through the bucket join; `self` keeps idA < idB.
+   * Each colliding (pair, band) row then gets both signature arrays, and
+   * the row of the pair's first equal band is its one output row — no
+   * distinct over the pairs.
+   *
+   * The same rows carry the signature-agreement prefilter: the banding
+   * S-curve at r rows/band is permissive well below the threshold (r=4
+   * collides j≈0.3 pairs at ~1% per band), and every surviving candidate
+   * costs a shingle-set build and merge in verification. The estimated
+   * jaccard (the fraction of the numHashes mins that agree) drops
+   * candidates more than `prefilterMargin` below the threshold. At 64
+   * hashes the estimator's σ is ≤ 0.0625, so the default margin of 0.25
+   * is a ≥4σ guard: miss probability ~3e-7 per true pair — orders of
+   * magnitude below the banding's own miss rate (~2e-4 at j = 0.8), i.e.
+   * strictly within the LSH recall budget.
    */
-  /** `dedup = false` skips the distinct — a full-data shuffle that
-    * aggregates insensitive to duplicates (min over a multiset == min
-    * over its set) don't need. */
-  private def shinglePosting(df: DataFrame, textCol: String, idCol: String, k: Int,
-                             dedup: Boolean = true): DataFrame = {
-    val raw = df.select(col(idCol).as("id"),
-      regexp_replace(lower(trim(col(textCol))), "\\s+", " ").as("norm"))
-      .where(length(col("norm")) >= k)
-      .select(col("id"), col("norm"),
-        explode(sequence(lit(0), length(col("norm")) - k)).as("pos"))
-      // posting key is the 64-bit hash, not the string: every downstream
-      // join/aggregate shuffles 8-byte keys (collisions are ~(n^2)/2^65 —
-      // negligible and deterministic)
-      .select(col("id"), xxhash64(col("norm").substr(col("pos") + 1, lit(k))).as("shingle"))
-    if (dedup) raw.distinct() else raw
+  private def lshCandidates(sigsA: DataFrame, sigsB: DataFrame, numHashes: Int,
+      bands: Int, threshold: Double, prefilterMargin: Double, self: Boolean): DataFrame = {
+    val rows = numHashes / bands
+    def bandOf(sig: Column, b: Column): Column = slice(sig, b * rows + 1, lit(rows))
+    def banded(sigs: DataFrame): DataFrame =
+      sigs.select(col("id"), posexplode(array((0 until bands).map(b =>
+        xxhash64(bandOf(col("sig"), lit(b)))): _*)).as(Seq("band", "bucket")))
+    val collided = banded(sigsA).as("a").join(banded(sigsB).as("b"), Seq("band", "bucket"))
+      .select(col("a.id").as("idA"), col("b.id").as("idB"), col("band"))
+    val sigA = col("sa.sig")
+    val sigB = col("sb.sig")
+    val firstBand = array_position(transform(sequence(lit(0), lit(bands - 1)),
+      b => bandOf(sigA, b) === bandOf(sigB, b)), true) - 1
+    val agree = aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), _ + _)
+    val minAgree = math.ceil((threshold - prefilterMargin) * numHashes)
+    (if (self) collided.where(col("idA") < col("idB")) else collided)
+      .join(sigsA.as("sa"), col("idA") === col("sa.id"))
+      .join(sigsB.as("sb"), col("idB") === col("sb.id"))
+      .where(col("band") === firstBand && agree >= minAgree)
+      .select(col("idA"), col("idB"))
   }
 
-  /** One row per distinct word n-gram: (id, shingle). Tokens are exploded
-    * with positions and n-grams assembled with window lead()s — same
-    * no-lambda-capture, codegen-friendly shape as [[shinglePosting]].
-    * Shared with [[TextAnalysis.contamination]]. */
-  private[pipeline] def ngramPosting(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = df.select(col(idCol).as("id"),
-      posexplode(split(lower(trim(col(textCol))), "\\s+")))
-      .where(length(col("col")) > 0)
-      .select(col("id"), col("pos"), col("col").as("tok"))
-    val w = Window.partitionBy("id").orderBy("pos")
-    val grams = (1 until n).foldLeft(toks.withColumn("g", col("tok"))) { (d, i) =>
-      d.withColumn("g", concat_ws(" ", col("g"), lead(col("tok"), i).over(w)))
-        .withColumn(s"ok$i", lead(col("tok"), i).over(w).isNotNull)
-    }
-    val okCols = (1 until n).map(i => col(s"ok$i")).reduceOption(_ && _).getOrElse(lit(true))
-    grams.where(okCols).select(col("id"), xxhash64(col("g")).as("shingle")).distinct()
-  }
+  /** (id, set): the [[graft.functions.ShingleSet]] of each document of
+    * `docs` whose id is in `ids` — the semi-join runs on the document
+    * table, before the expression, so only candidate documents build a
+    * set. */
+  private def shingleSets(docs: DataFrame, ids: DataFrame, textCol: String,
+      idCol: String, shingleSize: Int): DataFrame =
+    docs.join(ids.toDF(idCol), Seq(idCol), "left_semi")
+      .select(col(idCol).as("id"),
+        graft.functions.shingleSet(normalized(textCol), shingleSize).as("set"))
 
-  /** Materialize a small result frame and release the pinned
-    * intermediates that produced it: localCheckpoint(eager) computes the
-    * result with full parallelism and truncates its lineage, so the
-    * unpersists can't trigger a recompute at the caller's terminal
-    * action. This is the leak fix for the persist()-without-unpersist
-    * pattern (each invocation used to pin MEMORY_AND_DISK blocks for the
-    * session lifetime) AND the fix for downstream single-task consumers
-    * (union-find's coalesce(1) used to re-run the whole pair pipeline in
-    * one thread once the cache was gone). */
-  private def materializeAndRelease(result: DataFrame, pinned: Seq[DataFrame]): DataFrame = {
-    val out = result.localCheckpoint(true)
-    pinned.foreach(_.unpersist())
-    out
-  }
-
-  /** Exact Jaccard for candidate pairs, from posting lists alone:
-    * |A∩B| via a shingle-equality join restricted to the candidates,
-    * |A∪B| = |A| + |B| − |A∩B|. Only narrow rows ever shuffle.
-    * Returns the result plus the frames it pinned, for the caller to
-    * release once the result is materialized. */
-  private def verifyJaccard(candidates0: DataFrame, posting0: DataFrame,
-                            threshold: Double, eager: Boolean): (DataFrame, Seq[DataFrame]) = {
-    // both inputs feed ≥3 joins below. Eager mode: the caller passes
-    // already-materialized candidates and the posting is checkpointed
-    // here — row-store blocks, no columnar cache build, nothing pinned
-    // past the call. Lazy mode: persist() pins one computation of each
-    // (the posting side carries a full shingle explode + distinct) and
-    // ownership of the pins transfers to the caller via the return.
-    val (candidates, posting, pinned) =
-      if (eager) (candidates0, posting0.localCheckpoint(true), Seq.empty[DataFrame])
-      else {
-        val c = candidates0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val p = posting0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (c, p, Seq(c, p))
-      }
-    val sizes = posting.groupBy("id").agg(count(lit(1)).as("sz"))
-    val inter = candidates
-      .join(posting.select(col("id").as("idA"), col("shingle")), Seq("idA"))
-      .join(posting.select(col("id").as("idB"), col("shingle")), Seq("idB", "shingle"))
-      .groupBy("idA", "idB").agg(count(lit(1)).as("inter"))
-    val res = candidates
-      .join(inter, Seq("idA", "idB"), "left")
-      .na.fill(0L, Seq("inter"))
-      .join(sizes.select(col("id").as("idA"), col("sz").as("szA")), Seq("idA"))
-      .join(sizes.select(col("id").as("idB"), col("sz").as("szB")), Seq("idB"))
-      .withColumn("jaccard",
-        col("inter").cast(DoubleType) / (col("szA") + col("szB") - col("inter")).cast(DoubleType))
+  /** (idA, idB, jaccard) for the candidate pairs whose exact shingle-set
+    * Jaccard is ≥ threshold, rounded to 6 places: each pair merges its two
+    * sorted sets in the row, so only ids and sets shuffle and no posting
+    * rows are exploded. */
+  private def verified(cand: DataFrame, setsA: DataFrame, setsB: DataFrame,
+                       threshold: Double): DataFrame =
+    cand.join(setsA.as("x"), col("idA") === col("x.id"))
+      .join(setsB.as("y"), col("idB") === col("y.id"))
+      .select(col("idA"), col("idB"),
+        graft.functions.sortedJaccard(col("x.set"), col("y.set")).as("jaccard"))
       .where(col("jaccard") >= threshold)
       .select(col("idA"), col("idB"), round(col("jaccard"), 6).as("jaccard"))
-    (res, Seq(candidates, posting))
-  }
 
   /**
-   * Candidate near-duplicate pairs via banded LSH over MinHash signatures.
-   * Returns (idA, idB, jaccard) with idA < idB and exact shingle-set
-   * Jaccard ≥ threshold. bands * rowsPerBand = numHashes.
+   * Near-duplicate pairs via banded LSH over MinHash signatures. Returns
+   * (idA, idB, jaccard) with idA < idB and exact shingle-set Jaccard ≥
+   * threshold. bands * rowsPerBand = numHashes.
    *
-   * Shape at scale: posting explode (narrow) → one hash-aggregate with
-   * numHashes min() columns (the signature; all codegen'd) → banded
-   * bucket self-join on (band, bucket, id) only → exact verification via
-   * posting-intersection joins. No all-pairs product, no wide shuffles.
+   * Shape at scale: one narrow projection computes each document's
+   * signature array ([[minhashSigCol]]; no shingle explode, no
+   * aggregate) → banded bucket self-join on (band, bucket, id) only →
+   * agreement prefilter on the arrays → exact verification by a sorted
+   * merge of the two candidate documents' shingle sets in the row
+   * ([[verified]]). No all-pairs product, and nothing wider than an id
+   * plus an array shuffles.
    *
-   * `eager = true` (default) materializes the (small) pair list via
-   * localCheckpoint and releases every pinned intermediate before
-   * returning — no cache blocks outlive the call, and downstream
-   * consumers (e.g. [[nearDupClusters]]' single-task union-find) read
-   * checkpointed blocks instead of re-running the pipeline. Pass
-   * `eager = false` to get the fully lazy plan (plan-inspection /
-   * composition into a larger lazy pipeline); the caller then owns the
-   * lifecycle of the pinned intermediates (clear with
-   * `spark.sharedState.cacheManager.clearCache()` or accept the leak).
+   * `eager = true` (default) localCheckpoints the signatures, the
+   * candidate list and the (small) result — every consumer reads
+   * checkpointed blocks, nothing is pinned after the call, and downstream
+   * consumers (e.g. [[nearDupClusters]]' single-task union-find) never
+   * re-run the pipeline. `eager = false` returns the lazy plan
+   * (plan-inspection / composition into a larger lazy pipeline) over
+   * persisted signatures and candidates, whose lifecycle the caller then
+   * owns (clear with `spark.sharedState.cacheManager.clearCache()` or
+   * accept the leak).
    */
   def minhashPairs(
       df: DataFrame, textCol: String, idCol: String,
@@ -244,85 +197,20 @@ object Dedup {
       threshold: Double = 0.8, prefilterMargin: Double = 0.25,
       eager: Boolean = true): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
-    val (as, bs) = hashParams(numHashes)
-
-    // sigs feeds THREE consumers (the banded bucket join's two sides and
-    // the agreement prefilter's A/B sides) — one materialization is
-    // mandatory; relying on runtime exchange reuse instead was observed
-    // NOT to fire here (the consumers sit under differently-shaped parent
-    // exchanges), which re-ran the signature computation per consumer.
-    // Eager mode checkpoints (row-store blocks, self-cleaning via the
-    // ContextCleaner); lazy mode persists (the columnar cache build and
-    // the pin outliving the call are acceptable only for plan
-    // inspection / caller-owned caches).
-    val sigsPlan = sigTable(df, textCol, idCol, shingleSize, numHashes)
-    val sigs =
-      if (eager) sigsPlan.localCheckpoint(true)
-      else sigsPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val bucketCols = (0 until bands).map { b =>
-      val bandSig = (b * rows until (b + 1) * rows).map(i => col(s"s$i"))
-      struct(lit(b).as("band"), xxhash64(bandSig: _*).as("bucket"))
-    }
-    val banded = sigs.select(col("id"), explode(array(bucketCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-
-    val l = banded.select(col("band"), col("bucket"), col("id").as("idA"))
-    val r = banded.select(col("band"), col("bucket"), col("id").as("idB"))
-    val collided = l.join(r, Seq("band", "bucket"))
-      .where(col("idA") < col("idB"))
-      .select(col("idA"), col("idB"))
-      .distinct()
-
-    // Signature-agreement prefilter: the banding S-curve at r rows/band is
-    // permissive well below the threshold (r=4 collides j≈0.3 pairs at
-    // ~1% per band), and every surviving candidate costs |A|+|B| posting
-    // rows in the exact-verify join — the dominant term when the corpus
-    // has broad template overlap. The estimated jaccard (fraction of the
-    // numHashes already-computed mins agreeing — a codegen'd sum of
-    // equality flags, ~numHashes ops per PAIR instead of per shingle)
-    // drops candidates more than `prefilterMargin` below the threshold.
-    // At 64 hashes the estimator's σ is ≤ 0.0625, so the default margin
-    // of 0.25 is a ≥4σ guard: miss probability ~3e-7 per true pair —
-    // orders of magnitude below the banding's own miss rate (~2e-4 at
-    // j = 0.8), i.e. strictly within the existing LSH recall budget.
-    // The signature aggregate is the same exchange the banding read, so
-    // Spark reuses it rather than recomputing (ReusedExchange).
-    val minAgree = math.ceil((threshold - prefilterMargin) * numHashes)
-    val candidates = if (minAgree <= 0) collided else {
-      val aSig = sigs.select(col("id").as("idA") +:
-        (0 until numHashes).map(i => col(s"s$i").as(s"a$i")): _*)
-      val bSig = sigs.select(col("id").as("idB") +:
-        (0 until numHashes).map(i => col(s"s$i").as(s"b$i")): _*)
-      val agree = (0 until numHashes)
-        .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      collided.join(aSig, Seq("idA")).join(bSig, Seq("idB"))
-        .where(agree >= lit(minAgree))
-        .select(col("idA"), col("idB"))
-    }
-    // the candidate list feeds the doc semi-join AND both verify joins;
-    // eager mode pins the (tiny) list once so the banding join never re-runs
-    val cand =
-      if (eager) candidates.localCheckpoint(true) else candidates
-
-    // exact verification touches only the docs that appear in some
-    // candidate pair — and the semi-join runs against the DOCUMENTS
-    // table, BEFORE the shingle explode. Semi-joining the exploded
-    // posting instead would re-run the full-corpus shingle generation
-    // a second time (Catalyst cannot push a join through the generate),
-    // doubling the dominant cost; here the verify-side explode touches
-    // candidate docs only, and the posting-dedup distinct runs over that
-    // same small corpus.
-    val candDocs = cand.select(col("idA").as("id"))
-      .unionByName(cand.select(col("idB").as("id")))
-      .distinct()
-    val candCorpus = df.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .join(candDocs, Seq("id"), "left_semi")
-    val posting = shinglePosting(candCorpus, "__text", "id", shingleSize, dedup = true)
-    val (res, pinned) = verifyJaccard(cand, posting, threshold, eager)
-    if (eager) materializeAndRelease(res, pinned) else res
+    // the signatures feed both sides of the bucket join and of the
+    // prefilter, the candidates both verify sides: each is materialized
+    // once (relying on runtime exchange reuse instead was observed NOT to
+    // fire — the consumers sit under differently-shaped parent exchanges)
+    def pin(d: DataFrame): DataFrame =
+      if (eager) d.localCheckpoint(true)
+      else d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = pin(sigTable(df, textCol, idCol, shingleSize, numHashes))
+    val cand = pin(lshCandidates(sigs, sigs, numHashes, bands, threshold,
+      prefilterMargin, self = true))
+    val sets = shingleSets(df, cand.select("idA").union(cand.select("idB")),
+      textCol, idCol, shingleSize)
+    val res = verified(cand, sets, sets, threshold)
+    if (eager) res.localCheckpoint(true) else res
   }
 
   /**
@@ -338,71 +226,41 @@ object Dedup {
    * Shape at scale: signatures are computed per side (the benchmark side
    * is tiny — typically thousands of eval documents vs billions of
    * training docs), the bucket join shuffles only (band, bucket, id), and
-   * exact verification explodes candidate documents only. Everything is
-   * eagerly checkpointed and released — no cache blocks outlive the call.
+   * verification builds shingle sets for candidate documents only.
+   * Everything is eagerly checkpointed — no cache blocks outlive the call.
    */
   def crossMinhashPairs(
       corpus: DataFrame, bench: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 5, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, prefilterMargin: Double = 0.25): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
     def sigsOf(df: DataFrame): DataFrame =
-      sigTable(df, textCol, idCol, shingleSize, numHashes)
-        .localCheckpoint(true)
-    val bucketCols = (0 until bands).map { b =>
-      val bandSig = (b * rows until (b + 1) * rows).map(i => col(s"s$i"))
-      struct(lit(b).as("band"), xxhash64(bandSig: _*).as("bucket"))
+      sigTable(df, textCol, idCol, shingleSize, numHashes).localCheckpoint(true)
+    val cand = lshCandidates(sigsOf(corpus), sigsOf(bench), numHashes, bands,
+      threshold, prefilterMargin, self = false).localCheckpoint(true)
+    verified(cand,
+      shingleSets(corpus, cand.select("idA"), textCol, idCol, shingleSize),
+      shingleSets(bench, cand.select("idB"), textCol, idCol, shingleSize), threshold)
+      .localCheckpoint(true)
+  }
+
+  /** One row per distinct word n-gram: (id, shingle). Tokens are exploded
+    * with positions and n-grams assembled with window lead()s — no
+    * lambda capture, so the projection and the windows stay codegen'd.
+    * Shared with [[TextAnalysis.contamination]]. */
+  private[pipeline] def ngramPosting(df: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val toks = df.select(col(idCol).as("id"),
+      posexplode(split(lower(trim(col(textCol))), "\\s+")))
+      .where(length(col("col")) > 0)
+      .select(col("id"), col("pos"), col("col").as("tok"))
+    val w = Window.partitionBy("id").orderBy("pos")
+    val grams = (1 until n).foldLeft(toks.withColumn("g", col("tok"))) { (d, i) =>
+      d.withColumn("g", concat_ws(" ", col("g"), lead(col("tok"), i).over(w)))
+        .withColumn(s"ok$i", lead(col("tok"), i).over(w).isNotNull)
     }
-    def bandedOf(sigs: DataFrame, side: String): DataFrame =
-      sigs.select(col("id").as(side), explode(array(bucketCols: _*)).as("bb"))
-        .select(col(side), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-
-    val sigsA = sigsOf(corpus)
-    val sigsB = sigsOf(bench)
-    val collided = bandedOf(sigsA, "idA").join(bandedOf(sigsB, "idB"), Seq("band", "bucket"))
-      .select(col("idA"), col("idB")).distinct()
-
-    // signature-agreement prefilter, same ≥4σ-margin contract as
-    // minhashPairs (the estimator reads the already-computed mins)
-    val minAgree = math.ceil((threshold - prefilterMargin) * numHashes)
-    val candidates = if (minAgree <= 0) collided else {
-      val aSig = sigsA.select(col("id").as("idA") +:
-        (0 until numHashes).map(i => col(s"s$i").as(s"a$i")): _*)
-      val bSig = sigsB.select(col("id").as("idB") +:
-        (0 until numHashes).map(i => col(s"s$i").as(s"b$i")): _*)
-      val agree = (0 until numHashes)
-        .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      collided.join(aSig, Seq("idA")).join(bSig, Seq("idB"))
-        .where(agree >= lit(minAgree))
-        .select(col("idA"), col("idB"))
-    }
-    val cand = candidates.localCheckpoint(true)
-
-    // exact verification: explode only the candidate documents per side
-    def postingOf(df: DataFrame, keep: DataFrame): DataFrame =
-      shinglePosting(
-        df.select(col(idCol).as("id"), col(textCol).as("__text"))
-          .join(keep, Seq("id"), "left_semi"),
-        "__text", "id", shingleSize, dedup = true).localCheckpoint(true)
-    val postA = postingOf(corpus, cand.select(col("idA").as("id")).distinct())
-    val postB = postingOf(bench, cand.select(col("idB").as("id")).distinct())
-    val szA = postA.groupBy("id").agg(count(lit(1)).as("szA"))
-    val szB = postB.groupBy("id").agg(count(lit(1)).as("szB"))
-    val inter = cand
-      .join(postA.select(col("id").as("idA"), col("shingle")), Seq("idA"))
-      .join(postB.select(col("id").as("idB"), col("shingle")), Seq("idB", "shingle"))
-      .groupBy("idA", "idB").agg(count(lit(1)).as("inter"))
-    val res = cand
-      .join(inter, Seq("idA", "idB"), "left").na.fill(0L, Seq("inter"))
-      .join(szA.select(col("id").as("idA"), col("szA")), Seq("idA"))
-      .join(szB.select(col("id").as("idB"), col("szB")), Seq("idB"))
-      .withColumn("jaccard",
-        col("inter").cast(DoubleType) / (col("szA") + col("szB") - col("inter")).cast(DoubleType))
-      .where(col("jaccard") >= threshold)
-      .select(col("idA"), col("idB"), round(col("jaccard"), 6).as("jaccard"))
-    materializeAndRelease(res, Seq.empty)
+    val okCols = (1 until n).map(i => col(s"ok$i")).reduceOption(_ && _).getOrElse(lit(true))
+    grams.where(okCols).select(col("id"), xxhash64(col("g")).as("shingle")).distinct()
   }
 
   /**
@@ -474,7 +332,7 @@ object Dedup {
         col("inter").cast(DoubleType) / (col("szA") + col("szB") - col("inter")).cast(DoubleType))
       .where(col("jaccard") >= threshold)
       .select(col("idA"), col("idB"), round(col("jaccard"), 6).as("jaccard"))
-    if (eager) materializeAndRelease(res, Seq.empty) else res
+    if (eager) res.localCheckpoint(true) else res
   }
 
   // ----- SimHash ----------------------------------------------------------
