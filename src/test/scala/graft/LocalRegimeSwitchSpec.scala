@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.algorithms.GraphAlgorithms
 import graft.pipeline.{BpeVocab, Dedup}
+import graft.sparql.Sparql
 
 /**
  * The one local-regime policy: `spark.graft.localRegimes=off` turns every
@@ -60,6 +61,33 @@ class LocalRegimeSwitchSpec extends SparkSpec {
 
   private val regimes = graphRegimes :+ ("bpe" -> (bpe _))
 
+  /** The smallest source id as a string ("1" on an empty frame). */
+  private def seedOf(e: DataFrame): String =
+    Option(e.agg(min(col("src"))).head().get(0)).fold("1")(_.toString)
+
+  /** The edge list as `knows` triples, and a Kleene path from its
+    * smallest subject (a constant endpoint) or between two variables. */
+  private def kleene(e: DataFrame, constant: Boolean): Seq[String] = {
+    val triples = e.select(col("src").cast("string").as("s"), lit("knows").as("p"),
+      col("dst").cast("string").as("o"))
+    val seed = seedOf(e)
+    rows(Sparql.run(triples,
+      if (constant) s"SELECT ?o WHERE { <$seed> <knows>+ ?o . }"
+      else "SELECT ?s ?o WHERE { ?s <knows>+ ?o . }"))
+  }
+
+  /** The frontier and peel loops: local regime or distributed only by size. */
+  private val loopRegimes: Seq[(String, DataFrame => Seq[String])] = Seq(
+    "shortestPaths" -> (e => rows(GraphAlgorithms.shortestPaths(e, seedOf(e), maxHops = 4))),
+    "weightedShortestPaths" -> (e => rows(GraphAlgorithms.weightedShortestPaths(
+      weighted(e), seedOf(e), maxHops = 4))),
+    "kCore" -> (e => rows(GraphAlgorithms.kCore(e, k = 2, rounds = 5))),
+    // a DAG: the reverse duplicate (2, 1) would close a cycle
+    "topologicalLevels" -> (e => rows(GraphAlgorithms.topologicalLevels(
+      e.where(col("src") <= col("dst"))))),
+    "kleene constant" -> (e => kleene(e, constant = true)),
+    "kleene variable" -> (e => kleene(e, constant = false)))
+
   test("kill-switch: every count-gated regime takes its distributed path " +
       "with the switch off and returns the same rows") {
     val e = stringEdges(hops)
@@ -80,7 +108,7 @@ class LocalRegimeSwitchSpec extends SparkSpec {
     val loopDup = stringEdges(hops ++ Seq((3L, 3L), (1L, 2L), (2L, 1L)))
     val wide = longEdges(hops ++ Seq((5L, 5L), (4L, 5L)))
     for ((input, e) <- Seq("empty" -> empty, "self-loop + duplicate" -> loopDup,
-        "64-bit ids" -> wide); (name, run) <- regimes) {
+        "64-bit ids" -> wide); (name, run) <- regimes ++ loopRegimes) {
       val on = run(e)
       val off = withLocalRegimesOff(run(e))
       assert(off === on, s"$name on $input")
