@@ -4,7 +4,9 @@
 #   - a call to localRegimesEnabled( outside GraphAlgorithms.localRowCap,
 #   - more than one `def intern(` (the shared GraphAlgorithms.Interner),
 #   - a localThreshold parameter outside StreamingTriangles,
-#   - the removed spark.graft.kleene.localThreshold conf.
+#   - the removed spark.graft.kleene.localThreshold conf,
+#   - an .observe( call outside graft.algorithms.Fixpoint (the one place a
+#     round's materialization and its stopping count are taken).
 #
 #   dev/check_local_gate.sh
 set -euo pipefail
@@ -44,6 +46,14 @@ confs=$(grep -rn --include='*.scala' 'spark\.graft\.kleene\.localThreshold' "$sr
 if [ -n "$confs" ]; then
   echo "removed conf spark.graft.kleene.localThreshold is back:"
   echo "$confs"
+  fail=1
+fi
+
+observes=$(grep -rn --include='*.scala' '\.observe(' "$src" \
+  | grep -v '/algorithms/Fixpoint.scala:' || true)
+if [ -n "$observes" ]; then
+  echo ".observe( outside graft.algorithms.Fixpoint:"
+  echo "$observes"
   fail=1
 fi
 

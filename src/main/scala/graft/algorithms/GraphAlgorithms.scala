@@ -504,10 +504,10 @@ object GraphAlgorithms {
    *
    * DataFrame-iterative frontier expansion: each hop is ONE equi-join
    * shuffle of the current frontier against the edge table plus an
-   * anti-join against the settled set; the frontier is eagerly
-   * localCheckpointed per hop (the pageRank/beamSearch pattern), so the
-   * per-hop plan is O(1) in hop count and the loop stops as soon as a
-   * frontier is empty. At cluster scale the edge table is the only large
+   * anti-join against the settled set ([[hopBfs]]); the frontier is
+   * eagerly checkpointed per hop by [[Fixpoint.run]], so the per-hop plan
+   * is O(1) in hop count and the loop stops as soon as a frontier is
+   * empty. At cluster scale the edge table is the only large
    * operand and it is persisted once; frontiers are reachability sets.
    * Returns (id, dist) for every vertex reached within `maxHops`.
    */
@@ -534,34 +534,46 @@ object GraphAlgorithms {
       .where(col("u") =!= col("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val eCnt = e.count()
-    // only each hop's FRONTIER is checkpointed; the distance table is a
-    // union of those checkpointed frontiers (depth ≤ maxHops, every leaf
-    // materialized), so the settled set is never re-materialized per hop.
-    // Frontier/settled counts are tracked on the driver (the per-hop
-    // count doubles as the loop's emptiness check) and gate broadcast on
-    // every checkpointed probe side — the statless-LogicalRDD discipline
-    // (see [[gatedBc]]): below the gate each hop only SCANS the edge
-    // list; above it the spillable SortMergeJoin stands.
-    var dist = Seq((sourceId, 0)).toDF("id", "dist").localCheckpoint(true)
-    var frontier = dist
-    var frontierCnt = 1L
-    var distCnt = 1L
-    var h = 0
-    while (h < maxHops && frontierCnt > 0) {
-      h += 1
-      val next = gatedBc(frontier.select(col("id").as("u")), frontierCnt, eCnt)
-        .join(e, Seq("u"))
-        .select(col("v").as("id")).distinct()
-        .join(gatedBc(dist, distCnt, eCnt), Seq("id"), "left_anti")
-        .withColumn("dist", lit(h))
-        .localCheckpoint(true)
-      frontierCnt = next.count()
-      distCnt += frontierCnt
-      dist = dist.unionByName(next)
-      frontier = next
-    }
+    val dist = hopBfs(e, eCnt, Seq((sourceId, 0)).toDF("id", "dist"), 1L, Nil, maxHops)
     e.unpersist()
     dist
+  }
+
+  /** Hop-bounded BFS over the oriented (u, v) edge list `e` of `eCnt`
+    * rows, shared by [[shortestPaths]], [[closenessCentrality]] and
+    * [[eccentricity]]: from the `startCnt` rows (keys…, id, dist = 0) of
+    * `start`, every (keys…, id) first reached at hop h ≤ `maxHops` gets
+    * dist h. Each hop is one join of the frontier with the edges and one
+    * anti-join with the settled rows, checkpointed once by
+    * [[Fixpoint.run]]; the loop stops at the first empty frontier. The
+    * result is the union of the checkpointed frontiers, so the settled
+    * set is never re-materialized. Frontier and settled counts, observed
+    * in the checkpoint jobs, gate broadcast on both probe sides
+    * ([[gatedBc]]): below the gate each hop only scans the edge list;
+    * above it the spillable SortMergeJoin stands. */
+  private def hopBfs(e: DataFrame, eCnt: Long, start: DataFrame, startCnt: Long,
+                     keys: Seq[String], maxHops: Int): DataFrame = {
+    val k = keys.map(col)
+    Fixpoint.run((start, start, startCnt, startCnt), maxHops) {
+      case ((dist, frontier, frontierCnt, distCnt), h) =>
+        Fixpoint.Round(gatedBc(frontier.select(k :+ col("id").as("u"): _*), frontierCnt, eCnt)
+          .join(e, Seq("u"))
+          .select(k :+ col("v").as("id"): _*).distinct()
+          .join(gatedBc(dist, distCnt, eCnt), keys :+ "id", "left_anti")
+          .withColumn("dist", lit(h)))((next, n) =>
+          (dist.unionByName(next), next, n, distCnt + n))
+    }._1._1
+  }
+
+  /** [[hopBfs]] from every vertex of `e`, or from the ids of `sources`,
+    * keyed by the source `s`: (the checkpointed sources, the (s, id, dist)
+    * rows). */
+  private def bfsFromSources(e: DataFrame, eCnt: Long, sources: Option[DataFrame],
+                             maxHops: Int): (DataFrame, DataFrame) = {
+    val (srcs, srcCnt) = Fixpoint.materialize(sources.map(_.select(col("id")))
+      .getOrElse(e.select(col("u").as("id")).distinct()))
+    (srcs, hopBfs(e, eCnt, srcs.select(col("id").as("s"), col("id"), lit(0).as("dist")),
+      srcCnt, Seq("s"), maxHops))
   }
 
   /**
@@ -570,10 +582,10 @@ object GraphAlgorithms {
    * `localCheckpoint` frame is a statless LogicalRDD, so the static
    * planner sort-merge-joins the edge list against it EVERY round and
    * (measured, sf1/sf10 — BENCH_SF10_NOTES.md) AQE does not rescue the
-   * plan. The caller tracks the frame's row count on the driver (the
-   * per-round count doubles as the loop's emptiness check) and this
-   * hints broadcast under the gate; above it the spillable
-   * SortMergeJoin is the only correct shape.
+   * plan. The caller passes the frame's row count — for a loop's state,
+   * the count [[Fixpoint]] observed in the job that checkpointed it, so
+   * the gate costs no job — and this hints broadcast under the gate;
+   * above it the spillable SortMergeJoin is the only correct shape.
    *
    * The gate is RELATIVE as well as absolute: broadcast costs a
    * per-round driver collect + re-ship of `cnt` rows (state frames
@@ -584,7 +596,7 @@ object GraphAlgorithms {
    * frontier ≪ edges is exactly the egonets shape that won 2.8× at
    * sf10. big/8 with the 2M cap keeps both measurements.
    */
-  private def gatedBc(df: DataFrame, cnt: Long, big: Long): DataFrame =
+  private[graft] def gatedBc(df: DataFrame, cnt: Long, big: Long): DataFrame =
     if (cnt <= math.min(2000000L, big / 8)) broadcast(df) else df
 
   /** Driver-side hop-bounded BFS for [[shortestPaths]]'s small regime —
@@ -625,9 +637,9 @@ object GraphAlgorithms {
    * Closeness + harmonic centrality (parity-plus, the natural next step
    * after [[shortestPaths]]): hop-bounded multi-source BFS over the state
    * (source, vertex, dist) — the [[shortestPaths]] frontier loop with the
-   * source carried as a key, so each hop stays ONE equi-join shuffle plus
-   * one anti-join against the settled set, frontier localCheckpointed per
-   * hop. Per source s (within `maxHops`):
+   * source carried as a key ([[hopBfs]]), so each hop stays ONE equi-join
+   * shuffle plus one anti-join against the settled set, one [[Fixpoint]]
+   * round per hop. Per source s (within `maxHops`):
    *
    *  - `reached`   — vertices at distance ≥ 1
    *  - `sum_dist`  — Σ d(s, v)
@@ -668,31 +680,7 @@ object GraphAlgorithms {
       e.unpersist()
       return out
     }
-    val verts = e.select(col("u").as("id")).distinct()
-    val srcs = sources.map(_.select(col("id"))).getOrElse(verts)
-      .localCheckpoint(true)
-    var dist = srcs.select(col("id").as("s"), col("id"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dist
-    // driver-tracked state sizes gate broadcast on the checkpointed
-    // probe sides ([[gatedBc]]); the per-hop count doubles as the
-    // emptiness check
-    var frontierCnt = srcs.count()
-    var distCnt = frontierCnt
-    var h = 0
-    while (h < maxHops && frontierCnt > 0) {
-      h += 1
-      val next = gatedBc(frontier.select(col("s"), col("id").as("u")), frontierCnt, eCnt)
-        .join(e, Seq("u"))
-        .select(col("s"), col("v").as("id")).distinct()
-        .join(gatedBc(dist, distCnt, eCnt), Seq("s", "id"), "left_anti")
-        .withColumn("dist", lit(h))
-        .localCheckpoint(true)
-      frontierCnt = next.count()
-      distCnt += frontierCnt
-      dist = dist.unionByName(next)
-      frontier = next
-    }
+    val (srcs, dist) = bfsFromSources(e, eCnt, sources, maxHops)
     e.unpersist()
     val aggCols = count(lit(1)).as("__reached") +: sum(col("dist")).as("__sum") +:
       (1 to maxHops).map(d => count(when(col("dist") === d, 1)).as(s"__n$d"))
@@ -798,10 +786,10 @@ object GraphAlgorithms {
    *
    * Distributed shape: forward = the closeness multi-source BFS carrying
    * a path-count (σ, exact integers — contributions only cross
-   * frontier→new-vertex edges, the BFS DAG); backward = one join +
-   * grouped sum per depth level from the deepest layer inward, each level
-   * localCheckpointed. Both directions are O(maxHops) equi-join shuffles
-   * on (s, v) — no all-pairs state.
+   * frontier→new-vertex edges, the BFS DAG; one [[Fixpoint]] round per
+   * layer); backward = one join + grouped sum per depth level from the
+   * deepest layer inward, each level localCheckpointed. Both directions
+   * are O(maxHops) equi-join shuffles on (s, v) — no all-pairs state.
    *
    * δ sums are data-ordered doubles, so the result contract is
    * round-to-4 (the pageRank precedent: ~1e-13 cross-engine drift vs a
@@ -825,39 +813,28 @@ object GraphAlgorithms {
     }
     val verts = e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct().localCheckpoint(true)
-    val srcs = sources.map(_.select(col("id"))).getOrElse(verts).localCheckpoint(true)
+    val (srcs, srcCnt) = Fixpoint.materialize(sources.map(_.select(col("id"))).getOrElse(verts))
 
     // forward: layers of (s, v, sigma) — sigma only ever sums over edges
     // from the previous frontier into unsettled vertices (the BFS DAG).
-    // Layer counts are tracked on the driver (the per-level count
-    // doubles as the termination check) and gate broadcast on every
-    // checkpointed probe side in BOTH sweeps ([[gatedBc]]).
-    var frontier = srcs.select(col("id").as("s"), col("id").as("v"), lit(1L).as("sigma"))
-      .localCheckpoint(true)
-    var settled = frontier.select(col("s"), col("v")).localCheckpoint(true)
-    var layers = Vector(frontier) // index == dist
-    var layerCnt = Vector(srcs.count())
-    var settledCnt = layerCnt(0)
-    var h = 0
-    var done = false
-    while (h < maxHops && !done) {
-      val nf = gatedBc(frontier.select(col("s"), col("v").as("u"), col("sigma")),
-          layerCnt.last, eCnt)
-        .join(e, Seq("u"))
-        .select(col("s"), col("v"), col("sigma"))
-        .groupBy("s", "v").agg(sum(col("sigma")).as("sigma"))
-        .join(gatedBc(settled, settledCnt, eCnt), Seq("s", "v"), "left_anti")
-        .localCheckpoint(true)
-      val nfCnt = nf.count()
-      if (nfCnt == 0) done = true
-      else {
-        h += 1
-        settled = settled.unionByName(nf.select(col("s"), col("v"))).localCheckpoint(true)
-        settledCnt += nfCnt
-        layers = layers :+ nf
-        layerCnt = layerCnt :+ nfCnt
-        frontier = nf
-      }
+    // Each layer is a [[Fixpoint]] round's delta; its count, observed in
+    // its checkpoint job, gates broadcast on every checkpointed probe side
+    // in BOTH sweeps ([[gatedBc]]).
+    val start = srcs.select(col("id").as("s"), col("id").as("v"), lit(1L).as("sigma"))
+    val ((layers, layerCnt, _, _), _) = Fixpoint.run(
+        (Vector(start), Vector(srcCnt), start.select(col("s"), col("v")), srcCnt), maxHops) {
+      case ((layers, layerCnt, settled, settledCnt), _) =>
+        Fixpoint.Round(gatedBc(layers.last.select(col("s"), col("v").as("u"), col("sigma")),
+            layerCnt.last, eCnt)
+          .join(e, Seq("u"))
+          .select(col("s"), col("v"), col("sigma"))
+          .groupBy("s", "v").agg(sum(col("sigma")).as("sigma"))
+          .join(gatedBc(settled, settledCnt, eCnt), Seq("s", "v"), "left_anti")) { (nf, n) =>
+          if (n == 0) (layers, layerCnt, settled, settledCnt)
+          else (layers :+ nf, layerCnt :+ n,
+            settled.unionByName(nf.select(col("s"), col("v"))).localCheckpoint(true),
+            settledCnt + n)
+        }
     }
 
     // backward: δ at the deepest layer is 0; each shallower layer sums
@@ -1460,45 +1437,42 @@ object GraphAlgorithms {
       both.unpersist()
       return out
     }
-    var live = both.select(col("u").as("id")).distinct().localCheckpoint(true)
-    var liveE = both.localCheckpoint(true)
+    val liveE0 = both.localCheckpoint(true)
     both.unpersist()
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var mis = live.limit(0).select(col("id"), lit(0).as("round"))
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
-      val pri = live.select(col("id"), lcgPriority(col("id"), r * 101L).as("p"))
-      // ties break on the BIGINT id (matching the LCG's numeric domain,
-      // the local path, and the oracle) — never on raw string order
-      val minN = liveE
-        .join(pri.select(col("id").as("v"), col("p").as("pv")), Seq("v"))
-        .groupBy("u").agg(min(struct(col("pv"), col("v").cast("long"))).as("mn"))
-      val winners = pri
-        .join(minN.select(col("u").as("id"), col("mn")), Seq("id"), "left")
-        .where(col("mn").isNull ||
-          struct(col("p"), col("id").cast("long")) < col("mn"))
-        .select(col("id"))
-        .localCheckpoint(true)
-      if (winners.isEmpty) {
-        // no winner with live vertices left can only mean live is empty
-        // (some live vertex always holds the global minimum priority)
-        done = true
-      } else {
-        mis = mis.unionByName(winners.select(col("id"), lit(r).as("round")))
-        val removed = winners
-          .unionByName(liveE.join(winners.select(col("id").as("u")), Seq("u"))
-            .select(col("v").as("id")))
-          .distinct().localCheckpoint(true)
-        live = live.join(removed, Seq("id"), "left_anti").localCheckpoint(true)
-        if (live.isEmpty) done = true
-        else liveE = liveE
-          .join(live.select(col("id").as("u")), Seq("u"), "left_semi")
-          .join(live.select(col("id").as("v")), Seq("v"), "left_semi")
-          .localCheckpoint(true)
-      }
+    val live0 = liveE0.select(col("u").as("id")).distinct().localCheckpoint(true)
+    // a round's delta is its winner set: no winner with live vertices left
+    // can only mean live is empty (some live vertex always holds the
+    // global minimum priority)
+    val ((mis, _, _), _) = Fixpoint.run(
+        (live0.limit(0).select(col("id"), lit(0).as("round")), live0, liveE0), rounds) {
+      case ((mis, live, liveE), r) =>
+        val pri = live.select(col("id"), lcgPriority(col("id"), r * 101L).as("p"))
+        // ties break on the BIGINT id (matching the LCG's numeric domain,
+        // the local path, and the oracle) — never on raw string order
+        val minN = liveE
+          .join(pri.select(col("id").as("v"), col("p").as("pv")), Seq("v"))
+          .groupBy("u").agg(min(struct(col("pv"), col("v").cast("long"))).as("mn"))
+        Fixpoint.Round(pri
+          .join(minN.select(col("u").as("id"), col("mn")), Seq("id"), "left")
+          .where(col("mn").isNull ||
+            struct(col("p"), col("id").cast("long")) < col("mn"))
+          .select(col("id"))) { (winners, n) =>
+          if (n == 0) (mis, live, liveE)
+          else {
+            val removed = winners
+              .unionByName(liveE.join(winners.select(col("id").as("u")), Seq("u"))
+                .select(col("v").as("id")))
+              .distinct()
+            val (nextLive, liveCnt) = Fixpoint.materialize(
+              live.join(removed, Seq("id"), "left_anti"))
+            (mis.unionByName(winners.select(col("id"), lit(r).as("round"))), nextLive,
+              if (liveCnt == 0) liveE.limit(0)
+              else liveE
+                .join(nextLive.select(col("id").as("u")), Seq("u"), "left_semi")
+                .join(nextLive.select(col("id").as("v")), Seq("v"), "left_semi")
+                .localCheckpoint(true))
+          }
+        }
     }
     mis
   }
@@ -1597,48 +1571,46 @@ object GraphAlgorithms {
     }
     val allE = both.localCheckpoint(true)
     both.unpersist()
-    var live = allE.select(col("u").as("id")).distinct()
+    val live0 = allE.select(col("u").as("id")).distinct()
       .select(col("id"), lcgPriority(col("id"), 101L).as("p")).localCheckpoint(true)
-    var liveE = allE
-    var colored = live.limit(0).select(col("id"), lit(0).as("color"))
-      .localCheckpoint(true)
-    var out = colored.select(col("id"), col("color"), lit(0).as("round"))
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
-      val mx = liveE
-        .join(live.select(col("id").as("v"), col("p").as("pv")), Seq("v"))
-        .groupBy("u").agg(max(struct(col("pv"), col("v").cast("long"))).as("mx"))
-      val ready = live
-        .join(mx.select(col("u").as("id"), col("mx")), Seq("id"), "left")
-        .where(col("mx").isNull ||
-          struct(col("p"), col("id").cast("long")) > col("mx"))
-        .select(col("id"))
-        .localCheckpoint(true)
-      if (ready.isEmpty) done = true // live always holds a global max → empty live
-      else {
-        val used = allE.join(ready.select(col("id").as("u")), Seq("u"), "left_semi")
-          .join(colored.select(col("id").as("v"), col("color")), Seq("v"))
-          .groupBy("u").agg(collect_set(col("color")).as("used"))
-        val mex = array_min(filter(
-          sequence(lit(0), size(col("used"))),
-          c => !array_contains(col("used"), c)))
-        val newly = ready
-          .join(used.select(col("u").as("id"), col("used")), Seq("id"), "left")
-          .select(col("id"),
-            coalesce(mex, lit(0)).cast("int").as("color"))
-          .localCheckpoint(true)
-        out = out.unionByName(newly.select(col("id"), col("color"), lit(r).as("round")))
-        colored = colored.unionByName(newly).localCheckpoint(true)
-        live = live.join(newly.select(col("id")), Seq("id"), "left_anti")
-          .localCheckpoint(true)
-        if (live.isEmpty) done = true
-        else liveE = liveE
-          .join(live.select(col("id").as("u")), Seq("u"), "left_semi")
-          .join(live.select(col("id").as("v")), Seq("v"), "left_semi")
-          .localCheckpoint(true)
-      }
+    val colored0 = live0.limit(0).select(col("id"), lit(0).as("color"))
+    // a round's delta is its ready set: live always holds a global max, so
+    // no ready vertex means live is empty
+    val ((out, _, _, _), _) = Fixpoint.run((colored0.select(col("id"), col("color"),
+        lit(0).as("round")), colored0, live0, allE), rounds) {
+      case ((out, colored, live, liveE), r) =>
+        val mx = liveE
+          .join(live.select(col("id").as("v"), col("p").as("pv")), Seq("v"))
+          .groupBy("u").agg(max(struct(col("pv"), col("v").cast("long"))).as("mx"))
+        Fixpoint.Round(live
+          .join(mx.select(col("u").as("id"), col("mx")), Seq("id"), "left")
+          .where(col("mx").isNull ||
+            struct(col("p"), col("id").cast("long")) > col("mx"))
+          .select(col("id"))) { (ready, n) =>
+          if (n == 0) (out, colored, live, liveE)
+          else {
+            val used = allE.join(ready.select(col("id").as("u")), Seq("u"), "left_semi")
+              .join(colored.select(col("id").as("v"), col("color")), Seq("v"))
+              .groupBy("u").agg(collect_set(col("color")).as("used"))
+            val mex = array_min(filter(
+              sequence(lit(0), size(col("used"))),
+              c => !array_contains(col("used"), c)))
+            val newly = ready
+              .join(used.select(col("u").as("id"), col("used")), Seq("id"), "left")
+              .select(col("id"),
+                coalesce(mex, lit(0)).cast("int").as("color"))
+              .localCheckpoint(true)
+            val (nextLive, liveCnt) = Fixpoint.materialize(
+              live.join(newly.select(col("id")), Seq("id"), "left_anti"))
+            (out.unionByName(newly.select(col("id"), col("color"), lit(r).as("round"))),
+              colored.unionByName(newly).localCheckpoint(true), nextLive,
+              if (liveCnt == 0) liveE.limit(0)
+              else liveE
+                .join(nextLive.select(col("id").as("u")), Seq("u"), "left_semi")
+                .join(nextLive.select(col("id").as("v")), Seq("v"), "left_semi")
+                .localCheckpoint(true))
+          }
+        }
     }
     out
   }
@@ -1772,51 +1744,48 @@ object GraphAlgorithms {
     if (countGated(canon, 10000000L)) {
       return localMatching(canon, rounds, weighted)
     }
-    var liveE = canon.localCheckpoint(true)
-    var out = liveE.limit(0).select(col("u"), col("v"), lit(0).as("round"))
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
-      // stepwise mod keeps every intermediate under 2^62 even for
-      // hashed 64-bit order keys (ANSI overflow-safe); for ids < 2^31
-      // the inner pmod is the identity, so the replayable oracle form
-      // pmod(A*(ul*c1 + vl*c2 + r*c3) + B, M) is unchanged
-      val m31 = lit(2147483647L)
-      val inner = pmod(
-        pmod(col("ul"), m31) * lit(1000003L) +
-          pmod(col("vl"), m31) * lit(7919L) + lit(r.toLong) * lit(101L), m31)
-      val keyed = liveE.withColumn("p",
-        pmod(lit(1103515245L) * inner + lit(12345L), m31))
-      // heavy-edge mode (the METIS HEM heuristic): the HEAVIEST incident
-      // edge wins locally, the LCG only breaks weight ties; unweighted
-      // mode carries a constant lead field, so the key order — and every
-      // replayed oracle — is exactly the (p, ul, vl) order
-      val lead = if (weighted) -col("w") else lit(0L)
-      val k = struct(lead.as("negw"), col("p"), col("ul"), col("vl"))
-      val byEnd = keyed.select(col("ul").as("idl"), k.as("k"))
-        .unionByName(keyed.select(col("vl").as("idl"), k.as("k")))
-      val mn = byEnd.groupBy("idl").agg(min(col("k")).as("mk"))
-      val winners = keyed
-        .join(mn.select(col("idl").as("ul"), col("mk").as("mku")), Seq("ul"))
-        .join(mn.select(col("idl").as("vl"), col("mk").as("mkv")), Seq("vl"))
-        .where(k === col("mku") && k === col("mkv"))
-        .select(col("u"), col("v"), col("ul"), col("vl"))
-        .localCheckpoint(true)
-      if (winners.isEmpty) {
-        // a live edge always holds the global minimum key → live is empty
-        done = true
-      } else {
-        out = out.unionByName(winners.select(col("u"), col("v"), lit(r).as("round")))
-        val matched = winners.select(col("ul").as("ml"))
-          .unionByName(winners.select(col("vl").as("ml")))
-          .distinct().localCheckpoint(true)
-        liveE = liveE
-          .join(matched.select(col("ml").as("ul")), Seq("ul"), "left_anti")
-          .join(matched.select(col("ml").as("vl")), Seq("vl"), "left_anti")
-          .localCheckpoint(true)
-        if (liveE.isEmpty) done = true
-      }
+    val liveE0 = canon.localCheckpoint(true)
+    // a round's delta is its winner set: a live edge always holds the
+    // global minimum key, so no winner means no live edge
+    val ((out, _), _) = Fixpoint.run(
+        (liveE0.limit(0).select(col("u"), col("v"), lit(0).as("round")), liveE0), rounds) {
+      case ((out, liveE), r) =>
+        // stepwise mod keeps every intermediate under 2^62 even for
+        // hashed 64-bit order keys (ANSI overflow-safe); for ids < 2^31
+        // the inner pmod is the identity, so the replayable oracle form
+        // pmod(A*(ul*c1 + vl*c2 + r*c3) + B, M) is unchanged
+        val m31 = lit(2147483647L)
+        val inner = pmod(
+          pmod(col("ul"), m31) * lit(1000003L) +
+            pmod(col("vl"), m31) * lit(7919L) + lit(r.toLong) * lit(101L), m31)
+        val keyed = liveE.withColumn("p",
+          pmod(lit(1103515245L) * inner + lit(12345L), m31))
+        // heavy-edge mode (the METIS HEM heuristic): the HEAVIEST incident
+        // edge wins locally, the LCG only breaks weight ties; unweighted
+        // mode carries a constant lead field, so the key order — and every
+        // replayed oracle — is exactly the (p, ul, vl) order
+        val lead = if (weighted) -col("w") else lit(0L)
+        val k = struct(lead.as("negw"), col("p"), col("ul"), col("vl"))
+        val byEnd = keyed.select(col("ul").as("idl"), k.as("k"))
+          .unionByName(keyed.select(col("vl").as("idl"), k.as("k")))
+        val mn = byEnd.groupBy("idl").agg(min(col("k")).as("mk"))
+        Fixpoint.Round(keyed
+          .join(mn.select(col("idl").as("ul"), col("mk").as("mku")), Seq("ul"))
+          .join(mn.select(col("idl").as("vl"), col("mk").as("mkv")), Seq("vl"))
+          .where(k === col("mku") && k === col("mkv"))
+          .select(col("u"), col("v"), col("ul"), col("vl"))) { (winners, n) =>
+          if (n == 0) (out, liveE)
+          else {
+            val matched = winners.select(col("ul").as("ml"))
+              .unionByName(winners.select(col("vl").as("ml")))
+              .distinct().localCheckpoint(true)
+            (out.unionByName(winners.select(col("u"), col("v"), lit(r).as("round"))),
+              liveE
+                .join(matched.select(col("ml").as("ul")), Seq("ul"), "left_anti")
+                .join(matched.select(col("ml").as("vl")), Seq("vl"), "left_anti")
+                .localCheckpoint(true))
+          }
+        }
     }
     out
   }
@@ -2040,61 +2009,56 @@ object GraphAlgorithms {
     // coarse edge state: (cu, cv) current component labels (cu < cv),
     // (ou, ov, ul, vl, w) the best underlying fine edge (ul/vl carry the
     // numeric order keys so merges tie-break numerically for any id type)
-    var active = canon.select(col("ul").as("cu"), col("vl").as("cv"),
-      col("ou"), col("ov"), col("ul"), col("vl"), col("w")).localCheckpoint(true)
+    val (active0, activeCnt) = Fixpoint.materialize(canon.select(col("ul").as("cu"),
+      col("vl").as("cv"), col("ou"), col("ov"), col("ul"), col("vl"), col("w")))
     canon.unpersist()
-    var forest = active.limit(0).select(col("ou").as("u"), col("ov").as("v"),
-      col("w").as("weight"))
-    var r = 0
-    while (r < rounds && !active.isEmpty) {
-      r += 1
-      val key = struct(col("w"), col("cu"), col("cv"))
-      val byEnd = active.select(col("cu").as("lbl"), key.as("k"), col("cv").as("other"))
-        .unionByName(active.select(col("cv").as("lbl"), key.as("k"), col("cu").as("other")))
-      // per-label minimum incident edge + the pointer to its other end
-      val best = byEnd.groupBy("lbl").agg(min(struct(col("k"), col("other"))).as("m"))
-        .select(col("lbl"), col("m.k").as("k"), col("m.other").as("ptr"))
-        .localCheckpoint(true)
-      // selected coarse edges (distinct by coarse pair), fine edges out
-      val sel = active
-        .join(best.select(col("k")).distinct(), key === col("k"), "left_semi")
-        .localCheckpoint(true)
-      forest = forest.unionByName(
-        sel.select(col("ou").as("u"), col("ov").as("v"), col("w").as("weight")))
-      // pointer graph: break each 2-cycle at its smaller label
-      val p = best.select(col("lbl"), col("ptr"))
-      var jump = p.as("x").join(p.as("y"), col("x.ptr") === col("y.lbl"))
-        .select(col("x.lbl").as("lbl"),
-          when(col("y.ptr") === col("x.lbl"), least(col("x.lbl"), col("x.ptr")))
-            .otherwise(col("x.ptr")).as("ptr"))
-        .localCheckpoint(true)
-      // pointer doubling to the fixpoint (chains at least halve per
-      // step; 48 doublings cover any chain below 2^48 labels)
-      var stable = false
-      var jumps = 0
-      while (!stable && jumps < 48) {
-        jumps += 1
-        val next = jump.as("x").join(jump.as("y"), col("x.ptr") === col("y.lbl"))
-          .select(col("x.lbl").as("lbl"), col("y.ptr").as("ptr"))
+    // a round's delta is the contracted coarse edge list: the forest is
+    // spanning once no coarse edge is left
+    val ((_, forest), _) = Fixpoint.run((active0, active0.limit(0).select(col("ou").as("u"),
+        col("ov").as("v"), col("w").as("weight"))), if (activeCnt == 0) 0 else rounds) {
+      case ((active, forest), _) =>
+        val key = struct(col("w"), col("cu"), col("cv"))
+        val byEnd = active.select(col("cu").as("lbl"), key.as("k"), col("cv").as("other"))
+          .unionByName(active.select(col("cv").as("lbl"), key.as("k"), col("cu").as("other")))
+        // per-label minimum incident edge + the pointer to its other end
+        val best = byEnd.groupBy("lbl").agg(min(struct(col("k"), col("other"))).as("m"))
+          .select(col("lbl"), col("m.k").as("k"), col("m.other").as("ptr"))
           .localCheckpoint(true)
-        stable = next.as("a").join(jump.as("b"),
-          col("a.lbl") === col("b.lbl") && col("a.ptr") =!= col("b.ptr")).isEmpty
-        jump = next
-      }
-      // contract: relabel both endpoints, drop internal edges, merge
-      // parallel coarse edges keeping the minimum fine edge
-      active = active
-        .join(jump.select(col("lbl").as("cu"), col("ptr").as("nu")), Seq("cu"))
-        .join(jump.select(col("lbl").as("cv"), col("ptr").as("nv")), Seq("cv"))
-        .where(col("nu") =!= col("nv"))
-        .select(least(col("nu"), col("nv")).as("cu"),
-          greatest(col("nu"), col("nv")).as("cv"),
-          col("ou"), col("ov"), col("ul"), col("vl"), col("w"))
-        .groupBy("cu", "cv")
-        .agg(min(struct(col("w"), col("ul"), col("vl"), col("ou"), col("ov"))).as("m"))
-        .select(col("cu"), col("cv"), col("m.ou").as("ou"), col("m.ov").as("ov"),
-          col("m.ul").as("ul"), col("m.vl").as("vl"), col("m.w").as("w"))
-        .localCheckpoint(true)
+        // selected coarse edges (distinct by coarse pair), fine edges out
+        val sel = active
+          .join(best.select(col("k")).distinct(), key === col("k"), "left_semi")
+          .localCheckpoint(true)
+        // pointer graph: break each 2-cycle at its smaller label
+        val p = best.select(col("lbl"), col("ptr"))
+        val jump0 = p.as("x").join(p.as("y"), col("x.ptr") === col("y.lbl"))
+          .select(col("x.lbl").as("lbl"),
+            when(col("y.ptr") === col("x.lbl"), least(col("x.lbl"), col("x.ptr")))
+              .otherwise(col("x.ptr")).as("ptr"))
+          .localCheckpoint(true)
+        // pointer doubling to the fixpoint, a step's delta being the labels
+        // whose pointer moved (chains at least halve per step; 48
+        // doublings cover any chain below 2^48 labels)
+        val (jump, _) = Fixpoint.run(jump0, 48) { (jump, _) =>
+          Fixpoint.Round(jump.as("x").join(jump.as("y"), col("x.ptr") === col("y.lbl"))
+            .select(col("x.lbl").as("lbl"), col("y.ptr").as("ptr"),
+              (col("x.ptr") =!= col("y.ptr")).as("moved")), col("moved"))((next, _) =>
+            next.select(col("lbl"), col("ptr")))
+        }
+        // contract: relabel both endpoints, drop internal edges, merge
+        // parallel coarse edges keeping the minimum fine edge
+        Fixpoint.Round(active
+          .join(jump.select(col("lbl").as("cu"), col("ptr").as("nu")), Seq("cu"))
+          .join(jump.select(col("lbl").as("cv"), col("ptr").as("nv")), Seq("cv"))
+          .where(col("nu") =!= col("nv"))
+          .select(least(col("nu"), col("nv")).as("cu"),
+            greatest(col("nu"), col("nv")).as("cv"),
+            col("ou"), col("ov"), col("ul"), col("vl"), col("w"))
+          .groupBy("cu", "cv")
+          .agg(min(struct(col("w"), col("ul"), col("vl"), col("ou"), col("ov"))).as("m"))
+          .select(col("cu"), col("cv"), col("m.ou").as("ou"), col("m.ov").as("ov"),
+            col("m.ul").as("ul"), col("m.vl").as("vl"), col("m.w").as("w")))((next, _) =>
+          (next, forest.unionByName(
+            sel.select(col("ou").as("u"), col("ov").as("v"), col("w").as("weight")))))
     }
     forest
   }
@@ -2530,25 +2494,21 @@ object GraphAlgorithms {
     // nothing — at that fixpoint min-over-≤k-hop equals min-over-≤K for
     // every K ≥ k, so results match the full-relaxation form exactly.
     // Each round is ONE aggregate over (settled ∪ relaxed) that yields
-    // both the new distance and the changed flag, checkpointed once.
-    var dist = Seq((sourceId, 0L)).toDF("id", "dist").localCheckpoint(true)
-    var frontier = dist
-    var h = 0
-    while (h < maxHops && !frontier.isEmpty) {
-      h += 1
+    // both the new distance and the changed flag, checkpointed once; the
+    // changed rows are the round's delta.
+    val improved = col("__old").isNull || col("dist") < col("__old")
+    val start = Seq((sourceId, 0L)).toDF("id", "dist")
+    val ((dist, _), _) = Fixpoint.run((start, start), maxHops) { case ((dist, frontier), _) =>
       val relaxed = frontier.select(col("id").as("u"), col("dist")).join(e, Seq("u"))
         .select(col("v").as("id"), (col("dist") + col("w")).as("dist"),
           lit(true).as("__new"))
-      val combined = dist.withColumn("__new", lit(false))
+      Fixpoint.Round(dist.withColumn("__new", lit(false))
         .unionByName(relaxed)
         .groupBy(col("id"))
         .agg(min(col("dist")).as("dist"),
-          min(when(!col("__new"), col("dist"))).as("__old"))
-        .localCheckpoint(true)
-      dist = combined.select(col("id"), col("dist"))
-      frontier = combined
-        .where(col("__old").isNull || col("dist") < col("__old"))
-        .select(col("id"), col("dist"))
+          min(when(!col("__new"), col("dist"))).as("__old")), improved)((combined, _) =>
+        (combined.select(col("id"), col("dist")),
+          combined.where(improved).select(col("id"), col("dist"))))
     }
     e.unpersist()
     dist
@@ -2814,38 +2774,41 @@ object GraphAlgorithms {
     // (the bounded form stays replayable round-by-round by the oracle).
     // Degrees in two halves: the src half rides canon's partitioning,
     // exchange-free (the old explode shuffled 2|E| rows).
-    var deg = canon.groupBy(col("src").as("id")).agg(count(lit(1)).as("__ds"))
+    val deg0 = canon.groupBy(col("src").as("id")).agg(count(lit(1)).as("__ds"))
       .join(canon.groupBy(col("dst").as("id")).agg(count(lit(1)).as("__dd")),
         Seq("id"), "full_outer")
       .select(col("id"),
         (coalesce(col("__ds"), lit(0L)) + coalesce(col("__dd"), lit(0L))).as("degree"))
-      .localCheckpoint(true)
-    var executed = 0
-    var converged = false
-    while (executed < rounds && !converged) {
-      val removed = deg.where(col("degree") < k).select("id").localCheckpoint(true)
-      executed += 1 // a round that removes nothing still counts as executed
-      val removedCnt = removed.count()
-      if (removedCnt == 0) converged = true
-      else {
-        val delta = canon.join(gatedBc(removed.select(col("id").as("src")),
-            removedCnt, canonCnt), Seq("src"))
-          .select(col("dst").as("id"))
-          .unionAll(canon.join(gatedBc(removed.select(col("id").as("dst")),
-              removedCnt, canonCnt), Seq("dst"))
-            .select(col("src").as("id")))
-          .groupBy("id").agg(count(lit(1)).as("drop"))
-        deg = deg.where(col("degree") >= k)
-          .join(delta, Seq("id"), "left")
-          .select(col("id"),
-            (col("degree") - coalesce(col("drop"), lit(0L))).as("degree"))
-          .localCheckpoint(true)
+    // each round checkpoints the degrees it peels, counting the vertices
+    // below k (its delta, the removed set) in the same job; a round that
+    // removes nothing still counts as run
+    val ((deg, removedLast), executed) = Fixpoint.run((deg0, 0L), rounds) { case ((deg, _), _) =>
+      Fixpoint.Round(deg, col("degree") < k) { (deg, removedCnt) =>
+        if (removedCnt == 0) (deg, 0L)
+        else {
+          val removed = deg.where(col("degree") < k).select("id")
+          val delta = canon.join(gatedBc(removed.select(col("id").as("src")),
+              removedCnt, canonCnt), Seq("src"))
+            .select(col("dst").as("id"))
+            .unionAll(canon.join(gatedBc(removed.select(col("id").as("dst")),
+                removedCnt, canonCnt), Seq("dst"))
+              .select(col("src").as("id")))
+            .groupBy("id").agg(count(lit(1)).as("drop"))
+          (deg.where(col("degree") >= k)
+            .join(delta, Seq("id"), "left")
+            .select(col("id"),
+              (col("degree") - coalesce(col("drop"), lit(0L))).as("degree")),
+            removedCnt)
+        }
       }
     }
     // survivors keep their maintained induced degree; vertices whose last
     // neighbor was just removed (degree 0) are omitted, matching the old
-    // induced-edge aggregate which never emitted them
-    val out = deg.where(col("degree") > 0)
+    // induced-edge aggregate which never emitted them. A peel cut off by
+    // `rounds` ends on an unapplied update, checkpointed here before the
+    // edge list is released.
+    val out = (if (removedLast > 0) deg.localCheckpoint(true) else deg)
+      .where(col("degree") > 0)
     canon.unpersist()
     (out, executed)
   }
@@ -2906,20 +2869,14 @@ object GraphAlgorithms {
 
   private[graft] def kTrussImpl(edges: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
     require(k >= 2, s"k must be >= 2: $k")
-    var e = PropertyGraph.canonicalUndirected(edges).localCheckpoint(true)
-    var n = e.count()
+    val (e0, n) = Fixpoint.materialize(PropertyGraph.canonicalUndirected(edges))
     if (localRowCap(edges.sparkSession, 10000000L).exists(n <= _))
-      return localKTruss(e, k, rounds)
-    var executed = 0
-    var converged = false
-    while (executed < rounds && !converged) {
-      executed += 1
-      val kept = edgeSupport(e).where(col("support") >= k - 2)
-        .select(col("src"), col("dst")).localCheckpoint(true)
-      val kn = kept.count()
-      converged = kn == n
-      n = kn
-      e = kept
+      return localKTruss(e0, k, rounds)
+    // each round checkpoints the support of the surviving edges, counting
+    // the edges below k - 2 (its delta) in the same job
+    val (e, executed) = Fixpoint.run(e0, rounds) { (e, _) =>
+      Fixpoint.Round(edgeSupport(e), col("support") < k - 2)((sup, _) =>
+        sup.where(col("support") >= k - 2).select(col("src"), col("dst")))
     }
     (edgeSupport(e), executed)
   }
@@ -3279,14 +3236,13 @@ object GraphAlgorithms {
               broadcastRowGate: Long = 2000000L): DataFrame = {
     val es = g.orientedEdges.select(col("src"), col("dst"))
     val e = egos.select(col(egos.columns.head).cast("string").as("ego")).distinct()
-    val members = es.join(e, col("src") === col("ego"))
+    val (members, nMembers) = Fixpoint.materialize(es.join(e, col("src") === col("ego"))
       .select(col("ego"), col("dst").as("m"))
       .unionByName(es.join(e, col("dst") === col("ego"))
         .select(col("ego"), col("src").as("m")))
       .unionByName(e.select(col("ego"), col("ego").as("m")))
-      .distinct()
-      .localCheckpoint(true)
-    val small = members.count() <= broadcastRowGate
+      .distinct())
+    val small = nMembers <= broadcastRowGate
     def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val dm = members.select(col("m")).distinct().localCheckpoint(true)
     val esp = es
@@ -3310,8 +3266,8 @@ object GraphAlgorithms {
    * reached). Diameter = max over the result, radius = min over vertices
    * that reach the whole graph — both one aggregate away.
    *
-   * Same BFS state shape as [[closenessCentrality]] (per-(source,vertex)
-   * distance, one hop per round); a true unbounded eccentricity needs
+   * Same BFS as [[closenessCentrality]] ([[hopBfs]]: per-(source,vertex)
+   * distance, one [[Fixpoint]] round per hop); a true unbounded eccentricity needs
    * `maxHops` ≥ the graph diameter. At 100 TB pass `sources` (landmarks)
    * — all-sources state is |V| · reach, exactly like closeness.
    *
@@ -3334,29 +3290,7 @@ object GraphAlgorithms {
       e.unpersist()
       return out
     }
-    val verts = e.select(col("u").as("id")).distinct()
-    val srcs = sources.map(_.select(col("id"))).getOrElse(verts)
-      .localCheckpoint(true)
-    var dist = srcs.select(col("id").as("s"), col("id"), lit(0).as("dist"))
-      .localCheckpoint(true)
-    var frontier = dist
-    // same gated-broadcast frontier walk as [[closenessCentrality]]
-    var frontierCnt = srcs.count()
-    var distCnt = frontierCnt
-    var h = 0
-    while (h < maxHops && frontierCnt > 0) {
-      h += 1
-      val next = gatedBc(frontier.select(col("s"), col("id").as("u")), frontierCnt, eCnt)
-        .join(e, Seq("u"))
-        .select(col("s"), col("v").as("id")).distinct()
-        .join(gatedBc(dist, distCnt, eCnt), Seq("s", "id"), "left_anti")
-        .withColumn("dist", lit(h))
-        .localCheckpoint(true)
-      frontierCnt = next.count()
-      distCnt += frontierCnt
-      dist = dist.unionByName(next)
-      frontier = next
-    }
+    val (srcs, dist) = bfsFromSources(e, eCnt, sources, maxHops)
     e.unpersist()
     val agg = dist.where(col("dist") > 0).groupBy(col("s"))
       .agg(count(lit(1)).as("__reached"), max(col("dist")).as("__ecc"))
@@ -3665,23 +3599,22 @@ object GraphAlgorithms {
     val prio = pmod(lit(1103515245L) *
       (col("u").cast("long") * lit(1000003L) + col("v").cast("long") * lit(101L)) +
       lit(12345L), lit(2147483647L))
-    var members = seeds.select(col(seeds.columns.head).as("id")).distinct()
-      .localCheckpoint(true)
-    var frontier = members
-    var h = 0
-    while (h < hops && !frontier.isEmpty) {
-      h += 1
-      val cand = frontier.select(col("id").as("u")).join(nb, Seq("u"))
-        .withColumn("__p", prio)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("u")).orderBy(col("__p").asc, col("v").asc)
-      val admitted = cand.withColumn("__rn", row_number().over(w))
-        .where(col("__rn") <= maxNeighbors)
-        .select(col("v").as("id")).distinct()
-        .join(members, Seq("id"), "left_anti")
-        .localCheckpoint(true)
-      members = members.unionByName(admitted).localCheckpoint(true)
-      frontier = admitted
+    val (seeded, seedCnt) = Fixpoint.materialize(
+      seeds.select(col(seeds.columns.head).as("id")).distinct())
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("u")).orderBy(col("__p").asc, col("v").asc)
+    // a hop's delta is its admitted set
+    val ((members, _), _) = Fixpoint.run((seeded, seeded), if (seedCnt == 0) 0 else hops) {
+      case ((members, frontier), _) =>
+        Fixpoint.Round(frontier.select(col("id").as("u")).join(nb, Seq("u"))
+          .withColumn("__p", prio)
+          .withColumn("__rn", row_number().over(w))
+          .where(col("__rn") <= maxNeighbors)
+          .select(col("v").as("id")).distinct()
+          .join(members, Seq("id"), "left_anti")) { (admitted, n) =>
+          (if (n == 0) members else members.unionByName(admitted).localCheckpoint(true),
+            admitted)
+        }
     }
     cn.join(members.select(col("id").as("src")), Seq("src"), "left_semi")
       .join(members.select(col("id").as("dst")), Seq("dst"), "left_semi")
@@ -3717,8 +3650,7 @@ object GraphAlgorithms {
       return localCoreNumbers(spark, in, maxK, roundsPerK,
         raw.schema("src").dataType)
     }
-    var cn = PropertyGraph.canonicalUndirected(edges).localCheckpoint(true)
-    var cnCnt = cn.count()
+    var (cn, cnCnt) = Fixpoint.materialize(PropertyGraph.canonicalUndirected(edges))
     val verts = cn.select(col("src").as("id"))
       .unionByName(cn.select(col("dst").as("id"))).distinct()
       .localCheckpoint(true)
@@ -3727,32 +3659,29 @@ object GraphAlgorithms {
     var empty = false
     while (k < maxK && !empty) {
       k += 1
-      var r = 0
-      var converged = false
-      var alive: DataFrame = null
-      while (r < roundsPerK && !converged) {
-        r += 1
-        val deg = cn.select(explode(array(col("src"), col("dst"))).as("id"))
-          .groupBy("id").agg(count(lit(1)).as("degree"))
-        val kept = deg.where(col("degree") >= k).select("id")
-          .localCheckpoint(true)
-        // gated broadcast on the checkpointed vertex-sized build side
-        // ([[gatedBc]]); above the gate the semi-joins keep their
-        // spillable SMJ — the r16 shuffle_hash A/B on this loop was a
-        // measured REVERT, so only the broadcast regime is hinted
-        val keptCnt = kept.count()
-        val next = cn
-          .join(gatedBc(kept.select(col("id").as("src")), keptCnt, cnCnt), Seq("src"), "left_semi")
-          .join(gatedBc(kept.select(col("id").as("dst")), keptCnt, cnCnt), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true)
-        val nextCnt = next.count()
-        if (nextCnt == cnCnt) converged = true
-        cn = next
-        cnCnt = nextCnt
-        alive = kept
-      }
-      if (alive.isEmpty) empty = true
+      // a round keeps the edges whose endpoints both have degree ≥ k; its
+      // delta is the edges it drops. Gated broadcast on the checkpointed
+      // vertex-sized build side ([[gatedBc]]); above the gate the joins
+      // keep their spillable SMJ — the r16 shuffle_hash A/B on this loop
+      // was a measured REVERT, so only the broadcast regime is hinted
+      val ((next, nextCnt, alive, aliveCnt), _) =
+        Fixpoint.run((cn, cnCnt, cn, 0L), roundsPerK) { case ((cn, cnCnt, _, _), _) =>
+          val (kept, keptCnt) = Fixpoint.materialize(
+            cn.select(explode(array(col("src"), col("dst"))).as("id"))
+              .groupBy("id").agg(count(lit(1)).as("degree"))
+              .where(col("degree") >= k).select("id"))
+          def end(c: String) = gatedBc(kept.select(col("id").as(c), lit(true).as(s"__$c")),
+            keptCnt, cnCnt)
+          Fixpoint.Round(cn.join(end("src"), Seq("src"), "left").join(end("dst"), Seq("dst"), "left")
+            .select(col("src"), col("dst"),
+              (col("__src").isNotNull && col("__dst").isNotNull).as("__keep")),
+            !col("__keep"))((all, dropped) =>
+            (all.where(col("__keep")).select(col("src"), col("dst")), cnCnt - dropped,
+              kept, keptCnt))
+        }
+      cn = next
+      cnCnt = nextCnt
+      if (aliveCnt == 0) empty = true
       else levels ::= alive.withColumn("k", lit(k.toLong))
     }
     val lvl =
@@ -3853,20 +3782,17 @@ object GraphAlgorithms {
       return localLouvain(edges.sparkSession, in, rounds,
         raw.schema("src").dataType)
     }
-    val cn = PropertyGraph.canonicalUndirected(edges).localCheckpoint(true)
-    val m = cn.count()
+    val (cn, m) = Fixpoint.materialize(PropertyGraph.canonicalUndirected(edges))
     val nb = cn.select(col("src").as("u"), col("dst").as("v"))
       .unionByName(cn.select(col("dst").as("u"), col("src").as("v")))
       .localCheckpoint(true)
-    val dg = nb.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val (dg, nV) = Fixpoint.materialize(nb.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg")))
     // one vertex count gates broadcast on the vertex-sized probe sides
     // of the EDGE-sized round joins ([[gatedBc]], relative to the 2m
     // oriented rows): below the gate each round only SCANS the
     // checkpointed nb edge list, never exchanges it. Vertex-by-vertex
     // joins (vol, the comm update) are left to the planner — a
     // same-sized broadcast costs more than it saves (r17 drive probe).
-    val nV = dg.count()
     val nbCnt = 2L * m
     var comm = dg.select(col("id"), col("id").as("c"))
     var r = 0
@@ -3989,41 +3915,36 @@ object GraphAlgorithms {
       return localTopoLevels(spark, in, raw.schema("src").dataType)
     }
     val e = raw.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(true)
-    val nVerts = verts.count()
-    var best = verts.join(e.select(col("dst").as("id")).distinct(),
-        Seq("id"), "left_anti")
-      .withColumn("level", lit(0L))
-      .localCheckpoint(true)
-    var frontier = best
-    var r = 0
-    while (r < maxRounds && !frontier.isEmpty) {
-      r += 1
-      val cand = frontier.select(col("id").as("src"), col("level"))
-        .join(e, Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(max(col("level") + 1L).as("__lv"))
-      val improved = cand.join(best, Seq("id"), "left")
-        .where(col("level").isNull || col("__lv") > col("level"))
-        .select(col("id"), col("__lv").as("level"))
-        .localCheckpoint(true)
-      if (improved.isEmpty) {
-        frontier = improved
-      } else {
-        best = best.unionByName(improved)
-          .groupBy("id").agg(max(col("level")).as("level"))
-          .localCheckpoint(true)
-        frontier = improved
-      }
+    val (verts, nVerts) = Fixpoint.materialize(e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct())
+    val (sources, nSources) = Fixpoint.materialize(
+      verts.join(e.select(col("dst").as("id")).distinct(), Seq("id"), "left_anti")
+        .withColumn("level", lit(0L)))
+    // a round's delta is its improved set; (best, its size, frontier, its size)
+    val ((best, nBest, _, frontierCnt), r) = Fixpoint.run(
+        (sources, nSources, sources, nSources), if (nSources == 0) 0 else maxRounds) {
+      case ((best, nBest, frontier, _), _) =>
+        val cand = frontier.select(col("id").as("src"), col("level"))
+          .join(e, Seq("src"))
+          .groupBy(col("dst").as("id"))
+          .agg(max(col("level") + 1L).as("__lv"))
+        Fixpoint.Round(cand.join(best, Seq("id"), "left")
+          .where(col("level").isNull || col("__lv") > col("level"))
+          .select(col("id"), col("__lv").as("level"))) { (improved, n) =>
+          if (n == 0) (best, nBest, improved, n)
+          else {
+            val (next, nNext) = Fixpoint.materialize(best.unionByName(improved)
+              .groupBy("id").agg(max(col("level")).as("level")))
+            (next, nNext, improved, n)
+          }
+        }
     }
     e.unpersist()
-    if (r == maxRounds && !frontier.isEmpty)
+    if (r == maxRounds && frontierCnt > 0)
       throw new IllegalArgumentException(
         s"topologicalLevels: still relaxing after $maxRounds rounds — " +
           "the input has a reachable cycle (or raise maxRounds)")
-    if (best.count() < nVerts)
+    if (nBest < nVerts)
       throw new IllegalArgumentException(
         "topologicalLevels: some vertices are unreachable from any " +
           "zero-in-degree vertex — the input has a cycle")
@@ -4758,8 +4679,7 @@ object GraphAlgorithms {
     }
     val nb = cn.select(col("src").as("u"), col("dst").as("v"), col("__w"))
       .unionByName(cn.select(col("dst").as("u"), col("src").as("v"), col("__w")))
-    val verts = nb.select(col("u").as("id")).distinct().localCheckpoint(true)
-    val nV = verts.count()
+    val (verts, nV) = Fixpoint.materialize(nb.select(col("u").as("id")).distinct())
     val hashGated: DataFrame => DataFrame =
       if (nV <= 100000000L) d => d.hint("shuffle_hash") else identity
     def bucket(j: Int): Column = graft.pipeline.Sketches.hllBucket(

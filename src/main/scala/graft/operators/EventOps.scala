@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.algorithms.Fixpoint
+
 /**
  * Batch event-analytics operators over (user, timestamp, type) streams —
  * the funnel/cohort queries an events warehouse answers daily, expressed
@@ -33,19 +35,19 @@ object EventOps {
     val ev = events.select(col(userCol).as("u"), col(tsCol).as("ts"),
       col(typeCol).as("t"))
     // reached(k): (u, tk) = earliest completion time of the step-k prefix.
-    // Each step is checkpointed so step k never re-runs steps 1..k-1
-    // (the count and the next step's join both read materialized rows).
-    var reached = ev.where(col("t") === steps.head)
-      .groupBy("u").agg(min(col("ts")).as("tk"))
-      .localCheckpoint(true)
-    var counts = List((1, steps.head, reached.count()))
+    // Each step is checkpointed so step k never re-runs steps 1..k-1;
+    // its user count is taken in the checkpoint's own job.
+    val (first, n) = Fixpoint.materialize(ev.where(col("t") === steps.head)
+      .groupBy("u").agg(min(col("ts")).as("tk")))
+    var reached = first
+    var counts = List((1, steps.head, n))
     steps.zipWithIndex.drop(1).foreach { case (s, i) =>
-      reached = ev.where(col("t") === s)
+      val (next, nNext) = Fixpoint.materialize(ev.where(col("t") === s)
         .join(reached, Seq("u"))
         .where(col("ts") > col("tk"))
-        .groupBy("u").agg(min(col("ts")).as("tk"))
-        .localCheckpoint(true)
-      counts ::= ((i + 1, s, reached.count()))
+        .groupBy("u").agg(min(col("ts")).as("tk")))
+      reached = next
+      counts ::= ((i + 1, s, nNext))
     }
     counts.reverse.toDF("step_no", "step", "users")
   }

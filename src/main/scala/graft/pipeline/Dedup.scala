@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.algorithms.GraphAlgorithms
+import graft.algorithms.{Fixpoint, GraphAlgorithms}
 
 /**
  * Deduplication operators for training-data pipelines, exact → fuzzy:
@@ -145,6 +145,14 @@ object Dedup {
       .select(col("idA"), col("idB"))
   }
 
+  /** The `n` candidate ids of a checkpointed candidate frame, hinted
+    * broadcast under [[GraphAlgorithms.gatedBc]]'s cap: a checkpoint has
+    * no statistics, so unhinted the semi-join in [[shingleSets]] is planned
+    * as a sort-merge join that shuffles the documents, text included. The
+    * documents are never counted, so only the absolute cap applies. */
+  private def candidateIds(ids: DataFrame, n: Long): DataFrame =
+    GraphAlgorithms.gatedBc(ids, n, Long.MaxValue)
+
   /** (id, set): the [[graft.functions.ShingleSet]] of each document of
     * `docs` whose id is in `ids` — the semi-join runs on the document
     * table, before the expression, so only candidate documents build a
@@ -205,10 +213,18 @@ object Dedup {
       if (eager) d.localCheckpoint(true)
       else d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = pin(sigTable(df, textCol, idCol, shingleSize, numHashes))
-    val cand = pin(lshCandidates(sigs, sigs, numHashes, bands, threshold,
-      prefilterMargin, self = true))
-    val sets = shingleSets(df, cand.select("idA").union(cand.select("idB")),
-      textCol, idCol, shingleSize)
+    val candPlan = lshCandidates(sigs, sigs, numHashes, bands, threshold,
+      prefilterMargin, self = true)
+    def ids(c: DataFrame): DataFrame = c.select("idA").union(c.select("idB"))
+    val (cand, candIds) =
+      if (eager) {
+        val (c, n) = Fixpoint.materialize(candPlan)
+        (c, candidateIds(ids(c), 2 * n))
+      } else {
+        val c = pin(candPlan)
+        (c, ids(c))
+      }
+    val sets = shingleSets(df, candIds, textCol, idCol, shingleSize)
     val res = verified(cand, sets, sets, threshold)
     if (eager) res.localCheckpoint(true) else res
   }
@@ -236,11 +252,12 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     def sigsOf(df: DataFrame): DataFrame =
       sigTable(df, textCol, idCol, shingleSize, numHashes).localCheckpoint(true)
-    val cand = lshCandidates(sigsOf(corpus), sigsOf(bench), numHashes, bands,
-      threshold, prefilterMargin, self = false).localCheckpoint(true)
+    val (cand, n) = Fixpoint.materialize(lshCandidates(sigsOf(corpus), sigsOf(bench),
+      numHashes, bands, threshold, prefilterMargin, self = false))
     verified(cand,
-      shingleSets(corpus, cand.select("idA"), textCol, idCol, shingleSize),
-      shingleSets(bench, cand.select("idB"), textCol, idCol, shingleSize), threshold)
+      shingleSets(corpus, candidateIds(cand.select("idA"), n), textCol, idCol, shingleSize),
+      shingleSets(bench, candidateIds(cand.select("idB"), n), textCol, idCol, shingleSize),
+      threshold)
       .localCheckpoint(true)
   }
 
@@ -741,29 +758,26 @@ object Dedup {
 
   /** Distributed connected components by alternating star contraction.
     * Convergence is detected by an order-insensitive (count, XOR of
-    * xxhash64) signature of the edge set — two consecutive identical
-    * signatures on a distinct-ed set mean the set is fixed (collision
-    * odds ~2⁻⁶⁴, strictly below the minhash pipeline's own error
-    * budget; XOR rather than sum because an ANSI-mode sum of 2⁶³-scale
-    * hashes overflows). At the fixpoint the edge set IS the star:
-    * (member, component-min) rows; roots are added back as their own
-    * canonical. */
+    * xxhash64) signature of the edge set, observed in the job that
+    * checkpoints each round ([[Fixpoint.observed]]) — two consecutive
+    * identical signatures on a distinct-ed set mean the set is fixed
+    * (collision odds ~2⁻⁶⁴, strictly below the minhash pipeline's own
+    * error budget; XOR rather than sum because an ANSI-mode sum of
+    * 2⁶³-scale hashes overflows). At the fixpoint the edge set IS the
+    * star: (member, component-min) rows; roots are added back as their
+    * own canonical. */
   private[pipeline] def starContractionClusters(rawEdges: DataFrame, maxRounds: Int,
                                                 nPairs: Long): DataFrame = {
-    var edges = rawEdges.where(col("a") =!= col("b")).distinct().localCheckpoint(true)
-    def signature(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)).as("c"),
-        coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L)).as("h"))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    var sig = signature(edges)
+    def signed(e: DataFrame): (DataFrame, org.apache.spark.sql.Row) =
+      Fixpoint.observed(e, count(lit(1)),
+        coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L)))
+    var (edges, sig) = signed(rawEdges.where(col("a") =!= col("b")).distinct())
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxRounds) {
-      edges = smallStar(largeStar(edges)).localCheckpoint(true)
-      val nsig = signature(edges)
+      val (next, nsig) = signed(smallStar(largeStar(edges)))
       converged = nsig == sig
+      edges = next
       sig = nsig
       rounds += 1
     }

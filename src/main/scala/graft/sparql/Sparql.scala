@@ -3,6 +3,8 @@ package graft.sparql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.algorithms.Fixpoint
+
 /**
  * Minimal SPARQL engine over an (s, p, o) triple frame — basic graph
  * patterns as DataFrame equi-joins.
@@ -1404,8 +1406,10 @@ object Sparql {
    *    quadratic output, inherent to the query itself);
    *  - `?` → no iteration at all (the one-hop frame union zero-length).
    *
-   * Each round localCheckpoints (eager, ContextCleaner-managed) to cut
-   * the iterative lineage; rounds stop at the first empty frontier.
+   * Each round is a [[graft.algorithms.Fixpoint]] round: the frontier is
+   * checkpointed (eager, ContextCleaner-managed) to cut the iterative
+   * lineage, and its size, counted in the same job, stops the rounds at
+   * the first empty frontier.
    * Zero-length solutions: a constant endpoint pairs with itself; a
    * variable pair binds every term of the graph (subject∪object).
    */
@@ -1435,8 +1439,9 @@ object Sparql {
                   else fwd0
     val stepPlan = stepRaw.distinct()
     // adaptive local regime (the GraphAlgorithms fastRP/BLP pattern):
-    // the fixpoint is per-round eager checkpoint + isEmpty jobs — pure
-    // iteration floor once the one-hop step set fits the driver. The
+    // each distributed round costs an eager checkpoint of the frontier
+    // and one of the reached set — pure iteration floor once the one-hop
+    // step set fits the driver. The
     // closure is DISTINCT string-pair set algebra (no floats, no
     // ordering), so the replay is trivially exact; the var–var case
     // aborts back to the distributed rounds if the closure outgrows a
@@ -1458,30 +1463,24 @@ object Sparql {
         case None => ()
       }
     }
-    val step = stepPlan.localCheckpoint(true)
+    val (step, stepCnt) = Fixpoint.materialize(stepPlan)
 
-    // expand `frontier` one hop along `edges`, dropping rows already in
-    // `acc`; works for pair frames (a, b) and set frames (b) alike
-    def grow(edges: DataFrame, acc0: DataFrame, frontier0: DataFrame,
-             keyCols: Seq[String]): DataFrame = {
-      var acc = acc0; var frontier = frontier0; var hops = 1
-      var growing = !frontier.isEmpty
-      while (growing) {
-        require(hops < MaxPathHops,
-          s"property-path fixpoint exceeded $MaxPathHops hops")
-        val next = frontier.withColumnRenamed("b", "__mid")
-          .join(edges.withColumnRenamed("a", "__mid"), Seq("__mid"))
-          .drop("__mid").distinct()
-          .join(acc, keyCols, "left_anti")
-          .localCheckpoint(true)
-        if (next.isEmpty) growing = false
-        else {
-          acc = acc.unionByName(next).localCheckpoint(true)
-          frontier = next; hops += 1
-        }
-      }
-      acc
-    }
+    // expand `start` (`startCnt` rows) hop by hop along `edges`, each hop
+    // dropping the rows already reached; works for pair frames (a, b) and
+    // set frames (b) alike
+    def grow(edges: DataFrame, start: DataFrame, startCnt: Long,
+             keyCols: Seq[String]): DataFrame =
+      Fixpoint.run((start, start), if (startCnt == 0) 0 else MaxPathHops) {
+        case ((acc, frontier), hops) =>
+          require(hops < MaxPathHops,
+            s"property-path fixpoint exceeded $MaxPathHops hops")
+          Fixpoint.Round(frontier.withColumnRenamed("b", "__mid")
+            .join(edges.withColumnRenamed("a", "__mid"), Seq("__mid"))
+            .drop("__mid").distinct()
+            .join(acc, keyCols, "left_anti")) { (next, n) =>
+            if (n == 0) (acc, frontier) else (acc.unionByName(next).localCheckpoint(true), next)
+          }
+      }._1._1
 
     val sess = triples.sparkSession
     import sess.implicits._
@@ -1500,21 +1499,21 @@ object Sparql {
         if (pp.zero) step.unionByName(zeroPairs()).distinct() else step
       } else (pp.s, pp.o) match {
         case (Const(c), _) =>
-          val seed = step.where(col("a") === c).select(col("b"))
-            .distinct().localCheckpoint(true)
-          val reach = grow(step, seed, seed, Seq("b"))
+          val (seed, seedCnt) = Fixpoint.materialize(
+            step.where(col("a") === c).select(col("b")).distinct())
+          val reach = grow(step, seed, seedCnt, Seq("b"))
             .select(lit(c).as("a"), col("b"))
           if (pp.zero) reach.unionByName(zeroPairs()).distinct() else reach
         case (_, Const(c)) =>
           // who REACHES c: BFS over the reversed step relation
           val rev = step.select(col("b").as("a"), col("a").as("b"))
-          val seed = rev.where(col("a") === c).select(col("b"))
-            .distinct().localCheckpoint(true)
-          val reach = grow(rev, seed, seed, Seq("b"))
+          val (seed, seedCnt) = Fixpoint.materialize(
+            rev.where(col("a") === c).select(col("b")).distinct())
+          val reach = grow(rev, seed, seedCnt, Seq("b"))
             .select(col("b").as("a"), lit(c).as("b"))
           if (pp.zero) reach.unionByName(zeroPairs()).distinct() else reach
         case _ =>
-          val closure = grow(step, step, step, Seq("a", "b"))
+          val closure = grow(step, step, stepCnt, Seq("a", "b"))
           if (pp.zero) closure.unionByName(zeroPairs()).distinct() else closure
       }
     bindVars(pairs, Seq("a" -> pp.s, "b" -> pp.o))

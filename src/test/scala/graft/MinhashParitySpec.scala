@@ -130,4 +130,46 @@ class MinhashParitySpec extends SparkSpec {
     assert(out.nonEmpty)
     assert(jobs.size <= 10, jobs.mkString("\n"))
   }
+
+  test("the candidate-document semi-join shuffles no document text") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val corpus = docs.orderBy("doc_id").limit(40).unionByName(edited(12, 1000000))
+      .localCheckpoint(true)
+    val bench = corpus.where(col("doc_id") >= 1000000).localCheckpoint(true)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add((action, qe.executedPlan))
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(Dedup.minhashPairs(corpus, "text", "doc_id", threshold = 0.8).count() > 0)
+      assert(Dedup.crossMinhashPairs(corpus, bench, "text", "doc_id", threshold = 0.8)
+        .count() > 0)
+      spark.range(1).toDF("marker").collect()
+      // the listener bus delivers in order: the marker's plan comes last
+      eventually(timeout(30.seconds)) {
+        assert(plans.asScala.exists(_._2.output.exists(_.name == "marker")))
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val semiJoins = plans.asScala.toSeq.flatMap { case (_, plan) =>
+      helper.collect(plan) { case j: BaseJoinExec if j.joinType == LeftSemi => j }
+    }
+    // the eager self-join pipeline and both sides of the cross pipeline
+    assert(semiJoins.size >= 3)
+    val textShuffles = semiJoins.flatMap(j => helper.collect(j) {
+      case x: ShuffleExchangeLike if x.output.exists(_.name == "text") => x
+    })
+    assert(textShuffles.isEmpty, textShuffles.mkString("\n"))
+  }
 }
