@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.algorithms.GraphAlgorithms
+import graft.algorithms.{GraphAlgorithms, GraphXAlgorithms}
+import graft.model.PropertyGraph
 import graft.pipeline.{BpeVocab, Dedup}
 import graft.sparql.Sparql
 
@@ -12,7 +13,9 @@ import graft.sparql.Sparql
  * gate off, so the count-gated regimes take their distributed paths — a
  * different job sequence with the identical answer — on a multi-hop
  * graph and on hostile inputs (empty frames, self-loops with duplicate
- * edges, 64-bit ids).
+ * edges, 64-bit ids). Connected and strongly connected components are
+ * also checked against a plain-Scala replay, and on dangling and null
+ * edge endpoints.
  */
 class LocalRegimeSwitchSpec extends SparkSpec {
 
@@ -112,6 +115,88 @@ class LocalRegimeSwitchSpec extends SparkSpec {
       val on = run(e)
       val off = withLocalRegimesOff(run(e))
       assert(off === on, s"$name on $input")
+    }
+  }
+
+  /** A property graph over the node `ids` and the edges `es` (a null
+    * endpoint stays null). */
+  private def graph(ids: Seq[String], es: Seq[(String, String)], directed: Boolean)
+      : PropertyGraph = {
+    import spark.implicits._
+    val props = map().cast("map<string,string>").as("properties")
+    val nodes = ids.toDF("id").select(col("id"), lit("").as("label"), props)
+    val edges = es.toDF("src", "dst").select(col("src"), col("dst"), lit("E").as("type"), props)
+    PropertyGraph(nodes, PropertyGraph.withEid(edges), directed)
+  }
+
+  /** An (id, component) frame as the set of its components' member sets,
+    * so any labelling compares. */
+  private def partition(df: DataFrame): Set[Set[String]] =
+    df.collect().groupBy(_.get(1)).values.map(_.map(_.getString(0)).toSet).toSet
+
+  /** The edges of `es` whose endpoints are both among `ids`. */
+  private def inside(ids: Seq[String], es: Seq[(String, String)]): Seq[(String, String)] =
+    es.filter { case (a, b) => ids.contains(a) && ids.contains(b) }
+
+  /** Plain-Scala connected components: union-find over the node set. */
+  private def unionFind(ids: Seq[String], es: Seq[(String, String)]): Set[Set[String]] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: String): String = if (parent(x) == x) x else find(parent(x))
+    inside(ids, es).foreach { case (a, b) => parent(find(a)) = find(b) }
+    ids.groupBy(find).values.map(_.toSet).toSet
+  }
+
+  /** Plain-Scala strongly connected components: u and v share one iff
+    * each reaches the other. */
+  private def mutualReach(ids: Seq[String], es: Seq[(String, String)]): Set[Set[String]] = {
+    val adj = inside(ids, es).groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    def reach(v: String): Set[String] = {
+      var seen = Set(v)
+      var todo = List(v)
+      while (todo.nonEmpty) {
+        val x = todo.head
+        todo = todo.tail
+        adj.getOrElse(x, Nil).filterNot(seen).foreach { y => seen += y; todo ::= y }
+      }
+      seen
+    }
+    val r = ids.map(v => v -> reach(v)).toMap
+    ids.map(v => ids.filter(u => r(v)(u) && r(u)(v)).toSet).toSet
+  }
+
+  /** Nodes 1..9 (8 and 9 isolated) and the SCCs {2..7}, {1}: the hops
+    * graph with the back edges 6→2 and 7→5, under each hostile input. */
+  private val componentInputs: Seq[(String, Seq[String], Seq[(String, String)])] = {
+    val ids = (1 to 9).map(_.toString)
+    val es = (hops ++ Seq((6L, 2L), (7L, 5L))).map { case (a, b) => (a.toString, b.toString) }
+    def wide(x: String) = if (x == null) x else (5000000000L + x.toLong).toString
+    Seq(
+      ("empty edges, isolated nodes", ids, Nil),
+      ("self-loop + duplicates", ids, es ++ Seq(("3", "3"), ("1", "2"), ("2", "1"), ("2", "1"))),
+      ("64-bit ids", ids.map(wide), es.map { case (a, b) => (wide(a), wide(b)) }),
+      // through 99 the dangling edges would merge 8 with 9 and 1 with 2..7
+      ("endpoint not a node", ids, es ++ Seq(("8", "99"), ("99", "9"), ("7", "99"), ("99", "1"))),
+      ("null endpoint", ids, es ++ Seq((null, "1"), ("8", null), (null, null))))
+  }
+
+  test("connected components: switch on = off = union-find on hostile inputs") {
+    for ((input, ids, es) <- componentInputs) {
+      val g = graph(ids, es, directed = false)
+      val on = partition(GraphXAlgorithms.connectedComponents(g))
+      val off = withLocalRegimesOff(partition(GraphXAlgorithms.connectedComponents(g)))
+      assert(on === unionFind(ids, es), input)
+      assert(off === on, input)
+    }
+  }
+
+  test("scc: switch on = off = mutual reachability on hostile inputs") {
+    for ((input, ids, es) <- componentInputs) {
+      val g = graph(ids, es, directed = true)
+      val on = partition(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 10))
+      val off = withLocalRegimesOff(
+        partition(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 10)))
+      assert(on === mutualReach(ids, es), input)
+      assert(off === on, input)
     }
   }
 
