@@ -7,6 +7,9 @@
 #   - the removed spark.graft.kleene.localThreshold conf,
 #   - an .observe( call outside graft.algorithms.Fixpoint (the one place a
 #     round's materialization and its stopping count are taken).
+#   - any org.apache.spark.graphx use: connected and strongly connected
+#     components run on the DataFrame engine in GraphAlgorithms, and no
+#     second (GraphX) execution model rides beside it.
 #
 #   dev/check_local_gate.sh
 set -euo pipefail
@@ -54,6 +57,13 @@ observes=$(grep -rn --include='*.scala' '\.observe(' "$src" \
 if [ -n "$observes" ]; then
   echo ".observe( outside graft.algorithms.Fixpoint:"
   echo "$observes"
+  fail=1
+fi
+
+graphx=$(grep -rn --include='*.scala' 'org\.apache\.spark\.graphx' "$src" || true)
+if [ -n "$graphx" ]; then
+  echo "GraphX is back (use GraphAlgorithms.connectedComponents / stronglyConnectedComponents):"
+  echo "$graphx"
   fail=1
 fi
 

@@ -1712,10 +1712,9 @@ object Queries {
              |SELECT qid, vec_id, CAST(ROUND(cosine, 6) AS DOUBLE) AS cosine, rank
              |FROM scored WHERE rank <= 10 ORDER BY qid, rank""".stripMargin))),
 
-    // GraphX connected components, oracled on the bipartite nation—region
-    // graph (5 components, diameter 2). GraphX's internal component ids
-    // are remapped to min(node id) per component so both engines name
-    // components identically.
+    // Connected components, oracled on the bipartite nation—region graph
+    // (5 components, diameter 2). Both engines name a component by its
+    // smallest node id.
     "alg_connected_components" -> ((
       (s: SparkSession, d: String) => {
         import graft.model.PropertyGraph
@@ -1730,9 +1729,8 @@ object Queries {
             concat(lit("reg"), col("r")).as("dst"), lit("IN").as("type"),
             map().cast("map<string,string>").as("properties"))
         val g = PropertyGraph(nodes, PropertyGraph.withEid(edges), isDirected = false)
-        val cc = graft.algorithms.GraphXAlgorithms.connectedComponents(g)
-        val labels = cc.groupBy("component").agg(min(col("id")).as("comp"))
-        cc.join(labels, "component").select(col("id"), col("comp")).orderBy(col("id"))
+        GraphAlgorithms.connectedComponents(g)
+          .select(col("id"), col("component").as("comp")).orderBy(col("id"))
       },
       Some("""WITH n AS (SELECT 'nat' || n_nationkey AS id, n_regionkey AS r FROM nation),
              |rg AS (SELECT 'reg' || r_regionkey AS id, r_regionkey AS r FROM region),
@@ -2257,9 +2255,10 @@ object Queries {
 
     // Newman–Girvan modularity of the connected-components partition on
     // the thinned mod-900 graph (58 components at sf0.01 → Q ≈ 0.30, a
-    // non-trivial partition) — composes Dedup.nearDupClusters (the
-    // distributed components machinery) with the modularity metric; the
-    // oracle recomputes components as min-reachable-id and replays the
+    // non-trivial partition) — composes the one connected-components
+    // engine (GraphAlgorithms.pairComponents, through
+    // Dedup.nearDupClusters' pair-list surface) with the modularity metric;
+    // the oracle recomputes components as min-reachable-id and replays the
     // two exact integer terms.
     "alg_modularity" -> ((
       (s: SparkSession, d: String) => {
@@ -2662,14 +2661,14 @@ object Queries {
           .orderBy(col("id").cast(LongType)),
       Some(coeffOracleSql))),
 
-    // GraphX strongly connected components on a constructed directed
-    // graph whose SCCs are relationally known: each region's nations
-    // form a directed cycle (ordered by nationkey, last wraps to first)
-    // = one SCC per region, plus an ACYCLIC cross-region chain between
-    // region minima. Plain connected components would merge everything
-    // into one component — a green row proves directed mutual
-    // reachability, not mere connectivity. Component ids are remapped to
-    // min(node id) on both sides (the alg_connected_components trick).
+    // Strongly connected components on a constructed directed graph
+    // whose SCCs are relationally known: each region's nations form a
+    // directed cycle (ordered by nationkey, last wraps to first) = one SCC
+    // per region, plus an ACYCLIC cross-region chain between region
+    // minima. Plain connected components would merge everything into one
+    // component — a green row proves directed mutual reachability, not
+    // mere connectivity. Both engines name a component by its smallest
+    // node id.
     "alg_scc" -> ((
       (s: SparkSession, d: String) => {
         import graft.model.PropertyGraph
@@ -2690,9 +2689,8 @@ object Queries {
         val nodes = nat.select(col("id"), lit("Nation").as("label"),
           map().cast("map<string,string>").as("properties"))
         val g = PropertyGraph(nodes, PropertyGraph.withEid(edges), isDirected = true)
-        val scc = graft.algorithms.GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 10)
-        val labels = scc.groupBy("component").agg(min(col("id")).as("comp"))
-        scc.join(labels, "component").select(col("id"), col("comp")).orderBy(col("id"))
+        GraphAlgorithms.stronglyConnectedComponents(g)
+          .select(col("id"), col("component").as("comp")).orderBy(col("id"))
       },
       Some("""WITH n AS (SELECT 'nat' || n_nationkey AS id, n_regionkey AS r FROM nation),
              |comp AS (SELECT r, MIN(id) AS comp FROM n GROUP BY r)

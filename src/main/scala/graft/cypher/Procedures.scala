@@ -159,9 +159,9 @@ object Procedures {
     emb.unionByName(isolated)
   })
 
-  /** GraphX connected components — (id, component). */
-  register("graft.connectedcomponents", (g, _) =>
-    graft.algorithms.GraphXAlgorithms.connectedComponents(g))
+  /** Connected components — (id, component), component = the smallest
+    * member id. */
+  register("graft.connectedcomponents", (g, _) => GraphAlgorithms.connectedComponents(g))
 
   /** Reference `egnt`: CALL graft.egonet(id) — the ego's induced subgraph
     * edges (src, dst). */

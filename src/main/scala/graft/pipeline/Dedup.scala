@@ -687,158 +687,13 @@ object Dedup {
    * component — a corpus compaction keeps exactly the rows with
    * canonical == id (plus every document in no pair at all).
    *
-   * Adaptive execution: the pair graph is SMALL relative to the corpus
-   * by construction (only near-dup members appear), so up to
-   * 10M pairs the components are solved exactly by a
-   * single-task union-find ON AN EXECUTOR (union-by-min-root + path
-   * compression — the root invariant makes the final root the component
-   * minimum, i.e. the same canonical the iterative form computes). 10M
-   * pairs ≈ a few hundred MB in one task — cheap next to the dedup scan
-   * that produced them. Beyond the threshold (a 100 TB corpus can emit
-   * billions of pairs) the distributed path takes over:
-   *
-   * alternating large-star/small-star contraction (Kiveris et al.,
-   * "Connected Components in MapReduce and Beyond", SoCC'14): each round
-   * re-points nodes at their neighborhood minimum, converging in
-   * O(log n) rounds REGARDLESS of component diameter — a long duplicate
-   * chain (templated documents) that would starve min-label propagation
-   * (O(diameter) rounds) contracts in a handful. Each round is two
-   * grouped-min + join passes over the pair graph only, localCheckpointed
-   * to keep plan depth O(1). `maxRounds` is a runaway bound, not a
-   * semantic knob; non-convergence throws rather than returning wrong
-   * canonicals.
+   * The pair list goes to the shared connected-components engine,
+   * [[GraphAlgorithms.pairComponents]]: a single-task union-find up to
+   * 10M pairs (the pair graph is small relative to the corpus by
+   * construction), large-star/small-star contraction beyond. `maxRounds`
+   * bounds the contraction; non-convergence throws.
    */
   def nearDupClusters(pairs: DataFrame, idA: String = "idA", idB: String = "idB",
-                      maxRounds: Int = 50): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val rawEdges = pairs.select(col(idA).as("a"), col(idB).as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nPairs = rawEdges.count()
-    if (GraphAlgorithms.localRowCap(pairs.sparkSession, 10000000L).exists(nPairs <= _)) {
-      // materialize BEFORE unpersisting: the union-find runs in one
-      // coalesced task, and leaving it lazy meant the caller's terminal
-      // action re-ran the entire upstream pair pipeline single-threaded
-      // once the cache below was dropped (observed 16 s vs 2 s for the
-      // identical minhash pipeline)
-      val out = unionFindClusters(rawEdges).localCheckpoint(true)
-      rawEdges.unpersist()
-      return out
-    }
-    val out = starContractionClusters(rawEdges, maxRounds, nPairs)
-    rawEdges.unpersist()
-    out
-  }
-
-  /** One large-star round: every node's strictly-larger neighbors re-point
-    * at the minimum of its full neighborhood (incl. itself). */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val nbrs = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-    val m = nbrs.groupBy("a").agg(min(col("b")).as("mn"))
-      .select(col("a"), least(col("a"), col("mn")).as("m"))
-    nbrs.join(m, Seq("a"))
-      .where(col("b") > col("a"))
-      .select(col("b").as("a"), col("m").as("b"))
-      .distinct()
-  }
-
-  /** One small-star round: every node and its ≤-neighbors re-point at the
-    * minimum of that ≤-neighborhood. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val nbrs = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-      .where(col("b") <= col("a"))
-    val m = nbrs.groupBy("a").agg(min(col("b")).as("mn"))
-      .select(col("a"), least(col("a"), col("mn")).as("m"))
-    nbrs.join(m, Seq("a"))
-      .select(col("b").as("x"), col("m"))
-      .unionAll(m.select(col("a").as("x"), col("m")))
-      .where(col("x") =!= col("m"))
-      .select(col("x").as("a"), col("m").as("b"))
-      .distinct()
-  }
-
-  /** Distributed connected components by alternating star contraction.
-    * Convergence is detected by an order-insensitive (count, XOR of
-    * xxhash64) signature of the edge set, observed in the job that
-    * checkpoints each round ([[Fixpoint.observed]]) — two consecutive
-    * identical signatures on a distinct-ed set mean the set is fixed
-    * (collision odds ~2⁻⁶⁴, strictly below the minhash pipeline's own
-    * error budget; XOR rather than sum because an ANSI-mode sum of
-    * 2⁶³-scale hashes overflows). At the fixpoint the edge set IS the
-    * star: (member, component-min) rows; roots are added back as their
-    * own canonical. */
-  private[pipeline] def starContractionClusters(rawEdges: DataFrame, maxRounds: Int,
-                                                nPairs: Long): DataFrame = {
-    def signed(e: DataFrame): (DataFrame, org.apache.spark.sql.Row) =
-      Fixpoint.observed(e, count(lit(1)),
-        coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L)))
-    var (edges, sig) = signed(rawEdges.where(col("a") =!= col("b")).distinct())
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val (next, nsig) = signed(smallStar(largeStar(edges)))
-      converged = nsig == sig
-      edges = next
-      sig = nsig
-      rounds += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"nearDupClusters: star contraction did not converge in $maxRounds rounds " +
-        s"($nPairs pairs) — converging runs need ~2·log2(n) rounds, so this points at " +
-        "a bug or a pathological id domain, not a deep component")
-    val roots = edges.select(col("b")).distinct()
-      .join(edges.select(col("a").as("b")), Seq("b"), "left_anti")
-    // degenerate self-pairs (a == b) are dropped by the contraction but
-    // are members of the pair list — keep them as singletons unless a
-    // real pair already placed them in a component (union-find parity)
-    val selfOnly = rawEdges.where(col("a") === col("b")).select(col("a")).distinct()
-      .join(edges.select(col("a")), Seq("a"), "left_anti")
-      .join(edges.select(col("b").as("a")), Seq("a"), "left_anti")
-    edges.select(col("a").as("id"), col("b").as("canonical"))
-      .unionAll(roots.select(col("b").as("id"), col("b").as("canonical")))
-      .unionAll(selfOnly.select(col("a").as("id"), col("a").as("canonical")))
-  }
-
-  /** Exact connected components of a pair list in ONE executor task:
-    * union-find with union-by-min-root and path compression, so the final
-    * root of every member is the smallest id of its component. Ids are
-    * compared numerically for integral columns, as strings otherwise. */
-  private def unionFindClusters(edges: DataFrame): DataFrame = {
-    val dt = edges.schema("a").dataType
-    val ord: Ordering[Any] = dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Ordering.by((x: Any) => x.asInstanceOf[Number].longValue)
-      case _ => Ordering.by((x: Any) => String.valueOf(x))
-    }
-    val spark = edges.sparkSession
-    val outRdd = edges.rdd.coalesce(1).mapPartitions { it =>
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x0: Any): Any = {
-        var x = x0
-        while (parent(x) != x) {
-          val gp = parent(parent(x))
-          parent(x) = gp // path halving
-          x = gp
-        }
-        x
-      }
-      it.foreach { r =>
-        val (a, b) = (r.get(0), r.get(1))
-        if (a != null && b != null) {
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) {
-            // min root absorbs: the invariant that makes root == min(component)
-            if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-      }
-      // snapshot keys before the final finds — path halving mutates values
-      val ks = parent.keys.toArray
-      ks.iterator.map(k => org.apache.spark.sql.Row(k, find(k)))
-    }
-    spark.createDataFrame(outRdd, StructType(Seq(
-      StructField("id", dt), StructField("canonical", dt))))
-  }
+                      maxRounds: Int = 50): DataFrame =
+    GraphAlgorithms.pairComponents(pairs.select(col(idA).as("a"), col(idB).as("b")), maxRounds)
 }

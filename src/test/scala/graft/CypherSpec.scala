@@ -303,6 +303,11 @@ class CypherSpec extends SparkSpec {
       "CALL graft.connectedComponents() YIELD id, component RETURN count(*) AS n")
       .collect()(0).getLong(0)
     assert(cc === g.vertexCount)
+    // every component is labelled by its smallest member id
+    val ccLabels = Cypher.run(g,
+      "CALL graft.connectedComponents() YIELD id, component RETURN id, component").collect()
+    assert(ccLabels.groupBy(_.getString(1)).forall { case (c, members) =>
+      c == members.map(_.getString(0)).min })
     val coeff = Cypher.run(g,
       "CALL graft.clusteringCoefficients() YIELD id, triangles, coeff " +
         "RETURN id, coeff ORDER BY coeff DESC LIMIT 1").count()

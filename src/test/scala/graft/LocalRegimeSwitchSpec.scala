@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.algorithms.{GraphAlgorithms, GraphXAlgorithms}
+import graft.algorithms.GraphAlgorithms
 import graft.model.PropertyGraph
 import graft.pipeline.{BpeVocab, Dedup}
 import graft.sparql.Sparql
@@ -130,9 +130,13 @@ class LocalRegimeSwitchSpec extends SparkSpec {
   }
 
   /** An (id, component) frame as the set of its components' member sets,
-    * so any labelling compares. */
-  private def partition(df: DataFrame): Set[Set[String]] =
-    df.collect().groupBy(_.get(1)).values.map(_.map(_.getString(0)).toSet).toSet
+    * after checking that each is labelled by its smallest member id. */
+  private def partition(df: DataFrame): Set[Set[String]] = {
+    val byLabel = df.collect().groupBy(_.getString(1)).map { case (c, rs) =>
+      c -> rs.map(_.getString(0)).toSet }
+    byLabel.foreach { case (c, ms) => assert(c === ms.min, s"label of $ms") }
+    byLabel.values.toSet
+  }
 
   /** The edges of `es` whose endpoints are both among `ids`. */
   private def inside(ids: Seq[String], es: Seq[(String, String)]): Seq[(String, String)] =
@@ -182,8 +186,8 @@ class LocalRegimeSwitchSpec extends SparkSpec {
   test("connected components: switch on = off = union-find on hostile inputs") {
     for ((input, ids, es) <- componentInputs) {
       val g = graph(ids, es, directed = false)
-      val on = partition(GraphXAlgorithms.connectedComponents(g))
-      val off = withLocalRegimesOff(partition(GraphXAlgorithms.connectedComponents(g)))
+      val on = partition(GraphAlgorithms.connectedComponents(g))
+      val off = withLocalRegimesOff(partition(GraphAlgorithms.connectedComponents(g)))
       assert(on === unionFind(ids, es), input)
       assert(off === on, input)
     }
@@ -192,12 +196,25 @@ class LocalRegimeSwitchSpec extends SparkSpec {
   test("scc: switch on = off = mutual reachability on hostile inputs") {
     for ((input, ids, es) <- componentInputs) {
       val g = graph(ids, es, directed = true)
-      val on = partition(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 10))
-      val off = withLocalRegimesOff(
-        partition(GraphXAlgorithms.stronglyConnectedComponents(g, numIter = 10)))
+      val on = partition(GraphAlgorithms.stronglyConnectedComponents(g))
+      val off = withLocalRegimesOff(partition(GraphAlgorithms.stronglyConnectedComponents(g)))
       assert(on === mutualReach(ids, es), input)
       assert(off === on, input)
     }
+  }
+
+  test("scc with the switch off: a chain of 12 two-cycles") {
+    // (0↔1)→(2↔3)→…→(22↔23): pair 0 reaches every pair, so forward
+    // coloring gives all one color and each outer round finishes one SCC
+    // (more rounds than a 10-round cap allows)
+    val ids = (0 until 24).map(_.toString)
+    val es = (0 until 24 by 2).flatMap { i =>
+      Seq((i.toString, (i + 1).toString), ((i + 1).toString, i.toString)) ++
+        (if (i + 2 < 24) Seq(((i + 1).toString, (i + 2).toString)) else Nil)
+    }
+    val g = graph(ids, es, directed = true)
+    val off = withLocalRegimesOff(partition(GraphAlgorithms.stronglyConnectedComponents(g)))
+    assert(off === mutualReach(ids, es))
   }
 
   test("gates: with the switch off both gate shapes say no and launch no job") {
