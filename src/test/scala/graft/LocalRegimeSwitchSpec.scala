@@ -13,7 +13,9 @@ import graft.sparql.Sparql
  * gate off, so the count-gated regimes take their distributed paths — a
  * different job sequence with the identical answer — on a multi-hop
  * graph and on hostile inputs (empty frames, self-loops with duplicate
- * edges, 64-bit ids). Connected and strongly connected components are
+ * edges, 64-bit ids); so do the frontier and peel loops and the driver
+ * replays of the rank, label, core, community and walk operators on the
+ * hostile inputs. Connected and strongly connected components are
  * also checked against a plain-Scala replay, and on dangling and null
  * edge endpoints.
  */
@@ -91,6 +93,28 @@ class LocalRegimeSwitchSpec extends SparkSpec {
     "kleene constant" -> (e => kleene(e, constant = true)),
     "kleene variable" -> (e => kleene(e, constant = false)))
 
+  /** Walk starts: every source id of `e` plus the absent id 99, each walk
+    * id a hash of its start. */
+  private def starts(e: DataFrame): DataFrame = {
+    val absent = spark.range(1).select(lit(99L).cast(e.schema("src").dataType).as("id"))
+    e.select(col("src").as("id")).distinct().unionByName(absent)
+      .select(pmod(xxhash64(col("id")), lit(1000L)).as("wid"), col("id"))
+  }
+
+  /** The driver replays that read the interned edge list: local below
+    * their cap, distributed with the switch off. */
+  private val replayRegimes: Seq[(String, DataFrame => Seq[String])] = Seq(
+    "hits" -> (e => rows(GraphAlgorithms.hits(e, iterations = 3))),
+    "labelPropagation" -> (e => rows(GraphAlgorithms.labelPropagation(e, iterations = 3))),
+    "triangleCountDF" -> (e => rows(GraphAlgorithms.triangleCountDF(e))),
+    "katz" -> (e => rows(GraphAlgorithms.katz(e, iterations = 3))),
+    "weightedPageRank" -> (e => rows(GraphAlgorithms.weightedPageRank(weighted(e),
+      iterations = 3))),
+    "coreNumbers" -> (e => rows(GraphAlgorithms.coreNumbers(e, maxK = 4))),
+    "louvainCommunities" -> (e => rows(GraphAlgorithms.louvainCommunities(e, rounds = 3))),
+    "randomWalks" -> (e => rows(GraphAlgorithms.randomWalks(e, starts(e), steps = 4))),
+    "node2vecWalks" -> (e => rows(GraphAlgorithms.node2vecWalks(e, starts(e), steps = 4))))
+
   test("kill-switch: every count-gated regime takes its distributed path " +
       "with the switch off and returns the same rows") {
     val e = stringEdges(hops)
@@ -111,7 +135,7 @@ class LocalRegimeSwitchSpec extends SparkSpec {
     val loopDup = stringEdges(hops ++ Seq((3L, 3L), (1L, 2L), (2L, 1L)))
     val wide = longEdges(hops ++ Seq((5L, 5L), (4L, 5L)))
     for ((input, e) <- Seq("empty" -> empty, "self-loop + duplicate" -> loopDup,
-        "64-bit ids" -> wide); (name, run) <- regimes ++ loopRegimes) {
+        "64-bit ids" -> wide); (name, run) <- regimes ++ loopRegimes ++ replayRegimes) {
       val on = run(e)
       val off = withLocalRegimesOff(run(e))
       assert(off === on, s"$name on $input")
