@@ -2,7 +2,7 @@
 # Keep the local-regime policy in one place. Fails (exit 1) when
 # src/main/scala has
 #   - a call to localRegimesEnabled( outside GraphAlgorithms.localRowCap,
-#   - more than one `def intern(` (the shared GraphAlgorithms.Interner),
+#   - more than one `def intern(` (the shared LocalGraph.Interner),
 #   - a localThreshold parameter outside StreamingTriangles,
 #   - the removed spark.graft.kleene.localThreshold conf,
 #   - an .observe( call outside graft.algorithms.Fixpoint (the one place a
@@ -10,6 +10,12 @@
 #   - any org.apache.spark.graphx use: connected and strongly connected
 #     components run on the DataFrame engine in GraphAlgorithms, and no
 #     second (GraphX) execution model rides beside it.
+#   - a second driver-side graph beside graft.algorithms.LocalGraph: a
+#     parallelize( in GraphAlgorithms.scala (the replays emit through
+#     LocalGraph.frame, the one parallelize( in LocalGraph.scala), a
+#     per-replay ArrayBuffer.empty[Int] adjacency in GraphAlgorithms.scala
+#     (the replays read LocalGraph's CSR adjacencies), or a reference to
+#     the retired InternedEdges.
 #
 #   dev/check_local_gate.sh
 set -euo pipefail
@@ -32,7 +38,7 @@ fi
 
 interns=$(grep -rn --include='*.scala' 'def intern(' "$src" || true)
 if [ "$(printf '%s' "$interns" | grep -c .)" -gt 1 ]; then
-  echo "more than one interner (use GraphAlgorithms.Interner):"
+  echo "more than one interner (use LocalGraph.Interner):"
   echo "$interns"
   fail=1
 fi
@@ -64,6 +70,29 @@ graphx=$(grep -rn --include='*.scala' 'org\.apache\.spark\.graphx' "$src" || tru
 if [ -n "$graphx" ]; then
   echo "GraphX is back (use GraphAlgorithms.connectedComponents / stronglyConnectedComponents):"
   echo "$graphx"
+  fail=1
+fi
+
+algs="$src/graft/algorithms"
+emitters=$(grep -n 'parallelize(' "$algs/GraphAlgorithms.scala" || true)
+if [ -n "$emitters" ] || [ "$(grep -c 'parallelize(' "$algs/LocalGraph.scala")" -gt 1 ]; then
+  echo "parallelize( outside the one LocalGraph.frame emitter:"
+  if [ -n "$emitters" ]; then echo "$emitters"; fi
+  grep -n 'parallelize(' "$algs/LocalGraph.scala"
+  fail=1
+fi
+
+buffers=$(grep -n 'ArrayBuffer\.empty\[Int\]' "$algs/GraphAlgorithms.scala" || true)
+if [ -n "$buffers" ]; then
+  echo "per-replay ArrayBuffer.empty[Int] adjacency (read LocalGraph's CSR):"
+  echo "$buffers"
+  fail=1
+fi
+
+interned=$(grep -rn --include='*.scala' 'InternedEdges' "$src" || true)
+if [ -n "$interned" ]; then
+  echo "InternedEdges is back (use LocalGraph):"
+  echo "$interned"
   fail=1
 fi
 

@@ -1,7 +1,9 @@
 package graft.algorithms
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType,
+  ShortType, StringType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.model.PropertyGraph
@@ -17,28 +19,6 @@ import graft.model.PropertyGraph
  * 1000-executor cluster unchanged.
  */
 object GraphAlgorithms {
-
-  /**
-   * Local-regime loader shared by the adaptive algorithms: ONE plain
-   * collect of the RAW (possibly duplicated) pair frame, with dedup and
-   * id-interning fused into the driver-side pass. Measured at 1.4M edges
-   * (sf0.1 bridge graph, 32 cores): the previous
-   * distinct→persist→count→collect staging cost ~2 s for the distinct
-   * shuffle plus ~3-4 s collecting the persisted post-shuffle frame,
-   * while a straight collect off the source plan is ~0.6 s — the cached
-   * block deserialization, not the dedup, was the bottleneck. Callers
-   * gate on the RAW count (an upper bound on the distinct count, and a
-   * cheap cached scan when the edges come from the persisted graph).
-   *
-   * `canonical=true` dedups UNORDERED pairs and emits one pair per
-   * undirected edge (oriented by intern index — any consistent
-   * orientation serves the undirected-simple-graph consumers);
-   * `canonical=false` dedups ordered pairs. Self-loops are dropped.
-   */
-  private[graft] final case class InternedEdges(
-      pairs: Array[(Int, Int)],
-      ids: scala.collection.mutable.ArrayBuffer[Any],
-      idx: scala.collection.mutable.HashMap[Any, Int])
 
   /** The local-regime policy, the ONE place the path choice is made:
     * the number of rows a regime may bring to the driver, or None for
@@ -95,35 +75,38 @@ object GraphAlgorithms {
     if (raw.count() > cap) None else Some(raw.collect())
   }
 
-  /** [[collectRowsGated]] with the rows interned to pairs (see
-    * [[InternedEdges]]). */
+  /** [[collectRowsGated]] over the (src, dst) pair frame `raw`, loaded as
+    * the [[LocalGraph]] the replay reads: ONE plain collect of the RAW
+    * (possibly duplicated) pairs, with dedup and id interning fused into
+    * the driver-side pass ([[LocalGraph.simple]]; `canonical` dedups
+    * unordered pairs). Measured at 1.4M edges (sf0.1 bridge graph, 32
+    * cores): a distinct→persist→count→collect staging cost ~2 s for the
+    * distinct shuffle plus ~3-4 s collecting the persisted post-shuffle
+    * frame, while a straight collect off the source plan is ~0.6 s — the
+    * cached block deserialization, not the dedup, was the bottleneck.
+    * The gate counts RAW rows, an upper bound on the distinct count. */
   private[graft] def collectInternedGated(raw: DataFrame, canonical: Boolean,
-      threshold: Long, probeCap: Int = 1000000): Option[InternedEdges] =
-    collectRowsGated(raw, threshold, probeCap).map(collectInterned(_, canonical))
-
-  /** First-seen id interner shared by every local regime: the i-th
-    * distinct id met gets index i, so a replay's output order is the
-    * collected row order. */
-  private[graft] final class Interner {
-    val idx = scala.collection.mutable.HashMap.empty[Any, Int]
-    val ids = scala.collection.mutable.ArrayBuffer.empty[Any]
-    def intern(x: Any): Int = idx.getOrElseUpdate(x, { ids += x; ids.length - 1 })
+      threshold: Long, probeCap: Int = 1000000): Option[LocalGraph] = {
+    val typed = LocalGraph.typed(raw)
+    collectRowsGated(typed, threshold, probeCap)
+      .map(LocalGraph.simple(_, typed.schema(0).dataType, canonical))
   }
 
-  private[graft] def collectInterned(rows: Array[org.apache.spark.sql.Row],
-      canonical: Boolean): InternedEdges = {
-    val in = new Interner
-    val seen = new java.util.HashSet[Long]()
-    val out = new scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-    rows.foreach { r =>
-      val s0 = in.intern(r.get(0)); val d0 = in.intern(r.get(1))
-      if (s0 != d0) {
-        val (s, d) = if (canonical && s0 > d0) (d0, s0) else (s0, d0)
-        val k = (s.toLong << 32) | (d.toLong & 0xffffffffL)
-        if (seen.add(k)) out += ((s, d))
-      }
-    }
-    InternedEdges(out.toArray, in.ids, in.idx)
+  /** The [[LocalGraph]] of `edges`' (src, dst) pairs for a replay that
+    * reads them directed, or undirected (each unordered pair once, read
+    * through [[LocalGraph.both]]); None above 10M raw rows directed and
+    * 5M undirected, whose closure doubles them. */
+  private def gatedGraph(edges: DataFrame, undirected: Boolean): Option[LocalGraph] =
+    collectInternedGated(edges.select(col("src"), col("dst")), canonical = undirected,
+      if (undirected) 5000000L else 10000000L)
+
+  /** The loop-free distinct (u, v) pairs of `edges`' (src, dst), both
+    * orientations when `undirected`: the edge list of the distributed
+    * frontier, walk and symmetry-breaking loops. */
+  private def orientedSimple(edges: DataFrame, undirected: Boolean): DataFrame = {
+    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
+    (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))) else e0)
+      .where(col("u") =!= col("v")).distinct()
   }
 
   /**
@@ -161,9 +144,9 @@ object GraphAlgorithms {
     // local regime gates on the RAW count (upper bound on the canonical
     // count); canonicalization + dedup fuse into the driver-side intern
     // pass — see collectInternedGated
-    collectInternedGated(raw, canonical = true, 10000000L).foreach { in =>
+    collectInternedGated(raw, canonical = true, 10000000L).foreach { g =>
       import spark.implicits._
-      return Seq(localTriangleCount(in.pairs)).toDF("triangles")
+      return Seq(localTriangleCount(g)).toDF("triangles")
     }
     val canonAll = PropertyGraph.canonicalUndirected(edges)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -203,35 +186,27 @@ object GraphAlgorithms {
       .agg(count(lit(1)).as("triangles"))
   }
 
-  /** Driver-side exact triangle count over canonical (src < dst) edges:
-    * same low-degree→high-degree (ties by id) orientation as the
-    * distributed three-join, counted by sorted-adjacency intersection
-    * per edge — O(Σ d_out) per edge, the compact-forward algorithm. */
-  private def localTriangleCount(es: Array[(Int, Int)]): Long = {
-    val n = es.foldLeft(-1) { case (m, (a, b)) => math.max(m, math.max(a, b)) } + 1
-    val deg = new Array[Int](n)
-    es.foreach { case (a, b) => deg(a) += 1; deg(b) += 1 }
+  /** Driver-side exact triangle count over a canonical graph: same
+    * low-degree→high-degree (ties by id) orientation as the distributed
+    * three-join, counted by sorted-adjacency intersection per edge —
+    * O(Σ d_out) per edge, the compact-forward algorithm. */
+  private def localTriangleCount(g: LocalGraph): Long = {
     // orient to the endpoint with (higher degree, then higher intern id —
     // any total order yields the same count; this one bounds out-degree)
-    def before(a: Int, b: Int): Boolean = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
-    val outDeg = new Array[Int](n)
-    es.foreach { case (a, b) => if (before(a, b)) outDeg(a) += 1 else outDeg(b) += 1 }
-    val out = Array.tabulate(n)(i => new Array[Int](outDeg(i)))
-    val fill = new Array[Int](n)
-    es.foreach { case (a, b) =>
-      val (lo, hi) = if (before(a, b)) (a, b) else (b, a)
-      out(lo)(fill(lo)) = hi; fill(lo) += 1
-    }
-    var i = 0
-    while (i < n) { java.util.Arrays.sort(out(i)); i += 1 }
+    def before(a: Int, b: Int): Boolean = g.both.degree(a) < g.both.degree(b) ||
+      (g.both.degree(a) == g.both.degree(b) && a < b)
+    val lo = Array.tabulate(g.edgeCount)(e =>
+      if (before(g.src(e), g.dst(e))) g.src(e) else g.dst(e))
+    val hi = Array.tabulate(g.edgeCount)(e => g.src(e) + g.dst(e) - lo(e))
+    val fwd = LocalGraph.Csr(g.n, lo, hi)
+    var v = 0
+    while (v < g.n) { java.util.Arrays.sort(fwd.to, fwd.off(v), fwd.off(v + 1)); v += 1 }
     var tris = 0L
-    es.foreach { case (a, b) =>
-      val (lo, hi) = if (before(a, b)) (a, b) else (b, a)
-      val x = out(lo); val y = out(hi)
-      var p = 0; var q = 0
-      while (p < x.length && q < y.length) {
-        if (x(p) == y(q)) { tris += 1; p += 1; q += 1 }
-        else if (x(p) < y(q)) p += 1
+    lo.indices.foreach { e =>
+      var p = fwd.off(lo(e)); var q = fwd.off(hi(e))
+      while (p < fwd.off(lo(e) + 1) && q < fwd.off(hi(e) + 1)) {
+        if (fwd.to(p) == fwd.to(q)) { tris += 1; p += 1; q += 1 }
+        else if (fwd.to(p) < fwd.to(q)) p += 1
         else q += 1
       }
     }
@@ -350,8 +325,9 @@ object GraphAlgorithms {
     // exactly on the driver. 2M rows, the convention the r18 regimes
     // standardized on (r18 verdict item 7): 10M rows of 3 longs would be
     // hundreds of MB of driver heap.
-    collectRowsGated(e, 2000000L).foreach { rows =>
-      return localWeightedPageRank(rows, edges.schema("src").dataType,
+    val typed = LocalGraph.typed(e)
+    collectRowsGated(typed, 2000000L).foreach { rows =>
+      return localWeightedPageRank(LocalGraph.multi(rows, typed.schema(0).dataType),
         alphaNum, alphaDen, iterations, edges.sparkSession)
     }
     val outW = e.groupBy("src").agg(sum(col("w")).as("wout"))
@@ -374,78 +350,43 @@ object GraphAlgorithms {
     out
   }
 
-  /** (id, <micro> BIGINT, <out> DOUBLE = micro/1e6) frame from driver
-    * arrays — the local twins' shared emitter, id type preserved. */
-  private def rankFrame(spark: SparkSession, ids: scala.collection.Seq[Any],
-      idType: org.apache.spark.sql.types.DataType, micro: Array[Long],
-      microCol: String, outCol: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("id", idType),
-      StructField(microCol, LongType, nullable = false),
-      StructField(outCol, DoubleType, nullable = false)))
-    val rows = micro.indices.map(i =>
-      org.apache.spark.sql.Row(ids(i), micro(i), micro(i).toDouble / 1000000.0))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
+  /** (id, <micro> BIGINT, <out> DOUBLE = micro/1e6): the rank replays'
+    * result frame. */
+  private def microFrame(spark: SparkSession, g: LocalGraph, micro: Array[Long],
+      microCol: String, outCol: String): DataFrame =
+    LocalGraph.frame(spark, Seq("id" -> g.idType, microCol -> LongType, outCol -> DoubleType),
+      micro.indices.map(i => Row(g.ids(i), micro(i), micro(i).toDouble / 1000000.0)))
 
   /** Exact driver replay of [[katz]]: contrib(v) = Σ_{u→v} r(u), then
     * r'(v) = β + (αnum·contrib) DIV αden — identical Long arithmetic,
     * identical results. */
-  private def localKatz(in: InternedEdges,
-      idType: org.apache.spark.sql.types.DataType, alphaNum: Int,
-      alphaDen: Int, iterations: Int, spark: SparkSession): DataFrame = {
-    val n = in.ids.length
-    var r = Array.fill(n)(1000000L)
-    var it = 0
-    while (it < iterations) {
-      val contrib = new Array[Long](n)
-      in.pairs.foreach { case (s, d) => contrib(d) += r(s) }
-      val nr = new Array[Long](n)
-      var v = 0
-      while (v < n) { nr(v) = 1000000L + alphaNum * contrib(v) / alphaDen; v += 1 }
-      r = nr
-      it += 1
+  private def localKatz(g: LocalGraph, alphaNum: Int, alphaDen: Int, iterations: Int,
+      spark: SparkSession): DataFrame = {
+    var r = Array.fill(g.n)(1000000L)
+    for (_ <- 1 to iterations) {
+      val contrib = new Array[Long](g.n)
+      g.src.indices.foreach(e => contrib(g.dst(e)) += r(g.src(e)))
+      r = contrib.map(c => 1000000L + alphaNum * c / alphaDen)
     }
-    rankFrame(spark, in.ids, idType, r, "katz_micro", "katz")
+    microFrame(spark, g, r, "katz_micro", "katz")
   }
 
-  /** Exact driver replay of [[weightedPageRank]] over raw (src, dst, w)
-    * rows — multi-edges contribute individually, each edge's share is
-    * (r·w) DIV wout exactly as the distributed expression computes it. */
-  private def localWeightedPageRank(rows: Array[org.apache.spark.sql.Row],
-      idType: org.apache.spark.sql.types.DataType, alphaNum: Int,
-      alphaDen: Int, iterations: Int, spark: SparkSession): DataFrame = {
-    val in = new Interner
-    val m = rows.length
-    val srcs = new Array[Int](m); val dsts = new Array[Int](m)
-    val ws = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      val row = rows(i)
-      srcs(i) = in.intern(row.get(0)); dsts(i) = in.intern(row.get(1))
-      ws(i) = row.getLong(2)
-      i += 1
-    }
-    val n = in.ids.length
-    val wout = new Array[Long](n)
-    i = 0; while (i < m) { wout(srcs(i)) += ws(i); i += 1 }
+  /** Exact driver replay of [[weightedPageRank]] over the weighted
+    * multigraph — multi-edges contribute individually, each edge's share
+    * is (r·w) DIV wout exactly as the distributed expression computes it. */
+  private def localWeightedPageRank(g: LocalGraph, alphaNum: Int, alphaDen: Int,
+      iterations: Int, spark: SparkSession): DataFrame = {
+    val wout = new Array[Long](g.n)
+    g.src.indices.foreach(e => wout(g.src(e)) += g.weight(e))
     val base = 1000000L * (alphaDen - alphaNum) / alphaDen
-    var rk = Array.fill(n)(1000000L)
-    var it = 0
-    while (it < iterations) {
-      val contrib = new Array[Long](n)
-      i = 0
-      while (i < m) {
-        contrib(dsts(i)) += rk(srcs(i)) * ws(i) / wout(srcs(i))
-        i += 1
-      }
-      val nr = new Array[Long](n)
-      var v = 0
-      while (v < n) { nr(v) = base + alphaNum * contrib(v) / alphaDen; v += 1 }
-      rk = nr
-      it += 1
+    var rk = Array.fill(g.n)(1000000L)
+    for (_ <- 1 to iterations) {
+      val contrib = new Array[Long](g.n)
+      g.src.indices.foreach(e =>
+        contrib(g.dst(e)) += rk(g.src(e)) * g.weight(e) / wout(g.src(e)))
+      rk = contrib.map(c => base + alphaNum * c / alphaDen)
     }
-    rankFrame(spark, in.ids, idType, rk, "rank_micro", "rank")
+    microFrame(spark, g, rk, "rank_micro", "rank")
   }
 
   /**
@@ -477,9 +418,8 @@ object GraphAlgorithms {
     // graphs.
     collectInternedGated(edges.select(col("src"), col("dst"))
         .where(col("src") =!= col("dst")), canonical = false,
-        10000000L).foreach { in =>
-      return localKatz(in, edges.schema("src").dataType,
-        alphaNum, alphaDen, iterations, edges.sparkSession)
+        10000000L).foreach { g =>
+      return localKatz(g, alphaNum, alphaDen, iterations, edges.sparkSession)
     }
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct()
@@ -515,24 +455,23 @@ object GraphAlgorithms {
                     undirected: Boolean = true): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     // Adaptive (the closeness/kCore/LPA pattern): string-id graphs below
-    // the threshold BFS on driver adjacency arrays — each distributed hop
-    // costs a join + anti-join of fixed job latency. The 10M-row gate
-    // counts the RAW base orientation (one cheap scan); the reverse
+    // the threshold BFS on the driver ([[LocalGraph.Sweep]]) — each
+    // distributed hop costs a join + anti-join of fixed job latency. The
+    // gate counts the RAW base orientation (one cheap scan); the reverse
     // direction for undirected mode is added in memory.
-    if (e0.schema("u").dataType == org.apache.spark.sql.types.StringType) {
-      // canonical dedup for undirected (one pair per unordered edge,
-      // reverse added in memory); ordered dedup when directed
-      collectInternedGated(e0, canonical = undirected,
-          10000000L / (if (undirected) 2 else 1)).foreach { in =>
-        return localBfs(in, undirected, sourceId, maxHops, spark)
+    if (edges.schema("src").dataType == StringType &&
+        edges.schema("dst").dataType == StringType) {
+      gatedGraph(edges, undirected).foreach { g =>
+        val sweep = new LocalGraph.Sweep(g.adj(undirected))
+        val reached = g.idx.get(sourceId).fold(Seq(Row(sourceId, 0))) { s =>
+          sweep.order.take(sweep.from(s, maxHops)).toSeq
+            .map(v => Row(g.ids(v), sweep.dist(v)))
+        }
+        return LocalGraph.frame(spark, Seq("id" -> StringType, "dist" -> IntegerType), reached)
       }
     }
-    val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-             else e0)
-      .where(col("u") =!= col("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = orientedSimple(edges, undirected).persist(StorageLevel.MEMORY_AND_DISK)
     val eCnt = e.count()
     val dist = hopBfs(e, eCnt, Seq((sourceId, 0)).toDF("id", "dist"), 1L, Nil, maxHops)
     e.unpersist()
@@ -599,40 +538,6 @@ object GraphAlgorithms {
   private[graft] def gatedBc(df: DataFrame, cnt: Long, big: Long): DataFrame =
     if (cnt <= math.min(2000000L, big / 8)) broadcast(df) else df
 
-  /** Driver-side hop-bounded BFS for [[shortestPaths]]'s small regime —
-    * identical semantics: dist = first hop the vertex is reached within
-    * `maxHops`, source row always present (even off-graph sources). */
-  private def localBfs(in: InternedEdges,
-                       undirected: Boolean, sourceId: String, maxHops: Int,
-                       spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val ids = in.ids
-    val n = ids.length
-    val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    in.pairs.foreach { case (u, v) => adj(u) += v; if (undirected) adj(v) += u }
-    in.idx.get(sourceId) match {
-      case None => Seq((sourceId, 0)).toDF("id", "dist")
-      case Some(src) =>
-        val dist = Array.fill(n)(-1)
-        dist(src) = 0
-        var frontier = List(src)
-        var h = 0
-        while (h < maxHops && frontier.nonEmpty) {
-          h += 1
-          var next = List.empty[Int]
-          frontier.foreach { u =>
-            adj(u).foreach { v =>
-              if (dist(v) < 0) { dist(v) = h; next = v :: next }
-            }
-          }
-          frontier = next
-        }
-        val rows = (0 until n).iterator.filter(dist(_) >= 0)
-          .map(i => (ids(i).asInstanceOf[String], dist(i))).toSeq
-        spark.createDataFrame(rows).toDF("id", "dist")
-    }
-  }
-
   /**
    * Closeness + harmonic centrality (parity-plus, the natural next step
    * after [[shortestPaths]]): hop-bounded multi-source BFS over the state
@@ -657,29 +562,22 @@ object GraphAlgorithms {
    * standard approximation) to bound state at |sources| · reach while the
    * per-hop shuffle shape stays identical.
    *
-   * Adaptive execution (the [[stronglyConnectedComponents]] /
-   * [[pairComponents]] pattern): up to
-   * 10M oriented edges the BFS sweep runs driver-side over an
-   * array adjacency — each distributed hop costs several Spark jobs of
-   * fixed scheduling latency regardless of data volume, which dominates on
-   * small graphs. Identical semantics (same hop bound, same fixed-order
+   * Adaptive execution: up to 10M raw edges directed, 5M undirected, one
+   * probe collect loads the graph ([[gatedGraph]]) and the BFS sweep runs
+   * driver-side ([[LocalGraph.Sweep]]) — each distributed hop costs
+   * several Spark jobs of fixed scheduling latency regardless of data
+   * volume, which dominates on small graphs. Identical semantics (same hop bound, same fixed-order
    * harmonic fold, same HALF_UP rounding); parity is spec-asserted.
    */
   def closenessCentrality(edges: DataFrame, maxHops: Int = 10,
                           undirected: Boolean = true,
                           sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
-    val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-             else e0)
-      .where(col("u") =!= col("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCnt = e.count()
-    if (localRowCap(edges.sparkSession, 10000000L).exists(eCnt <= _)) {
-      val out = localCloseness(e, maxHops, sources)
-      e.unpersist()
-      return out
+    gatedGraph(edges, undirected).foreach { g =>
+      return localCloseness(g, undirected, maxHops, sources, edges.sparkSession)
     }
+    val e = orientedSimple(edges, undirected).persist(StorageLevel.MEMORY_AND_DISK)
+    val eCnt = e.count()
     val (srcs, dist) = bfsFromSources(e, eCnt, sources, maxHops)
     e.unpersist()
     val aggCols = count(lit(1)).as("__reached") +: sum(col("dist")).as("__sum") +:
@@ -699,79 +597,34 @@ object GraphAlgorithms {
         round(coalesce(harmonic, lit(0.0)), 6).as("harmonic"))
   }
 
+  /** The ids a replay sweeps from: those of `sources`, cast to the
+    * graph's id type, else every vertex. */
+  private def sourceIds(g: LocalGraph, sources: Option[DataFrame]): Seq[Any] =
+    sources.fold(g.ids.toSeq)(_.select(col("id").cast(g.idType)).collect().map(_.get(0)).toSeq)
+
   /** Driver-side BFS sweep for [[closenessCentrality]]'s small regime.
-    * `e` is the already-oriented (u, v) edge frame (both directions when
-    * undirected). Arithmetic mirrors the distributed form exactly:
-    * reached/sum_dist as one double division, harmonic folded
-    * left-to-right over hop order, HALF_UP rounding to 6 (Spark's
-    * `round`). */
-  private def localCloseness(e: DataFrame, maxHops: Int,
-                             sources: Option[DataFrame]): DataFrame = {
-    val spark = e.sparkSession
-    val dt = e.schema("u").dataType
-    val edgeRows = e.collect()
-    val in = new Interner
-    val adjBuf = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[Int]]
-    edgeRows.foreach { r =>
-      val (a, b) = (in.intern(r.get(0)), in.intern(r.get(1)))
-      while (adjBuf.length <= math.max(a, b)) adjBuf += scala.collection.mutable.ArrayBuffer.empty[Int]
-      adjBuf(a) += b
-    }
-    val n = in.ids.length
-    val adj = adjBuf.map(_.toArray).toArray
-    val srcList: Seq[Any] = sources match {
-      case Some(df) => df.select(col("id")).collect().map(_.get(0)).toSeq
-      case None => in.ids.toSeq
-    }
+    * Arithmetic mirrors the distributed form exactly: reached/sum_dist as
+    * one double division, harmonic folded left-to-right over hop order,
+    * HALF_UP rounding to 6 (Spark's `round`). */
+  private def localCloseness(g: LocalGraph, undirected: Boolean, maxHops: Int,
+                             sources: Option[DataFrame], spark: SparkSession): DataFrame = {
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    val seen = Array.fill(n)(-1)
-    var stamp = 0
-    val queue = new Array[Int](n)
-    val out = srcList.map { src =>
-      var reached = 0L
-      var sumDist = 0L
+    val sweep = new LocalGraph.Sweep(g.adj(undirected))
+    val out = sourceIds(g, sources).map { src =>
       val perDist = new Array[Long](maxHops + 1)
-      in.idx.get(src).foreach { s0 =>
-        stamp += 1
-        var head = 0; var tail = 0
-        queue(tail) = s0; tail += 1; seen(s0) = stamp
-        val distArr = new Array[Int](n)
-        distArr(s0) = 0
-        while (head < tail) {
-          val u = queue(head); head += 1
-          val du = distArr(u)
-          if (du < maxHops) {
-            var i = 0
-            val nb = if (u < adj.length) adj(u) else Array.emptyIntArray
-            while (i < nb.length) {
-              val v = nb(i)
-              if (seen(v) != stamp) {
-                seen(v) = stamp
-                distArr(v) = du + 1
-                reached += 1L
-                sumDist += du + 1L
-                perDist(du + 1) += 1L
-                queue(tail) = v; tail += 1
-              }
-              i += 1
-            }
-          }
-        }
+      g.idx.get(src).foreach { s =>
+        (1 until sweep.from(s, maxHops)).foreach(i => perDist(sweep.dist(sweep.order(i))) += 1L)
       }
+      val reached = perDist.sum
+      val sumDist = perDist.indices.map(d => d * perDist(d)).sum
       val closeness = if (sumDist > 0) round6(reached.toDouble / sumDist.toDouble) else 0.0
       var h = 0.0
-      var d = 1
-      while (d <= maxHops) { h += perDist(d).toDouble / d.toDouble; d += 1 }
-      val harmonic = round6(h)
-      org.apache.spark.sql.Row(src, reached, sumDist, closeness, harmonic)
+      for (d <- 1 to maxHops) h += perDist(d).toDouble / d.toDouble
+      Row(src, reached, sumDist, closeness, round6(h))
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("id", dt), StructField("reached", LongType),
-      StructField("sum_dist", LongType), StructField("closeness", DoubleType),
-      StructField("harmonic", DoubleType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "reached" -> LongType,
+      "sum_dist" -> LongType, "closeness" -> DoubleType, "harmonic" -> DoubleType), out)
   }
 
   /**
@@ -793,24 +646,18 @@ object GraphAlgorithms {
    *
    * δ sums are data-ordered doubles, so the result contract is
    * round-to-4 (the pageRank precedent: ~1e-13 cross-engine drift vs a
-   * 5e-5 rounding margin). Adaptive: ≤ 10M oriented edges →
-   * driver-side Brandes sweep.
+   * 5e-5 rounding margin). Adaptive: ≤ 10M raw edges directed, 5M
+   * undirected → driver-side Brandes sweep.
    */
   def betweennessCentrality(edges: DataFrame, maxHops: Int = 6,
                             undirected: Boolean = true,
                             sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
-    val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-             else e0)
-      .where(col("u") =!= col("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCnt = e.count()
-    if (localRowCap(edges.sparkSession, 10000000L).exists(eCnt <= _)) {
-      val out = localBetweenness(e, maxHops, sources)
-      e.unpersist()
-      return out
+    gatedGraph(edges, undirected).foreach { g =>
+      return localBetweenness(g, undirected, maxHops, sources, edges.sparkSession)
     }
+    val e = orientedSimple(edges, undirected).persist(StorageLevel.MEMORY_AND_DISK)
+    val eCnt = e.count()
     val verts = e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct().localCheckpoint(true)
     val (srcs, srcCnt) = Fixpoint.materialize(sources.map(_.select(col("id"))).getOrElse(verts))
@@ -878,64 +725,33 @@ object GraphAlgorithms {
   }
 
   /** Driver-side hop-bounded Brandes for [[betweennessCentrality]]'s
-    * small regime: per source, BFS to maxHops building σ and the visit
-    * order, then dependency accumulation in reverse visit order over
-    * in-neighbor predecessor checks — identical DAG semantics to the
-    * distributed level-by-level form. */
-  private def localBetweenness(e: DataFrame, maxHops: Int,
-                               sources: Option[DataFrame]): DataFrame = {
-    val spark = e.sparkSession
-    val dt = e.schema("u").dataType
-    val in = new Interner
-    val pairs = e.collect().map(r => (in.intern(r.get(0)), in.intern(r.get(1))))
-    val n = in.ids.length
-    val outAdj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    val inAdj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    pairs.foreach { case (u, v) => outAdj(u) += v; inAdj(v) += u }
-    val srcList: Seq[Int] = sources match {
-      case Some(df) => df.select(col("id")).collect().map(_.get(0))
-        .flatMap(in.idx.get).toSeq
-      case None => 0 until n
-    }
-    val bc = new Array[Double](n)
-    val dist = Array.fill(n)(-1)
-    val sigma = new Array[Long](n)
-    val delta = new Array[Double](n)
-    val order = new Array[Int](n)
-    srcList.foreach { s =>
-      java.util.Arrays.fill(dist, -1)
-      java.util.Arrays.fill(sigma, 0L)
-      java.util.Arrays.fill(delta, 0.0)
-      var head = 0; var tail = 0
-      dist(s) = 0; sigma(s) = 1L
-      order(tail) = s; tail += 1
-      while (head < tail) {
-        val u = order(head); head += 1
-        if (dist(u) < maxHops) {
-          outAdj(u).foreach { v =>
-            if (dist(v) < 0) { dist(v) = dist(u) + 1; order(tail) = v; tail += 1 }
-            if (dist(v) == dist(u) + 1) sigma(v) += sigma(u)
-          }
-        }
-      }
-      var i = tail - 1
-      while (i > 0) { // reverse visit order; order(0) == s is skipped
-        val w = order(i)
-        inAdj(w).foreach { u =>
-          if (dist(u) == dist(w) - 1)
-            delta(u) += sigma(u).toDouble / sigma(w).toDouble * (1.0 + delta(w))
+    * small regime: per source, the [[LocalGraph.Sweep]] to maxHops
+    * counts σ and the visit order, then dependencies accumulate in
+    * reverse visit order over in-neighbour predecessor checks — identical
+    * DAG semantics to the distributed level-by-level form. */
+  private def localBetweenness(g: LocalGraph, undirected: Boolean, maxHops: Int,
+                               sources: Option[DataFrame], spark: SparkSession): DataFrame = {
+    val sweep = new LocalGraph.Sweep(g.adj(undirected))
+    val preds = if (undirected) g.both else g.in
+    val bc = new Array[Double](g.n)
+    val delta = new Array[Double](g.n)
+    sourceIds(g, sources).flatMap(g.idx.get).foreach { s =>
+      val k = sweep.from(s, maxHops)
+      (0 until k).foreach(i => delta(sweep.order(i)) = 0.0)
+      // reverse visit order; order(0) == s is skipped
+      for (i <- k - 1 to 1 by -1) {
+        val w = sweep.order(i)
+        preds.foreach(w) { u =>
+          if (sweep.visited(u) && sweep.dist(u) == sweep.dist(w) - 1)
+            delta(u) += sweep.sigma(u).toDouble / sweep.sigma(w).toDouble * (1.0 + delta(w))
         }
         bc(w) += delta(w)
-        i -= 1
       }
     }
     def round4(x: Double): Double =
       BigDecimal(x).setScale(4, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    val rows = (0 until n).map(i => org.apache.spark.sql.Row(in.ids(i), round4(bc(i))))
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("id", dt), StructField("betweenness", DoubleType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "betweenness" -> DoubleType),
+      (0 until g.n).map(i => Row(g.ids(i), round4(bc(i)))))
   }
 
   /**
@@ -961,33 +777,14 @@ object GraphAlgorithms {
                   undirected: Boolean = true): DataFrame = {
     require(steps >= 1, s"steps must be >= 1: $steps")
     import org.apache.spark.sql.expressions.Window
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     // Adaptive (the BFS/kCore pattern): each distributed step is a
     // checkpointed join job of fixed latency — steps × ~0.2 s dominates
     // small graphs. The LCG transition is pure integer arithmetic, so the
-    // driver replay is exact. Integral ids only: the local rank must
-    // reproduce `row_number() ORDER BY v` (numeric order); string
-    // collation is left to the distributed path.
-    val integralIds = Seq("u", "v").forall(c => e0.schema(c).dataType match {
-      case _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => true
-      case _ => false
-    })
-    if (integralIds) {
-      collectInternedGated(e0.where(col("u") =!= col("v")),
-          canonical = undirected, 10000000L / (if (undirected) 2 else 1)).foreach { in =>
-        // starts probe-cap: ≤1M walk rows replay locally; a bigger
-        // start set stays distributed (ships at most 1M+1 rows here)
-        val startRows = starts.select(col("wid").cast("long").as("wid"), col("id"))
-          .limit(1000001).collect()
-        if (startRows.length <= 1000000) {
-          return localRandomWalks(in, startRows, steps, undirected,
-            e0.schema("u").dataType, edges.sparkSession)
-        }
-      }
+    // driver replay is exact.
+    walkReplay(edges, starts, undirected).foreach { case (g, startRows) =>
+      return localRandomWalks(g, startRows, steps, undirected, edges.sparkSession)
     }
-    val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-             else e0)
-      .where(col("u") =!= col("v")).distinct()
+    val e = orientedSimple(edges, undirected)
     val adj = e.withColumn("rk",
         row_number().over(Window.partitionBy("u").orderBy("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1012,39 +809,51 @@ object GraphAlgorithms {
     out
   }
 
-  /** Driver-side replay of [[randomWalks]] for the small regime —
-    * identical LCG draws, identical `row_number() ORDER BY v` neighbor
-    * ranks (numeric order; the caller gates on integral id types). */
-  private def localRandomWalks(in: InternedEdges,
-      startRows: Array[org.apache.spark.sql.Row], steps: Int,
-      undirected: Boolean, dt: org.apache.spark.sql.types.DataType,
-      spark: SparkSession): DataFrame = {
-    val ids = in.ids
-    val n = ids.length
-    def longOf(x: Any): Long = x.asInstanceOf[Number].longValue
-    val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    in.pairs.foreach { case (u, v) => adj(u) += v; if (undirected) adj(v) += u }
-    val sorted = adj.map(_.toArray.sortBy(i => longOf(ids(i))))
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    startRows.foreach { r =>
-      val wid = r.getLong(0)
-      val startId = r.get(1)
-      rows += org.apache.spark.sql.Row(wid, 0, startId)
-      var cur = in.idx.getOrElse(startId, -1)
-      var t = 1
-      while (t <= steps && cur >= 0 && sorted(cur).nonEmpty) {
-        val nb = sorted(cur)
-        val draw = java.lang.Math.floorMod(
-          1103515245L * (wid * 1000003L + t.toLong * 101L) + 12345L, 2147483647L)
-        cur = nb(java.lang.Math.floorMod(draw, nb.length.toLong).toInt)
-        rows += org.apache.spark.sql.Row(wid, t, ids(cur))
-        t += 1
-      }
+  /** The walks' local regime: the gated graph of integral-id `edges` and
+    * up to 1M `starts` rows (wid BIGINT, id cast to the graph's id type),
+    * or None. Integral ids only — the local neighbour rank must reproduce
+    * `row_number() ORDER BY v` (numeric order); string collation is left
+    * to the distributed path, as is a bigger start set (at most 1M+1 rows
+    * ship here). */
+  private def walkReplay(edges: DataFrame, starts: DataFrame,
+      undirected: Boolean): Option[(LocalGraph, Array[Row])] = {
+    val integral = Seq("src", "dst").forall(c => edges.schema(c).dataType match {
+      case IntegerType | LongType => true
+      case _ => false
+    })
+    if (!integral) return None
+    gatedGraph(edges, undirected).flatMap { g =>
+      val rows = starts.select(col("wid").cast("long"), col("id").cast(g.idType))
+        .limit(1000001).collect()
+      if (rows.length <= 1000000) Some((g, rows)) else None
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("wid", LongType),
-      StructField("step", IntegerType), StructField("id", dt)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+  }
+
+  /** The walks' pure-integer LCG draw for walk `wid` at step `t`. */
+  private def walkDraw(wid: Long, t: Int): Long =
+    java.lang.Math.floorMod(1103515245L * (wid * 1000003L + t.toLong * 101L) + 12345L,
+      2147483647L)
+
+  private def walkFrame(spark: SparkSession, idType: DataType, rows: Seq[Row]): DataFrame =
+    LocalGraph.frame(spark, Seq("wid" -> LongType, "step" -> IntegerType, "id" -> idType), rows)
+
+  /** Driver-side replay of [[randomWalks]] for the small regime —
+    * identical LCG draws, identical `row_number() ORDER BY v` neighbour
+    * ranks ([[LocalGraph.numeric]]). */
+  private def localRandomWalks(g: LocalGraph, startRows: Array[Row], steps: Int,
+      undirected: Boolean, spark: SparkSession): DataFrame = {
+    val adj = g.numeric(g.adj(undirected))
+    val rows = startRows.toSeq.flatMap { r =>
+      val wid = r.getLong(0)
+      var cur = g.idx.getOrElse(r.get(1), -1)
+      Row(wid, 0, r.get(1)) +: (1 to steps).iterator
+        .takeWhile(_ => cur >= 0 && adj.degree(cur) > 0)
+        .map { t =>
+          cur = adj(cur, java.lang.Math.floorMod(walkDraw(wid, t), adj.degree(cur).toLong).toInt)
+          Row(wid, t, g.ids(cur))
+        }.toSeq
+    }
+    walkFrame(spark, g.idType, rows)
   }
 
   /** Driver-side replay of [[weightedRandomWalks]] for the small regime —
@@ -1089,9 +898,7 @@ object GraphAlgorithms {
       while (t <= steps && alive) {
         val (vs, cw) = adj(cur)
         val tw = cw(cw.length - 1)
-        val draw = java.lang.Math.floorMod(
-          1103515245L * (wid * 1000003L + t.toLong * 101L) + 12345L, 2147483647L)
-        val rr = java.lang.Math.floorMod(draw, tw)
+        val rr = java.lang.Math.floorMod(walkDraw(wid, t), tw)
         // first index with cw > rr — the [cw−w, cw) interval containing rr
         var lo = 0; var hi = cw.length - 1
         while (lo < hi) {
@@ -1104,10 +911,7 @@ object GraphAlgorithms {
         t += 1
       }
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("wid", LongType),
-      StructField("step", IntegerType), StructField("id", dt)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    walkFrame(spark, dt, rows.toSeq)
   }
 
   /**
@@ -1269,29 +1073,13 @@ object GraphAlgorithms {
     require(steps >= 1, s"steps must be >= 1: $steps")
     require(p >= 1 && q >= 1, s"p and q must be positive integers: p=$p q=$q")
     import org.apache.spark.sql.expressions.Window
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
     // Adaptive, same contract as [[randomWalks]]' local replay: the bias
     // weights and cumulative-in-neighbor-order selection are pure integer
     // arithmetic, exactly reproducible on driver adjacency arrays.
-    val integralIds = Seq("u", "v").forall(c => e0.schema(c).dataType match {
-      case _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => true
-      case _ => false
-    })
-    if (integralIds) {
-      collectInternedGated(e0.where(col("u") =!= col("v")),
-          canonical = undirected, 10000000L / (if (undirected) 2 else 1)).foreach { in =>
-        // starts probe-cap: ≤1M walk rows replay locally (see randomWalks)
-        val startRows = starts.select(col("wid").cast("long").as("wid"), col("id"))
-          .limit(1000001).collect()
-        if (startRows.length <= 1000000) {
-          return localNode2vecWalks(in, startRows, steps, p, q, undirected,
-            e0.schema("u").dataType, edges.sparkSession)
-        }
-      }
+    walkReplay(edges, starts, undirected).foreach { case (g, startRows) =>
+      return localNode2vecWalks(g, startRows, steps, p, q, undirected, edges.sparkSession)
     }
-    val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-             else e0)
-      .where(col("u") =!= col("v")).distinct()
+    val e = orientedSimple(edges, undirected)
     val adj = e.withColumn("rk",
         row_number().over(Window.partitionBy("u").orderBy("v")))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1340,68 +1128,44 @@ object GraphAlgorithms {
     * identical LCG draws, v-ascending cumulative integer bias weights
     * (v==prev → q, neighbor-of-prev → p·q, else p), selection by the
     * [cw−bw, cw) interval containing draw mod total-weight. */
-  private def localNode2vecWalks(in: InternedEdges,
-      startRows: Array[org.apache.spark.sql.Row], steps: Int,
-      p: Int, q: Int, undirected: Boolean,
-      dt: org.apache.spark.sql.types.DataType, spark: SparkSession): DataFrame = {
-    val ids = in.ids
-    val n = ids.length
-    def longOf(x: Any): Long = x.asInstanceOf[Number].longValue
-    val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    val edgeSet = new java.util.HashSet[Long]()
-    def pack(a: Int, b: Int): Long = (a.toLong << 32) | (b.toLong & 0xffffffffL)
-    in.pairs.foreach { case (u, v) =>
-      adj(u) += v; edgeSet.add(pack(u, v))
-      if (undirected) { adj(v) += u; edgeSet.add(pack(v, u)) }
-    }
-    val sorted = adj.map(_.toArray.sortBy(i => longOf(ids(i))))
-    def draw(wid: Long, t: Int): Long = java.lang.Math.floorMod(
-      1103515245L * (wid * 1000003L + t.toLong * 101L) + 12345L, 2147483647L)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    startRows.foreach { r =>
-      val wid = r.getLong(0)
-      val startId = r.get(1)
-      rows += org.apache.spark.sql.Row(wid, 0, startId)
-      var cur = in.idx.getOrElse(startId, -1)
-      if (cur >= 0 && sorted(cur).nonEmpty) {
-        // step 1: uniform, no prev to bias against yet
-        var prev = cur
-        cur = sorted(cur)(java.lang.Math.floorMod(draw(wid, 1), sorted(cur).length.toLong).toInt)
-        rows += org.apache.spark.sql.Row(wid, 1, ids(cur))
-        var t = 2
-        while (t <= steps && sorted(cur).nonEmpty) {
-          val nb = sorted(cur)
-          var tw = 0L
-          val bw = new Array[Long](nb.length)
-          var i = 0
-          while (i < nb.length) {
-            val v = nb(i)
-            bw(i) = if (v == prev) q.toLong
-              else if (edgeSet.contains(pack(prev, v))) p.toLong * q
-              else p.toLong
-            tw += bw(i)
-            i += 1
-          }
-          val r0 = java.lang.Math.floorMod(draw(wid, t), tw)
-          var cw = 0L
-          i = 0
-          var chosen = -1
-          while (chosen < 0 && i < nb.length) {
-            cw += bw(i)
-            if (r0 < cw) chosen = nb(i)
-            i += 1
-          }
-          prev = cur
-          cur = chosen
-          rows += org.apache.spark.sql.Row(wid, t, ids(cur))
-          t += 1
-        }
+  private def localNode2vecWalks(g: LocalGraph, startRows: Array[Row], steps: Int,
+      p: Int, q: Int, undirected: Boolean, spark: SparkSession): DataFrame = {
+    val adj = g.numeric(g.adj(undirected))
+    def key(v: Int): Long = g.ids(v).asInstanceOf[Number].longValue
+    // whether b is a neighbour of a: a binary search of a's numeric list
+    def adjacent(a: Int, b: Int): Boolean = {
+      var lo = adj.off(a); var hi = adj.off(a + 1) - 1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        val k = key(adj.to(mid))
+        if (k == key(b)) return true
+        if (k < key(b)) lo = mid + 1 else hi = mid - 1
       }
+      false
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("wid", LongType),
-      StructField("step", IntegerType), StructField("id", dt)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    val rows = startRows.toSeq.flatMap { r =>
+      val wid = r.getLong(0)
+      val walk = scala.collection.mutable.ArrayBuffer(Row(wid, 0, r.get(1)))
+      var cur = g.idx.getOrElse(r.get(1), -1)
+      var prev = -1
+      var t = 1
+      while (t <= steps && cur >= 0 && adj.degree(cur) > 0) {
+        // step 1 is uniform: no prev to bias against yet
+        val bw = Array.tabulate(adj.degree(cur)) { i =>
+          val v = adj(cur, i)
+          if (prev < 0) 1L else if (v == prev) q.toLong
+          else if (adjacent(prev, v)) p.toLong * q else p.toLong
+        }
+        val r0 = java.lang.Math.floorMod(walkDraw(wid, t), bw.sum)
+        val chosen = bw.scanLeft(0L)(_ + _).tail.indexWhere(r0 < _)
+        prev = cur
+        cur = adj(cur, chosen)
+        walk += Row(wid, t, g.ids(cur))
+        t += 1
+      }
+      walk.toSeq
+    }
+    walkFrame(spark, g.idType, rows)
   }
 
   /**
@@ -1425,10 +1189,7 @@ object GraphAlgorithms {
    */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = 20): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
-    val both = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      .where(col("u") =!= col("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val both = orientedSimple(edges, undirected = true).persist(StorageLevel.MEMORY_AND_DISK)
     // Adaptive (the kCore/kTruss/HITS pattern): each distributed round
     // costs several fixed-latency jobs; below 10M oriented edges the
     // synchronous rounds run driver-side with identical semantics
@@ -1494,46 +1255,42 @@ object GraphAlgorithms {
       lit(BigDecimal(2147483647L))).cast("long")
   }
 
+  /** The collected symmetric edge list `both` (u, v) of the MIS and
+    * coloring replays as a [[LocalGraph]] (read through `out`), with
+    * every vertex's `CAST(id AS BIGINT)` — the priority LCG's input,
+    * cast by Spark exactly as the distributed form casts it. */
+  private def symmetricGraph(both: DataFrame): (LocalGraph, Array[Long]) = {
+    val typed = LocalGraph.typed(both)
+    val rows = typed.selectExpr("u", "v", "CAST(u AS BIGINT)").collect()
+    val g = LocalGraph.simple(rows, typed.schema(0).dataType, canonical = false)
+    val num = new Array[Long](g.n)
+    rows.foreach(r => g.idx.get(r.get(0)).foreach(num(_) = r.getLong(2)))
+    (g, num)
+  }
+
   /** Driver-side Luby rounds for [[maximalIndependentSet]]'s small
-    * regime — identical synchronous semantics over interned arrays.
-    * Ids must cast to Long (the priority LCG input), matching the
-    * distributed form's cast. */
+    * regime — identical synchronous semantics over [[symmetricGraph]]. */
   private def localMis(both: DataFrame, rounds: Int): DataFrame = {
-    val spark = both.sparkSession
-    val dt = both.schema("u").dataType
-    val in = new Interner
-    val pairs = both.selectExpr("u", "v", "CAST(u AS BIGINT) AS ul")
-      .collect().map(r => (in.intern(r.get(0)), in.intern(r.get(1)), r.getLong(2)))
-    val n = in.ids.length
-    val num = new Array[Long](n)
-    pairs.foreach { case (a, _, ul) => num(a) = ul }
-    val nbrs = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    pairs.foreach { case (a, b, _) => nbrs(a) += b }
-    val alive = Array.fill(n)(true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Any, Int)]
-    var liveCount = n
+    val (g, num) = symmetricGraph(both)
+    val alive = Array.fill(g.n)(true)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
     var r = 0
-    while (r < rounds && liveCount > 0) {
+    while (r < rounds && alive.contains(true)) {
       r += 1
-      def prio(i: Int): Long =
-        math.floorMod(1103515245L * (num(i) * 1000003L + r * 101L) + 12345L, 2147483647L)
-      val p = Array.tabulate(n)(i => if (alive(i)) prio(i) else Long.MaxValue)
-      val winners = (0 until n).filter { i =>
-        alive(i) && nbrs(i).forall { j =>
+      val p = Array.tabulate(g.n)(i => if (!alive(i)) Long.MaxValue else
+        math.floorMod(1103515245L * (num(i) * 1000003L + r * 101L) + 12345L, 2147483647L))
+      val winners = (0 until g.n).filter { i =>
+        alive(i) && g.out.forall(i) { j =>
           !alive(j) || p(i) < p(j) || (p(i) == p(j) && num(i) < num(j))
         }
       }
       winners.foreach { i =>
-        out += ((in.ids(i), r))
-        alive(i) = false; liveCount -= 1
-        nbrs(i).foreach { j => if (alive(j)) { alive(j) = false; liveCount -= 1 } }
+        out += Row(g.ids(i), r)
+        alive(i) = false
+        g.out.foreach(i)(alive(_) = false)
       }
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("id", dt),
-      StructField("round", IntegerType, nullable = false)))
-    val rows = out.map { case (id, rr) => org.apache.spark.sql.Row(id, rr) }.toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(both.sparkSession, Seq("id" -> g.idType, "round" -> IntegerType), out.toSeq)
   }
 
   /**
@@ -1560,10 +1317,7 @@ object GraphAlgorithms {
    */
   def jpColoring(edges: DataFrame, rounds: Int = 30): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
-    val both = e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      .where(col("u") =!= col("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val both = orientedSimple(edges, undirected = true).persist(StorageLevel.MEMORY_AND_DISK)
     if (countGated(both, 10000000L)) {
       val out = localJp(both, rounds)
       both.unpersist()
@@ -1616,48 +1370,31 @@ object GraphAlgorithms {
   }
 
   /** Driver-side Jones–Plassmann rounds for [[jpColoring]]'s small
-    * regime — identical synchronous semantics over interned arrays. */
+    * regime — identical synchronous semantics over [[symmetricGraph]]. */
   private def localJp(both: DataFrame, rounds: Int): DataFrame = {
-    val spark = both.sparkSession
-    val dt = both.schema("u").dataType
-    val in = new Interner
-    val pairs = both.selectExpr("u", "v", "CAST(u AS BIGINT) AS ul")
-      .collect().map(r => (in.intern(r.get(0)), in.intern(r.get(1)), r.getLong(2)))
-    val n = in.ids.length
-    val num = new Array[Long](n)
-    pairs.foreach { case (a, _, ul) => num(a) = ul }
-    val nbrs = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    pairs.foreach { case (a, b, _) => nbrs(a) += b }
-    val p = Array.tabulate(n)(i =>
-      math.floorMod(1103515245L * (num(i) * 1000003L + 101L) + 12345L, 2147483647L))
-    val color = Array.fill(n)(-1)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Any, Int, Int)]
-    var liveCount = n
+    val (g, num) = symmetricGraph(both)
+    val p = num.map(x => math.floorMod(1103515245L * (x * 1000003L + 101L) + 12345L, 2147483647L))
+    val color = Array.fill(g.n)(-1)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
     var r = 0
-    while (r < rounds && liveCount > 0) {
+    while (r < rounds && color.contains(-1)) {
       r += 1
-      val ready = (0 until n).filter { i =>
-        color(i) < 0 && nbrs(i).forall { j =>
+      val ready = (0 until g.n).filter { i =>
+        color(i) < 0 && g.out.forall(i) { j =>
           color(j) >= 0 || p(i) > p(j) || (p(i) == p(j) && num(i) > num(j))
         }
       }
       // the ready set is independent — immediate assignment only reads
       // colors fixed in earlier rounds
       ready.foreach { i =>
-        val used = nbrs(i).iterator.map(color).filter(_ >= 0).toSet
-        var c = 0
-        while (used(c)) c += 1
-        color(i) = c
-        out += ((in.ids(i), c, r))
-        liveCount -= 1
+        val used = scala.collection.mutable.BitSet.empty
+        g.out.foreach(i)(j => if (color(j) >= 0) used += color(j))
+        color(i) = Iterator.from(0).find(!used(_)).get
+        out += Row(g.ids(i), color(i), r)
       }
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("id", dt),
-      StructField("color", IntegerType, nullable = false),
-      StructField("round", IntegerType, nullable = false)))
-    val rows = out.map { case (id, c, rr) => org.apache.spark.sql.Row(id, c, rr) }.toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(both.sparkSession,
+      Seq("id" -> g.idType, "color" -> IntegerType, "round" -> IntegerType), out.toSeq)
   }
 
   /**
@@ -1848,12 +1585,8 @@ object GraphAlgorithms {
     val ul = rows0.map(_.getLong(2)); val vl = rows0.map(_.getLong(3))
     val ew = rows0.map(r => if (weighted) -r.getLong(4) else 0L)
     val out = localMatchCore(rows0.length, ul, vl, ew, rounds)
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("u", ut), StructField("v", vt),
-      StructField("round", IntegerType, nullable = false)))
-    val rows = out.map { case (i, rr) =>
-      org.apache.spark.sql.Row(eu(i), ev(i), rr) }.toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(spark, Seq("u" -> ut, "v" -> vt, "round" -> IntegerType),
+      out.map { case (i, rr) => Row(eu(i), ev(i), rr) }.toSeq)
   }
 
   /**
@@ -2124,11 +1857,8 @@ object GraphAlgorithms {
       }
       act = next
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("u", ut), StructField("v", vt),
-      StructField("weight", LongType, nullable = false)))
-    val rows = out.map { case (u, v, w) => org.apache.spark.sql.Row(u, v, w) }.toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(spark, Seq("u" -> ut, "v" -> vt, "weight" -> LongType),
+      out.map { case (u, v, w) => Row(u, v, w) }.toSeq)
   }
 
   private def keyOf(rows: Array[org.apache.spark.sql.Row], i: Int): (Long, Long) =
@@ -2170,13 +1900,11 @@ object GraphAlgorithms {
     // collected duplicate edges need no local distinct.
     if (stringCastReplayable(e0.schema("u").dataType) &&
         countGated(edges.select(col("src")), 2000000L, bounded = true)) {
-      val rows = e0.collect()
-      val local = localNeighborhoodRegisters(edges.sparkSession, rows,
-        e0.schema("u").dataType, hops, undirected)
-      if (local.isDefined) return local.get
+      val g = LocalGraph.multi(e0.collect(), e0.schema("u").dataType)
+      localNeighborhoodRegisters(edges.sparkSession, g, hops, undirected)
+        .foreach(local => return local)
     }
-    val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-      else e0).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val e = orientedSimple(edges, undirected).persist(StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct()
     var regs = verts.select(col("id"),
@@ -2197,26 +1925,19 @@ object GraphAlgorithms {
   }
 
   /** The register max-merge of [[localNeighborhoodRegisters]] as raw
-    * arrays — (interned ids, registers per hop 0..hops) — so
+    * arrays — registers per hop 0..hops of `g`'s vertices — so
     * [[effectiveDiameter]]'s read path can aggregate without
     * materializing a verts×256×hops local relation. None when the
     * register table would be too large for the driver. */
-  private def localNeighborhoodArrays(
-      rows: Array[org.apache.spark.sql.Row], hops: Int, undirected: Boolean)
-      : Option[(scala.collection.mutable.ArrayBuffer[Any], Array[Array[Array[Byte]]])] = {
-    val in = new Interner
-    val ids = in.ids
-    val m = rows.length
-    val ea = new Array[Int](m); val eb = new Array[Int](m)
-    var i = 0
-    while (i < m) { ea(i) = in.intern(rows(i).get(0)); eb(i) = in.intern(rows(i).get(1)); i += 1 }
-    val n = ids.length
+  private def localNeighborhoodArrays(g: LocalGraph, hops: Int, undirected: Boolean)
+      : Option[Array[Array[Array[Byte]]]] = {
+    val (ids, n, m, ea, eb) = (g.ids, g.n, g.edgeCount, g.src, g.dst)
     if (n.toLong * 256L * (hops + 1) > 16000000L) return None
     val md = java.security.MessageDigest.getInstance("MD5")
     val perHop = new Array[Array[Array[Byte]]](hops + 1)
     // init: one register per vertex — its own (bucket, rho)
     var regs = Array.ofDim[Byte](n, 256) // 0 = absent; rho ∈ 1..65 fits
-    i = 0
+    var i = 0
     while (i < n) {
       val d = md.digest(String.valueOf(ids(i)).getBytes(
         java.nio.charset.StandardCharsets.UTF_8))
@@ -2249,7 +1970,7 @@ object GraphAlgorithms {
       perHop(t) = regs
       t += 1
     }
-    Some((ids, perHop))
+    Some(perHop)
   }
 
   /** Driver-side replay of [[neighborhoodRegisters]]' small regime —
@@ -2257,12 +1978,10 @@ object GraphAlgorithms {
     * Returns None when the register table (verts × 256 × hops+1) would
     * be too large for a local relation, sending the caller back to the
     * distributed rounds. */
-  private def localNeighborhoodRegisters(spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      idType: org.apache.spark.sql.types.DataType,
+  private def localNeighborhoodRegisters(spark: SparkSession, g: LocalGraph,
       hops: Int, undirected: Boolean): Option[DataFrame] =
-    localNeighborhoodArrays(rows, hops, undirected).map { case (ids, perHop) =>
-      val n = ids.length
+    localNeighborhoodArrays(g, hops, undirected).map { perHop =>
+      val (ids, n) = (g.ids, g.n)
       val outRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
       var t = 0
       while (t <= hops) {
@@ -2282,7 +2001,7 @@ object GraphAlgorithms {
       import org.apache.spark.sql.types._
       val schema = StructType(Seq(
         StructField("hop", IntegerType, nullable = false),
-        StructField("id", idType),
+        StructField("id", g.idType),
         StructField("bucket", IntegerType),
         StructField("max_rho", IntegerType)))
       spark.createDataFrame(outRows, schema)
@@ -2311,9 +2030,10 @@ object GraphAlgorithms {
       .where(col("u") =!= col("v"))
     val localArrays =
       if (stringCastReplayable(e0.schema("u").dataType) &&
-          countGated(edges.select(col("src")), 2000000L, bounded = true))
-        localNeighborhoodArrays(e0.collect(), hops, undirected)
-      else None
+          countGated(edges.select(col("src")), 2000000L, bounded = true)) {
+        val g = LocalGraph.multi(e0.collect(), e0.schema("u").dataType)
+        localNeighborhoodArrays(g, hops, undirected).map(g.ids -> _)
+      } else None
     localArrays match {
       case Some((ids, perHopRegs)) =>
         val n = ids.length
@@ -2471,9 +2191,9 @@ object GraphAlgorithms {
     // path skips the
     // min-per-pair dedup entirely: relaxing over duplicate (u,v) entries
     // is equivalent to relaxing over their min, so one plain collect of
-    // the raw triples suffices (see collectInterned for why that beats
-    // collecting a persisted post-shuffle frame).
-    if (e0.schema("u").dataType == org.apache.spark.sql.types.StringType) {
+    // the raw triples suffices (see collectInternedGated for why that
+    // beats collecting a persisted post-shuffle frame).
+    if (e0.schema("u").dataType == StringType && e0.schema("v").dataType == StringType) {
       // probe-capped row gate (multi-edges kept — relaxation over
       // duplicates is relaxation over their min)
       collectRowsGated(e0,
@@ -2519,48 +2239,35 @@ object GraphAlgorithms {
     * out-edges of the vertices improved LAST round against the previous
     * round's distances, stops when a round improves nothing or at
     * `maxHops` rounds; source row always present. */
-  private def localWeightedSp(rows: Array[org.apache.spark.sql.Row],
-                              undirected: Boolean,
+  private def localWeightedSp(rows: Array[Row], undirected: Boolean,
                               sourceId: String, maxHops: Int,
                               spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val in = new Interner
-    val es = rows.map(r => (in.intern(r.getString(0)), in.intern(r.getString(1)), r.getLong(2)))
-    val n = in.ids.length
-    val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(Int, Long)])
-    es.foreach { case (u, v, w) =>
-      if (u != v) { adj(u) += ((v, w)); if (undirected) adj(v) += ((u, w)) }
-    }
-    in.idx.get(sourceId) match {
-      case None => Seq((sourceId, 0L)).toDF("id", "dist")
-      case Some(src) =>
-        val unreached = Long.MaxValue
-        var dist = Array.fill(n)(unreached)
-        dist(src) = 0L
-        var frontier = List(src)
-        var h = 0
-        while (h < maxHops && frontier.nonEmpty) {
-          h += 1
-          val next = dist.clone()
-          frontier.foreach { u =>
-            val base = dist(u)
-            adj(u).foreach { case (v, w) =>
-              if (base + w < next(v)) next(v) = base + w
-            }
+    val g = LocalGraph.multi(rows, StringType)
+    val edgeIds = g.src.indices.toArray
+    // each vertex's edges by index: out-edges, and in-edges when undirected
+    val inc = if (undirected) LocalGraph.Csr(g.n, g.src ++ g.dst, edgeIds ++ edgeIds)
+      else LocalGraph.Csr(g.n, g.src, edgeIds)
+    val reached = g.idx.get(sourceId).fold(Seq(Row(sourceId, 0L))) { src =>
+      val unreached = Long.MaxValue
+      var dist = Array.fill(g.n)(unreached)
+      dist(src) = 0L
+      var frontier = Seq(src)
+      var h = 0
+      while (h < maxHops && frontier.nonEmpty) {
+        h += 1
+        val next = dist.clone()
+        frontier.foreach { u =>
+          inc.foreach(u) { e =>
+            val v = g.src(e) + g.dst(e) - u // the other endpoint
+            if (v != u && dist(u) + g.weight(e) < next(v)) next(v) = dist(u) + g.weight(e)
           }
-          var improved = List.empty[Int]
-          var i = 0
-          while (i < n) {
-            if (next(i) < dist(i)) improved = i :: improved
-            i += 1
-          }
-          dist = next
-          frontier = improved
         }
-        val rows = (0 until n).iterator.filter(dist(_) != unreached)
-          .map(i => (in.ids(i).asInstanceOf[String], dist(i))).toSeq
-        spark.createDataFrame(rows).toDF("id", "dist")
+        frontier = (0 until g.n).filter(i => next(i) < dist(i))
+        dist = next
+      }
+      (0 until g.n).filter(dist(_) != unreached).map(i => Row(g.ids(i), dist(i)))
     }
+    LocalGraph.frame(spark, Seq("id" -> StringType, "dist" -> LongType), reached)
   }
 
   /**
@@ -2612,12 +2319,11 @@ object GraphAlgorithms {
     // the synchronous rounds run driver-side over adjacency arrays —
     // each distributed round is two shuffles of fixed job latency, the
     // dominant term on small graphs. Gate on the RAW count; the canonical dedup fuses into the
-    // driver-side intern pass (see collectInterned).
+    // driver-side intern pass (see collectInternedGated).
     val rawPairs = e0.where(col("u") =!= col("v"))
-    collectInternedGated(rawPairs, canonical = undirected, 10000000L).foreach { in =>
+    collectInternedGated(rawPairs, canonical = undirected, 10000000L).foreach { g =>
       raw.foreach(_.unpersist())
-      return localLabelPropagation(in, e0.schema("u").dataType,
-        edges.sparkSession, iterations, undirected)
+      return localLabelPropagation(g, edges.sparkSession, iterations, undirected)
     }
     // Dedup in SINGLE orientation: for undirected graphs the distinct
     // runs over the canonical (least, greatest) list — half the rows of
@@ -2663,54 +2369,35 @@ object GraphAlgorithms {
     * order for the numeric regime, string order otherwise — the same
     * ordering the distributed argmax struct uses), isolated-in-degree
     * vertices keep their label. */
-  private def localLabelPropagation(in: InternedEdges,
-                                    dt: org.apache.spark.sql.types.DataType,
-                                    spark: SparkSession, iterations: Int,
-                                    undirected: Boolean): DataFrame = {
-    // pairs arrive in canonical single orientation for undirected graphs —
-    // the reverse direction is added here, in memory, not as a shuffle
-    val es = in.pairs
-    val ids = in.ids
-    val n = ids.length
-    // labels flow u -> v: v's candidates are its IN-neighbors' labels
-    val inNbrs = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    es.foreach { case (u, v) =>
-      inNbrs(v) += u
-      if (undirected) inNbrs(u) += v
-    }
+  private def localLabelPropagation(g: LocalGraph, spark: SparkSession,
+                                    iterations: Int, undirected: Boolean): DataFrame = {
+    // labels flow u -> v: v's candidates are its IN-neighbors' labels (the
+    // closure's, for a canonical undirected graph)
+    val inNbrs = if (undirected) g.both else g.in
     // ids never change set; order candidate labels by the ORIGINAL value
-    val lt: (Any, Any) => Boolean = dt match {
-      case org.apache.spark.sql.types.LongType =>
-        (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]
+    val lt: (Any, Any) => Boolean = g.idType match {
+      case LongType => (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]
       case _ => (a, b) => String.valueOf(a).compareTo(String.valueOf(b)) < 0
     }
-    var labels = Array.tabulate(n)(identity) // label = vertex index of the label VALUE
+    var labels = Array.tabulate(g.n)(identity) // label = vertex index of the label VALUE
+    val cnt = scala.collection.mutable.HashMap.empty[Int, Long]
     for (_ <- 1 to iterations) {
-      val next = new Array[Int](n)
-      val cnt = scala.collection.mutable.HashMap.empty[Int, Long]
-      var v = 0
-      while (v < n) {
-        val nb = inNbrs(v)
-        if (nb.isEmpty) next(v) = labels(v)
+      labels = Array.tabulate(g.n) { v =>
+        if (inNbrs.degree(v) == 0) labels(v)
         else {
           cnt.clear()
-          nb.foreach { u => val l = labels(u); cnt.update(l, cnt.getOrElse(l, 0L) + 1L) }
+          inNbrs.foreach(v) { u => cnt(labels(u)) = cnt.getOrElse(labels(u), 0L) + 1L }
           var bestL = -1
           var bestC = -1L
           cnt.foreach { case (l, c) =>
-            if (c > bestC || (c == bestC && lt(ids(l), ids(bestL)))) { bestL = l; bestC = c }
+            if (c > bestC || (c == bestC && lt(g.ids(l), g.ids(bestL)))) { bestL = l; bestC = c }
           }
-          next(v) = bestL
+          bestL
         }
-        v += 1
       }
-      labels = next
     }
-    val rows = (0 until n).map(i => org.apache.spark.sql.Row(ids(i), ids(labels(i))))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", dt),
-      org.apache.spark.sql.types.StructField("label", dt)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "label" -> g.idType),
+      (0 until g.n).map(i => Row(g.ids(i), g.ids(labels(i)))))
   }
 
   /**
@@ -2743,10 +2430,10 @@ object GraphAlgorithms {
     // distributed round costs several fixed-latency Spark jobs, the
     // dominant term on small graphs. Gate on the RAW count;
     // canonicalization fuses into the driver-side intern pass (see
-    // collectInterned).
+    // collectInternedGated).
     val raw = edges.select(col("src"), col("dst"))
-    collectInternedGated(raw, canonical = true, 10000000L).foreach { in =>
-      return localKCore(in, edges.schema("src").dataType, edges.sparkSession, k, rounds)
+    collectInternedGated(raw, canonical = true, 10000000L).foreach { g =>
+      return localKCore(g, edges.sparkSession, k, rounds)
     }
     // src-partitioned canonical set (the graphStats layout, r17): the
     // dedup's one exchange keyed on src alone — a grouping-key subset
@@ -2818,31 +2505,24 @@ object GraphAlgorithms {
     * vertices below k simultaneously, early-stops when a round removes
     * nothing, survivors report their induced degree (degree-0 survivors
     * omitted, matching the distributed output contract). */
-  private def localKCore(in: InternedEdges, dt: org.apache.spark.sql.types.DataType,
-                         spark: SparkSession, k: Int, rounds: Int): (DataFrame, Int) = {
-    val edges = in.pairs
-    val ids = in.ids
-    val nbrs = Array.fill(ids.length)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    edges.foreach { case (a, b) => nbrs(a) += b; nbrs(b) += a }
-    val deg = Array.tabulate(ids.length)(i => nbrs(i).length)
-    val alive = Array.fill(ids.length)(true)
+  private def localKCore(g: LocalGraph, spark: SparkSession, k: Int,
+                         rounds: Int): (DataFrame, Int) = {
+    val deg = Array.tabulate(g.n)(g.both.degree)
+    val alive = Array.fill(g.n)(true)
     var executed = 0
     var converged = false
     while (executed < rounds && !converged) {
       executed += 1
-      val dead = (0 until ids.length).filter(i => alive(i) && deg(i) < k)
+      val dead = (0 until g.n).filter(i => alive(i) && deg(i) < k)
       if (dead.isEmpty) converged = true
       else dead.foreach { i =>
         alive(i) = false
-        nbrs(i).foreach(j => if (alive(j)) deg(j) -= 1)
+        g.both.foreach(i)(j => if (alive(j)) deg(j) -= 1)
       }
     }
-    val rows = (0 until ids.length).iterator
-      .filter(i => alive(i) && deg(i) > 0)
-      .map(i => org.apache.spark.sql.Row(ids(i), deg(i).toLong)).toSeq
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("id", dt), StructField("degree", LongType)))
-    (spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema), executed)
+    (LocalGraph.frame(spark, Seq("id" -> g.idType, "degree" -> LongType),
+      (0 until g.n).filter(i => alive(i) && deg(i) > 0).map(i => Row(g.ids(i), deg(i).toLong))),
+      executed)
   }
 
   /** k-truss after `rounds` synchronous peels — see [[kTrussFixpoint]]
@@ -2885,22 +2565,17 @@ object GraphAlgorithms {
     * by adjacency-set intersection, all below-threshold edges removed
     * per round — identical round semantics to the DataFrame loop. */
   private def localKTruss(cn: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
-    val spark = cn.sparkSession
-    val dt = cn.schema("src").dataType
-    val in = new Interner
-    import in.{ids, intern}
-    var live = cn.collect().map(r => (intern(r.get(0)), intern(r.get(1)))).toSet
-    val nbrs = scala.collection.mutable.HashMap.empty[Int, scala.collection.mutable.HashSet[Int]]
-    def link(a: Int, b: Int): Unit = {
-      nbrs.getOrElseUpdate(a, scala.collection.mutable.HashSet.empty) += b
-      nbrs.getOrElseUpdate(b, scala.collection.mutable.HashSet.empty) += a
+    // the canonical (src < dst) rows, read as ordered pairs so each edge
+    // keeps that orientation
+    val g = LocalGraph.simple(cn.collect(), cn.schema("src").dataType, canonical = false)
+    val nbrs = Array.tabulate(g.n) { v =>
+      val set = scala.collection.mutable.HashSet.empty[Int]
+      g.both.foreach(v)(set += _)
+      set
     }
-    live.foreach { case (a, b) => link(a, b) }
+    var live = g.src.indices.map(e => (g.src(e), g.dst(e))).toSet
     def support(a: Int, b: Int): Long = {
-      val (sm, lg) = {
-        val na = nbrs(a); val nb = nbrs(b)
-        if (na.size <= nb.size) (na, nb) else (nb, na)
-      }
+      val (sm, lg) = if (nbrs(a).size <= nbrs(b).size) (nbrs(a), nbrs(b)) else (nbrs(b), nbrs(a))
       sm.count(lg.contains).toLong
     }
     var executed = 0
@@ -2914,13 +2589,9 @@ object GraphAlgorithms {
         dead.foreach { case (a, b) => nbrs(a) -= b; nbrs(b) -= a }
       }
     }
-    val rows = live.toSeq.map { case (a, b) =>
-      org.apache.spark.sql.Row(ids(a), ids(b), support(a, b))
-    }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("src", dt), StructField("dst", dt),
-      StructField("support", LongType)))
-    (spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema), executed)
+    (LocalGraph.frame(cn.sparkSession,
+      Seq("src" -> g.idType, "dst" -> g.idType, "support" -> LongType),
+      live.toSeq.map { case (a, b) => Row(g.ids(a), g.ids(b), support(a, b)) }), executed)
   }
 
   /**
@@ -2998,8 +2669,8 @@ object GraphAlgorithms {
     require(iterations >= 1 && iterations <= 6,
       s"iterations must be in [1, 6] (integer scores grow like deg^(2k)): $iterations")
     val raw = edges.select(col("src"), col("dst")).where(col("src") =!= col("dst"))
-    collectInternedGated(raw, canonical = false, 10000000L).foreach { in =>
-      return localHits(in, edges.schema("src").dataType, edges.sparkSession, iterations)
+    collectInternedGated(raw, canonical = false, 10000000L).foreach { g =>
+      return localHits(g, edges.sparkSession, iterations)
     }
     // src-keyed exchange before the distinct (a subset of the distinct
     // keys clusters it just as well — the graphStats canon layout): the
@@ -3061,27 +2732,17 @@ object GraphAlgorithms {
 
   /** Driver-side HITS for the small regime — identical recurrence over
     * interned index arrays. */
-  private def localHits(in: InternedEdges,
-      dt: org.apache.spark.sql.types.DataType, spark: SparkSession,
-      iterations: Int): DataFrame = {
-    val pairs = in.pairs
-    val ids = in.ids
-    val n = ids.length
-    var hub = Array.fill(n)(1L)
-    var auth = Array.fill(n)(0L)
+  private def localHits(g: LocalGraph, spark: SparkSession, iterations: Int): DataFrame = {
+    var hub = Array.fill(g.n)(1L)
+    var auth = Array.fill(g.n)(0L)
     for (_ <- 1 to iterations) {
-      val a = Array.fill(n)(0L)
-      pairs.foreach { case (u, v) => a(v) += hub(u) }
-      auth = a
-      val h = Array.fill(n)(0L)
-      pairs.foreach { case (u, v) => h(u) += auth(v) }
-      hub = h
+      auth = new Array[Long](g.n)
+      g.src.indices.foreach(e => auth(g.dst(e)) += hub(g.src(e)))
+      hub = new Array[Long](g.n)
+      g.src.indices.foreach(e => hub(g.src(e)) += auth(g.dst(e)))
     }
-    val rows = (0 until n).map(i => org.apache.spark.sql.Row(ids(i), hub(i), auth(i)))
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("id", dt),
-      StructField("hub", LongType), StructField("auth", LongType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "hub" -> LongType, "auth" -> LongType),
+      (0 until g.n).map(i => Row(g.ids(i), hub(i), auth(i))))
   }
 
   /**
@@ -3271,25 +2932,28 @@ object GraphAlgorithms {
    * `maxHops` ≥ the graph diameter. At 100 TB pass `sources` (landmarks)
    * — all-sources state is |V| · reach, exactly like closeness.
    *
-   * Adaptive: ≤ 10M oriented edges runs the BFS sweep driver-side
-   * (each distributed hop costs several fixed-latency Spark jobs);
-   * identical semantics.
+   * Adaptive: ≤ 10M raw edges directed, 5M undirected run the BFS sweep
+   * driver-side (each distributed hop costs several fixed-latency Spark
+   * jobs); identical semantics.
    */
   def eccentricity(edges: DataFrame, maxHops: Int = 10,
                    undirected: Boolean = true,
                    sources: Option[DataFrame] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
-    val e = (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v")))
-             else e0)
-      .where(col("u") =!= col("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCnt = e.count()
-    if (localRowCap(edges.sparkSession, 10000000L).exists(eCnt <= _)) {
-      val out = localEccentricity(e, maxHops, sources)
-      e.unpersist()
-      return out
+    gatedGraph(edges, undirected).foreach { g =>
+      // the last vertex a sweep visits is a farthest one
+      val sweep = new LocalGraph.Sweep(g.adj(undirected))
+      return LocalGraph.frame(edges.sparkSession,
+        Seq("id" -> g.idType, "reached" -> LongType, "eccentricity" -> LongType),
+        sourceIds(g, sources).map { s =>
+          g.idx.get(s).fold(Row(s, 0L, 0L)) { s0 =>
+            val k = sweep.from(s0, maxHops)
+            Row(s, k - 1L, sweep.dist(sweep.order(k - 1)).toLong)
+          }
+        })
     }
+    val e = orientedSimple(edges, undirected).persist(StorageLevel.MEMORY_AND_DISK)
+    val eCnt = e.count()
     val (srcs, dist) = bfsFromSources(e, eCnt, sources, maxHops)
     e.unpersist()
     val agg = dist.where(col("dist") > 0).groupBy(col("s"))
@@ -3298,63 +2962,6 @@ object GraphAlgorithms {
       .select(col("id"),
         coalesce(col("__reached"), lit(0L)).as("reached"),
         coalesce(col("__ecc").cast("long"), lit(0L)).as("eccentricity"))
-  }
-
-  /** Driver-side BFS sweep for [[eccentricity]]'s small regime — the
-    * [[localCloseness]] walk with a max fold instead of the sum/harmonic
-    * folds. */
-  private def localEccentricity(e: DataFrame, maxHops: Int,
-                                sources: Option[DataFrame]): DataFrame = {
-    val spark = e.sparkSession
-    val dt = e.schema("u").dataType
-    val in = collectInterned(e.collect(), canonical = false)
-    val n = in.ids.length
-    val adjBuf = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    in.pairs.foreach { case (a, b) => adjBuf(a) += b }
-    val adj = adjBuf.map(_.toArray)
-    val srcList: Seq[Any] = sources match {
-      case Some(df) => df.select(col("id")).collect().map(_.get(0)).toSeq
-      case None => in.ids.toSeq
-    }
-    val seen = Array.fill(n)(-1)
-    var stamp = 0
-    val queue = new Array[Int](n)
-    val distArr = new Array[Int](n)
-    val out = srcList.map { src =>
-      var reached = 0L
-      var ecc = 0L
-      in.idx.get(src).foreach { s0 =>
-        stamp += 1
-        var head = 0; var tail = 0
-        queue(tail) = s0; tail += 1; seen(s0) = stamp
-        distArr(s0) = 0
-        while (head < tail) {
-          val u = queue(head); head += 1
-          val du = distArr(u)
-          if (du < maxHops) {
-            val nb = adj(u)
-            var i = 0
-            while (i < nb.length) {
-              val v = nb(i)
-              if (seen(v) != stamp) {
-                seen(v) = stamp
-                distArr(v) = du + 1
-                reached += 1L
-                if (du + 1L > ecc) ecc = du + 1L
-                queue(tail) = v; tail += 1
-              }
-              i += 1
-            }
-          }
-        }
-      }
-      org.apache.spark.sql.Row(src, reached, ecc)
-    }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("id", dt), StructField("reached", LongType),
-      StructField("eccentricity", LongType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
   }
 
   /**
@@ -3646,9 +3253,8 @@ object GraphAlgorithms {
     val spark = edges.sparkSession
     val raw = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")) // keep the local intern pass loop-free
-    collectInternedGated(raw, canonical = true, 10000000L).foreach { in =>
-      return localCoreNumbers(spark, in, maxK, roundsPerK,
-        raw.schema("src").dataType)
+    collectInternedGated(raw, canonical = true, 10000000L).foreach { g =>
+      return localCoreNumbers(spark, g, maxK, roundsPerK)
     }
     var (cn, cnCnt) = Fixpoint.materialize(PropertyGraph.canonicalUndirected(edges))
     val verts = cn.select(col("src").as("id"))
@@ -3694,54 +3300,31 @@ object GraphAlgorithms {
 
   /** Driver-side replay of [[coreNumbers]]' bounded schedule — identical
     * synchronous round semantics, parity spec-pinned. */
-  private def localCoreNumbers(spark: SparkSession, in: InternedEdges,
-                               maxK: Int, roundsPerK: Int,
-                               dt: org.apache.spark.sql.types.DataType): DataFrame = {
-    val n = in.ids.length
-    val adjBuf = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    in.pairs.foreach { case (a, b) => adjBuf(a) += b; adjBuf(b) += a }
-    val adj = adjBuf.map(_.toArray)
-    val alive = Array.fill(n)(true)
-    val core = new Array[Long](n)
+  private def localCoreNumbers(spark: SparkSession, g: LocalGraph,
+                               maxK: Int, roundsPerK: Int): DataFrame = {
+    val alive = Array.fill(g.n)(true)
+    val core = new Array[Long](g.n)
     var k = 0
-    var anyAlive = n > 0
-    while (k < maxK && anyAlive) {
+    while (k < maxK && alive.contains(true)) {
       k += 1
       var r = 0
       var converged = false
       while (r < roundsPerK && !converged) {
         r += 1
         // synchronous: degrees over the CURRENT alive set, then remove
-        val deg = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          if (alive(i)) {
-            var d = 0
-            adj(i).foreach(j => if (alive(j)) d += 1)
-            deg(i) = d
-          }
-          i += 1
+        val deg = Array.tabulate(g.n) { i =>
+          var d = 0
+          if (alive(i)) g.both.foreach(i)(j => if (alive(j)) d += 1)
+          d
         }
-        var removed = false
-        i = 0
-        while (i < n) {
-          if (alive(i) && deg(i) < k) { alive(i) = false; removed = true }
-          i += 1
-        }
-        if (!removed) converged = true
+        val dead = (0 until g.n).filter(i => alive(i) && deg(i) < k)
+        dead.foreach(alive(_) = false)
+        converged = dead.isEmpty
       }
-      anyAlive = false
-      var i = 0
-      while (i < n) {
-        if (alive(i)) { core(i) = k.toLong; anyAlive = true }
-        i += 1
-      }
+      (0 until g.n).foreach(i => if (alive(i)) core(i) = k.toLong)
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("id", dt), StructField("core", LongType)))
-    val rows = (0 until n).map(i => org.apache.spark.sql.Row(in.ids(i), core(i)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "core" -> LongType),
+      (0 until g.n).map(i => Row(g.ids(i), core(i))))
   }
 
   /**
@@ -3778,9 +3361,8 @@ object GraphAlgorithms {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val raw = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst"))
-    collectInternedGated(raw, canonical = true, 10000000L).foreach { in =>
-      return localLouvain(edges.sparkSession, in, rounds,
-        raw.schema("src").dataType)
+    collectInternedGated(raw, canonical = true, 10000000L).foreach { g =>
+      return localLouvain(edges.sparkSession, g, rounds)
     }
     val (cn, m) = Fixpoint.materialize(PropertyGraph.canonicalUndirected(edges))
     val nb = cn.select(col("src").as("u"), col("dst").as("v"))
@@ -3830,63 +3412,46 @@ object GraphAlgorithms {
     * tie-break (label ordering mirrors the column type: numeric for
     * integral ids, binary-lexicographic for strings), identical
     * alternating-parity gate. */
-  private def localLouvain(spark: SparkSession, in: InternedEdges, rounds: Int,
-                           dt: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types._
-    val ord: Ordering[Any] = dt match {
+  private def localLouvain(spark: SparkSession, g: LocalGraph, rounds: Int): DataFrame = {
+    val ord: Ordering[Any] = g.idType match {
       case ByteType | ShortType | IntegerType | LongType =>
         Ordering.by((x: Any) => x.asInstanceOf[Number].longValue)
       case _ => Ordering.by((x: Any) => String.valueOf(x))
     }
-    val n = in.ids.length
-    val adjBuf = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    in.pairs.foreach { case (a, b) => adjBuf(a) += b; adjBuf(b) += a }
-    val adj = adjBuf.map(_.toArray)
-    val deg = adj.map(_.length.toLong)
-    val m = in.pairs.length.toLong
+    val deg = Array.tabulate(g.n)(g.both.degree(_).toLong)
+    val m = g.edgeCount.toLong
     // parity of the VERTEX id (cast-to-long semantics: numeric ids
     // directly, numeric strings parsed, anything else never moves)
-    val par: Array[Long] = in.ids.map {
+    val par: Array[Long] = g.ids.map {
       case num: Number => math.floorMod(num.longValue, 2L)
       case s => scala.util.Try(math.floorMod(String.valueOf(s).trim.toLong, 2L))
         .getOrElse(-1L)
-    }.toArray
-    var comm: Array[Int] = Array.tabulate(n)(identity)
-    var r = 0
-    while (r < rounds) {
-      r += 1
-      val vol = new Array[Long](n)
-      var v = 0
-      while (v < n) { vol(comm(v)) += deg(v); v += 1 }
-      val next = comm.clone()
-      v = 0
-      while (v < n) {
-        if (par(v) == (r % 2).toLong) {
-          val kvc = scala.collection.mutable.HashMap.empty[Int, Long]
-          adj(v).foreach { u => kvc(comm(u)) = kvc.getOrElse(comm(u), 0L) + 1L }
+    }
+    var comm: Array[Int] = Array.tabulate(g.n)(identity)
+    for (r <- 1 to rounds) {
+      val vol = new Array[Long](g.n)
+      (0 until g.n).foreach(v => vol(comm(v)) += deg(v))
+      comm = Array.tabulate(g.n) { v =>
+        if (par(v) != (r % 2).toLong) comm(v)
+        else {
           val cur = comm(v)
-          if (!kvc.contains(cur)) kvc(cur) = 0L
+          val kvc = scala.collection.mutable.HashMap(cur -> 0L)
+          g.both.foreach(v) { u => kvc(comm(u)) = kvc.getOrElse(comm(u), 0L) + 1L }
           var bestC = -1
           var bestG = Long.MinValue
           kvc.foreach { case (c, k) =>
-            val g = 2L * m * k -
-              deg(v) * (vol(c) - (if (c == cur) deg(v) else 0L))
-            if (g > bestG ||
-                (g == bestG && bestC >= 0 && ord.lt(in.ids(c), in.ids(bestC)))) {
-              bestG = g; bestC = c
+            val gain = 2L * m * k - deg(v) * (vol(c) - (if (c == cur) deg(v) else 0L))
+            if (gain > bestG ||
+                (gain == bestG && bestC >= 0 && ord.lt(g.ids(c), g.ids(bestC)))) {
+              bestG = gain; bestC = c
             }
           }
-          next(v) = bestC
+          bestC
         }
-        v += 1
       }
-      comm = next
     }
-    val schema = StructType(Seq(
-      StructField("id", dt), StructField("community", dt)))
-    val rows = (0 until n).map(k =>
-      org.apache.spark.sql.Row(in.ids(k), in.ids(comm(k))))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "community" -> g.idType),
+      (0 until g.n).map(k => Row(g.ids(k), g.ids(comm(k)))))
   }
 
   /**
@@ -3911,8 +3476,8 @@ object GraphAlgorithms {
     val raw = edges.select(col("src"), col("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-    collectInternedGated(raw, canonical = false, 10000000L).foreach { in =>
-      return localTopoLevels(spark, in, raw.schema("src").dataType)
+    collectInternedGated(raw, canonical = false, 10000000L).foreach { g =>
+      return localTopoLevels(spark, g)
     }
     val e = raw.distinct().persist(StorageLevel.MEMORY_AND_DISK)
     val (verts, nVerts) = Fixpoint.materialize(e.select(col("src").as("id"))
@@ -3952,39 +3517,27 @@ object GraphAlgorithms {
   }
 
   /** Driver-side Kahn layering for [[topologicalLevels]]'s small regime. */
-  private def localTopoLevels(spark: SparkSession, in: InternedEdges,
-                              dt: org.apache.spark.sql.types.DataType): DataFrame = {
-    val n = in.ids.length
-    val adjBuf = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-    val indeg = new Array[Int](n)
-    in.pairs.foreach { case (a, b) => adjBuf(a) += b; indeg(b) += 1 }
-    val adj = adjBuf.map(_.toArray)
-    val level = new Array[Long](n)
-    val queue = new Array[Int](n)
-    var head = 0; var tail = 0
-    var i = 0
-    while (i < n) { if (indeg(i) == 0) { queue(tail) = i; tail += 1 }; i += 1 }
-    var done = 0
+  private def localTopoLevels(spark: SparkSession, g: LocalGraph): DataFrame = {
+    val indeg = Array.tabulate(g.n)(g.in.degree)
+    val level = new Array[Long](g.n)
+    val queue = new Array[Int](g.n)
+    var head = 0
+    var tail = 0
+    (0 until g.n).foreach(i => if (indeg(i) == 0) { queue(tail) = i; tail += 1 })
     while (head < tail) {
-      val u = queue(head); head += 1; done += 1
-      val nb = adj(u)
-      var j = 0
-      while (j < nb.length) {
-        val v = nb(j)
+      val u = queue(head)
+      head += 1
+      g.out.foreach(u) { v =>
         if (level(u) + 1L > level(v)) level(v) = level(u) + 1L
         indeg(v) -= 1
         if (indeg(v) == 0) { queue(tail) = v; tail += 1 }
-        j += 1
       }
     }
-    if (done < n)
+    if (head < g.n)
       throw new IllegalArgumentException(
         "topologicalLevels: the input has a cycle")
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("id", dt), StructField("level", LongType)))
-    val rows = (0 until n).map(k => org.apache.spark.sql.Row(in.ids(k), level(k)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "level" -> LongType),
+      (0 until g.n).map(k => Row(g.ids(k), level(k))))
   }
 
   /**
@@ -4060,7 +3613,7 @@ object GraphAlgorithms {
       numParts: Int, rounds: Int, slackPct: Int,
       seed: Any => Option[Int], vw: Any => Long, vwProvided: Boolean)
       : scala.collection.mutable.LinkedHashMap[Any, Int] = {
-    val in = new Interner
+    val in = new LocalGraph.Interner
     import in.{ids, intern}
     val m = eu.length
     val ia = new Array[Int](m); val ib = new Array[Int](m)
@@ -4715,21 +4268,10 @@ object GraphAlgorithms {
     * local re-implementations are hllBucket's first-md5-byte (init) and
     * the Σ w·x integer neighbor sums. Id string forms mirror Spark's
     * cast-to-string for the gated types (string/long/int/short). */
-  private def localFastRP(spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      idType: org.apache.spark.sql.types.DataType,
+  private def localFastRP(spark: SparkSession, rows: Array[Row], idType: DataType,
       dims: Int, iterations: Int): DataFrame = {
-    val in = new Interner
-    import in.{ids, intern}
-    val m = rows.length
-    val es = new Array[Int](m); val ed = new Array[Int](m); val ew = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      val r = rows(i)
-      es(i) = intern(r.get(0)); ed(i) = intern(r.get(1)); ew(i) = r.getLong(2)
-      i += 1
-    }
-    val n = ids.length
+    val g = LocalGraph.multi(rows, idType)
+    val (ids, n, m, es, ed, ew) = (g.ids, g.n, g.edgeCount, g.src, g.dst, g.weight)
     // init: R(v)[j] from the first md5 byte of "<id>:<j>" — exactly
     // Sketches.hllBucket(concat(cast(id as string), ':'||j)) % 6
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -4909,10 +4451,12 @@ object GraphAlgorithms {
 
   /** Exact connected components of a pair list in ONE executor task:
     * union-find with union-by-min-root and path compression, so the final
-    * root of every member is the smallest id of its component. Ids are
-    * compared numerically for integral columns, as strings otherwise. */
-  private def unionFindClusters(edges: DataFrame): DataFrame = {
+    * root of every member is the smallest id of its component. Ids take
+    * [[LocalGraph.typed]]'s one type and are compared numerically for
+    * integral columns, as strings otherwise. */
+  private def unionFindClusters(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
+    val edges = LocalGraph.typed(pairs)
     val dt = edges.schema("a").dataType
     val ord: Ordering[Any] = dt match {
       case ByteType | ShortType | IntegerType | LongType =>
@@ -4976,59 +4520,54 @@ object GraphAlgorithms {
   /** Exact SCCs by iterative (explicit-stack) Tarjan on the driver over
     * the gate's rows — node rows (id, null), edge rows (src, dst);
     * component = minimum member id. */
-  private def tarjanScc(spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import spark.implicits._
-    val in = new Interner
+  private def tarjanScc(spark: SparkSession, rows: Array[Row]): DataFrame = {
+    val in = new LocalGraph.Interner
     rows.foreach(r => if (r.isNullAt(1)) in.intern(r.get(0)))
     val ids = in.ids.map(_.asInstanceOf[String]).toArray
     val n = ids.length
-    val adj = Array.fill(n)(List.empty[Int])
-    rows.foreach { r =>
-      if (!r.isNullAt(1))
-        for (s <- in.idx.get(r.get(0)); d <- in.idx.get(r.get(1)))
-          adj(s) = d :: adj(s)
-    }
+    val edges = rows.filter(!_.isNullAt(1)).flatMap(r =>
+      for (s <- in.idx.get(r.get(0)); d <- in.idx.get(r.get(1))) yield (s, d))
+    val adj = LocalGraph.Csr(n, edges.map(_._1), edges.map(_._2))
     val index = Array.fill(n)(-1)
     val low = new Array[Int](n)
     val onStack = new Array[Boolean](n)
     val comp = Array.fill(n)(-1)
-    val stack = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val stack = new Array[Int](n)
+    var sp = 0
     var counter = 0
     var nComp = 0
-    // explicit work stack of (vertex, remaining neighbors) — recursion
-    // would overflow on long chains
+    // explicit work stack of (vertex, position of its next neighbour) —
+    // recursion would overflow on long chains
+    val work = new Array[Int](n)
+    val next = new Array[Int](n)
+    var wp = 0
+    def open(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+      work(wp) = v; next(wp) = adj.off(v); wp += 1
+    }
     for (root <- 0 until n if index(root) == -1) {
-      var work = List((root, adj(root)))
-      index(root) = counter; low(root) = counter; counter += 1
-      stack += root; onStack(root) = true
-      while (work.nonEmpty) {
-        val (v, rest) = work.head
-        rest match {
-          case w :: tail =>
-            work = (v, tail) :: work.tail
-            if (index(w) == -1) {
-              index(w) = counter; low(w) = counter; counter += 1
-              stack += w; onStack(w) = true
-              work = (w, adj(w)) :: work
-            } else if (onStack(w)) {
-              if (index(w) < low(v)) low(v) = index(w)
+      open(root)
+      while (wp > 0) {
+        val v = work(wp - 1)
+        if (next(wp - 1) < adj.off(v + 1)) {
+          val w = adj.to(next(wp - 1))
+          next(wp - 1) += 1
+          if (index(w) == -1) open(w)
+          else if (onStack(w) && index(w) < low(v)) low(v) = index(w)
+        } else {
+          wp -= 1
+          if (wp > 0 && low(v) < low(work(wp - 1))) low(work(wp - 1)) = low(v)
+          if (low(v) == index(v)) {
+            var w = -1
+            while (w != v) {
+              sp -= 1
+              w = stack(sp)
+              onStack(w) = false
+              comp(w) = nComp
             }
-          case Nil =>
-            work = work.tail
-            work.headOption.foreach { case (p, _) =>
-              if (low(v) < low(p)) low(p) = low(v)
-            }
-            if (low(v) == index(v)) {
-              var done = false
-              while (!done) {
-                val w = stack.remove(stack.length - 1)
-                onStack(w) = false
-                comp(w) = nComp
-                done = w == v
-              }
-              nComp += 1
-            }
+            nComp += 1
+          }
         }
       }
     }
@@ -5039,7 +4578,8 @@ object GraphAlgorithms {
       val c = comp(i)
       if (minId(c) == null || ids(i) < minId(c)) minId(c) = ids(i)
     }
-    (0 until n).map(i => (ids(i), minId(comp(i)))).toDF("id", "component")
+    LocalGraph.frame(spark, Seq("id" -> StringType, "component" -> StringType),
+      (0 until n).map(i => Row(ids(i), minId(comp(i)))))
   }
 
   /**

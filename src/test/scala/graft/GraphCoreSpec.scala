@@ -991,18 +991,18 @@ class GraphCoreSpec extends SparkSpec {
     def gate(thr: Long, probe: Int) =
       GraphAlgorithms.collectInternedGated(e, canonical = false, thr, probe)
     // rows fit the probe → gated-and-loaded in one pass
-    assert(gate(thr = 100L, probe = 16).map(_.pairs.length) === Some(10))
+    assert(gate(thr = 100L, probe = 16).map(_.edgeCount) === Some(10))
     // probe overflows, budget ≤ probe → distributed (None), ≤ probe+1 shipped
     assert(gate(thr = 4L, probe = 4) === None)
     // probe overflows, explicit budget beyond it → count-gate, then the
     // full collect once the count (10) proves it fits
-    assert(gate(thr = 100L, probe = 4).map(_.pairs.length) === Some(10))
+    assert(gate(thr = 100L, probe = 4).map(_.edgeCount) === Some(10))
     // count exceeds the budget → distributed, no row transfer
     assert(gate(thr = 8L, probe = 4) === None)
     // negative budget disables the local regime outright
     assert(gate(thr = -1L, probe = 4) === None)
     // sentinel budget: the 100M hard clamp keeps arithmetic sane
-    assert(gate(thr = Long.MaxValue, probe = 4).map(_.pairs.length) === Some(10))
+    assert(gate(thr = Long.MaxValue, probe = 4).map(_.edgeCount) === Some(10))
   }
 
   test("collect gates at the DEFAULT 1M probe cap: a >1M frame escalates " +
@@ -1020,7 +1020,7 @@ class GraphCoreSpec extends SparkSpec {
     // interned flavor through the same default-probe escalation
     val interned = GraphAlgorithms.collectInternedGated(
       big, canonical = false, threshold = 2000000L)
-    assert(interned.map(_.pairs.length) === Some(1200000))
+    assert(interned.map(_.edgeCount) === Some(1200000))
   }
 
   test("localRegimes kill-switch: spark.graft.localRegimes=off forces the " +

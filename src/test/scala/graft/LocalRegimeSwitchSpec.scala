@@ -21,9 +21,11 @@ import graft.sparql.Sparql
  */
 class LocalRegimeSwitchSpec extends SparkSpec {
 
-  /** Rows as sorted strings: an order-free comparison. */
+  /** The column names and types, then the rows as sorted strings: an
+    * order-free comparison that also sees the schema. */
   private def rows(df: DataFrame): Seq[String] =
-    df.collect().toSeq.map(_.mkString("|")).sorted
+    df.schema.fields.map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", ") +:
+      df.collect().toSeq.map(_.mkString("|")).sorted
 
   /** A path 1-2-3-4-5-6-7 (diameter 6) with the triangles 2-3-6 and 3-4-6. */
   private val hops = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
@@ -122,7 +124,7 @@ class LocalRegimeSwitchSpec extends SparkSpec {
       val (onJobs, on) = jobsDuring(run(e))
       val (offJobs, off) = withLocalRegimesOff(jobsDuring(run(e)))
       assert(off === on, name)
-      assert(on.nonEmpty, name)
+      assert(on.length > 1, name) // a schema line and at least one row
       // a regime that ignores the switch takes the same path, same jobs
       offJobs.length == onJobs.length
     }.map(_._1)
@@ -139,6 +141,32 @@ class LocalRegimeSwitchSpec extends SparkSpec {
       val on = run(e)
       val off = withLocalRegimesOff(run(e))
       assert(off === on, s"$name on $input")
+    }
+  }
+
+  test("kill-switch parity on mixed INT/LONG ids: rows and column types") {
+    import spark.implicits._
+    // src INT, dst BIGINT: both paths type every id by the src ∪ dst union
+    val mixed = hops.map { case (a, b) => (a.toInt, b) }.toDF("src", "dst")
+    val differ = (regimes ++ loopRegimes ++ replayRegimes).flatMap { case (name, run) =>
+      val on = scala.util.Try(run(mixed))
+      val off = scala.util.Try(withLocalRegimesOff(run(mixed)))
+      if (on == off) None else Some(s"$name: on $on, off $off")
+    }
+    assert(differ.isEmpty, differ.mkString("\n"))
+  }
+
+  test("closeness, betweenness and eccentricity gate and load with one probe collect") {
+    // shuffled, so the probe launches a job (a local relation needs none)
+    val e = stringEdges(hops).repartition(2)
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "closeness" -> (() => GraphAlgorithms.closenessCentrality(e, maxHops = 4)),
+      "betweenness" -> (() => GraphAlgorithms.betweennessCentrality(e, maxHops = 4)),
+      "eccentricity" -> (() => GraphAlgorithms.eccentricity(e, maxHops = 4)))
+    for ((name, call) <- calls) {
+      val (jobs, _) = jobsDuring(call())
+      assert(jobs.nonEmpty && jobs.distinct.size === 1 &&
+        jobs.head.startsWith("collect at GraphAlgorithms"), s"$name: $jobs")
     }
   }
 
