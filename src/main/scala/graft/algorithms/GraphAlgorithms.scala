@@ -597,10 +597,14 @@ object GraphAlgorithms {
         round(coalesce(harmonic, lit(0.0)), 6).as("harmonic"))
   }
 
-  /** The ids a replay sweeps from: those of `sources`, cast to the
-    * graph's id type, else every vertex. */
-  private def sourceIds(g: LocalGraph, sources: Option[DataFrame]): Seq[Any] =
-    sources.fold(g.ids.toSeq)(_.select(col("id").cast(g.idType)).collect().map(_.get(0)).toSeq)
+  /** The ids a replay sweeps `adj` from: those of `sources`, cast to the
+    * graph's id type, else every vertex with an edge out in `adj` — the
+    * distributed sweeps' default, the distinct `u` of the edge list. */
+  private def sourceIds(g: LocalGraph, adj: LocalGraph.Csr,
+      sources: Option[DataFrame]): Seq[Any] = sources match {
+    case Some(df) => df.select(col("id").cast(g.idType)).collect().map(_.get(0)).toSeq
+    case None => (0 until g.n).filter(adj.degree(_) > 0).map(g.ids(_))
+  }
 
   /** Driver-side BFS sweep for [[closenessCentrality]]'s small regime.
     * Arithmetic mirrors the distributed form exactly: reached/sum_dist as
@@ -611,7 +615,7 @@ object GraphAlgorithms {
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
     val sweep = new LocalGraph.Sweep(g.adj(undirected))
-    val out = sourceIds(g, sources).map { src =>
+    val out = sourceIds(g, g.adj(undirected), sources).map { src =>
       val perDist = new Array[Long](maxHops + 1)
       g.idx.get(src).foreach { s =>
         (1 until sweep.from(s, maxHops)).foreach(i => perDist(sweep.dist(sweep.order(i))) += 1L)
@@ -735,7 +739,7 @@ object GraphAlgorithms {
     val preds = if (undirected) g.both else g.in
     val bc = new Array[Double](g.n)
     val delta = new Array[Double](g.n)
-    sourceIds(g, sources).flatMap(g.idx.get).foreach { s =>
+    sourceIds(g, g.adj(undirected), sources).flatMap(g.idx.get).foreach { s =>
       val k = sweep.from(s, maxHops)
       (0 until k).foreach(i => delta(sweep.order(i)) = 0.0)
       // reverse visit order; order(0) == s is skipped
@@ -2945,7 +2949,7 @@ object GraphAlgorithms {
       val sweep = new LocalGraph.Sweep(g.adj(undirected))
       return LocalGraph.frame(edges.sparkSession,
         Seq("id" -> g.idType, "reached" -> LongType, "eccentricity" -> LongType),
-        sourceIds(g, sources).map { s =>
+        sourceIds(g, g.adj(undirected), sources).map { s =>
           g.idx.get(s).fold(Row(s, 0L, 0L)) { s0 =>
             val k = sweep.from(s0, maxHops)
             Row(s, k - 1L, sweep.dist(sweep.order(k - 1)).toLong)

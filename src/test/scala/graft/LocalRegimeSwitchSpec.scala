@@ -156,6 +156,18 @@ class LocalRegimeSwitchSpec extends SparkSpec {
     assert(differ.isEmpty, differ.mkString("\n"))
   }
 
+  test("closeness and eccentricity directed: a vertex without an out-edge is no source") {
+    // 7 has no out-edge in the hops graph
+    val e = stringEdges(hops)
+    for ((name, run) <- Seq[(String, DataFrame => DataFrame)](
+        "closeness" -> (GraphAlgorithms.closenessCentrality(_, maxHops = 4, undirected = false)),
+        "eccentricity" -> (GraphAlgorithms.eccentricity(_, maxHops = 4, undirected = false)))) {
+      val on = rows(run(e))
+      assert(withLocalRegimesOff(rows(run(e))) === on, name)
+      assert(on.tail.map(_.split('|').head) === (1 to 6).map(_.toString), name)
+    }
+  }
+
   test("closeness, betweenness and eccentricity gate and load with one probe collect") {
     // shuffled, so the probe launches a job (a local relation needs none)
     val e = stringEdges(hops).repartition(2)
