@@ -14,8 +14,9 @@ import graft.sparql.Sparql
  * different job sequence with the identical answer — on a multi-hop
  * graph and on hostile inputs (empty frames, self-loops with duplicate
  * edges, 64-bit ids); so do the frontier and peel loops and the driver
- * replays of the rank, label, core, community and walk operators on the
- * hostile inputs. Connected and strongly connected components are
+ * replays of the rank, label, core, community and walk operators, the
+ * partitioning family, the neighbourhood sketch and the weighted walks on
+ * the hostile inputs. Connected and strongly connected components are
  * also checked against a plain-Scala replay, and on dangling and null
  * edge endpoints.
  */
@@ -117,6 +118,34 @@ class LocalRegimeSwitchSpec extends SparkSpec {
     "randomWalks" -> (e => rows(GraphAlgorithms.randomWalks(e, starts(e), steps = 4))),
     "node2vecWalks" -> (e => rows(GraphAlgorithms.node2vecWalks(e, starts(e), steps = 4))))
 
+  /** The partitioning family (matching-based coarsening, BLP and the
+    * multilevel V-cycle), the HyperANF sketch and its read path, and the
+    * weighted walks. `effectiveDiameter`'s `n_estimate` is compared at 4
+    * decimals, the rounding `alg_eff_diameter` applies: it is a sum of
+    * per-vertex doubles, and the two paths add them in different orders
+    * (they differ in the 15th digit on the 64-bit and mixed inputs). */
+  private val familyRegimes: Seq[(String, DataFrame => Seq[String])] = Seq(
+    "balancedPartition" -> (e => rows(GraphAlgorithms.balancedPartition(e, numParts = 2))),
+    "multilevelPartition" -> (e => rows(GraphAlgorithms.multilevelPartition(e, numParts = 2))),
+    "multilevelPartition levels 2" ->
+      (e => rows(GraphAlgorithms.multilevelPartition(e, numParts = 2, levels = 2))),
+    "coarsenGraph" -> (e => rows(GraphAlgorithms.coarsenGraph(e))),
+    "coarsenGraph HEM" ->
+      (e => rows(GraphAlgorithms.coarsenGraph(weighted(e), weightCol = Some("weight")))),
+    "neighborhoodRegisters" -> (e => rows(GraphAlgorithms.neighborhoodRegisters(e, hops = 2))),
+    "effectiveDiameter" -> (e => rows(GraphAlgorithms.effectiveDiameter(e, hops = 3)
+      .withColumn("n_estimate", round(col("n_estimate"), 4)))),
+    "weightedRandomWalks" ->
+      (e => rows(GraphAlgorithms.weightedRandomWalks(weighted(e), starts(e), steps = 4))))
+
+  /** Directed sweeps, whose default sources are the vertices with an
+    * out-edge. */
+  private val directedRegimes: Seq[(String, DataFrame => Seq[String])] = Seq(
+    "closeness directed" ->
+      (e => rows(GraphAlgorithms.closenessCentrality(e, maxHops = 4, undirected = false))),
+    "eccentricity directed" ->
+      (e => rows(GraphAlgorithms.eccentricity(e, maxHops = 4, undirected = false))))
+
   test("kill-switch: every count-gated regime takes its distributed path " +
       "with the switch off and returns the same rows") {
     val e = stringEdges(hops)
@@ -136,19 +165,22 @@ class LocalRegimeSwitchSpec extends SparkSpec {
     val empty = Seq.empty[(String, String)].toDF("src", "dst")
     val loopDup = stringEdges(hops ++ Seq((3L, 3L), (1L, 2L), (2L, 1L)))
     val wide = longEdges(hops ++ Seq((5L, 5L), (4L, 5L)))
-    for ((input, e) <- Seq("empty" -> empty, "self-loop + duplicate" -> loopDup,
-        "64-bit ids" -> wide); (name, run) <- regimes ++ loopRegimes ++ replayRegimes) {
-      val on = run(e)
-      val off = withLocalRegimesOff(run(e))
-      assert(off === on, s"$name on $input")
-    }
+    // every case runs, so a failure lists all the operators that differ
+    val differ = for ((input, e) <- Seq("empty" -> empty, "self-loop + duplicate" -> loopDup,
+        "64-bit ids" -> wide);
+        (name, run) <- regimes ++ loopRegimes ++ replayRegimes ++ familyRegimes;
+        on = scala.util.Try(run(e));
+        off = scala.util.Try(withLocalRegimesOff(run(e))) if on != off)
+      yield s"$name on $input: on $on, off $off"
+    assert(differ.isEmpty, differ.mkString("\n"))
   }
 
   test("kill-switch parity on mixed INT/LONG ids: rows and column types") {
     import spark.implicits._
     // src INT, dst BIGINT: both paths type every id by the src ∪ dst union
     val mixed = hops.map { case (a, b) => (a.toInt, b) }.toDF("src", "dst")
-    val differ = (regimes ++ loopRegimes ++ replayRegimes).flatMap { case (name, run) =>
+    val all = regimes ++ loopRegimes ++ replayRegimes ++ familyRegimes ++ directedRegimes
+    val differ = all.flatMap { case (name, run) =>
       val on = scala.util.Try(run(mixed))
       val off = scala.util.Try(withLocalRegimesOff(run(mixed)))
       if (on == off) None else Some(s"$name: on $on, off $off")
