@@ -11,8 +11,9 @@
 #     components run on the DataFrame engine in GraphAlgorithms, and no
 #     second (GraphX) execution model rides beside it.
 #   - a second driver-side graph beside graft.algorithms.LocalGraph: a
-#     parallelize( in GraphAlgorithms.scala (the replays emit through
-#     LocalGraph.frame, the one parallelize( in LocalGraph.scala), a
+#     parallelize( or a java.util.ArrayList in GraphAlgorithms.scala (the
+#     replays emit through LocalGraph.frame, the one parallelize( in
+#     LocalGraph.scala, not through createDataFrame over a java list), a
 #     per-replay ArrayBuffer.empty[Int] adjacency in GraphAlgorithms.scala
 #     (the replays read LocalGraph's CSR adjacencies), or a reference to
 #     the retired InternedEdges.
@@ -79,6 +80,13 @@ if [ -n "$emitters" ] || [ "$(grep -c 'parallelize(' "$algs/LocalGraph.scala")" 
   echo "parallelize( outside the one LocalGraph.frame emitter:"
   if [ -n "$emitters" ]; then echo "$emitters"; fi
   grep -n 'parallelize(' "$algs/LocalGraph.scala"
+  fail=1
+fi
+
+lists=$(grep -n 'java\.util\.ArrayList' "$algs/GraphAlgorithms.scala" || true)
+if [ -n "$lists" ]; then
+  echo "java.util.ArrayList emitter in GraphAlgorithms.scala (emit through LocalGraph.frame):"
+  echo "$lists"
   fail=1
 fi
 

@@ -509,8 +509,10 @@ object GraphAlgorithms {
     * rows). */
   private def bfsFromSources(e: DataFrame, eCnt: Long, sources: Option[DataFrame],
                              maxHops: Int): (DataFrame, DataFrame) = {
+    // default sources typed by the u ∪ v union, the type of every id the
+    // sweep reaches (and of the local replay's sources)
     val (srcs, srcCnt) = Fixpoint.materialize(sources.map(_.select(col("id")))
-      .getOrElse(e.select(col("u").as("id")).distinct()))
+      .getOrElse(LocalGraph.typed(e).select(col("u").as("id")).distinct()))
     (srcs, hopBfs(e, eCnt, srcs.select(col("id").as("s"), col("id"), lit(0).as("dist")),
       srcCnt, Seq("s"), maxHops))
   }
@@ -820,17 +822,28 @@ object GraphAlgorithms {
     * to the distributed path, as is a bigger start set (at most 1M+1 rows
     * ship here). */
   private def walkReplay(edges: DataFrame, starts: DataFrame,
-      undirected: Boolean): Option[(LocalGraph, Array[Row])] = {
-    val integral = Seq("src", "dst").forall(c => edges.schema(c).dataType match {
+      undirected: Boolean): Option[(LocalGraph, Array[Row])] =
+    if (!integralIds(edges)) None
+    else gatedGraph(edges, undirected).flatMap(g => walkStarts(starts, g).map(g -> _))
+
+  /** Whether `edges`' src and dst are both INT or BIGINT, so a replay can
+    * order neighbours numerically. */
+  private def integralIds(edges: DataFrame): Boolean =
+    Seq("src", "dst").forall(c => edges.schema(c).dataType match {
       case IntegerType | LongType => true
       case _ => false
     })
-    if (!integral) return None
-    gatedGraph(edges, undirected).flatMap { g =>
-      val rows = starts.select(col("wid").cast("long"), col("id").cast(g.idType))
-        .limit(1000001).collect()
-      if (rows.length <= 1000000) Some((g, rows)) else None
-    }
+
+  /** The (wid BIGINT, id) start rows of a walk replay on `g`, ids cast to
+    * its id type; None (the distributed rounds) for more than 1M starts,
+    * a null walk id, or a start id type that `g`'s does not widen, which
+    * the distributed union would emit instead. */
+  private def walkStarts(starts: DataFrame, g: LocalGraph): Option[Array[Row]] = {
+    val st = starts.schema("id").dataType
+    if (st != g.idType && !(g.idType == LongType && st == IntegerType)) return None
+    val rows = starts.select(col("wid").cast("long"), col("id").cast(g.idType))
+      .limit(1000001).collect()
+    if (rows.length <= 1000000 && rows.forall(!_.isNullAt(0))) Some(rows) else None
   }
 
   /** The walks' pure-integer LCG draw for walk `wid` at step `t`. */
@@ -862,60 +875,55 @@ object GraphAlgorithms {
 
   /** Driver-side replay of [[weightedRandomWalks]] for the small regime —
     * identical LCG draws, identical numeric neighbor order, identical
-    * integer cumulative-weight interval pick. */
-  private def localWeightedRandomWalks(
-      eRows: Array[org.apache.spark.sql.Row],
-      startRows: Array[org.apache.spark.sql.Row], steps: Int,
-      undirected: Boolean, dt: org.apache.spark.sql.types.DataType,
-      spark: SparkSession): DataFrame = {
-    // merged (u, v) → Σw over both orientations, self-loops dropped
-    val wsum = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-    eRows.foreach { r =>
-      val a = r.getLong(0); val b = r.getLong(1); val w = r.getLong(2)
-      if (a != b) {
-        wsum((a, b)) = wsum.getOrElse((a, b), 0L) + w
-        if (undirected) wsum((b, a)) = wsum.getOrElse((b, a), 0L) + w
-      }
-    }
-    // per-vertex neighbors in numeric order with cumulative weights
-    val adj = scala.collection.mutable.HashMap.empty[Long, (Array[Long], Array[Long])]
-    wsum.keysIterator.toArray.groupBy(_._1).foreach { case (u, pairs) =>
-      val vs = pairs.map(_._2).sorted
-      val cw = new Array[Long](vs.length)
+    * integer cumulative-weight interval pick, over `g`'s multigraph with
+    * self-loops dropped and each (u, v) neighbour once, its weight the
+    * sum over both orientations when `undirected`. */
+  private def localWeightedRandomWalks(g: LocalGraph, startRows: Array[Row], steps: Int,
+      undirected: Boolean, spark: SparkSession): DataFrame = {
+    val loopFree = g.src.indices.filter(e => g.src(e) != g.dst(e)).toArray
+    val arcs = if (undirected) loopFree ++ loopFree.map(~_) else loopFree
+    // arc a is edge a oriented src → dst, arc ~a the reverse
+    def edge(a: Int): Int = if (a >= 0) a else ~a
+    def from(a: Int): Int = if (a >= 0) g.src(a) else g.dst(~a)
+    def to(a: Int): Int = if (a >= 0) g.dst(a) else g.src(~a)
+    val num = g.ids.map(_.asInstanceOf[Number].longValue)
+    val byNbr = arcs.sortBy(a => num(to(a)))
+    // each vertex's arcs in numeric neighbour order (Csr keeps arc order)
+    val adj = LocalGraph.Csr(g.n, byNbr.map(from), byNbr)
+    // per vertex: distinct neighbours and their cumulative weights
+    val (nbr, cum) = (0 until g.n).map { u =>
+      val vs = Array.newBuilder[Int]
+      val cw = Array.newBuilder[Long]
       var acc = 0L
-      var i = 0
-      while (i < vs.length) { acc += wsum((u, vs(i))); cw(i) = acc; i += 1 }
-      adj(u) = (vs, cw)
-    }
-    def typed(x: Long): Any = dt match {
-      case org.apache.spark.sql.types.IntegerType => x.toInt
-      case _ => x
-    }
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    startRows.foreach { r =>
-      val wid = r.getLong(0)
-      val start = r.get(1).asInstanceOf[Number].longValue
-      rows += org.apache.spark.sql.Row(wid, 0, r.get(1))
-      var cur = start
-      var alive = adj.contains(cur)
-      var t = 1
-      while (t <= steps && alive) {
-        val (vs, cw) = adj(cur)
-        val tw = cw(cw.length - 1)
-        val rr = java.lang.Math.floorMod(walkDraw(wid, t), tw)
-        // first index with cw > rr — the [cw−w, cw) interval containing rr
-        var lo = 0; var hi = cw.length - 1
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (cw(mid) > rr) hi = mid else lo = mid + 1
+      var i = adj.off(u)
+      while (i < adj.off(u + 1)) {
+        acc += g.weight(edge(adj.to(i)))
+        if (i + 1 == adj.off(u + 1) || to(adj.to(i + 1)) != to(adj.to(i))) {
+          vs += to(adj.to(i)); cw += acc
         }
-        cur = vs(lo)
-        rows += org.apache.spark.sql.Row(wid, t, typed(cur))
-        alive = adj.contains(cur)
-        t += 1
+        i += 1
       }
+      (vs.result(), cw.result())
+    }.unzip
+    val rows = startRows.toSeq.flatMap { r =>
+      val wid = r.getLong(0)
+      var cur = g.idx.getOrElse(r.get(1), -1)
+      Row(wid, 0, r.get(1)) +: (1 to steps).iterator
+        .takeWhile(_ => cur >= 0 && nbr(cur).nonEmpty)
+        .map { t =>
+          val cw = cum(cur)
+          val rr = java.lang.Math.floorMod(walkDraw(wid, t), cw(cw.length - 1))
+          // first index with cw > rr — the [cw−w, cw) interval containing rr
+          var lo = 0; var hi = cw.length - 1
+          while (lo < hi) {
+            val mid = (lo + hi) >>> 1
+            if (cw(mid) > rr) hi = mid else lo = mid + 1
+          }
+          cur = nbr(cur)(lo)
+          Row(wid, t, g.ids(cur))
+        }.toSeq
     }
-    walkFrame(spark, dt, rows.toSeq)
+    walkFrame(spark, g.idType, rows)
   }
 
   /**
@@ -977,46 +985,19 @@ object GraphAlgorithms {
     // per bench run at sf10, where the edge frame is an uncached filter
     // over the fact table); its row count doubles as the narrow-shuffle
     // gate when the probe overflows into the distributed rounds.
-    // src and dst must be the SAME integral type: the local replay emits
-    // every step under the src type, so a mixed-width graph (src INT,
-    // dst LONG) would silently truncate 64-bit neighbor ids where the
-    // distributed path widens via unionByName
-    val idType = edges.schema("src").dataType
-    val integralIds = idType == edges.schema("dst").dataType &&
-      (idType match {
-        case org.apache.spark.sql.types.IntegerType
-             | org.apache.spark.sql.types.LongType => true
-        case _ => false
-      })
-    val collected =
-      if (integralIds)
-        collectRowsGated(edges.select(col("src").cast("long"),
-          col("dst").cast("long"), col("weight").cast("long")), narrowRowGate)
-      else None
-    collected match {
-      case Some(eRows) =>
-        val startRows = starts.select(col("wid").cast("long").as("wid"), col("id"))
-          .limit(1000001).collect()
-        // start rows must be replayable too: a null wid/id would NPE in
-        // the replay and a start id whose JVM type differs from the edge
-        // id type fails createDataFrame validation — fall through to the
-        // distributed rounds for those, which degrade gracefully
-        def startOk(r: org.apache.spark.sql.Row): Boolean =
-          !r.isNullAt(0) && !r.isNullAt(1) && (idType match {
-            case org.apache.spark.sql.types.IntegerType =>
-              r.get(1).isInstanceOf[java.lang.Integer]
-            case _ => r.get(1).isInstanceOf[java.lang.Long]
-          })
-        if (startRows.length <= 1000000 && startRows.forall(startOk) &&
-            eRows.forall(r =>
-              !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && r.getLong(2) > 0)) {
-          return localWeightedRandomWalks(eRows, startRows, steps, undirected,
-            idType, edges.sparkSession)
-        }
-      case None => ()
-    }
+    val integral = integralIds(edges)
+    val typed = LocalGraph.typed(
+      edges.select(col("src"), col("dst"), col("weight").cast("long")))
+    val collected = if (integral) collectRowsGated(typed, narrowRowGate) else None
+    collected.filter(_.forall(r =>
+        !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && r.getLong(2) > 0))
+      .foreach { eRows =>
+        val g = LocalGraph.multi(eRows, typed.schema(0).dataType)
+        walkStarts(starts, g).foreach(startRows =>
+          return localWeightedRandomWalks(g, startRows, steps, undirected, edges.sparkSession))
+      }
     val small =
-      if (integralIds) collected.isDefined // overflow proves > narrowRowGate
+      if (integral) collected.isDefined // overflow proves > narrowRowGate
       else edges.count() <= narrowRowGate
     withNarrowShuffle(edges.sparkSession, small) {
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"),
@@ -1454,10 +1435,8 @@ object GraphAlgorithms {
                                    weightCol: Option[String] = None): DataFrame = {
     val w = weightCol.map(c => col(c).cast("long")).getOrElse(lit(1L))
     val e0 = edges.select(col("src").as("a"), col("dst").as("b"), w.as("w"))
-      .withColumn("al",
-        coalesce(col("a").try_cast("long"), xxhash64(col("a").cast("string"))))
-      .withColumn("bl",
-        coalesce(col("b").try_cast("long"), xxhash64(col("b").cast("string"))))
+      .withColumn("al", orderKey(col("a")))
+      .withColumn("bl", orderKey(col("b")))
       .where(col("a").cast("string") =!= col("b").cast("string"))
     // orientation: numeric key first, original string order on key ties
     val aFirst = col("al") < col("bl") ||
@@ -1475,6 +1454,43 @@ object GraphAlgorithms {
       .agg(min(col("ul")).as("ul"), min(col("vl")).as("vl"),
         (if (weightCol.isDefined) sum(col("w")) else lit(1L)).as("w"))
       .select(col("u"), col("v"), col("ul"), col("vl"), col("w"))
+  }
+
+  /** The contraction family's numeric order key of an id: its BIGINT
+    * cast, or for an id that does not cast, xxhash64 of its string form. */
+  private def orderKey(id: Column): Column =
+    coalesce(id.try_cast("long"), xxhash64(id.cast("string")))
+
+  /** The driver-side graph of the contraction family: the canonical
+    * (u, v, w) rows of [[canonicalSimpleEdges]] (or, for
+    * [[minimumSpanningForest]], its (ou, ov, w) rows) as a [[LocalGraph]]
+    * multigraph with `weight` = w, plus each vertex's Spark-computed
+    * order `key` (ul/vl) and its key class `cls`, the first vertex with
+    * its key. The distributed rounds group endpoints by key, so two ids
+    * whose hashed keys collide are one endpoint there, and one class
+    * here. Every coarse level of a V-cycle reuses this interning: a
+    * coarse vertex is its fine representative. */
+  private final class KeyedGraph(val g: LocalGraph, val key: Array[Long]) {
+    val cls: Array[Int] = {
+      val first = new java.util.HashMap[java.lang.Long, Integer]()
+      Array.tabulate(g.n) { i =>
+        val c = first.putIfAbsent(key(i), i)
+        if (c == null) i else c.intValue
+      }
+    }
+  }
+
+  /** The [[KeyedGraph]] of `canon`'s (u, v, w, ul, vl) rows, the id
+    * columns named `u` and `v`. */
+  private def keyedGraph(canon: DataFrame, u: String, v: String): KeyedGraph = {
+    val typed = LocalGraph.typed(canon.select(u, v, "w", "ul", "vl"))
+    val rows = typed.collect()
+    val g = LocalGraph.multi(rows, typed.schema(0).dataType)
+    val key = new Array[Long](g.n)
+    rows.indices.foreach { e =>
+      key(g.src(e)) = rows(e).getLong(3); key(g.dst(e)) = rows(e).getLong(4)
+    }
+    new KeyedGraph(g, key)
   }
 
   /** [[maximalMatching]]'s adaptive dispatch over an already-canonical
@@ -1531,66 +1547,70 @@ object GraphAlgorithms {
     out
   }
 
-  /** Array-level core of [[localMatching]] — identical synchronous
-    * semantics; returns (edge index, round) in emission order so the
-    * local multilevel coarsening can reuse the exact matching. */
-  private def localMatchCore(m: Int, ul: Array[Long], vl: Array[Long],
-      ew: Array[Long], rounds: Int): scala.collection.mutable.ArrayBuffer[(Int, Int)] = {
-    // endpoint → incident edge indices
-    val inc = scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuffer[Int]]
-    (0 until m).foreach { i =>
-      inc.getOrElseUpdate(ul(i), scala.collection.mutable.ArrayBuffer.empty) += i
-      inc.getOrElseUpdate(vl(i), scala.collection.mutable.ArrayBuffer.empty) += i
-    }
+  /** [[maximalMatching]]'s synchronous rounds on the driver, over the
+    * edges of `lvl` (`k`'s vertices, key(src) ≤ key(dst) as canonical):
+    * in round r a live edge joins the matching iff its (lead, priority,
+    * ul, vl) key is the strict minimum at both its endpoint key classes,
+    * and every edge at a matched endpoint dies; the lead is −weight when
+    * `weighted` (heavy-edge matching), else 0. Returns each edge's
+    * round, 0 for an edge left unmatched. */
+  private def localMatchCore(k: KeyedGraph, lvl: LocalGraph, weighted: Boolean,
+      rounds: Int): Array[Int] = {
+    val (key, cls, ea, eb, m) = (k.key, k.cls, lvl.src, lvl.dst, lvl.edgeCount)
+    val lead = if (weighted) lvl.weight.map(-_) else new Array[Long](m)
+    // endpoint class → incident edge indices
+    val inc = LocalGraph.Csr(k.g.n, ea.map(cls) ++ eb.map(cls),
+      Array.range(0, m) ++ Array.range(0, m))
+    val round = new Array[Int](m)
     val alive = Array.fill(m)(true)
     var liveCount = m
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    val p = new Array[Long](m)
     var r = 0
     while (r < rounds && liveCount > 0) {
       r += 1
-      def prio(i: Int): Long = {
-        // mirrors the distributed stepwise-mod form exactly (identity
-        // inner pmod for ids < 2^31, overflow-safe for hashed keys)
-        val m = 2147483647L
-        val inner = math.floorMod(math.floorMod(ul(i), m) * 1000003L +
-          math.floorMod(vl(i), m) * 7919L + r * 101L, m)
-        math.floorMod(1103515245L * inner + 12345L, m)
+      // mirrors the distributed stepwise-mod form exactly (identity
+      // inner pmod for ids < 2^31, overflow-safe for hashed keys)
+      val m31 = 2147483647L
+      var i = 0
+      while (i < m) {
+        val inner = math.floorMod(math.floorMod(key(ea(i)), m31) * 1000003L +
+          math.floorMod(key(eb(i)), m31) * 7919L + r * 101L, m31)
+        p(i) = math.floorMod(1103515245L * inner + 12345L, m31)
+        i += 1
       }
-      val p = Array.tabulate(m)(i => if (alive(i)) prio(i) else Long.MaxValue)
       def less(i: Int, j: Int): Boolean =
-        ew(i) < ew(j) || (ew(i) == ew(j) && (
-          p(i) < p(j) || (p(i) == p(j) && (ul(i) < ul(j) ||
-            (ul(i) == ul(j) && vl(i) < vl(j))))))
+        lead(i) < lead(j) || (lead(i) == lead(j) && (
+          p(i) < p(j) || (p(i) == p(j) && (key(ea(i)) < key(ea(j)) ||
+            (key(ea(i)) == key(ea(j)) && key(eb(i)) < key(eb(j)))))))
+      def wins(i: Int)(j: Int): Boolean = j == i || !alive(j) || less(i, j)
       val winners = (0 until m).filter { i =>
-        alive(i) && (inc(ul(i)).iterator ++ inc(vl(i)).iterator).forall { j =>
-          j == i || !alive(j) || less(i, j)
-        }
+        alive(i) && inc.forall(cls(ea(i)))(wins(i)) && inc.forall(cls(eb(i)))(wins(i))
       }
+      def kill(j: Int): Unit = if (alive(j)) { alive(j) = false; liveCount -= 1 }
       winners.foreach { i =>
-        out += ((i, r))
-        // kill every edge touching either matched endpoint
-        (inc(ul(i)).iterator ++ inc(vl(i)).iterator).foreach { j =>
-          if (alive(j)) { alive(j) = false; liveCount -= 1 }
-        }
+        round(i) = r
+        inc.foreach(cls(ea(i)))(kill)
+        inc.foreach(cls(eb(i)))(kill)
       }
     }
-    out
+    round
   }
 
+  /** The matched edges of `round` (see [[localMatchCore]]) in emission
+    * order: by round, then by edge index. */
+  private def matchedEdges(round: Array[Int]): Array[Int] =
+    round.indices.filter(round(_) > 0).sortBy(round(_)).toArray
+
   /** Driver-side rounds for [[maximalMatching]]'s small regime —
-    * identical synchronous semantics over interned arrays. */
+    * identical synchronous semantics on the [[KeyedGraph]]. */
   private def localMatching(canon: DataFrame, rounds: Int,
                             weighted: Boolean = false): DataFrame = {
-    val spark = canon.sparkSession
-    val ut = canon.schema("u").dataType
-    val vt = canon.schema("v").dataType
-    val rows0 = canon.select("u", "v", "ul", "vl", "w").collect()
-    val eu = rows0.map(_.get(0)); val ev = rows0.map(_.get(1))
-    val ul = rows0.map(_.getLong(2)); val vl = rows0.map(_.getLong(3))
-    val ew = rows0.map(r => if (weighted) -r.getLong(4) else 0L)
-    val out = localMatchCore(rows0.length, ul, vl, ew, rounds)
-    LocalGraph.frame(spark, Seq("u" -> ut, "v" -> vt, "round" -> IntegerType),
-      out.map { case (i, rr) => Row(eu(i), ev(i), rr) }.toSeq)
+    val k = keyedGraph(canon, "u", "v")
+    val g = k.g
+    val round = localMatchCore(k, g, weighted, rounds)
+    LocalGraph.frame(canon.sparkSession,
+      Seq("u" -> g.idType, "v" -> g.idType, "round" -> IntegerType),
+      matchedEdges(round).map(e => Row(g.ids(g.src(e)), g.ids(g.dst(e)), round(e))).toSeq)
   }
 
   /**
@@ -1629,32 +1649,17 @@ object GraphAlgorithms {
     // frames. Below the raw 2M-row limit-count pre-gate the whole level
     // replays locally from the collected canonical rows — the ul/vl
     // numeric order keys arrive pre-computed, so no id-type gate is needed.
-    val idt = edges.schema("src").dataType
-    if (idt == edges.schema("dst").dataType &&
-        countGated(edges.select(col("src")), 2000000L, bounded = true)) {
-      val rows = canonicalSimpleEdges(edges, weightCol)
-        .select(col("u"), col("v"), col("ul"), col("vl"), col("w")).collect()
-      val key = scala.collection.mutable.HashMap.empty[Any, Long]
-      rows.foreach { r => key(r.get(0)) = r.getLong(2); key(r.get(1)) = r.getLong(3) }
-      val (cmap, ceu, cev, cew) = localCoarsenStep(
-        rows.map(_.get(0)), rows.map(_.get(1)), rows.map(_.getLong(4)),
-        key, weighted = weightCol.isDefined, rounds)
-      import org.apache.spark.sql.types._
+    if (countGated(edges.select(col("src")), 2000000L, bounded = true)) {
+      val k = keyedGraph(canonicalSimpleEdges(edges, weightCol), "u", "v")
+      val g = k.g
+      val (matched, coarse) = localCoarsenStep(k, g, weightCol.isDefined, rounds)
       val spark = edges.sparkSession
-      val eSchema = StructType(Seq(StructField("src", idt),
-        StructField("dst", idt), StructField("weight", LongType)))
-      val eOut = new java.util.ArrayList[org.apache.spark.sql.Row](ceu.length)
-      var i = 0
-      while (i < ceu.length) {
-        eOut.add(org.apache.spark.sql.Row(ceu(i), cev(i), cew(i))); i += 1
-      }
-      val mSchema = StructType(Seq(StructField("id", idt),
-        StructField("rep", idt)))
-      val mOut = new java.util.ArrayList[org.apache.spark.sql.Row](cmap.length)
-      cmap.foreach { case (v, u) =>
-        mOut.add(org.apache.spark.sql.Row(v, u)) }
-      return (spark.createDataFrame(eOut, eSchema),
-        spark.createDataFrame(mOut, mSchema))
+      return (LocalGraph.frame(spark,
+          Seq("src" -> g.idType, "dst" -> g.idType, "weight" -> LongType),
+          coarse.src.indices.map(e =>
+            Row(g.ids(coarse.src(e)), g.ids(coarse.dst(e)), coarse.weight(e)))),
+        LocalGraph.frame(spark, Seq("id" -> g.idType, "rep" -> g.idType),
+          matched.map(e => Row(g.ids(g.dst(e)), g.ids(g.src(e)))).toSeq))
     }
     val canon = canonicalSimpleEdges(edges, weightCol)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1669,10 +1674,8 @@ object GraphAlgorithms {
       .join(m.select(col("v"), col("u").as("sv")), Seq("v"), "left")
       .select(coalesce(col("su"), col("u")).as("a"),
         coalesce(col("sv"), col("v")).as("b"), col("w"))
-      .withColumn("al",
-        coalesce(col("a").try_cast("long"), xxhash64(col("a").cast("string"))))
-      .withColumn("bl",
-        coalesce(col("b").try_cast("long"), xxhash64(col("b").cast("string"))))
+      .withColumn("al", orderKey(col("a")))
+      .withColumn("bl", orderKey(col("b")))
       .where(col("al") =!= col("bl"))
       .select(
         when(col("al") < col("bl"), col("a")).otherwise(col("b")).as("src"),
@@ -1722,10 +1725,8 @@ object GraphAlgorithms {
     // (ou, ov) keep the original id type for the output
     val e0 = edges.select(col("src").as("a"), col("dst").as("b"),
         col(weightCol).cast("long").as("w"))
-      .withColumn("al",
-        coalesce(col("a").try_cast("long"), xxhash64(col("a").cast("string"))))
-      .withColumn("bl",
-        coalesce(col("b").try_cast("long"), xxhash64(col("b").cast("string"))))
+      .withColumn("al", orderKey(col("a")))
+      .withColumn("bl", orderKey(col("b")))
       .where(col("al") =!= col("bl"))
     val canon = e0.select(
         when(col("al") < col("bl"), col("a")).otherwise(col("b")).as("ou"),
@@ -1801,72 +1802,69 @@ object GraphAlgorithms {
   }
 
   /** Driver-side Borůvka rounds for [[minimumSpanningForest]]'s small
-    * regime — identical synchronous semantics over interned maps. */
+    * regime — identical synchronous semantics on the [[KeyedGraph]] of
+    * the canonical fine edges. A component is labelled by a key class
+    * and ordered by its key, as the distributed labels are the keys. */
   private def localBoruvka(canon: DataFrame, rounds: Int): DataFrame = {
-    val spark = canon.sparkSession
-    val ut = canon.schema("ou").dataType
-    val vt = canon.schema("ov").dataType
-    val rows0 = canon.select("ou", "ov", "ul", "vl", "w").collect()
-    // coarse edge map: (cu, cv) -> (w, ou index, ov index) best fine edge
-    val eu = rows0.map(_.get(0)); val ev = rows0.map(_.get(1))
-    var act = scala.collection.mutable.HashMap.empty[(Long, Long), (Long, Int)]
-    rows0.zipWithIndex.foreach { case (row, i) =>
-      act((row.getLong(2), row.getLong(3))) = (row.getLong(4), i)
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Any, Any, Long)]
+    val k = keyedGraph(canon, "ou", "ov")
+    val (g, key) = (k.g, k.key)
+    // coarse edges: labels cu < cv by key, each with its best fine edge
+    var cu = g.src.map(k.cls)
+    var cv = g.dst.map(k.cls)
+    var fine = Array.range(0, g.edgeCount)
+    def w(j: Int): Long = g.weight(fine(j))
+    val best = Array.fill(g.n)(-1)
+    val root = new Array[Int](g.n)
+    val forest = Array.newBuilder[Int]
     var r = 0
-    while (r < rounds && act.nonEmpty) {
+    while (r < rounds && cu.nonEmpty) {
       r += 1
-      // per-label min incident (key = (w, cu, cv)) and its pointer
-      val best = scala.collection.mutable.HashMap.empty[Long, (Long, Long, Long, Long)]
-      act.foreach { case ((cu, cv), (w, _)) =>
-        for ((lbl, other) <- Seq((cu, cv), (cv, cu))) {
-          val k = (w, cu, cv, other)
-          if (!best.contains(lbl) ||
-            Ordering[(Long, Long, Long)].lt((k._1, k._2, k._3),
-              (best(lbl)._1, best(lbl)._2, best(lbl)._3))) best(lbl) = k
-        }
+      // per-label minimum incident coarse edge under the key (w, cu, cv)
+      def lt(i: Int, j: Int): Boolean = w(i) < w(j) || (w(i) == w(j) &&
+        (key(cu(i)) < key(cu(j)) || (key(cu(i)) == key(cu(j)) && key(cv(i)) < key(cv(j)))))
+      cu.indices.foreach { j =>
+        if (best(cu(j)) < 0 || lt(j, best(cu(j)))) best(cu(j)) = j
+        if (best(cv(j)) < 0 || lt(j, best(cv(j)))) best(cv(j)) = j
       }
-      val selected = best.values.map(k => (k._2, k._3)).toSet
-      selected.toSeq.sorted.foreach { cc =>
-        val (w, i) = act(cc)
-        out += ((eu(i), ev(i), w))
-      }
+      val labels = (cu ++ cv).distinct
+      labels.map(best).distinct.sortBy(j => (key(cu(j)), key(cv(j))))
+        .foreach(forest += fine(_))
       // pointer graph with 2-cycles broken at the smaller label
-      val ptr0 = best.map { case (lbl, k) => lbl -> k._4 }
-      def broken(l: Long): Long = {
-        val p = ptr0(l)
-        if (ptr0.get(p).contains(l)) math.min(l, p) else p
+      def ptr(l: Int): Int = if (cu(best(l)) == l) cv(best(l)) else cu(best(l))
+      def broken(l: Int): Int = {
+        val p = ptr(l)
+        if (ptr(p) == l && key(l) < key(p)) l else p
       }
-      val root = scala.collection.mutable.HashMap.empty[Long, Long]
-      ptr0.keys.foreach { l =>
+      labels.foreach { l =>
         var x = broken(l)
         while (broken(x) != x) x = broken(x)
         root(l) = x
       }
-      // contract + merge parallel edges (min fine edge)
-      val next = scala.collection.mutable.HashMap.empty[(Long, Long), (Long, Int)]
-      act.foreach { case ((cu, cv), (w, i)) =>
-        val nu = root.getOrElse(cu, cu); val nv = root.getOrElse(cv, cv)
-        if (nu != nv) {
-          val cc = (math.min(nu, nv), math.max(nu, nv))
-          val cur = next.get(cc)
-          // tie-break on the canonical fine pair so the merge is
-          // deterministic (matches the distributed min(struct(w,ou,ov))
-          // via the ul/vl ordering encoded in edge index order)
-          if (cur.isEmpty || w < cur.get._1 || (w == cur.get._1 &&
-            Ordering[(Long, Long)].lt(keyOf(rows0, i), keyOf(rows0, cur.get._2))))
-            next(cc) = (w, i)
+      labels.foreach(best(_) = -1)
+      // contract + merge parallel edges, keeping the minimum fine edge
+      // under (w, ul, vl), the distributed min(struct(w, ul, vl, …))
+      def finer(f: Int, h: Int): Boolean = g.weight(f) < g.weight(h) ||
+        (g.weight(f) == g.weight(h) && (key(g.src(f)) < key(g.src(h)) ||
+          (key(g.src(f)) == key(g.src(h)) && key(g.dst(f)) < key(g.dst(h)))))
+      val at = new java.util.HashMap[java.lang.Long, Integer]()
+      val (nu, nv, nf) = (new Array[Int](cu.length), new Array[Int](cu.length),
+        new Array[Int](cu.length))
+      var c = 0
+      cu.indices.foreach { j =>
+        val (a, b) = (root(cu(j)), root(cv(j)))
+        if (a != b) {
+          val (x, y) = if (key(a) < key(b)) (a, b) else (b, a)
+          val i = at.putIfAbsent((x.toLong << 32) | y, c)
+          if (i == null) { nu(c) = x; nv(c) = y; nf(c) = fine(j); c += 1 }
+          else if (finer(fine(j), nf(i))) nf(i) = fine(j)
         }
       }
-      act = next
+      cu = nu.take(c); cv = nv.take(c); fine = nf.take(c)
     }
-    LocalGraph.frame(spark, Seq("u" -> ut, "v" -> vt, "weight" -> LongType),
-      out.map { case (u, v, w) => Row(u, v, w) }.toSeq)
+    LocalGraph.frame(canon.sparkSession,
+      Seq("u" -> g.idType, "v" -> g.idType, "weight" -> LongType),
+      forest.result().map(f => Row(g.ids(g.src(f)), g.ids(g.dst(f)), g.weight(f))).toSeq)
   }
-
-  private def keyOf(rows: Array[org.apache.spark.sql.Row], i: Int): (Long, Long) =
-    (rows(i).getLong(2), rows(i).getLong(3))
 
   /**
    * HyperANF-style neighborhood-function sketch (Boldi, Rosa & Vigna,
@@ -1890,8 +1888,6 @@ object GraphAlgorithms {
   def neighborhoodRegisters(edges: DataFrame, hops: Int,
                             undirected: Boolean = true): DataFrame = {
     require(hops >= 1, s"hops must be >= 1: $hops")
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
-      .where(col("u") =!= col("v"))
     // adaptive local regime (the fastRP/BLP pattern): per hop the
     // distributed round is an eager checkpoint job over ≤ verts×256
     // register rows — iteration floor on small graphs. The md5 sketch
@@ -1902,12 +1898,8 @@ object GraphAlgorithms {
     // cast-to-string; the raw 2M-row limit-count pre-gate keeps the
     // large regime's cost identical. Register max-merge is idempotent, so
     // collected duplicate edges need no local distinct.
-    if (stringCastReplayable(e0.schema("u").dataType) &&
-        countGated(edges.select(col("src")), 2000000L, bounded = true)) {
-      val g = LocalGraph.multi(e0.collect(), e0.schema("u").dataType)
-      localNeighborhoodRegisters(edges.sparkSession, g, hops, undirected)
-        .foreach(local => return local)
-    }
+    sketchGraph(edges).flatMap(localNeighborhoodRegisters(edges.sparkSession, _, hops,
+      undirected)).foreach(local => return local)
     val e = orientedSimple(edges, undirected).persist(StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("u").as("id"))
       .unionByName(e.select(col("v").as("id"))).distinct()
@@ -1926,6 +1918,20 @@ object GraphAlgorithms {
     }
     e.unpersist()
     out.select(col("hop"), col("id"), col("bucket"), col("max_rho"))
+  }
+
+  /** The neighbourhood sketch's driver-side graph: `edges`' loop-free
+    * (src, dst) rows as a [[LocalGraph]] multigraph, ids typed by
+    * [[LocalGraph.typed]]. None above the raw 2M-row limit-count gate or
+    * for an id type whose string form Spark's cast does not mirror. */
+  private def sketchGraph(edges: DataFrame): Option[LocalGraph] = {
+    val e0 = LocalGraph.typed(edges.select(col("src").as("u"), col("dst").as("v")))
+      .where(col("u") =!= col("v"))
+    val idType = e0.schema("u").dataType
+    if (stringCastReplayable(idType) &&
+        countGated(edges.select(col("src")), 2000000L, bounded = true))
+      Some(LocalGraph.multi(e0.collect(), idType))
+    else None
   }
 
   /** The register max-merge of [[localNeighborhoodRegisters]] as raw
@@ -1985,30 +1991,10 @@ object GraphAlgorithms {
   private def localNeighborhoodRegisters(spark: SparkSession, g: LocalGraph,
       hops: Int, undirected: Boolean): Option[DataFrame] =
     localNeighborhoodArrays(g, hops, undirected).map { perHop =>
-      val (ids, n) = (g.ids, g.n)
-      val outRows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      var t = 0
-      while (t <= hops) {
-        val regs = perHop(t)
-        var i = 0
-        while (i < n) {
-          var k = 0
-          while (k < 256) {
-            if (regs(i)(k) > 0)
-              outRows.add(org.apache.spark.sql.Row(t, ids(i), k, regs(i)(k).toInt))
-            k += 1
-          }
-          i += 1
-        }
-        t += 1
-      }
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("hop", IntegerType, nullable = false),
-        StructField("id", g.idType),
-        StructField("bucket", IntegerType),
-        StructField("max_rho", IntegerType)))
-      spark.createDataFrame(outRows, schema)
+      val rows = for (t <- 0 to hops; i <- 0 until g.n; k <- 0 until 256
+          if perHop(t)(i)(k) > 0) yield Row(t, g.ids(i), k, perHop(t)(i)(k).toInt)
+      LocalGraph.frame(spark, Seq("hop" -> IntegerType, "id" -> g.idType,
+        "bucket" -> IntegerType, "max_rho" -> IntegerType), rows)
     }
 
   /**
@@ -2030,23 +2016,14 @@ object GraphAlgorithms {
     // instead of materializing a verts×256×(hops+1) local relation just
     // to re-aggregate it (measured as the whole remaining cost of this
     // read path at bench scale: row conversion, not computation)
-    val e0 = edges.select(col("src").as("u"), col("dst").as("v"))
-      .where(col("u") =!= col("v"))
-    val localArrays =
-      if (stringCastReplayable(e0.schema("u").dataType) &&
-          countGated(edges.select(col("src")), 2000000L, bounded = true)) {
-        val g = LocalGraph.multi(e0.collect(), e0.schema("u").dataType)
-        localNeighborhoodArrays(g, hops, undirected).map(g.ids -> _)
-      } else None
-    localArrays match {
-      case Some((ids, perHopRegs)) =>
-        val n = ids.length
+    val local = sketchGraph(edges).flatMap(g =>
+      localNeighborhoodArrays(g, hops, undirected).map { perHopRegs =>
         val alpha = 0.7213 / (1.0 + 1.079 / 256)
-        val perHop = (0 to hops).map { t =>
+        (0 to hops).map { t =>
           val regs = perHopRegs(t)
           var total = 0.0
           var i = 0
-          while (i < n) {
+          while (i < g.n) {
             var s = 0.0; var nonzero = 0
             var k = 0
             while (k < 256) {
@@ -2060,36 +2037,32 @@ object GraphAlgorithms {
               256.0 * math.log(256.0 / zeros) else raw)
             i += 1
           }
-          (t, total)
+          total
         }
-        val target = q * perHop.last._2
-        val eff = perHop.find(_._2 >= target).map(_._1).getOrElse(hops)
-        import spark.implicits._
-        return perHop.map { case (t, nn) => (t, nn, t == eff) }
-          .toDF("hop", "n_estimate", "effective")
-      case None => ()
-    }
-    val regs = neighborhoodRegisters(edges, hops, undirected)
+      })
     // N(t) = Σ_v estimate(v, t): ONE two-level aggregation job over the
     // whole register frame — grouped by (hop, id) for the per-vertex
     // estimate, then by hop for the totals; only the hops+1 numbers
     // reach the driver (a per-hop filter-and-collect loop costs a whole
-    // Spark job per hop for the same answer — the iteration-floor shave)
-    val perHop = regs
-      .groupBy("hop", "id")
-      .agg(org.apache.spark.sql.functions.sum(
-        pow(lit(2.0), -col("max_rho").cast("double"))).as("s"),
-        count(lit(1)).as("nonzero"))
-      .groupBy("hop")
-      .agg(org.apache.spark.sql.functions.sum(
-        graft.pipeline.Sketches.hllEstimateCol(col("s"), col("nonzero"), 256))
-        .as("n"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1)))
-      .sortBy(_._1).toSeq
-    val target = q * perHop.last._2
-    val eff = perHop.find(_._2 >= target).map(_._1).getOrElse(hops)
+    // Spark job per hop for the same answer — the iteration-floor shave).
+    // A hop without registers (an empty graph has none) sums to 0.
+    val perHop = local.getOrElse {
+      val n = neighborhoodRegisters(edges, hops, undirected)
+        .groupBy("hop", "id")
+        .agg(org.apache.spark.sql.functions.sum(
+          pow(lit(2.0), -col("max_rho").cast("double"))).as("s"),
+          count(lit(1)).as("nonzero"))
+        .groupBy("hop")
+        .agg(org.apache.spark.sql.functions.sum(
+          graft.pipeline.Sketches.hllEstimateCol(col("s"), col("nonzero"), 256))
+          .as("n"))
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      (0 to hops).map(n.getOrElse(_, 0.0))
+    }
+    val target = q * perHop.last
+    val eff = perHop.indexWhere(_ >= target) match { case -1 => hops; case t => t }
     import spark.implicits._
-    perHop.map { case (t, n) => (t, n, t == eff) }
+    perHop.zipWithIndex.map { case (n, t) => (t, n, t == eff) }
       .toDF("hop", "n_estimate", "effective")
   }
 
@@ -3608,58 +3581,49 @@ object GraphAlgorithms {
     }
 
   /** Driver-side replay of [[balancedPartition]]'s rounds — identical
-    * synchronous semantics over interned arrays. Inputs are the ALREADY
-    * canonicalized unordered value pairs with merged weights (BLP treats
-    * edges symmetrically, so canonical orientation is immaterial); `seed`
-    * and `vw` mirror the init/vertexWeights lookups (missing → md5
-    * default / weight 1). Returns id → part over the pair endpoints. */
-  private def localBlpMap(eu: Array[Any], ev: Array[Any], ew: Array[Long],
-      numParts: Int, rounds: Int, slackPct: Int,
-      seed: Any => Option[Int], vw: Any => Long, vwProvided: Boolean)
-      : scala.collection.mutable.LinkedHashMap[Any, Int] = {
-    val in = new LocalGraph.Interner
-    import in.{ids, intern}
-    val m = eu.length
-    val ia = new Array[Int](m); val ib = new Array[Int](m)
-    var e = 0
-    while (e < m) { ia(e) = intern(eu(e)); ib(e) = intern(ev(e)); e += 1 }
-    val n = ids.length
-    val part = new Array[Int](n); val par = new Array[Int](n)
-    val vwA = new Array[Long](n)
-    var i = 0
+    * synchronous semantics over the canonical edges of `lvl`, weighted by
+    * its `weight` (BLP reads edges symmetrically, so orientation is
+    * immaterial). Its vertices are the edge endpoints; per vertex index,
+    * `bucket` is the first md5 byte of the id (the default part and the
+    * move parity), `seed` a seeded part or −1 for the md5 default, and
+    * `vw` the vertex weight. Returns the vertices in first-seen edge order
+    * and the part of each (−1 off them). */
+  private def localBlp(lvl: LocalGraph, bucket: Array[Int], seed: Array[Int],
+      vw: Array[Long], numParts: Int, rounds: Int, slackPct: Int): (Array[Int], Array[Int]) = {
+    val (n, m, ea, eb, ew) = (lvl.n, lvl.edgeCount, lvl.src, lvl.dst, lvl.weight)
+    val seen = new Array[Boolean](n)
+    val verts = (ea.indices.iterator.flatMap(e => Iterator(ea(e), eb(e))).filter { i =>
+      val first = !seen(i); seen(i) = true; first
+    }).toArray
+    val part = Array.fill(n)(-1)
     var totalW = 0L
-    while (i < n) {
-      val b = md5FirstByte(String.valueOf(ids(i)))
-      part(i) = seed(ids(i)).getOrElse(b % numParts)
-      par(i) = b % 2
-      vwA(i) = vw(ids(i))
-      totalW += vwA(i)
-      i += 1
+    verts.foreach { i =>
+      part(i) = if (seed(i) >= 0) seed(i) else bucket(i) % numParts
+      totalW += vw(i)
     }
-    if (!vwProvided) totalW = n.toLong
     val cap = (totalW * (100L + slackPct) + 100L * numParts - 1) / (100L * numParts)
+    // k(v, p) = Σ edge weights into p, at v * numParts + p; `cand` tracks
+    // WHICH (v, p) rows the distributed kvp aggregate would emit (a
+    // 0-weight edge still makes its part a candidate)
+    val k = new Array[Long](n * numParts)
+    val cand = new Array[Boolean](n * numParts)
+    val next = new Array[Int](n)
     var r = 0
     while (r < rounds) {
       r += 1
       val load = new Array[Long](numParts)
       val cnt = new Array[Long](numParts)
-      i = 0
-      while (i < n) { load(part(i)) += vwA(i); cnt(part(i)) += 1; i += 1 }
-      // k(v, p) = Σ edge weights into p; `cand` tracks WHICH (v, p) rows
-      // the distributed kvp aggregate would emit (a 0-weight edge still
-      // makes its part a candidate)
-      val k = Array.ofDim[Long](n, numParts)
-      val cand = Array.ofDim[Boolean](n, numParts)
-      e = 0
+      verts.foreach { i => load(part(i)) += vw(i); cnt(part(i)) += 1 }
+      java.util.Arrays.fill(k, 0L)
+      java.util.Arrays.fill(cand, false)
+      var e = 0
       while (e < m) {
-        val a = ia(e); val b = ib(e); val w = ew(e)
-        k(a)(part(b)) += w; cand(a)(part(b)) = true
-        k(b)(part(a)) += w; cand(b)(part(a)) = true
+        val a = ea(e); val b = eb(e); val w = ew(e)
+        k(a * numParts + part(b)) += w; cand(a * numParts + part(b)) = true
+        k(b * numParts + part(a)) += w; cand(b * numParts + part(a)) = true
         e += 1
       }
-      val next = new Array[Int](n)
-      i = 0
-      while (i < n) {
+      verts.foreach { i =>
         val cp = part(i)
         // candidates: kvp parts ∪ the current part at k = max(k, 0)
         // (the union row), inner-joined to load (occupied parts only);
@@ -3667,8 +3631,9 @@ object GraphAlgorithms {
         var bestP = -1; var bestS = 0L; var bestL = 0L
         var p = 0
         while (p < numParts) {
-          if ((cand(i)(p) || p == cp) && cnt(p) > 0) {
-            val kk = if (p == cp) math.max(k(i)(p), 0L) else k(i)(p)
+          val at = i * numParts + p
+          if ((cand(at) || p == cp) && cnt(p) > 0) {
+            val kk = if (p == cp) math.max(k(at), 0L) else k(at)
             val s = kk * (cap - load(p))
             if (bestP < 0 || s > bestS || (s == bestS && (load(p) < bestL ||
                 (load(p) == bestL && p < bestP)))) {
@@ -3677,16 +3642,22 @@ object GraphAlgorithms {
           }
           p += 1
         }
-        next(i) = if (par(i) == r % 2) bestP else cp
-        i += 1
+        next(i) = if (bucket(i) % 2 == r % 2) bestP else cp
       }
-      System.arraycopy(next, 0, part, 0, n)
+      verts.foreach(i => part(i) = next(i))
     }
-    val out = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
-    i = 0
-    while (i < n) { out(ids(i)) = part(i); i += 1 }
-    out
+    (verts, part)
   }
+
+  /** The first md5 byte of each of `g`'s ids ([[md5FirstByte]]). */
+  private def md5Buckets(g: LocalGraph): Array[Int] =
+    g.ids.map(id => md5FirstByte(String.valueOf(id)))
+
+  /** The (id, part) frame of `verts`' parts. */
+  private def partFrame(spark: SparkSession, g: LocalGraph, verts: Array[Int],
+      part: Array[Int]): DataFrame =
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "part" -> IntegerType),
+      verts.map(i => Row(g.ids(i), part(i))).toSeq)
 
   def balancedPartition(edges: DataFrame, numParts: Int, rounds: Int = 4,
                         slackPct: Int = 10,
@@ -3729,53 +3700,33 @@ object GraphAlgorithms {
     val rawSmall = stringCastReplayable(cnPlan.schema("src").dataType) &&
       countGated(edges.select(col("src")), 2000000L, bounded = true)
     if (rawSmall) {
-      val seedOpt: Option[Any => Option[Int]] = init match {
-        case None => Some((_: Any) => None)
-        case Some(s0) => collectRowsGated(
-            s0.select(col(s0.columns.head).as("id"),
-              col(s0.columns(1)).cast("int").as("__seed")).dropDuplicates("id"),
-            2000000L).flatMap { rows =>
-          // a seed outside [0, numParts) would index the local load/cnt/k
-          // arrays out of bounds; the distributed rounds treat any int
-          // part as a plain group key, so fall back to them instead
-          if (rows.exists(r => !r.isNullAt(1) &&
-              (r.getInt(1) < 0 || r.getInt(1) >= numParts))) None
-          else {
-            val mp = scala.collection.mutable.HashMap.empty[Any, Int]
-            rows.foreach(r => if (!r.isNullAt(1)) mp(r.get(0)) = r.getInt(1))
-            Some((x: Any) => mp.get(x))
+      // seed and weight ids cast to the graph's id type (an id that does
+      // not cast matches no vertex, as in the distributed join)
+      val idType = cnPlan.schema("src").dataType
+      def idRows(df: DataFrame): Option[Array[Row]] = collectRowsGated(
+        df.select(col("id").try_cast(idType), col(df.columns(1))), 2000000L)
+      // a seed outside [0, numParts) would index the local load/cnt/k
+      // arrays out of bounds; the distributed rounds treat any int part as
+      // a plain group key, so fall back to them instead
+      val seeds = init.fold(Option(Array.empty[Row]))(s0 => idRows(
+          s0.select(col(s0.columns.head).as("id"),
+            col(s0.columns(1)).cast("int").as("__seed")).dropDuplicates("id")))
+        .filter(_.forall(r => r.isNullAt(1) || (r.getInt(1) >= 0 && r.getInt(1) < numParts)))
+      val weights = vertexWeights.fold(Option(Array.empty[Row]))(vwDf => idRows(
+        vwDf.select(col(vwDf.columns.head).as("id"), col(vwDf.columns(1)).cast("long"))))
+      (seeds, weights) match {
+        case (Some(sd), Some(vws)) =>
+          val rows = cnPlan.collect()
+          if (rows.length * 2L * numParts <= 64000000L) {
+            val g = LocalGraph.multi(rows, idType)
+            val seed = Array.fill(g.n)(-1)
+            val vw = Array.fill(g.n)(1L)
+            for (r <- sd if !r.isNullAt(1); i <- g.idx.get(r.get(0))) seed(i) = r.getInt(1)
+            for (r <- vws if !r.isNullAt(1); i <- g.idx.get(r.get(0))) vw(i) = r.getLong(1)
+            val (verts, part) =
+              localBlp(g, md5Buckets(g), seed, vw, numParts, rounds, slackPct)
+            return partFrame(edges.sparkSession, g, verts, part)
           }
-        }
-      }
-      val vwOpt: Option[Any => Long] = vertexWeights match {
-        case None => Some((_: Any) => 1L)
-        case Some(vwDf) => collectRowsGated(
-            vwDf.select(col(vwDf.columns.head).as("id"),
-              col(vwDf.columns(1)).cast("long").as("__vwv")),
-            2000000L).map { rows =>
-          val mp = scala.collection.mutable.HashMap.empty[Any, Long]
-          rows.foreach(r => if (!r.isNullAt(1)) mp(r.get(0)) = r.getLong(1))
-          (x: Any) => mp.getOrElse(x, 1L)
-        }
-      }
-      val rows = (seedOpt, vwOpt) match {
-        case (Some(_), Some(_)) => cnPlan.collect()
-        case _ => Array.empty[org.apache.spark.sql.Row]
-      }
-      (seedOpt, vwOpt) match {
-        case (Some(sd), Some(vwF))
-            if rows.length * 2L * numParts <= 64000000L =>
-          val asg = localBlpMap(rows.map(_.get(0)), rows.map(_.get(1)),
-            rows.map(_.getLong(2)), numParts, rounds, slackPct,
-            sd, vwF, vertexWeights.isDefined)
-          import org.apache.spark.sql.types._
-          val schema = StructType(Seq(
-            StructField("id", cnPlan.schema("src").dataType),
-            StructField("part", IntegerType)))
-          val out = new java.util.ArrayList[org.apache.spark.sql.Row](asg.size)
-          asg.foreach { case (id, p) =>
-            out.add(org.apache.spark.sql.Row(id, p)) }
-          return edges.sparkSession.createDataFrame(out, schema)
         case _ => ()
       }
     }
@@ -3825,7 +3776,7 @@ object GraphAlgorithms {
       .localCheckpoint(true)
     val totalW: Long =
       if (vertexWeights.isEmpty) n
-      else asg.agg(sum(col("__vw"))).collect()(0).getLong(0)
+      else asg.agg(coalesce(sum(col("__vw")), lit(0L))).collect()(0).getLong(0)
     val cap = (totalW * (100L + slackPct) + 100L * numParts - 1) / (100L * numParts)
     var r = 0
     while (r < rounds) {
@@ -3896,15 +3847,14 @@ object GraphAlgorithms {
     // replay needs no key re-derivation; matching reuses the exact
     // localMatchCore; the only other local re-derivation is the BLP md5
     // bucket, gated by stringCastReplayable like balancedPartition.
-    if (stringCastReplayable(edges.schema("src").dataType) &&
+    val canon = canonicalSimpleEdges(edges, None)
+    if (stringCastReplayable(canon.schema("u").dataType) &&
         countGated(edges.select(col("src")), 2000000L, bounded = true)) {
       // raw ≥ canonical (the balancedPartition raw pre-gate), so the
       // collect below is bounded by the limit-count that just passed
-      val rows = canonicalSimpleEdges(edges, None)
-        .select(col("u"), col("v"), col("ul"), col("vl"), col("w")).collect()
-      if (rows.length * 2L * numParts <= 64000000L)
-        return localMultilevelPartition(edges.sparkSession, rows,
-          edges.schema("src").dataType, numParts, matchRounds,
+      val k = keyedGraph(canon, "u", "v")
+      if (k.g.edgeCount * 2L * numParts <= 64000000L)
+        return localMultilevelPartition(edges.sparkSession, k, numParts, matchRounds,
           coarseRounds, refineRounds, slackPct, levels)
     }
     // DOWN the V: repeated coarsening. Level 0 is the fine unweighted
@@ -3976,108 +3926,73 @@ object GraphAlgorithms {
     asg
   }
 
-  /** One local coarsening level — the exact [[localMatchCore]] matching
-    * plus [[coarsenWithMap]]'s contraction arithmetic over pre-keyed
-    * canonical arrays. Returns (cmap (v, rep) pairs, coarse eu/ev/ew).
-    * At the unweighted fine level coarse weights COUNT absorbed edges
-    * (identical to summing the canonical w = 1). */
-  private def localCoarsenStep(eu: Array[Any], ev: Array[Any], ew: Array[Long],
-      key: Any => Long, weighted: Boolean, rounds: Int)
-      : (Array[(Any, Any)], Array[Any], Array[Any], Array[Long]) = {
-    val m = eu.length
-    val ulA = new Array[Long](m); val vlA = new Array[Long](m)
-    var i = 0
-    while (i < m) { ulA(i) = key(eu(i)); vlA(i) = key(ev(i)); i += 1 }
-    val negw = if (weighted) ew.map(-_) else new Array[Long](m)
-    val matched = localMatchCore(m, ulA, vlA, negw, rounds)
-    val rep = scala.collection.mutable.HashMap.empty[Any, Any]
-    val cmap = matched.map { case (idx, _) => (ev(idx), eu(idx)) }.toArray
-    cmap.foreach { case (v, u) => rep(v) = u }
-    // contraction: re-map through rep, drop key-internal edges, merge
-    // parallel coarse edges
-    val agg = scala.collection.mutable.LinkedHashMap.empty[(Any, Any), Long]
-    var j = 0
-    while (j < m) {
-      val a = rep.getOrElse(eu(j), eu(j)); val b = rep.getOrElse(ev(j), ev(j))
-      val al = key(a); val bl = key(b)
-      if (al != bl) {
-        val p = if (al < bl) (a, b) else (b, a)
-        agg(p) = agg.getOrElse(p, 0L) + (if (weighted) ew(j) else 1L)
+  /** One local coarsening level of `lvl` (`k`'s vertices): the exact
+    * [[localMatchCore]] matching, heavy-edge when `weighted`, then
+    * [[coarsenWithMap]]'s contraction. The far end of each matched edge
+    * maps onto its near end, its representative; edges within one key
+    * drop; parallel coarse edges merge, their weight the sum of the fine
+    * weights when `weighted`, else the count of fine edges. Returns the
+    * matched edges in emission order and the coarse level, on the same
+    * vertex indices, each edge oriented by key, in first-seen order. */
+  private def localCoarsenStep(k: KeyedGraph, lvl: LocalGraph, weighted: Boolean,
+      rounds: Int): (Array[Int], LocalGraph) = {
+    val key = k.key
+    val matched = matchedEdges(localMatchCore(k, lvl, weighted, rounds))
+    val rep = Array.range(0, lvl.n)
+    matched.foreach(e => rep(lvl.dst(e)) = lvl.src(e))
+    val m = lvl.edgeCount
+    val at = new java.util.HashMap[java.lang.Long, Integer]()
+    val (ca, cb, cw) = (new Array[Int](m), new Array[Int](m), new Array[Long](m))
+    var c = 0
+    var e = 0
+    while (e < m) {
+      val (a, b) = (rep(lvl.src(e)), rep(lvl.dst(e)))
+      if (key(a) != key(b)) {
+        val (x, y) = if (key(a) < key(b)) (a, b) else (b, a)
+        val i0 = at.putIfAbsent((x.toLong << 32) | y, c)
+        val i = if (i0 == null) { ca(c) = x; cb(c) = y; c += 1; c - 1 } else i0.intValue
+        cw(i) += (if (weighted) lvl.weight(e) else 1L)
       }
-      j += 1
+      e += 1
     }
-    (cmap, agg.keysIterator.map(_._1).toArray,
-      agg.keysIterator.map(_._2).toArray, agg.valuesIterator.toArray)
+    (matched, new LocalGraph(lvl.ids, lvl.idx, lvl.idType, ca.take(c), cb.take(c), cw.take(c)))
   }
 
   /** Driver-side replay of the whole [[multilevelPartition]] V-cycle for
-    * the small regime — identical synchronous semantics. `rows` are the
-    * collected canonicalSimpleEdges(edges, None) rows (u, v, ul, vl, w):
-    * the numeric order keys arrive PRE-COMPUTED (so contraction
-    * orientation is exact for any id type), matching reuses
-    * [[localMatchCore]], the BLP phases reuse [[localBlpMap]], and the
-    * vertex-weight chain mirrors the distributed joins entry by entry. */
-  private def localMultilevelPartition(spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      idType: org.apache.spark.sql.types.DataType, numParts: Int,
-      matchRounds: Int, coarseRounds: Int, refineRounds: Int,
-      slackPct: Int, levels: Int): DataFrame = {
-    // id → numeric order key, exactly as the distributed plan computed it
-    val key = scala.collection.mutable.HashMap.empty[Any, Long]
-    rows.foreach { r => key(r.get(0)) = r.getLong(2); key(r.get(1)) = r.getLong(3) }
-    var eu = rows.map(_.get(0)); var ev = rows.map(_.get(1))
-    var ew = rows.map(_.getLong(4)) // = 1 per canonical pair at the fine level
-    // per level: (pairs, weights, weighted?, sparse vertex weights or null)
-    var graphs = List.empty[(Array[Any], Array[Any], Array[Long], Boolean,
-      scala.collection.mutable.HashMap[Any, Long])]
-    var cmaps = List.empty[Array[(Any, Any)]]
-    var curVw: scala.collection.mutable.HashMap[Any, Long] = null
-    def vwOf(vwm: scala.collection.mutable.HashMap[Any, Long], x: Any): Long =
-      if (vwm == null) 1L else vwm.getOrElse(x, 1L)
-    var l = 0
-    while (l < levels) {
-      graphs = ((eu, ev, ew, l > 0, curVw)) :: graphs
-      val (cmap, ceu, cev, cew) =
-        localCoarsenStep(eu, ev, ew, key, weighted = l > 0, matchRounds)
-      // vertex-weight chain: rep absorbs its partners' weights; untouched
-      // vertices carry their sparse entries up unchanged
-      val pw = scala.collection.mutable.HashMap.empty[Any, Long]
-      cmap.foreach { case (v, u) =>
-        pw(u) = pw.getOrElse(u, 0L) + vwOf(curVw, v) }
-      val nextVw = scala.collection.mutable.HashMap.empty[Any, Long]
-      pw.foreach { case (u, s) => nextVw(u) = vwOf(curVw, u) + s }
-      if (curVw != null) {
-        val touched = scala.collection.mutable.HashSet.empty[Any]
-        cmap.foreach { case (v, u) => touched += v; touched += u }
-        curVw.foreach { case (id, w) => if (!touched(id)) nextVw(id) = w }
-      }
-      curVw = nextVw
-      eu = ceu; ev = cev; ew = cew
-      cmaps = cmap :: cmaps
-      l += 1
+    * the small regime — identical synchronous semantics on the
+    * [[KeyedGraph]] of the canonical fine edges. Every level shares its
+    * vertex indices (a coarse vertex is its fine representative), so a
+    * contraction is its matched edges, vertex weights are one array per
+    * level, and the projection seeds a matched vertex with its
+    * representative's part. */
+  private def localMultilevelPartition(spark: SparkSession, k: KeyedGraph, numParts: Int,
+      matchRounds: Int, coarseRounds: Int, refineRounds: Int, slackPct: Int,
+      levels: Int): DataFrame = {
+    val g = k.g
+    val bucket = md5Buckets(g)
+    // DOWN the V: per level, fine first, its graph, vertex weights and
+    // matched edges; a representative absorbs its partner's weight
+    var down = List.empty[(LocalGraph, Array[Long], Array[Int])]
+    var lvl = g
+    var vw = Array.fill(g.n)(1L)
+    for (l <- 0 until levels) {
+      val (matched, coarse) = localCoarsenStep(k, lvl, weighted = l > 0, matchRounds)
+      down ::= ((lvl, vw, matched))
+      val next = vw.clone()
+      matched.foreach(e => next(lvl.src(e)) += vw(lvl.dst(e)))
+      vw = next
+      lvl = coarse
     }
-    // partition the coarsest graph under both weight chains
-    val vwAtCoarse = curVw
-    var asg: scala.collection.mutable.LinkedHashMap[Any, Int] =
-      localBlpMap(eu, ev, ew, numParts, coarseRounds, slackPct,
-        (_: Any) => None, x => vwOf(vwAtCoarse, x), vwProvided = true)
-    // UP the V: project through each contraction map, refine at that
-    // level's weights (weighted seeded BLP at deeper levels, plain at 0)
-    graphs.zip(cmaps).foreach { case ((leu, lev, lew, weighted, lvw), cmap) =>
-      val projected = scala.collection.mutable.HashMap.empty[Any, Int]
-      asg.foreach { case (id, p) => projected(id) = p }
-      cmap.foreach { case (v, u) =>
-        asg.get(u).foreach(p => projected(v) = p) }
-      asg = localBlpMap(leu, lev, lew, numParts, refineRounds, slackPct,
-        (x: Any) => projected.get(x), x => vwOf(lvw, x),
-        vwProvided = lvw != null)
+    // partition the coarsest graph under both weight chains, then UP the
+    // V: project through each level's matching and refine at that level
+    val (verts, part) = down.foldLeft(
+        localBlp(lvl, bucket, Array.fill(g.n)(-1), vw, numParts, coarseRounds, slackPct)) {
+      case ((_, part), (fine, fineVw, matched)) =>
+        val seed = part.clone()
+        matched.foreach(e => seed(fine.dst(e)) = part(fine.src(e)))
+        localBlp(fine, bucket, seed, fineVw, numParts, refineRounds, slackPct)
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("id", idType),
-      StructField("part", IntegerType)))
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](asg.size)
-    asg.foreach { case (id, p) => out.add(org.apache.spark.sql.Row(id, p)) }
-    spark.createDataFrame(out, schema)
+    partFrame(spark, g, verts, part)
   }
 
   /**
@@ -4222,14 +4137,8 @@ object GraphAlgorithms {
     // Gated on collected row count AND on replayable id types; weights
     // are already validated/cast to long by the collected plan.
     val idType = cn.schema("src").dataType
-    val localOk = idType match {
-      case org.apache.spark.sql.types.StringType
-           | org.apache.spark.sql.types.LongType
-           | org.apache.spark.sql.types.IntegerType
-           | org.apache.spark.sql.types.ShortType => true
-      case _ => false
-    }
-    if (localOk && localRowCap(edges.sparkSession, 2000000L).exists(nE <= _)) {
+    if (stringCastReplayable(idType) &&
+        localRowCap(edges.sparkSession, 2000000L).exists(nE <= _)) {
       val rows = cn.collect()
       cn.unpersist()
       return localFastRP(edges.sparkSession, rows, idType, dims, iterations)
@@ -4312,27 +4221,9 @@ object GraphAlgorithms {
       x = y
       t += 1
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(
-      StructField("id", idType) +:
-        (1 to iterations).flatMap(tt =>
-          (0 until dims).map(j => StructField(s"r${tt}_$j", LongType))))
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-    v = 0
-    while (v < n) {
-      val vals = new Array[Any](1 + iterations * dims)
-      vals(0) = ids(v)
-      var k = 1
-      var tt = 0
-      while (tt < iterations) {
-        var j = 0
-        while (j < dims) { vals(k) = snaps(tt)(v)(j); k += 1; j += 1 }
-        tt += 1
-      }
-      out.add(org.apache.spark.sql.Row.fromSeq(vals.toSeq))
-      v += 1
-    }
-    spark.createDataFrame(out, schema)
+    LocalGraph.frame(spark, ("id" -> idType) +: (1 to iterations).flatMap(t =>
+        (0 until dims).map(j => s"r${t}_$j" -> (LongType: DataType))),
+      (0 until n).map(v => Row.fromSeq(ids(v) +: snaps.toSeq.flatMap(_(v)))))
   }
 
   // ----- connected components ---------------------------------------------
