@@ -17,6 +17,13 @@ class PropertyGraphCacheSpec extends SparkSpec {
   private def multiset(df: DataFrame): Map[Row, Int] =
     df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
 
+  /** Unpersists `g`'s frames and waits until their blocks are gone, so no
+    * later test counts them in its storage baseline. */
+  private def release(g: PropertyGraph): Unit = {
+    g.nodes.unpersist(blocking = true)
+    g.edges.unpersist(blocking = true)
+  }
+
   test("cache() keeps every node and edge row") {
     val src = TpchBridge.bridgeGraph(spark, sf0001)
     val cached = TpchBridge.graph(spark, sf0001)
@@ -41,7 +48,7 @@ class PropertyGraphCacheSpec extends SparkSpec {
     try {
       assert(parts(empty.nodes) === 1 && parts(empty.edges) === 1)
       assert(empty.nodes.count() === 0L && empty.edges.count() === 0L)
-    } finally empty.unpersist()
+    } finally release(empty)
   }
 
   test("a frame with unknown size stats keeps its source partitioning") {
@@ -57,7 +64,7 @@ class PropertyGraphCacheSpec extends SparkSpec {
     try {
       assert(parts(g.nodes) === 7 && parts(g.edges) === 7)
       assert(g.nodes.count() === 70L)
-    } finally g.unpersist()
+    } finally release(g)
   }
 
   test("cache().unpersist() returns storage memory to its starting level") {
