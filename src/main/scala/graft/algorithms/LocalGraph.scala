@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
  * The driver-side graph every local regime replays on: the analogue of
  * the in-memory adjacency a JasmineGraph worker keeps per partition (the
  * `NodeBlock` edge heads, SURVEY §1.1). It is built once, from one gated
- * collect ([[GraphAlgorithms.collectInternedGated]]), and holds
+ * collect ([[GraphAlgorithms.collectInternedGated]], or [[LocalGraph.multi]]
+ * over a replay's own collect), and holds
  *  - `ids`, the interned vertex ids: the i-th distinct id met gets index
  *    i, so a replay's output order is the collected row order;
  *  - `idType`, the one type of every id ([[LocalGraph.typed]]);
@@ -101,9 +102,11 @@ private[graft] object LocalGraph {
     * two resolves to — the type the distributed paths emit, since they
     * take vertex sets as `src ∪ dst` unions. The one id-type rule: a
     * graph with INT `src` and BIGINT `dst` is a BIGINT graph on both
-    * paths. Casting to the column's own type is a no-op. */
+    * paths. Two columns of one type already agree, and `df` comes back
+    * as it is, without the ~20 ms of analysis the union costs. */
   def typed(df: DataFrame): DataFrame = {
     val Array(a, b) = df.columns.take(2)
+    if (df.schema(a).dataType == df.schema(b).dataType) return df
     val t = df.select(col(a).as("id")).unionByName(df.select(col(b).as("id")))
       .schema("id").dataType
     df.select(col(a).cast(t).as(a) +: col(b).cast(t).as(b) +:
