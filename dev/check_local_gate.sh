@@ -2,6 +2,10 @@
 # Keep the local-regime policy in one place. Fails (exit 1) when
 # src/main/scala has
 #   - a call to localRegimesEnabled( outside GraphAlgorithms.localRowCap,
+#   - a call to localRowCap( outside GraphAlgorithms.collectRowsGated, the
+#     one gate every regime gates and loads through (one probe collect),
+#     but for StreamingTriangles' check of its cumulative driver store,
+#   - any countGated (the retired count-then-collect gate shapes),
 #   - more than one `def intern(` (the shared LocalGraph.Interner),
 #   - a localThreshold parameter outside StreamingTriangles,
 #   - the removed spark.graft.kleene.localThreshold conf,
@@ -16,7 +20,8 @@
 #     LocalGraph.scala, not through createDataFrame over a java list), a
 #     per-replay ArrayBuffer.empty[Int] adjacency in GraphAlgorithms.scala
 #     (the replays read LocalGraph's CSR adjacencies), or a reference to
-#     the retired InternedEdges.
+#     the retired InternedEdges; a java.util.ArrayList in Sparql.scala
+#     (the Kleene replay emits through LocalGraph.frame too).
 #
 #   dev/check_local_gate.sh
 set -euo pipefail
@@ -34,6 +39,27 @@ calls=$(find "$src" -name '*.scala' -print0 | xargs -0 awk '
 if [ -n "$calls" ]; then
   echo "localRegimesEnabled( read outside GraphAlgorithms.localRowCap:"
   echo "$calls"
+  fail=1
+fi
+
+# every localRowCap( that is not its own def must sit in the body of
+# `def collectRowsGated`, StreamingTriangles aside
+caps=$(find "$src" -name '*.scala' ! -path '*/streaming/StreamingTriangles.scala' -print0 \
+  | xargs -0 awk '
+  FNR == 1 { cur = "" }
+  /def [A-Za-z_]+/ { match($0, /def [A-Za-z_]+/); cur = substr($0, RSTART + 4, RLENGTH - 4) }
+  /localRowCap\(/ && !/def localRowCap/ && cur != "collectRowsGated" {
+    print FILENAME ":" FNR ": " $0 }')
+if [ -n "$caps" ]; then
+  echo "localRowCap( read outside GraphAlgorithms.collectRowsGated (gate through one probe collect):"
+  echo "$caps"
+  fail=1
+fi
+
+counted=$(grep -rn --include='*.scala' 'countGated' "$src" || true)
+if [ -n "$counted" ]; then
+  echo "countGated is back (gate and load with collectRowsGated):"
+  echo "$counted"
   fail=1
 fi
 
@@ -83,9 +109,10 @@ if [ -n "$emitters" ] || [ "$(grep -c 'parallelize(' "$algs/LocalGraph.scala")" 
   fail=1
 fi
 
-lists=$(grep -n 'java\.util\.ArrayList' "$algs/GraphAlgorithms.scala" || true)
+lists=$(grep -n 'java\.util\.ArrayList' "$algs/GraphAlgorithms.scala" \
+  "$src/graft/sparql/Sparql.scala" || true)
 if [ -n "$lists" ]; then
-  echo "java.util.ArrayList emitter in GraphAlgorithms.scala (emit through LocalGraph.frame):"
+  echo "java.util.ArrayList emitter in GraphAlgorithms.scala or Sparql.scala (emit through LocalGraph.frame):"
   echo "$lists"
   fail=1
 fi

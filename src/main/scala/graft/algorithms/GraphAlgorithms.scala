@@ -25,16 +25,18 @@ object GraphAlgorithms {
     * the distributed path. Each regime passes its fixed row threshold; a
     * non-positive threshold means "never local", and every threshold is
     * hard-clamped at 100M rows, the sanity ceiling for a driver-side
-    * adjacency.
+    * adjacency. Its one reader is [[collectRowsGated]], through which
+    * every regime gates and loads (StreamingTriangles aside, which also
+    * caps the driver-side store its batches add up to).
     *
     * Global kill-switch (r18 verdict item 7): session conf
     * `spark.graft.localRegimes=off` (or env `SPARK_GRAFT_LOCAL_REGIMES=off`)
-    * returns None for every regime, so the gates launch no probe or
-    * count job at all and every operator takes its distributed path —
-    * the posture for a deployment whose data is always above the gates,
-    * and how the parity specs force the distributed path. Default on:
-    * the local-mode / bench posture, where the probes are cheap and the
-    * local regimes win (r18 measurements). */
+    * returns None for every regime, so the gates launch no probe job at
+    * all and every operator takes its distributed path — the posture for
+    * a deployment whose data is always above the gates, and how the
+    * parity specs force the distributed path. Default on: the local-mode
+    * / bench posture, where the probes are cheap and the local regimes
+    * win (r18 measurements). */
   private[graft] def localRowCap(spark: SparkSession, threshold: Long): Option[Long] =
     if (threshold > 0 && localRegimesEnabled(spark)) Some(math.min(threshold, 100000000L))
     else None
@@ -45,21 +47,15 @@ object GraphAlgorithms {
     v.forall(s => !(s.equalsIgnoreCase("off") || s.equalsIgnoreCase("false") || s == "0"))
   }
 
-  /** Count gate: true iff [[localRowCap]] admits `df` by its row count —
-    * one count job (`bounded`: an early-out `limit(cap+1)` count, so a
-    * huge frame is never fully counted), none when the switch is off. */
-  private[graft] def countGated(df: DataFrame, threshold: Long,
-      bounded: Boolean = false): Boolean =
-    localRowCap(df.sparkSession, threshold).exists { cap =>
-      (if (bounded) df.limit(cap.toInt + 1) else df).count() <= cap
-    }
-
-  /** Probe-collect gate: up to `probeCap` rows, one
+  /** The one local-regime gate: up to `probeCap` rows, one
     * `limit(probe+1).collect()` both GATES and LOADS in the same single
     * pass — None means over threshold (take the distributed path; the probe
-    * work was bounded by the limit), Some means every raw row is already
-    * on the driver. This beats a separate count job (which recomputes an
-    * unpersisted upstream once more for the collect) and beats
+    * work was bounded by the limit), Some means every row of `raw` is
+    * already on the driver. A regime probes its rows BEFORE any shuffle
+    * (raw edges, at most projected and filtered) and does the dedup and
+    * canonicalization in its driver pass, so the gate never pays for a
+    * shuffle the local path does not need. This beats a count job, which
+    * recomputes an unpersisted upstream once more for the collect, and
     * persist→count→collect (cache write + columnar decode both measured
     * slower than the straight collect). Only a threshold beyond the probe
     * cap lets an overflowing probe escalate to a count-only aggregate (no
@@ -108,6 +104,25 @@ object GraphAlgorithms {
     (if (undirected) e0.unionByName(e0.select(col("v").as("u"), col("u").as("v"))) else e0)
       .where(col("u") =!= col("v")).distinct()
   }
+
+  /** `df` eagerly checkpointed in one job: persisted first, as over the
+    * bare plan AQE runs each shuffle below it as a job of its own. */
+  private def checkpointOnce(df: DataFrame): DataFrame = {
+    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val cp = cached.localCheckpoint(true)
+    cached.unpersist()
+    cp
+  }
+
+  /** `edges` one row at a time, oriented as
+    * [[PropertyGraph.canonicalUndirected]] orients them — (least,
+    * greatest) as (src, dst), self-loops and null endpoints dropped —
+    * with the weight `w` as `__w`: the rows a symmetric replay probes,
+    * before the dedup its driver pass does. */
+  private def canonicalRows(edges: DataFrame, w: Column): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"), w.as("__w"))
+      .where(col("src") =!= col("dst"))
 
   /**
    * Exact triangle count. Reference: node-iterator over merged local +
@@ -964,8 +979,7 @@ object GraphAlgorithms {
   }
 
   def weightedRandomWalks(edges: DataFrame, starts: DataFrame, steps: Int,
-                          undirected: Boolean = true,
-                          narrowRowGate: Long = 2000000L): DataFrame = {
+                          undirected: Boolean = true): DataFrame = {
     require(steps >= 1, s"steps must be >= 1: $steps")
     import org.apache.spark.sql.expressions.Window
     // the gate counts the RAW edge frame (one shuffle-free scan) so the
@@ -988,7 +1002,7 @@ object GraphAlgorithms {
     val integral = integralIds(edges)
     val typed = LocalGraph.typed(
       edges.select(col("src"), col("dst"), col("weight").cast("long")))
-    val collected = if (integral) collectRowsGated(typed, narrowRowGate) else None
+    val collected = if (integral) collectRowsGated(typed, 2000000L) else None
     collected.filter(_.forall(r =>
         !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && r.getLong(2) > 0))
       .foreach { eRows =>
@@ -997,8 +1011,8 @@ object GraphAlgorithms {
           return localWeightedRandomWalks(g, startRows, steps, undirected, edges.sparkSession))
       }
     val small =
-      if (integral) collected.isDefined // overflow proves > narrowRowGate
-      else edges.count() <= narrowRowGate
+      if (integral) collected.isDefined // overflow proves > 2M rows
+      else edges.count() <= 2000000L
     withNarrowShuffle(edges.sparkSession, small) {
     val e0 = edges.select(col("src").as("u"), col("dst").as("v"),
       col("weight").cast("long").as("w"))
@@ -1174,17 +1188,13 @@ object GraphAlgorithms {
    */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = 20): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val both = orientedSimple(edges, undirected = true).persist(StorageLevel.MEMORY_AND_DISK)
     // Adaptive (the kCore/kTruss/HITS pattern): each distributed round
-    // costs several fixed-latency jobs; below 10M oriented edges the
+    // costs several fixed-latency jobs; below 5M raw edges the
     // synchronous rounds run driver-side with identical semantics
-    if (countGated(both, 10000000L)) {
-      val out = localMis(both, rounds)
-      both.unpersist()
-      return out
+    lcgGraph(edges).foreach { case (g, num) =>
+      return localMis(g, num, rounds, edges.sparkSession)
     }
-    val liveE0 = both.localCheckpoint(true)
-    both.unpersist()
+    val liveE0 = checkpointOnce(orientedSimple(edges, undirected = true))
     val live0 = liveE0.select(col("u").as("id")).distinct().localCheckpoint(true)
     // a round's delta is its winner set: no winner with live vertices left
     // can only mean live is empty (some live vertex always holds the
@@ -1240,23 +1250,28 @@ object GraphAlgorithms {
       lit(BigDecimal(2147483647L))).cast("long")
   }
 
-  /** The collected symmetric edge list `both` (u, v) of the MIS and
-    * coloring replays as a [[LocalGraph]] (read through `out`), with
-    * every vertex's `CAST(id AS BIGINT)` — the priority LCG's input,
-    * cast by Spark exactly as the distributed form casts it. */
-  private def symmetricGraph(both: DataFrame): (LocalGraph, Array[Long]) = {
-    val typed = LocalGraph.typed(both)
-    val rows = typed.selectExpr("u", "v", "CAST(u AS BIGINT)").collect()
-    val g = LocalGraph.simple(rows, typed.schema(0).dataType, canonical = false)
-    val num = new Array[Long](g.n)
-    rows.foreach(r => g.idx.get(r.get(0)).foreach(num(_) = r.getLong(2)))
-    (g, num)
+  /** The graph of the MIS and coloring replays: [[gatedGraph]]'s
+    * undirected load (read through `both`), its probe also carrying each
+    * endpoint's `CAST(id AS BIGINT)` — the priority LCG's input, cast by
+    * Spark exactly as the distributed rounds cast it — as `num`. */
+  private def lcgGraph(edges: DataFrame): Option[(LocalGraph, Array[Long])] = {
+    val typed = LocalGraph.typed(edges.select(col("src"), col("dst")))
+    collectRowsGated(typed.select(col("src"), col("dst"),
+        col("src").cast("long"), col("dst").cast("long")), 5000000L).map { rows =>
+      val g = LocalGraph.simple(rows, typed.schema(0).dataType, canonical = true)
+      val num = new Array[Long](g.n)
+      rows.foreach { r =>
+        g.idx.get(r.get(0)).foreach(num(_) = r.getLong(2))
+        g.idx.get(r.get(1)).foreach(num(_) = r.getLong(3))
+      }
+      (g, num)
+    }
   }
 
   /** Driver-side Luby rounds for [[maximalIndependentSet]]'s small
-    * regime — identical synchronous semantics over [[symmetricGraph]]. */
-  private def localMis(both: DataFrame, rounds: Int): DataFrame = {
-    val (g, num) = symmetricGraph(both)
+    * regime — identical synchronous semantics over [[lcgGraph]]. */
+  private def localMis(g: LocalGraph, num: Array[Long], rounds: Int,
+      spark: SparkSession): DataFrame = {
     val alive = Array.fill(g.n)(true)
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
     var r = 0
@@ -1265,17 +1280,17 @@ object GraphAlgorithms {
       val p = Array.tabulate(g.n)(i => if (!alive(i)) Long.MaxValue else
         math.floorMod(1103515245L * (num(i) * 1000003L + r * 101L) + 12345L, 2147483647L))
       val winners = (0 until g.n).filter { i =>
-        alive(i) && g.out.forall(i) { j =>
+        alive(i) && g.both.forall(i) { j =>
           !alive(j) || p(i) < p(j) || (p(i) == p(j) && num(i) < num(j))
         }
       }
       winners.foreach { i =>
         out += Row(g.ids(i), r)
         alive(i) = false
-        g.out.foreach(i)(alive(_) = false)
+        g.both.foreach(i)(alive(_) = false)
       }
     }
-    LocalGraph.frame(both.sparkSession, Seq("id" -> g.idType, "round" -> IntegerType), out.toSeq)
+    LocalGraph.frame(spark, Seq("id" -> g.idType, "round" -> IntegerType), out.toSeq)
   }
 
   /**
@@ -1297,19 +1312,15 @@ object GraphAlgorithms {
    * ready), one join of ready vertices against colored neighbors + a
    * grouped color-set, and two anti/semi-joins to shrink the live set —
    * all localCheckpointed, O(1) plan depth per round. Below
-   * 10M oriented edges the identical synchronous semantics run
+   * 5M raw edges the identical synchronous semantics run
    * driver-side (the adaptive kCore/HITS/MIS pattern).
    */
   def jpColoring(edges: DataFrame, rounds: Int = 30): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val both = orientedSimple(edges, undirected = true).persist(StorageLevel.MEMORY_AND_DISK)
-    if (countGated(both, 10000000L)) {
-      val out = localJp(both, rounds)
-      both.unpersist()
-      return out
+    lcgGraph(edges).foreach { case (g, num) =>
+      return localJp(g, num, rounds, edges.sparkSession)
     }
-    val allE = both.localCheckpoint(true)
-    both.unpersist()
+    val allE = checkpointOnce(orientedSimple(edges, undirected = true))
     val live0 = allE.select(col("u").as("id")).distinct()
       .select(col("id"), lcgPriority(col("id"), 101L).as("p")).localCheckpoint(true)
     val colored0 = live0.limit(0).select(col("id"), lit(0).as("color"))
@@ -1355,9 +1366,9 @@ object GraphAlgorithms {
   }
 
   /** Driver-side Jones–Plassmann rounds for [[jpColoring]]'s small
-    * regime — identical synchronous semantics over [[symmetricGraph]]. */
-  private def localJp(both: DataFrame, rounds: Int): DataFrame = {
-    val (g, num) = symmetricGraph(both)
+    * regime — identical synchronous semantics over [[lcgGraph]]. */
+  private def localJp(g: LocalGraph, num: Array[Long], rounds: Int,
+      spark: SparkSession): DataFrame = {
     val p = num.map(x => math.floorMod(1103515245L * (x * 1000003L + 101L) + 12345L, 2147483647L))
     val color = Array.fill(g.n)(-1)
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
@@ -1365,7 +1376,7 @@ object GraphAlgorithms {
     while (r < rounds && color.contains(-1)) {
       r += 1
       val ready = (0 until g.n).filter { i =>
-        color(i) < 0 && g.out.forall(i) { j =>
+        color(i) < 0 && g.both.forall(i) { j =>
           color(j) >= 0 || p(i) > p(j) || (p(i) == p(j) && num(i) > num(j))
         }
       }
@@ -1373,12 +1384,12 @@ object GraphAlgorithms {
       // colors fixed in earlier rounds
       ready.foreach { i =>
         val used = scala.collection.mutable.BitSet.empty
-        g.out.foreach(i)(j => if (color(j) >= 0) used += color(j))
+        g.both.foreach(i)(j => if (color(j) >= 0) used += color(j))
         color(i) = Iterator.from(0).find(!used(_)).get
         out += Row(g.ids(i), color(i), r)
       }
     }
-    LocalGraph.frame(both.sparkSession,
+    LocalGraph.frame(spark,
       Seq("id" -> g.idType, "color" -> IntegerType, "round" -> IntegerType), out.toSeq)
   }
 
@@ -1405,16 +1416,15 @@ object GraphAlgorithms {
    * edge list (edges explode to exactly 2 endpoint rows) + one
    * two-sided equi-join back + two anti-joins, all localCheckpointed —
    * O(1) plan depth per round, and the live edge set only shrinks.
-   * Below 10M canonical edges the identical synchronous semantics
+   * Below 10M raw edges the identical synchronous semantics
    * run driver-side (the adaptive kCore/HITS/MIS pattern).
    */
   def maximalMatching(edges: DataFrame, rounds: Int = 20,
                       weightCol: Option[String] = None): DataFrame = {
-    val canon = canonicalSimpleEdges(edges, weightCol)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val out = matchingOnCanon(canon, rounds, weighted = weightCol.isDefined)
-    canon.unpersist() // both paths materialize eagerly (collect / localCheckpoint)
-    out
+    require(rounds >= 1, s"rounds must be >= 1: $rounds")
+    keyedGraph(edges, weightCol, 10000000L).foreach(k =>
+      return localMatching(k, rounds, weightCol.isDefined, edges.sparkSession))
+    matchingRounds(canonicalSimpleEdges(edges, weightCol), rounds, weightCol.isDefined)
   }
 
   /** Canonical simple undirected edge list: u < v on the BIGINT cast,
@@ -1432,28 +1442,39 @@ object GraphAlgorithms {
     * can at worst share a tie-break priority, never lose or merge an
     * edge. */
   private def canonicalSimpleEdges(edges: DataFrame,
-                                   weightCol: Option[String] = None): DataFrame = {
-    val w = weightCol.map(c => col(c).cast("long")).getOrElse(lit(1L))
-    val e0 = edges.select(col("src").as("a"), col("dst").as("b"), w.as("w"))
-      .withColumn("al", orderKey(col("a")))
-      .withColumn("bl", orderKey(col("b")))
-      .where(col("a").cast("string") =!= col("b").cast("string"))
-    // orientation: numeric key first, original string order on key ties
-    val aFirst = col("al") < col("bl") ||
-      (col("al") === col("bl") && col("a").cast("string") < col("b").cast("string"))
+                                   weightCol: Option[String] = None): DataFrame =
     // parallel edges collapse to one canonical edge; with a weight
     // column their weights ADD (multigraph semantics, the coarsening
     // convention), without one the canonical edge carries w = 1
-    e0.select(
-      when(aFirst, col("a")).otherwise(col("b")).as("u"),
-      when(aFirst, col("b")).otherwise(col("a")).as("v"),
-      least(col("al"), col("bl")).as("ul"),
-      greatest(col("al"), col("bl")).as("vl"),
-      col("w"))
+    orientedKeyed(edges, weightCol, loopsByKey = false)
       .groupBy("u", "v") // exact id pair — colliding keys never merge edges
       .agg(min(col("ul")).as("ul"), min(col("vl")).as("vl"),
         (if (weightCol.isDefined) sum(col("w")) else lit(1L)).as("w"))
       .select(col("u"), col("v"), col("ul"), col("vl"), col("w"))
+
+  /** The contraction family's edges one row at a time, before any
+    * dedup: (u, v, w, ul, vl), `w` the BIGINT `weightCol` (else 1),
+    * (ul, vl) the order keys, u before v by key and, on a key tie, by
+    * the ids' string order. Self-loops drop — on the ids' string forms
+    * (null endpoints with them), or with `loopsByKey` on equal keys. A
+    * projection with no shuffle: the rows [[keyedProbe]] probes, and the
+    * input of the distributed plans' grouping. */
+  private def orientedKeyed(edges: DataFrame, weightCol: Option[String],
+      loopsByKey: Boolean): DataFrame = {
+    val w = weightCol.fold(lit(1L))(c => col(c).cast("long"))
+    val e0 = edges.select(col("src").as("a"), col("dst").as("b"), w.as("w"))
+      .withColumn("al", orderKey(col("a")))
+      .withColumn("bl", orderKey(col("b")))
+      .where(if (loopsByKey) col("al") =!= col("bl")
+        else col("a").cast("string") =!= col("b").cast("string"))
+    val aFirst = col("al") < col("bl") ||
+      (col("al") === col("bl") && col("a").cast("string") < col("b").cast("string"))
+    e0.select(
+      when(aFirst, col("a")).otherwise(col("b")).as("u"),
+      when(aFirst, col("b")).otherwise(col("a")).as("v"),
+      col("w"),
+      least(col("al"), col("bl")).as("ul"),
+      greatest(col("al"), col("bl")).as("vl"))
   }
 
   /** The contraction family's numeric order key of an id: its BIGINT
@@ -1463,12 +1484,12 @@ object GraphAlgorithms {
 
   /** The driver-side graph of the contraction family: the canonical
     * (u, v, w) rows of [[canonicalSimpleEdges]] (or, for
-    * [[minimumSpanningForest]], its (ou, ov, w) rows) as a [[LocalGraph]]
-    * multigraph with `weight` = w, plus each vertex's Spark-computed
-    * order `key` (ul/vl) and its key class `cls`, the first vertex with
-    * its key. The distributed rounds group endpoints by key, so two ids
-    * whose hashed keys collide are one endpoint there, and one class
-    * here. Every coarse level of a V-cycle reuses this interning: a
+    * [[minimumSpanningForest]], its lightest edge per key pair) as a
+    * [[LocalGraph]] multigraph with `weight` = w, plus each vertex's
+    * Spark-computed order `key` (ul/vl) and its key class `cls`, the
+    * first vertex with its key. The distributed rounds group endpoints
+    * by key, so two ids whose hashed keys collide are one endpoint
+    * there, and one class here. Every coarse level of a V-cycle reuses this interning: a
     * coarse vertex is its fine representative. */
   private final class KeyedGraph(val g: LocalGraph, val key: Array[Long]) {
     val cls: Array[Int] = {
@@ -1480,27 +1501,35 @@ object GraphAlgorithms {
     }
   }
 
-  /** The [[KeyedGraph]] of `canon`'s (u, v, w, ul, vl) rows, the id
-    * columns named `u` and `v`. */
-  private def keyedGraph(canon: DataFrame, u: String, v: String): KeyedGraph = {
-    val typed = LocalGraph.typed(canon.select(u, v, "w", "ul", "vl"))
-    val rows = typed.collect()
-    val g = LocalGraph.multi(rows, typed.schema(0).dataType)
-    val key = new Array[Long](g.n)
-    rows.indices.foreach { e =>
-      key(g.src(e)) = rows(e).getLong(3); key(g.dst(e)) = rows(e).getLong(4)
-    }
-    new KeyedGraph(g, key)
-  }
+  /** The [[KeyedGraph]] of `edges` for matching and coarsening, gated
+    * and loaded by one probe of its [[orientedKeyed]] rows (None above
+    * `threshold` rows), deduplicated here as [[canonicalSimpleEdges]]
+    * groups them: by exact id pair, weights summed with a `weightCol`. */
+  private def keyedGraph(edges: DataFrame, weightCol: Option[String],
+      threshold: Long): Option[KeyedGraph] =
+    keyedProbe(orientedKeyed(edges, weightCol, loopsByKey = false), threshold)(
+      LocalGraph.mergedPairs(_, summed = weightCol.isDefined))
 
-  /** [[maximalMatching]]'s adaptive dispatch over an already-canonical
-    * (persisted) edge frame. */
-  private def matchingOnCanon(canon: DataFrame, rounds: Int,
-                              weighted: Boolean = false): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    if (countGated(canon, 10000000L)) {
-      return localMatching(canon, rounds, weighted)
+  /** The [[KeyedGraph]] of the canonical rows `dedup` makes of one
+    * probe of the (u, v, w, ul, vl) frame `oriented`. None above
+    * `threshold` rows or on a null weight, which Spark's sum and min
+    * skip: the distributed path answers those. */
+  private def keyedProbe(oriented: DataFrame, threshold: Long)(
+      dedup: Array[Row] => Array[Row]): Option[KeyedGraph] =
+    collectRowsGated(oriented, threshold).filter(_.forall(!_.isNullAt(2))).map { raw =>
+      val rows = dedup(raw)
+      val g = LocalGraph.multi(rows, oriented.schema("u").dataType)
+      val key = new Array[Long](g.n)
+      rows.indices.foreach { e =>
+        key(g.src(e)) = rows(e).getLong(3); key(g.dst(e)) = rows(e).getLong(4)
+      }
+      new KeyedGraph(g, key)
     }
+
+  /** [[maximalMatching]]'s distributed rounds over the canonical edge
+    * frame `canon`. */
+  private def matchingRounds(canon: DataFrame, rounds: Int, weighted: Boolean): DataFrame = {
+    require(rounds >= 1, s"rounds must be >= 1: $rounds")
     val liveE0 = canon.localCheckpoint(true)
     // a round's delta is its winner set: a live edge always holds the
     // global minimum key, so no winner means no live edge
@@ -1603,12 +1632,11 @@ object GraphAlgorithms {
 
   /** Driver-side rounds for [[maximalMatching]]'s small regime —
     * identical synchronous semantics on the [[KeyedGraph]]. */
-  private def localMatching(canon: DataFrame, rounds: Int,
-                            weighted: Boolean = false): DataFrame = {
-    val k = keyedGraph(canon, "u", "v")
+  private def localMatching(k: KeyedGraph, rounds: Int, weighted: Boolean,
+      spark: SparkSession): DataFrame = {
     val g = k.g
     val round = localMatchCore(k, g, weighted, rounds)
-    LocalGraph.frame(canon.sparkSession,
+    LocalGraph.frame(spark,
       Seq("u" -> g.idType, "v" -> g.idType, "round" -> IntegerType),
       matchedEdges(round).map(e => Row(g.ids(g.src(e)), g.ids(g.dst(e)), round(e))).toSeq)
   }
@@ -1643,14 +1671,13 @@ object GraphAlgorithms {
     * solution back onto the fine graph. */
   private[graft] def coarsenWithMap(edges: DataFrame, rounds: Int = 20,
                    weightCol: Option[String] = None): (DataFrame, DataFrame) = {
-    // adaptive local regime (the multilevelPartition pattern): matching
-    // already ran driver-side below its 10M gate, but the contraction
-    // joins + grouped merge were still 4-6 eager jobs over edge-sized
-    // frames. Below the raw 2M-row limit-count pre-gate the whole level
-    // replays locally from the collected canonical rows — the ul/vl
-    // numeric order keys arrive pre-computed, so no id-type gate is needed.
-    if (countGated(edges.select(col("src")), 2000000L, bounded = true)) {
-      val k = keyedGraph(canonicalSimpleEdges(edges, weightCol), "u", "v")
+    // adaptive local regime (the multilevelPartition pattern): the
+    // matching rounds, the contraction joins and the grouped merge are
+    // eager jobs over edge-sized frames. Below 2M raw edges the whole
+    // level replays locally from one probe of the oriented rows — the
+    // ul/vl numeric order keys arrive pre-computed, so no id-type gate is
+    // needed.
+    keyedGraph(edges, weightCol, 2000000L).foreach { k =>
       val g = k.g
       val (matched, coarse) = localCoarsenStep(k, g, weightCol.isDefined, rounds)
       val spark = edges.sparkSession
@@ -1668,7 +1695,7 @@ object GraphAlgorithms {
     // level absorbs) and coarse edges SUM the fine weights they absorb,
     // so levels chain: coarsenGraph(coarsenGraph(e, weightCol=...),
     // weightCol = Some("weight")) is the multilevel loop
-    val m = matchingOnCanon(canon, rounds, weighted = weightCol.isDefined)
+    val m = matchingRounds(canon, rounds, weighted = weightCol.isDefined)
     val mapped = canon
       .join(m.select(col("v").as("u"), col("u").as("su")), Seq("u"), "left")
       .join(m.select(col("v"), col("u").as("sv")), Seq("v"), "left")
@@ -1714,42 +1741,27 @@ object GraphAlgorithms {
    * coarse edge list (per-label best edge), a handful of label-sized
    * self-joins for the pointer jumps (labels at least halve per round),
    * and one grouped min to merge parallel coarse edges — all
-   * localCheckpointed, O(1) plan depth per step. Below 10M canonical
+   * localCheckpointed, O(1) plan depth per step. Below 10M raw
    * edges the identical synchronous semantics run driver-side (the
    * adaptive kCore/HITS/MIS pattern).
    */
   def minimumSpanningForest(edges: DataFrame, weightCol: String = "weight",
                             rounds: Int = 12): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    // canonical fine edges with the min weight among parallel edges;
-    // (ou, ov) keep the original id type for the output
-    val e0 = edges.select(col("src").as("a"), col("dst").as("b"),
-        col(weightCol).cast("long").as("w"))
-      .withColumn("al", orderKey(col("a")))
-      .withColumn("bl", orderKey(col("b")))
-      .where(col("al") =!= col("bl"))
-    val canon = e0.select(
-        when(col("al") < col("bl"), col("a")).otherwise(col("b")).as("ou"),
-        when(col("al") < col("bl"), col("b")).otherwise(col("a")).as("ov"),
-        least(col("al"), col("bl")).as("ul"),
-        greatest(col("al"), col("bl")).as("vl"),
-        col("w"))
-      .groupBy("ul", "vl")
-      .agg(min(struct(col("w"), col("ou"), col("ov"))).as("m"))
-      .select(col("m.ou").as("ou"), col("m.ov").as("ov"),
-        col("ul"), col("vl"), col("m.w").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (countGated(canon, 10000000L)) {
-      val out = localBoruvka(canon, rounds)
-      canon.unpersist()
-      return out
-    }
+    // fine edges by key pair, (u, v) keeping the original id type for the
+    // output; of parallel edges the lightest under (w, u, v) stays
+    val oriented = orientedKeyed(edges, Some(weightCol), loopsByKey = true)
+    keyedProbe(oriented, 10000000L)(LocalGraph.merged(_, r => (r.getLong(3), r.getLong(4))) {
+      (a, b) => if (lighter(b, a)) b else a
+    }).foreach(k => return localBoruvka(k, rounds, edges.sparkSession))
     // coarse edge state: (cu, cv) current component labels (cu < cv),
     // (ou, ov, ul, vl, w) the best underlying fine edge (ul/vl carry the
     // numeric order keys so merges tie-break numerically for any id type)
-    val (active0, activeCnt) = Fixpoint.materialize(canon.select(col("ul").as("cu"),
-      col("vl").as("cv"), col("ou"), col("ov"), col("ul"), col("vl"), col("w")))
-    canon.unpersist()
+    val (active0, activeCnt) = Fixpoint.materialize(oriented
+      .groupBy("ul", "vl")
+      .agg(min(struct(col("w"), col("u"), col("v"))).as("m"))
+      .select(col("ul").as("cu"), col("vl").as("cv"), col("m.u").as("ou"),
+        col("m.v").as("ov"), col("ul"), col("vl"), col("m.w").as("w")))
     // a round's delta is the contracted coarse edge list: the forest is
     // spanning once no coarse edge is left
     val ((_, forest), _) = Fixpoint.run((active0, active0.limit(0).select(col("ou").as("u"),
@@ -1801,12 +1813,19 @@ object GraphAlgorithms {
     forest
   }
 
+  /** Whether the (u, v, w, …) edge row `a` sorts before `b` under
+    * [[minimumSpanningForest]]'s min(struct(w, u, v)). */
+  private def lighter(a: Row, b: Row): Boolean = {
+    val c = java.lang.Long.compare(a.getLong(2), b.getLong(2))
+    val cu = if (c != 0) c else LocalGraph.compareIds(a.get(0), b.get(0))
+    (if (cu != 0) cu else LocalGraph.compareIds(a.get(1), b.get(1))) < 0
+  }
+
   /** Driver-side Borůvka rounds for [[minimumSpanningForest]]'s small
     * regime — identical synchronous semantics on the [[KeyedGraph]] of
     * the canonical fine edges. A component is labelled by a key class
     * and ordered by its key, as the distributed labels are the keys. */
-  private def localBoruvka(canon: DataFrame, rounds: Int): DataFrame = {
-    val k = keyedGraph(canon, "ou", "ov")
+  private def localBoruvka(k: KeyedGraph, rounds: Int, spark: SparkSession): DataFrame = {
     val (g, key) = (k.g, k.key)
     // coarse edges: labels cu < cv by key, each with its best fine edge
     var cu = g.src.map(k.cls)
@@ -1861,7 +1880,7 @@ object GraphAlgorithms {
       }
       cu = nu.take(c); cv = nv.take(c); fine = nf.take(c)
     }
-    LocalGraph.frame(canon.sparkSession,
+    LocalGraph.frame(spark,
       Seq("u" -> g.idType, "v" -> g.idType, "weight" -> LongType),
       forest.result().map(f => Row(g.ids(g.src(f)), g.ids(g.dst(f)), g.weight(f))).toSeq)
   }
@@ -1895,9 +1914,10 @@ object GraphAlgorithms {
     // leading zero bits of the 64-bit value in bytes 1..8, 65 when
     // zero — the hex-digit arithmetic of Sketches.hllBucket/hllRho in
     // byte form), gated on id types whose toString mirrors
-    // cast-to-string; the raw 2M-row limit-count pre-gate keeps the
-    // large regime's cost identical. Register max-merge is idempotent, so
-    // collected duplicate edges need no local distinct.
+    // cast-to-string; the probe of the loop-free raw rows is bounded at
+    // 2M, so the large regime pays no more than the limit. Register
+    // max-merge is idempotent, so collected duplicate edges need no local
+    // distinct.
     sketchGraph(edges).flatMap(localNeighborhoodRegisters(edges.sparkSession, _, hops,
       undirected)).foreach(local => return local)
     val e = orientedSimple(edges, undirected).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1922,15 +1942,14 @@ object GraphAlgorithms {
 
   /** The neighbourhood sketch's driver-side graph: `edges`' loop-free
     * (src, dst) rows as a [[LocalGraph]] multigraph, ids typed by
-    * [[LocalGraph.typed]]. None above the raw 2M-row limit-count gate or
-    * for an id type whose string form Spark's cast does not mirror. */
+    * [[LocalGraph.typed]]. None above 2M such rows or for an id type
+    * whose string form Spark's cast does not mirror. */
   private def sketchGraph(edges: DataFrame): Option[LocalGraph] = {
     val e0 = LocalGraph.typed(edges.select(col("src").as("u"), col("dst").as("v")))
       .where(col("u") =!= col("v"))
     val idType = e0.schema("u").dataType
-    if (stringCastReplayable(idType) &&
-        countGated(edges.select(col("src")), 2000000L, bounded = true))
-      Some(LocalGraph.multi(e0.collect(), idType))
+    if (stringCastReplayable(idType))
+      collectRowsGated(e0, 2000000L).map(LocalGraph.multi(_, idType))
     else None
   }
 
@@ -2511,10 +2530,10 @@ object GraphAlgorithms {
     * identity). Returns surviving canonical edges (src < dst) with their
     * support in the surviving graph.
     *
-    * Adaptive (the [[closenessCentrality]]/SCC pattern): ≤ 10M
-    * canonical edges → driver-side peel over adjacency sets (each
-    * distributed round costs several fixed-latency jobs, the dominant
-    * term on small graphs); above → the DataFrame loop. */
+    * Adaptive (the [[kCore]] pattern): ≤ 10M raw edges → driver-side
+    * peel over adjacency sets (each distributed round costs several
+    * fixed-latency jobs, the dominant term on small graphs); above → the
+    * DataFrame loop. */
   def kTruss(edges: DataFrame, k: Int, rounds: Int): DataFrame =
     kTrussImpl(edges, k, rounds)._1
 
@@ -2526,9 +2545,12 @@ object GraphAlgorithms {
 
   private[graft] def kTrussImpl(edges: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
     require(k >= 2, s"k must be >= 2: $k")
-    val (e0, n) = Fixpoint.materialize(PropertyGraph.canonicalUndirected(edges))
-    if (localRowCap(edges.sparkSession, 10000000L).exists(n <= _))
-      return localKTruss(e0, k, rounds)
+    // one probe of the rows canonicalUndirected orients before its dedup,
+    // which the driver-side intern pass does
+    collectInternedGated(canonicalRows(edges, lit(1L)).drop("__w"), canonical = false,
+        10000000L)
+      .foreach(g => return localKTruss(g, k, rounds, edges.sparkSession))
+    val e0 = PropertyGraph.canonicalUndirected(edges).localCheckpoint(true)
     // each round checkpoints the support of the surviving edges, counting
     // the edges below k - 2 (its delta) in the same job
     val (e, executed) = Fixpoint.run(e0, rounds) { (e, _) =>
@@ -2541,10 +2563,10 @@ object GraphAlgorithms {
   /** Driver-side synchronous peel for [[kTruss]]'s small regime: support
     * by adjacency-set intersection, all below-threshold edges removed
     * per round — identical round semantics to the DataFrame loop. */
-  private def localKTruss(cn: DataFrame, k: Int, rounds: Int): (DataFrame, Int) = {
-    // the canonical (src < dst) rows, read as ordered pairs so each edge
-    // keeps that orientation
-    val g = LocalGraph.simple(cn.collect(), cn.schema("src").dataType, canonical = false)
+  private def localKTruss(g: LocalGraph, k: Int, rounds: Int,
+      spark: SparkSession): (DataFrame, Int) = {
+    // `g` holds the canonical (src < dst) pairs as ordered pairs, so each
+    // edge keeps that orientation
     val nbrs = Array.tabulate(g.n) { v =>
       val set = scala.collection.mutable.HashSet.empty[Int]
       g.both.foreach(v)(set += _)
@@ -2566,7 +2588,7 @@ object GraphAlgorithms {
         dead.foreach { case (a, b) => nbrs(a) -= b; nbrs(b) -= a }
       }
     }
-    (LocalGraph.frame(cn.sparkSession,
+    (LocalGraph.frame(spark,
       Seq("src" -> g.idType, "dst" -> g.idType, "support" -> LongType),
       live.toSeq.map { case (a, b) => Row(g.ids(a), g.ids(b), support(a, b)) }), executed)
   }
@@ -2661,7 +2683,7 @@ object GraphAlgorithms {
     val ids = e.select(col("src").as("id")).unionByName(e.select(col("dst").as("id")))
       .distinct().localCheckpoint(true)
     // gate the shuffle_hash hint on the vertex count (the egonets /
-    // balancedPartition broadcastRowGate discipline): the hash build
+    // balancedPartition broadcast-gate discipline): the hash build
     // has no sort-merge fallback, so a huge or skewed vertex set could
     // OOM a per-partition build where SMJ would spill. ≤100M (id, long)
     // rows ≈ a few GB split across the wide-AQE partition count — safe;
@@ -2858,8 +2880,8 @@ object GraphAlgorithms {
    *
    * Join strategy is GATED, not left to the planner: the membership is
    * already materialized (the tagged joins read it twice), so one
-   * driver-side count decides — ≤ `broadcastRowGate` membership rows
-   * (default 2M ≈ tens of MB of ids, fine for any executor) hints
+   * driver-side count decides — ≤ 2M membership rows (tens of MB of
+   * ids, fine for any executor) hints
    * broadcast on all four probe sides and the edge list is only
    * SCANNED, never exchanged; above the gate the hint is withheld and
    * the joins shuffle on the edge keys, the only correct shape for
@@ -2870,8 +2892,7 @@ object GraphAlgorithms {
    * → 57 s (prune, SMJ) → the gated-broadcast plan with zero edge
    * exchanges.
    */
-  def egonets(g: PropertyGraph, egos: DataFrame,
-              broadcastRowGate: Long = 2000000L): DataFrame = {
+  def egonets(g: PropertyGraph, egos: DataFrame): DataFrame = {
     val es = g.orientedEdges.select(col("src"), col("dst"))
     val e = egos.select(col(egos.columns.head).cast("string").as("ego")).distinct()
     val (members, nMembers) = Fixpoint.materialize(es.join(e, col("src") === col("ego"))
@@ -2880,7 +2901,7 @@ object GraphAlgorithms {
         .select(col("ego"), col("src").as("m")))
       .unionByName(e.select(col("ego"), col("ego").as("m")))
       .distinct())
-    val small = nMembers <= broadcastRowGate
+    val small = nMembers <= 2000000L
     def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val dm = members.select(col("m")).distinct().localCheckpoint(true)
     val esp = es
@@ -3553,8 +3574,8 @@ object GraphAlgorithms {
    * grouped count + a ≤P-row load table joined broadcast — no driver
    * funnel, no quadratics; localCheckpoint truncates the growing
    * lineage exactly like louvain/kCore. The vertex count (already on
-   * the driver for the capacity) gates the join strategy: ≤
-   * `broadcastRowGate` vertices hints broadcast on every vertex-sized
+   * the driver for the capacity) gates the join strategy: ≤ 2M
+   * vertices hints broadcast on every vertex-sized
    * probe side, so the edge list is only SCANNED per round, never
    * exchanged (the checkpointed assignment is a statless LogicalRDD —
    * left alone the static planner sort-merge-joins the edge list every
@@ -3661,7 +3682,6 @@ object GraphAlgorithms {
 
   def balancedPartition(edges: DataFrame, numParts: Int, rounds: Int = 4,
                         slackPct: Int = 10,
-                        broadcastRowGate: Long = 2000000L,
                         init: Option[DataFrame] = None,
                         edgeWeightCol: Option[String] = None,
                         vertexWeights: Option[DataFrame] = None): DataFrame = {
@@ -3674,35 +3694,25 @@ object GraphAlgorithms {
     // that many fine vertices) — the coarse rounds then optimize the
     // FINE cut under the FINE balance constraint exactly. Parallel
     // weighted edges merge additively; both stay exact BIGINTs.
-    val cnPlan = edgeWeightCol match {
-      case None => PropertyGraph.canonicalUndirected(edges)
-        .select(col("src"), col("dst"), lit(1L).as("__w"))
-      case Some(wc) => edges
-        .select(least(col("src"), col("dst")).as("src"),
-          greatest(col("src"), col("dst")).as("dst"),
-          col(wc).cast("long").as("__w"))
-        .where(col("src") =!= col("dst"))
-        .groupBy("src", "dst").agg(sum(col("__w")).as("__w"))
-    }
+    val oriented = canonicalRows(edges,
+      edgeWeightCol.fold(lit(1L))(wc => col(wc).cast("long")))
     // adaptive local regime (the fastRP/kCore/matching pattern): below
     // 2M raw edges every BLP round is a latency-floor
     // eager checkpoint job over a frame the driver holds easily, so the
-    // IDENTICAL synchronous semantics replay driver-side. The
-    // canonicalization plan still computes (src, dst, __w); the only
-    // local re-derivation is hllBucket's first md5 byte, gated on id
-    // types whose toString mirrors Spark's cast-to-string. The gate
-    // itself reads the RAW edge count via an early-out limit (the
-    // triangleCountDF precedent — raw ≥ canonical, so a small raw proves
-    // the canonical side small without materializing it), which keeps
-    // the large regime's cost identical to before: no probe shuffle, no
-    // extra pass. Seeds and vertex weights are themselves gated collects
-    // (vertex-sized); any overflow falls through to distributed rounds.
-    val rawSmall = stringCastReplayable(cnPlan.schema("src").dataType) &&
-      countGated(edges.select(col("src")), 2000000L, bounded = true)
-    if (rawSmall) {
+    // IDENTICAL synchronous semantics replay driver-side. One probe of
+    // the oriented rows (the triangleCountDF precedent: raw ≥ canonical,
+    // and no shuffle before the gate) gates and loads; the driver merges
+    // parallel edges as the distributed grouping does. The only local
+    // re-derivation is hllBucket's first md5 byte, gated on id types
+    // whose toString mirrors Spark's cast-to-string. Seeds and vertex
+    // weights are themselves gated collects (vertex-sized); any overflow
+    // falls through to distributed rounds.
+    val idType = oriented.schema("src").dataType
+    val probed = if (stringCastReplayable(idType)) collectRowsGated(oriented, 2000000L)
+      else None
+    probed.filter(_.forall(!_.isNullAt(2))).foreach { raw =>
       // seed and weight ids cast to the graph's id type (an id that does
       // not cast matches no vertex, as in the distributed join)
-      val idType = cnPlan.schema("src").dataType
       def idRows(df: DataFrame): Option[Array[Row]] = collectRowsGated(
         df.select(col("id").try_cast(idType), col(df.columns(1))), 2000000L)
       // a seed outside [0, numParts) would index the local load/cnt/k
@@ -3716,7 +3726,7 @@ object GraphAlgorithms {
         vwDf.select(col(vwDf.columns.head).as("id"), col(vwDf.columns(1)).cast("long"))))
       (seeds, weights) match {
         case (Some(sd), Some(vws)) =>
-          val rows = cnPlan.collect()
+          val rows = LocalGraph.mergedPairs(raw, summed = edgeWeightCol.isDefined)
           if (rows.length * 2L * numParts <= 64000000L) {
             val g = LocalGraph.multi(rows, idType)
             val seed = Array.fill(g.n)(-1)
@@ -3730,7 +3740,10 @@ object GraphAlgorithms {
         case _ => ()
       }
     }
-    val cn = cnPlan.localCheckpoint(true)
+    // parallel weighted edges merge additively; unweighted, one per pair
+    val cn = oriented.groupBy("src", "dst")
+      .agg((if (edgeWeightCol.isDefined) sum(col("__w")) else lit(1L)).as("__w"))
+      .localCheckpoint(true)
     // lazy over the checkpointed canonical set: materializing the
     // doubled orientation would write the edge list twice for no reuse
     // the cn blocks don't already give
@@ -3738,7 +3751,7 @@ object GraphAlgorithms {
       .unionByName(cn.select(col("dst").as("u"), col("src").as("v"), col("__w")))
     val verts = nb.select(col("u").as("id")).distinct()
     val n = verts.count()
-    val small = n <= broadcastRowGate
+    val small = n <= 2000000L
     def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val bucket = graft.pipeline.Sketches.hllBucket(col("id"))
     // `init`: (id, part) seed assignment (the multilevel projection);
@@ -3832,7 +3845,6 @@ object GraphAlgorithms {
   def multilevelPartition(edges: DataFrame, numParts: Int,
                           matchRounds: Int = 12, coarseRounds: Int = 4,
                           refineRounds: Int = 2, slackPct: Int = 10,
-                          broadcastRowGate: Long = 2000000L,
                           levels: Int = 1): DataFrame = {
     require(numParts >= 2, s"numParts must be >= 2: $numParts")
     require(matchRounds >= 1 && coarseRounds >= 1 && refineRounds >= 1,
@@ -3841,22 +3853,17 @@ object GraphAlgorithms {
     // adaptive local regime: the whole V-cycle (matching, contraction,
     // vertex-weight chain, coarse BLP, projection, per-level refine) is
     // a long chain of eager vertex/edge-sized jobs — pure iteration
-    // floor below the gate. canonicalSimpleEdges still computes the
-    // canonical pairs AND the numeric order keys (ul/vl — including the
-    // xxhash64 branch for non-numeric ids) distributed, so the local
-    // replay needs no key re-derivation; matching reuses the exact
-    // localMatchCore; the only other local re-derivation is the BLP md5
-    // bucket, gated by stringCastReplayable like balancedPartition.
-    val canon = canonicalSimpleEdges(edges, None)
-    if (stringCastReplayable(canon.schema("u").dataType) &&
-        countGated(edges.select(col("src")), 2000000L, bounded = true)) {
-      // raw ≥ canonical (the balancedPartition raw pre-gate), so the
-      // collect below is bounded by the limit-count that just passed
-      val k = keyedGraph(canon, "u", "v")
-      if (k.g.edgeCount * 2L * numParts <= 64000000L)
-        return localMultilevelPartition(edges.sparkSession, k, numParts, matchRounds,
-          coarseRounds, refineRounds, slackPct, levels)
-    }
+    // floor below the gate. The probe of the oriented rows carries the
+    // numeric order keys (ul/vl — including the xxhash64 branch for
+    // non-numeric ids) computed by Spark, so the local replay needs no
+    // key re-derivation; matching reuses the exact localMatchCore; the
+    // only other local re-derivation is the BLP md5 bucket, gated by
+    // stringCastReplayable like balancedPartition.
+    val idType = orientedKeyed(edges, None, loopsByKey = false).schema("u").dataType
+    (if (stringCastReplayable(idType)) keyedGraph(edges, None, 2000000L) else None)
+      .filter(_.g.edgeCount * 2L * numParts <= 64000000L).foreach(k =>
+      return localMultilevelPartition(edges.sparkSession, k, numParts, matchRounds,
+        coarseRounds, refineRounds, slackPct, levels))
     // DOWN the V: repeated coarsening. Level 0 is the fine unweighted
     // graph; every deeper level is weighted (coarse edges sum absorbed
     // fine edges — coarsenWithMap's weighted mode switches the matching
@@ -3903,8 +3910,7 @@ object GraphAlgorithms {
     }
     // partition the coarsest graph — edge AND vertex weights make its
     // rounds optimize the FINE cut under the FINE balance constraint
-    var asg = balancedPartition(curEdges,
-        numParts, coarseRounds, slackPct, broadcastRowGate,
+    var asg = balancedPartition(curEdges, numParts, coarseRounds, slackPct,
         edgeWeightCol = Some("weight"), vertexWeights = curVw)
       .localCheckpoint(true)
     // UP the V: project through each level's contraction map
@@ -3918,7 +3924,7 @@ object GraphAlgorithms {
         cmap.join(asg.withColumnRenamed("id", "rep"), Seq("rep"))
           .select(col("id"), col("part")))
       asg = balancedPartition(lvlEdges, numParts, refineRounds, slackPct,
-          broadcastRowGate, init = Some(projected),
+          init = Some(projected),
           edgeWeightCol = if (lvlVw.isEmpty) None else Some("weight"),
           vertexWeights = lvlVw)
         .localCheckpoint(true)
@@ -4019,14 +4025,13 @@ object GraphAlgorithms {
    */
   def partitionQuality(edges: DataFrame, assignment: DataFrame,
                        idCol: String = "id", partCol: String = "part",
-                       broadcastRowGate: Long = 2000000L,
                        numParts: Option[Int] = None): DataFrame = {
     val cn = PropertyGraph.canonicalUndirected(edges)
     val am = assignment.select(col(idCol).as("__id"), col(partCol).as("__p"))
       .distinct().localCheckpoint(true)
     // same gated strategy as balancedPartition: a small assignment
     // broadcasts so the edge list is scanned, not exchanged twice
-    val hinted = if (am.count() <= broadcastRowGate) (d: DataFrame) => broadcast(d)
+    val hinted = if (am.count() <= 2000000L) (d: DataFrame) => broadcast(d)
       else (d: DataFrame) => d
     val cut = cn
       .join(hinted(am.select(col("__id").as("src"), col("__p").as("__ps"))), Seq("src"))
@@ -4104,45 +4109,38 @@ object GraphAlgorithms {
     require(dims >= 1 && dims <= 64, s"dims must be in [1, 64]: $dims")
     require(iterations >= 1 && iterations <= 3,
       s"iterations must be in [1, 3] (integer coords grow like deg^t): $iterations")
-    val cn = (edgeWeightCol match {
-      case None => PropertyGraph.canonicalUndirected(edges)
-        .select(col("src"), col("dst"), lit(1L).as("__w"))
-      case Some(wc) => edges
-        .select(least(col("src"), col("dst")).as("src"),
-          greatest(col("src"), col("dst")).as("dst"),
-          // exact-integer contract guard: a NULL weight would propagate
-          // to NULL coordinates and a fractional one silently truncates
-          // under cast("long") — both violate the scaladoc's exactness
-          // promise, so validate in-plan; the guard fires at the eager
-          // canonicalization count below (i.e. at the fastRP call itself)
-          when(col(wc).cast("double").isNull, raise_error(lit(
-            s"fastRP: NULL or non-numeric edge weight in '$wc' — weights must be non-null integers")))
-            .when(col(wc).cast("double") =!= col(wc).cast("long").cast("double"),
-              raise_error(lit(
-                s"fastRP: non-integral edge weight in '$wc' would break the exact-integer contract")))
-            .otherwise(col(wc).cast("long")).as("__w"))
-        .where(col("src") =!= col("dst"))
-        .groupBy("src", "dst").agg(sum(col("__w")).as("__w"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    val nE = cn.count()
+    val oriented = canonicalRows(edges, edgeWeightCol.fold(lit(1L)) { wc =>
+      // exact-integer contract guard: a NULL weight would propagate
+      // to NULL coordinates and a fractional one silently truncates
+      // under cast("long") — both violate the scaladoc's exactness
+      // promise, so validate in-plan; the guard fires in the eager probe
+      // or canonical checkpoint below (i.e. at the fastRP call itself)
+      when(col(wc).cast("double").isNull, raise_error(lit(
+        s"fastRP: NULL or non-numeric edge weight in '$wc' — weights must be non-null integers")))
+        .when(col(wc).cast("double") =!= col(wc).cast("long").cast("double"),
+          raise_error(lit(
+            s"fastRP: non-integral edge weight in '$wc' would break the exact-integer contract")))
+        .otherwise(col(wc).cast("long"))
+    })
     // adaptive local regime (the kCore/HITS/matching/triangle pattern):
-    // below 2M canonical edges the whole recurrence is
+    // below 2M raw edges the whole recurrence is
     // latency-floor-bound (each iterate is an eager edge⋈vertex shuffle
     // job over a frame that fits on the driver thousands of times over),
     // so replay the IDENTICAL synchronous semantics driver-side — the
-    // canonicalization/validation plan above still computes everything
-    // up to (src, dst, __w), and the only re-implemented pieces are the
-    // md5 init byte and the integer neighbor sums (exactness pinned by
-    // the oracle rows + FastRpSpec local-vs-distributed parity).
-    // Gated on collected row count AND on replayable id types; weights
-    // are already validated/cast to long by the collected plan.
-    val idType = cn.schema("src").dataType
-    if (stringCastReplayable(idType) &&
-        localRowCap(edges.sparkSession, 2000000L).exists(nE <= _)) {
-      val rows = cn.collect()
-      cn.unpersist()
-      return localFastRP(edges.sparkSession, rows, idType, dims, iterations)
-    }
+    // probe of the oriented rows validates and casts every weight, the
+    // driver merges parallel edges as the distributed grouping does, and
+    // the only re-implemented pieces are the md5 init byte and the
+    // integer neighbor sums (exactness pinned by the oracle rows +
+    // FastRpSpec local-vs-distributed parity). Gated on replayable id
+    // types.
+    val idType = oriented.schema("src").dataType
+    if (stringCastReplayable(idType)) collectRowsGated(oriented, 2000000L).foreach(rows =>
+      return localFastRP(edges.sparkSession,
+        LocalGraph.mergedPairs(rows, summed = edgeWeightCol.isDefined), idType, dims, iterations))
+    // parallel weighted edges merge additively; unweighted, one per pair.
+    // Checkpointed eagerly, so the weight guard fires here
+    val cn = checkpointOnce(oriented.groupBy("src", "dst")
+      .agg((if (edgeWeightCol.isDefined) sum(col("__w")) else lit(1L)).as("__w")))
     val nb = cn.select(col("src").as("u"), col("dst").as("v"), col("__w"))
       .unionByName(cn.select(col("dst").as("u"), col("src").as("v"), col("__w")))
     val (verts, nV) = Fixpoint.materialize(nb.select(col("u").as("id")).distinct())
@@ -4248,8 +4246,9 @@ object GraphAlgorithms {
   /**
    * The one connected-components engine, over a pair frame (a, b):
    * (id, canonical) for every non-null id in some pair, canonical = the
-   * smallest id of its component. Up to 10M pairs a single-task
-   * union-find ON AN EXECUTOR solves it exactly ([[unionFindClusters]]).
+   * smallest id of its component. Up to 10M pairs one probe collect
+   * gates and loads them, and a driver-side union-find over their
+   * [[LocalGraph]] solves it exactly ([[unionFindClusters]]).
    * Beyond that, alternating large-star/small-star contraction (Kiveris
    * et al., "Connected Components in MapReduce and Beyond", SoCC'14)
    * converges in O(log n) rounds REGARDLESS of component diameter — a
@@ -4259,19 +4258,10 @@ object GraphAlgorithms {
    * runaway bound, not a semantic knob: non-convergence throws.
    */
   private[graft] def pairComponents(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val rawEdges = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    val nPairs = rawEdges.count()
-    // materialize BEFORE unpersisting: the union-find runs in one
-    // coalesced task, and leaving it lazy meant the caller's terminal
-    // action re-ran the entire upstream pair pipeline single-threaded
-    // once the cache below was dropped (observed 16 s vs 2 s for the
-    // identical minhash pipeline)
-    val out =
-      if (localRowCap(pairs.sparkSession, 10000000L).exists(nPairs <= _))
-        unionFindClusters(rawEdges).localCheckpoint(true)
-      else starContractionClusters(rawEdges, maxRounds, nPairs)
-    rawEdges.unpersist()
-    out
+    val typed = LocalGraph.typed(pairs)
+    collectRowsGated(typed, 10000000L).foreach(rows =>
+      return unionFindClusters(rows, typed.schema(0).dataType, pairs.sparkSession))
+    starContractionClusters(pairs, maxRounds)
   }
 
   /** One large-star round: every node's strictly-larger neighbors re-point
@@ -4311,8 +4301,8 @@ object GraphAlgorithms {
     * 2⁶³-scale hashes overflows). At the fixpoint the edge set IS the
     * star: (member, component-min) rows; roots are added back as their
     * own canonical. */
-  private[graft] def starContractionClusters(rawEdges: DataFrame, maxRounds: Int,
-                                             nPairs: Long): DataFrame = {
+  private[graft] def starContractionClusters(rawEdges: DataFrame,
+                                             maxRounds: Int): DataFrame = {
     def signed(e: DataFrame): (DataFrame, org.apache.spark.sql.Row) =
       Fixpoint.observed(e, count(lit(1)),
         coalesce(call_function("bit_xor", xxhash64(col("a"), col("b"))), lit(0L)))
@@ -4329,7 +4319,7 @@ object GraphAlgorithms {
     if (!converged)
       throw new IllegalStateException(
         s"connected components: star contraction did not converge in $maxRounds rounds " +
-        s"($nPairs pairs) — converging runs need ~2·log2(n) rounds, so this points at " +
+        "— converging runs need ~2·log2(n) rounds, so this points at " +
         "a bug or a pathological id domain, not a deep component")
     val roots = edges.select(col("b")).distinct()
       .join(edges.select(col("a").as("b")), Seq("b"), "left_anti")
@@ -4344,50 +4334,35 @@ object GraphAlgorithms {
       .unionAll(selfOnly.select(col("a").as("id"), col("a").as("canonical")))
   }
 
-  /** Exact connected components of a pair list in ONE executor task:
-    * union-find with union-by-min-root and path compression, so the final
-    * root of every member is the smallest id of its component. Ids take
-    * [[LocalGraph.typed]]'s one type and are compared numerically for
-    * integral columns, as strings otherwise. */
-  private def unionFindClusters(pairs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types._
-    val edges = LocalGraph.typed(pairs)
-    val dt = edges.schema("a").dataType
-    val ord: Ordering[Any] = dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        Ordering.by((x: Any) => x.asInstanceOf[Number].longValue)
-      case _ => Ordering.by((x: Any) => String.valueOf(x))
-    }
-    val spark = edges.sparkSession
-    val outRdd = edges.rdd.coalesce(1).mapPartitions { it =>
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x0: Any): Any = {
-        var x = x0
-        while (parent(x) != x) {
-          val gp = parent(parent(x))
-          parent(x) = gp // path halving
-          x = gp
-        }
-        x
+  /** Exact connected components of the collected pair `rows` (ids of
+    * `idType`; a pair with a null id joins nothing) on the driver:
+    * union-find over their [[LocalGraph]] with union-by-min-root and
+    * path halving, so the final root of every member is the smallest id
+    * of its component in Spark's order ([[LocalGraph.compareIds]]) —
+    * the label star contraction computes. */
+  private def unionFindClusters(rows: Array[Row], idType: DataType,
+      spark: SparkSession): DataFrame = {
+    val g = LocalGraph.multi(rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)), idType)
+    val parent = Array.range(0, g.n)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) {
+        parent(x) = parent(parent(x)) // path halving
+        x = parent(x)
       }
-      it.foreach { r =>
-        val (a, b) = (r.get(0), r.get(1))
-        if (a != null && b != null) {
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) {
-            // min root absorbs: the invariant that makes root == min(component)
-            if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-      }
-      // snapshot keys before the final finds — path halving mutates values
-      val ks = parent.keys.toArray
-      ks.iterator.map(k => org.apache.spark.sql.Row(k, find(k)))
+      x
     }
-    spark.createDataFrame(outRdd, StructType(Seq(
-      StructField("id", dt), StructField("canonical", dt))))
+    var e = 0
+    while (e < g.edgeCount) {
+      val (ra, rb) = (find(g.src(e)), find(g.dst(e)))
+      // min root absorbs: the invariant that makes root == min(component)
+      if (ra != rb) {
+        if (LocalGraph.compareIds(g.ids(ra), g.ids(rb)) < 0) parent(rb) = ra else parent(ra) = rb
+      }
+      e += 1
+    }
+    LocalGraph.frame(spark, Seq("id" -> idType, "canonical" -> idType),
+      (0 until g.n).map(v => Row(g.ids(v), g.ids(find(v)))))
   }
 
   // ----- strongly connected components ------------------------------------

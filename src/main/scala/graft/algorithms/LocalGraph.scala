@@ -3,13 +3,16 @@ package graft.algorithms
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * The driver-side graph every local regime replays on: the analogue of
  * the in-memory adjacency a JasmineGraph worker keeps per partition (the
- * `NodeBlock` edge heads, SURVEY §1.1). It is built once, from one gated
- * collect ([[GraphAlgorithms.collectInternedGated]], or [[LocalGraph.multi]]
- * over a replay's own collect), and holds
+ * `NodeBlock` edge heads, SURVEY §1.1). It is built once, from the rows
+ * of the one probe collect that also gated the regime
+ * ([[GraphAlgorithms.collectRowsGated]]; [[LocalGraph.simple]] or
+ * [[LocalGraph.multi]] over them, as in
+ * [[GraphAlgorithms.collectInternedGated]]), and holds
  *  - `ids`, the interned vertex ids: the i-th distinct id met gets index
  *    i, so a replay's output order is the collected row order;
  *  - `idType`, the one type of every id ([[LocalGraph.typed]]);
@@ -144,6 +147,41 @@ private[graft] object LocalGraph {
     val dst = rows.map(r => in.intern(r.get(1)))
     new LocalGraph(in.ids.toArray, in.idx, idType, src, dst,
       rows.map(r => if (r.length > 2) r.getLong(2) else 1L))
+  }
+
+  /** `rows` with the rows that share `key` merged by `pick` into one,
+    * in first-seen key order: the driver-side dedup of a probe's raw
+    * edge rows. */
+  def merged(rows: Array[Row], key: Row => Any)(pick: (Row, Row) => Row): Array[Row] = {
+    val at = new java.util.LinkedHashMap[Any, Row]()
+    rows.foreach(r => at.merge(key(r), r, (a: Row, b: Row) => pick(a, b)))
+    at.values.toArray(new Array[Row](0))
+  }
+
+  /** [[merged]] by the (src, dst) pair: its BIGINT column 2 summed over
+    * the pair when `summed` (parallel edges add, the multigraph
+    * convention), else the first row's. */
+  def mergedPairs(rows: Array[Row], summed: Boolean): Array[Row] =
+    merged(rows, r => (r.get(0), r.get(1))) { (a, b) =>
+      if (summed) Row.fromSeq(a.toSeq.updated(2, a.getLong(2) + b.getLong(2))) else a
+    }
+
+  /** Spark's ascending order of two ids of one type, nulls first — the
+    * order of `least`, `min` and `ORDER BY`: strings and binaries by
+    * their unsigned bytes, floating point with NaN last and −0.0 = 0.0. */
+  def compareIds(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: String, y: String) =>
+      UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+    case (x: java.lang.Double, y: java.lang.Double) =>
+      if (x.doubleValue == y.doubleValue) 0 else java.lang.Double.compare(x, y)
+    case (x: java.lang.Float, y: java.lang.Float) =>
+      if (x.floatValue == y.floatValue) 0 else java.lang.Float.compare(x, y)
+    case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y)
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    case _ => String.valueOf(a).compareTo(String.valueOf(b))
   }
 
   /** The one result frame of the local regimes: `rows` in one partition

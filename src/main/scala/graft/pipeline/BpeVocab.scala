@@ -39,8 +39,8 @@ import graft.algorithms.GraphAlgorithms
  * shuffle. Each round is one `groupBy(lhs, rhs)` over the word table
  * (partial aggregation, ~vocab-sized) plus a 1-row argmax collect; the
  * piece column accrues two codegen'd `replace` projections per round on
- * top of the cached word table. Below 4M distinct words
- * the whole table collects to the driver and the rounds run locally —
+ * top of the cached word table. Below 4M distinct words one probe
+ * collect gates and loads the whole table and the rounds run locally —
  * iterative Spark jobs cost fixed latency that dominates on small
  * vocabularies (the house adaptive pattern).
  */
@@ -77,19 +77,16 @@ object BpeVocab {
     require(rounds > 0, "rounds must be positive")
     val spark = df.sparkSession
     val words = wordCounts(df, textCol)
-    val merges =
-      if (GraphAlgorithms.countGated(words, 4000000L, bounded = true))
-        trainLocal(words, rounds)
-      else trainDistributed(words, rounds)
+    val merges = GraphAlgorithms.collectRowsGated(words, 4000000L)
+      .fold(trainDistributed(words, rounds))(trainLocal(_, rounds))
     spark.createDataFrame(
       spark.sparkContext.parallelize(merges.map(m =>
         Row(m._1, m._2, m._3, m._2 + m._3, m._4)), 1), resultSchema)
   }
 
-  /** Driver-side rounds over the collected word table — same two-pass
-    * replace semantics via `String.replace`. */
-  private def trainLocal(words: DataFrame, rounds: Int): Seq[(Int, String, String, Long)] = {
-    val rows = words.collect()
+  /** Driver-side rounds over the word table's rows, collected by the gate's
+    * probe — same two-pass replace semantics via `String.replace`. */
+  private def trainLocal(rows: Array[Row], rounds: Int): Seq[(Int, String, String, Long)] = {
     val cnts = rows.map(_.getLong(1))
     val pieces = rows.map { r =>
       val w = r.getString(0)

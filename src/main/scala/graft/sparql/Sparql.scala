@@ -1,9 +1,10 @@
 package graft.sparql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
-import graft.algorithms.Fixpoint
+import graft.algorithms.{Fixpoint, GraphAlgorithms, LocalGraph}
 
 /**
  * Minimal SPARQL engine over an (s, p, o) triple frame — basic graph
@@ -1446,23 +1447,17 @@ object Sparql {
     // ordering), so the replay is trivially exact; the var–var case
     // aborts back to the distributed rounds if the closure outgrows a
     // hard cap (its output is inherently worst-case quadratic in the
-    // step set, which the input gate alone cannot bound). The gate reads
-    // the RAW pre-distinct count via an early-out limit (raw ≥ distinct)
-    // so a large store never pays the probe's distinct-and-collect —
-    // measured 7× on the sf10 path rows before this pre-gate.
+    // step set, which the input gate alone cannot bound). The gate is
+    // one probe of the RAW pre-distinct step rows (raw ≥ distinct), which
+    // also loads them, so a large store never pays a distinct-and-collect
+    // — measured 7× on the sf10 path rows before the raw gate.
     // 200k, not the 2M of the batch-graph regimes: the step filter scans
     // the WHOLE derived triple-store union, so every extra pass is a
     // full-store scan, and a near-gate single-threaded closure loses to
     // the 32-core fixpoint (sf10 A/B: local at 1.5M step pairs read
     // ~13 s/run vs ~5.4 distributed; at ≤200k the local replay wins)
-    val kleeneRows = 200000L
-    if (graft.algorithms.GraphAlgorithms.countGated(
-        stepRaw.select(col("a")), kleeneRows, bounded = true)) {
-      localKleene(triples, pp, stepPlan, kleeneRows) match {
-        case Some(pairs) => return bindVars(pairs, Seq("a" -> pp.s, "b" -> pp.o))
-        case None => ()
-      }
-    }
+    localKleene(triples, pp, stepRaw, 200000L).foreach(pairs =>
+      return bindVars(pairs, Seq("a" -> pp.s, "b" -> pp.o)))
     val (step, stepCnt) = Fixpoint.materialize(stepPlan)
 
     // expand `start` (`startCnt` rows) hop by hop along `edges`, each hop
@@ -1520,101 +1515,79 @@ object Sparql {
   }
 
   /** Driver-side replay of [[kleeneFrame]]'s small regime — identical
-    * set semantics over a collected one-hop step set. None on gate
-    * overflow (step set, term set for the var–var zero case, or a
+    * set semantics over the one-hop step rows, gated and loaded by one
+    * probe of `stepRaw` and read as a [[LocalGraph]] multigraph (not a
+    * simple one: `<a> p+ ?o` must see a's self-loop). None on gate
+    * overflow (step rows, term set for the var–var zero case, or a
     * var–var closure that outgrows the pair cap). */
   private def localKleene(triples: DataFrame, pp: PathPat,
-                          stepPlan: DataFrame, lt: Long): Option[DataFrame] = {
+                          stepRaw: DataFrame, lt: Long): Option[DataFrame] = {
     val pairCap = 8000000
-    val stepRows = graft.algorithms.GraphAlgorithms
-      .collectRowsGated(stepPlan, lt).getOrElse(return None)
+    val stepRows = GraphAlgorithms.collectRowsGated(stepRaw, lt).getOrElse(return None)
     if (stepRows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val adj = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-    val radj = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-    stepRows.foreach { r =>
-      val a = r.getString(0); val b = r.getString(1)
-      adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-      radj.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) += a
-    }
-    // zero-length solutions: a constant endpoint pairs with itself; a
-    // variable pair binds every term of the graph (subject ∪ object)
-    def zeroPairsLocal(): Option[Iterator[(String, String)]] = (pp.s, pp.o) match {
-      case (Const(c), _) => Some(Iterator((c, c)))
-      case (_, Const(c)) => Some(Iterator((c, c)))
-      case _ =>
-        graft.algorithms.GraphAlgorithms.collectRowsGated(
-          triples.select(col("s").as("x"))
-            .unionByName(triples.select(col("o").as("x"))).distinct(), lt)
-          .map(_.iterator.filter(!_.isNullAt(0))
-            .map(r => (r.getString(0), r.getString(0))))
-    }
-    def bfs(seed: String, nbrs: String => Iterator[String]): scala.collection.mutable.LinkedHashSet[String] = {
-      val acc = scala.collection.mutable.LinkedHashSet.empty[String]
-      var frontier = nbrs(seed).toArray.distinct.toSeq
-      frontier.foreach(acc += _)
-      var hops = 1
-      while (frontier.nonEmpty) {
+    val g = LocalGraph.multi(stepRows, StringType)
+    // the solutions as (a, b) index pairs, each once, in first-seen order
+    def pair(a: Int, b: Int): Long = (a.toLong << 32) | b
+    val pairSet = scala.collection.mutable.LinkedHashSet.empty[Long]
+    // the vertices ≥ 1 hop from s over adj, in BFS order: each hop's
+    // frontier is the run of `order` the previous hop appended
+    def reach(s: Int, adj: LocalGraph.Csr): Seq[Int] = {
+      val seen = new Array[Boolean](g.n)
+      val order = scala.collection.mutable.ArrayBuffer.empty[Int]
+      def visit(x: Int): Unit = adj.foreach(x)(y => if (!seen(y)) { seen(y) = true; order += y })
+      visit(s)
+      var (lo, hops) = (0, 1)
+      while (lo < order.length) {
         require(hops < MaxPathHops,
           s"property-path fixpoint exceeded $MaxPathHops hops")
-        val next = scala.collection.mutable.LinkedHashSet.empty[String]
-        frontier.foreach(x => nbrs(x).foreach(y => if (!acc(y)) next += y))
-        next.foreach(acc += _)
-        frontier = next.toSeq
+        val hi = order.length
+        (lo until hi).foreach(i => visit(order(i)))
+        lo = hi
         hops += 1
       }
-      acc
+      order.toSeq
     }
-    def neigh(m: scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]])
-             (x: String): Iterator[String] =
-      m.get(x).map(_.iterator).getOrElse(Iterator.empty)
-    val pairSet = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
-    if (pp.single) {
-      stepRows.foreach(r => pairSet += ((r.getString(0), r.getString(1))))
-      if (pp.zero) zeroPairsLocal() match {
-        case Some(it) => it.foreach(pairSet += _)
-        case None => return None
-      }
-    } else (pp.s, pp.o) match {
+    def stepPairs = g.src.indices.iterator.map(e => pair(g.src(e), g.dst(e)))
+    if (pp.single) pairSet ++= stepPairs
+    else (pp.s, pp.o) match {
       case (Const(c), _) =>
-        bfs(c, neigh(adj)).foreach(b => pairSet += ((c, b)))
-        if (pp.zero) pairSet += ((c, c))
+        g.idx.get(c).foreach(s => reach(s, g.out).foreach(b => pairSet += pair(s, b)))
       case (_, Const(c)) =>
-        bfs(c, neigh(radj)).foreach(a => pairSet += ((a, c)))
-        if (pp.zero) pairSet += ((c, c))
+        g.idx.get(c).foreach(s => reach(s, g.in).foreach(a => pairSet += pair(a, s)))
       case _ =>
         // semi-naive pair closure with the hard cap
-        var frontier = stepRows.map(r => (r.getString(0), r.getString(1))).toSeq
-        frontier.foreach(pairSet += _)
+        pairSet ++= stepPairs
+        var frontier = pairSet.toSeq
         var hops = 1
         while (frontier.nonEmpty) {
           require(hops < MaxPathHops,
             s"property-path fixpoint exceeded $MaxPathHops hops")
-          val next = scala.collection.mutable.LinkedHashSet.empty[(String, String)]
-          frontier.foreach { case (a, b) =>
-            neigh(adj)(b).foreach { c2 =>
-              val p = (a, c2)
-              if (!pairSet(p)) next += p
+          val next = scala.collection.mutable.LinkedHashSet.empty[Long]
+          frontier.foreach { p =>
+            g.out.foreach(p.toInt) { c2 =>
+              val q = pair((p >>> 32).toInt, c2)
+              if (!pairSet(q)) next += q
             }
           }
           if (pairSet.size + next.size > pairCap) return None
-          next.foreach(pairSet += _)
+          pairSet ++= next
           frontier = next.toSeq
           hops += 1
         }
-        if (pp.zero) zeroPairsLocal() match {
-          case Some(it) => it.foreach(pairSet += _)
-          case None => return None
-        }
     }
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("a", StringType),
-      StructField("b", StringType)))
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](pairSet.size)
-    pairSet.foreach { case (a, b) =>
-      out.add(org.apache.spark.sql.Row(a, b)) }
-    Some(triples.sparkSession.createDataFrame(out, schema))
+    // zero-length solutions: a constant endpoint pairs with itself; a
+    // variable pair binds every term of the graph (subject ∪ object)
+    val zero: Seq[Any] = if (!pp.zero) Nil else (pp.s, pp.o) match {
+      case (Const(c), _) => Seq(c)
+      case (_, Const(c)) => Seq(c)
+      case _ =>
+        GraphAlgorithms.collectRowsGated(triples.select(col("s").as("x"))
+            .unionByName(triples.select(col("o").as("x"))).distinct(), lt)
+          .getOrElse(return None).toSeq.filter(!_.isNullAt(0)).map(_.get(0))
+    }
+    val rows = pairSet.toSeq.map(p => Row(g.ids((p >>> 32).toInt), g.ids(p.toInt))) ++
+      zero.filterNot(x => g.idx.get(x).exists(i => pairSet(pair(i, i)))).map(x => Row(x, x))
+    Some(LocalGraph.frame(triples.sparkSession, Seq("a" -> StringType, "b" -> StringType), rows))
   }
 
   private def patFrame(triples: DataFrame, p: Pat,

@@ -868,10 +868,9 @@ class GraphCoreSpec extends SparkSpec {
       .selectExpr("src", "dst", "(src + dst) % 5 + 1 AS weight")
     val starts = (0L until 50L by 5L).map(i => (i, i)).toDF("wid", "id")
     for (und <- Seq(true, false)) {
-      // narrowRowGate = 0 forces the distributed steps
-      val dist = GraphAlgorithms.weightedRandomWalks(edges, starts, steps = 5,
-        undirected = und, narrowRowGate = 0L)
-        .orderBy("wid", "step").collect().toSeq
+      // the switch off forces the distributed steps
+      val dist = withLocalRegimesOff(GraphAlgorithms.weightedRandomWalks(edges, starts,
+        steps = 5, undirected = und).orderBy("wid", "step").collect().toSeq)
       val loc = GraphAlgorithms.weightedRandomWalks(edges, starts, steps = 5,
         undirected = und).orderBy("wid", "step").collect().toSeq
       assert(loc === dist, s"undirected=$und")
@@ -1038,8 +1037,8 @@ class GraphCoreSpec extends SparkSpec {
         1000000L).isEmpty)
       val off = GraphAlgorithms.triangleCountDF(edges).collect()(0).getLong(0)
       assert(off === local)
-      // a raw limit-count pre-gated regime (BLP) takes the distributed
-      // rounds and still matches the local replay bit-exactly
+      // a regime that probes its oriented raw rows (BLP) takes the
+      // distributed rounds and still matches the local replay bit-exactly
       val blpOff = GraphAlgorithms.balancedPartition(edges, numParts = 4)
         .orderBy("id").collect().toSeq
       assert(blpOff === blpOn)

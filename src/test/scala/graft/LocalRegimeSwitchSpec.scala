@@ -10,7 +10,7 @@ import graft.sparql.Sparql
 
 /**
  * The one local-regime policy: `spark.graft.localRegimes=off` turns every
- * gate off, so the count-gated regimes take their distributed paths — a
+ * gate off, so the row-gated regimes take their distributed paths — a
  * different job sequence with the identical answer — on a multi-hop
  * graph and on hostile inputs (empty frames, self-loops with duplicate
  * edges, 64-bit ids); so do the frontier and peel loops and the driver
@@ -18,7 +18,9 @@ import graft.sparql.Sparql
  * partitioning family, the neighbourhood sketch and the weighted walks on
  * the hostile inputs. Connected and strongly connected components are
  * also checked against a plain-Scala replay, and on dangling and null
- * edge endpoints.
+ * edge endpoints. Every gate is one probe collect that also loads the
+ * rows ([[GraphAlgorithms.collectRowsGated]]); the job guards pin that
+ * shape, with no count job, for the regimes that once counted first.
  */
 class LocalRegimeSwitchSpec extends SparkSpec {
 
@@ -46,7 +48,7 @@ class LocalRegimeSwitchSpec extends SparkSpec {
   private def weighted(e: DataFrame): DataFrame =
     e.withColumn("weight", pmod(xxhash64(col("src"), col("dst")), lit(9L)) + 1)
 
-  /** The eleven regimes whose gate is a row count, each as a frame => rows. */
+  /** The eleven regimes gated by their rows, each as a frame => rows. */
   private val graphRegimes: Seq[(String, DataFrame => Seq[String])] = Seq(
     "closeness" -> (e => rows(GraphAlgorithms.closenessCentrality(e, maxHops = 4))),
     "betweenness" -> (e => rows(GraphAlgorithms.betweennessCentrality(e, maxHops = 4))),
@@ -62,10 +64,12 @@ class LocalRegimeSwitchSpec extends SparkSpec {
       e.select(col("src").as("idA"), col("dst").as("idB"))))))
 
   /** Documents derived from the edge list: one per edge, words from its ids. */
-  private def bpe(e: DataFrame): Seq[String] =
-    rows(BpeVocab.train(e.select(col("src").cast("long").as("doc_id"),
+  private def bpeMerges(e: DataFrame): DataFrame =
+    BpeVocab.train(e.select(col("src").cast("long").as("doc_id"),
       concat_ws(" ", col("src").cast("string"), col("dst").cast("string"),
-        lit("abab ab")).as("text")), "text", rounds = 4))
+        lit("abab ab")).as("text")), "text", rounds = 4)
+
+  private def bpe(e: DataFrame): Seq[String] = rows(bpeMerges(e))
 
   private val regimes = graphRegimes :+ ("bpe" -> (bpe _))
 
@@ -73,16 +77,18 @@ class LocalRegimeSwitchSpec extends SparkSpec {
   private def seedOf(e: DataFrame): String =
     Option(e.agg(min(col("src"))).head().get(0)).fold("1")(_.toString)
 
-  /** The edge list as `knows` triples, and a Kleene path from its
-    * smallest subject (a constant endpoint) or between two variables. */
-  private def kleene(e: DataFrame, constant: Boolean): Seq[String] = {
+  /** The edge list as `knows` triples, and a Kleene path from the
+    * constant subject `seed` or, without one, between two variables. */
+  private def kleenePath(e: DataFrame, seed: Option[String]): DataFrame = {
     val triples = e.select(col("src").cast("string").as("s"), lit("knows").as("p"),
       col("dst").cast("string").as("o"))
-    val seed = seedOf(e)
-    rows(Sparql.run(triples,
-      if (constant) s"SELECT ?o WHERE { <$seed> <knows>+ ?o . }"
-      else "SELECT ?s ?o WHERE { ?s <knows>+ ?o . }"))
+    Sparql.run(triples, seed.fold("SELECT ?s ?o WHERE { ?s <knows>+ ?o . }")(c =>
+      s"SELECT ?o WHERE { <$c> <knows>+ ?o . }"))
   }
+
+  /** A Kleene path from the smallest subject or between two variables. */
+  private def kleene(e: DataFrame, constant: Boolean): Seq[String] =
+    rows(kleenePath(e, if (constant) Some(seedOf(e)) else None))
 
   /** The frontier and peel loops: local regime or distributed only by size. */
   private val loopRegimes: Seq[(String, DataFrame => Seq[String])] = Seq(
@@ -313,19 +319,47 @@ class LocalRegimeSwitchSpec extends SparkSpec {
     assert(off === mutualReach(ids, es))
   }
 
-  test("gates: with the switch off both gate shapes say no and launch no job") {
-    // shuffled, so counting or collecting it launches jobs
+  test("gate: one probe collect; switch off says no, no job") {
+    // shuffled, so collecting it launches jobs
     val df = spark.range(0, 50, 1, 4).repartition(3).toDF("id")
-    val (onJobs, (rowsOn, countOn)) = jobsDuring(
-      (GraphAlgorithms.collectRowsGated(df, 1000L), GraphAlgorithms.countGated(df, 1000L)))
-    assert(rowsOn.map(_.length) === Some(50) && countOn && onJobs.nonEmpty)
-    val (offJobs, (rowsOff, countOff)) = withLocalRegimesOff(jobsDuring(
-      (GraphAlgorithms.collectRowsGated(df, 1000L),
-        GraphAlgorithms.countGated(df, 1000L, bounded = true))))
-    assert(rowsOff === None && !countOff)
-    assert(offJobs.isEmpty)
+    val (onJobs, rowsOn) = jobsDuring(GraphAlgorithms.collectRowsGated(df, 1000L))
+    assert(rowsOn.map(_.length) === Some(50) && onJobs.nonEmpty &&
+      onJobs.forall(_.startsWith("collect at GraphAlgorithms")), onJobs)
+    val (offJobs, rowsOff) = withLocalRegimesOff(jobsDuring(
+      GraphAlgorithms.collectRowsGated(df, 1000L)))
+    assert(rowsOff === None && offJobs.isEmpty)
     // a non-positive threshold is "never local", also without a job
-    val (cutJobs, cut) = jobsDuring(GraphAlgorithms.countGated(df, 0L))
-    assert(!cut && cutJobs.isEmpty)
+    val (cutJobs, cut) = jobsDuring(GraphAlgorithms.collectRowsGated(df, 0L))
+    assert(cut === None && cutJobs.isEmpty)
+  }
+
+  test("MIS, coloring, matching, coarsening, MST, sketch, partitioning, kTruss, fastRP, " +
+      "pair components, Kleene paths and BPE gate and load with one probe collect") {
+    // no count job: the gate and the load are one collect action (Spark's
+    // limit may run it as a few jobs, each at that call site)
+    // shuffled, so the probe launches a job (a local relation needs none)
+    val e = stringEdges(hops).repartition(2)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "maximalIndependentSet" -> (() => GraphAlgorithms.maximalIndependentSet(e)),
+      "jpColoring" -> (() => GraphAlgorithms.jpColoring(e)),
+      "maximalMatching" -> (() => GraphAlgorithms.maximalMatching(e)),
+      "coarsenGraph" -> (() => GraphAlgorithms.coarsenGraph(e)),
+      "minimumSpanningForest" -> (() => GraphAlgorithms.minimumSpanningForest(weighted(e))),
+      "neighborhoodRegisters" -> (() => GraphAlgorithms.neighborhoodRegisters(e, hops = 2)),
+      "balancedPartition" -> (() => GraphAlgorithms.balancedPartition(e, numParts = 2)),
+      "multilevelPartition" -> (() => GraphAlgorithms.multilevelPartition(e, numParts = 2)),
+      "kTruss" -> (() => GraphAlgorithms.kTruss(e, k = 3, rounds = 5)),
+      "fastRP" -> (() => GraphAlgorithms.fastRP(e, dims = 3, iterations = 2)),
+      "nearDupClusters" -> (() =>
+        Dedup.nearDupClusters(e.select(col("src").as("idA"), col("dst").as("idB")))),
+      "kleene constant" -> (() => kleenePath(e, Some("1"))),
+      "kleene variable" -> (() => kleenePath(e, None)),
+      "bpe" -> (() => bpeMerges(e)))
+    val shapes = calls.flatMap { case (name, call) =>
+      val (jobs, _) = jobsDuring(call())
+      if (jobs.nonEmpty && jobs.distinct.size == 1 &&
+        jobs.head.startsWith("collect at GraphAlgorithms")) None else Some(s"$name: $jobs")
+    }
+    assert(shapes.isEmpty, shapes.mkString("\n"))
   }
 }
