@@ -110,10 +110,28 @@ class LocalRegimeSwitchSpec extends SparkSpec {
       .select(pmod(xxhash64(col("id")), lit(1000L)).as("wid"), col("id"))
   }
 
+  /** A directed property graph over `e`, its endpoints as nodes (typed
+    * by the `src ∪ dst` union, while the edges keep their own types). */
+  private def endpointGraph(e: DataFrame): PropertyGraph = PropertyGraph(
+    e.select(col("src").as("id")).unionByName(e.select(col("dst").as("id"))).distinct(),
+    e, isDirected = true)
+
+  /** The smallest source id and the absent id 99, typed like `src`. */
+  private def rankSources(e: DataFrame): DataFrame =
+    e.agg(min(col("src")).as("id"))
+      .unionByName(spark.range(1).select(lit(99).cast(e.schema("src").dataType).as("id")))
+
+  /** A (id, rank) frame with the ranks rounded to 9 decimals: the two
+    * paths add each vertex's contributions in different orders. */
+  private def ranked(df: DataFrame): Seq[String] = rows(df.withColumn("rank", round(col("rank"), 9)))
+
   /** The driver replays that read the interned edge list: local below
     * their cap, distributed with the switch off. */
   private val replayRegimes: Seq[(String, DataFrame => Seq[String])] = Seq(
     "hits" -> (e => rows(GraphAlgorithms.hits(e, iterations = 3))),
+    "pageRank" -> (e => ranked(GraphAlgorithms.pageRank(endpointGraph(e), iterations = 3))),
+    "personalizedPageRank" -> (e => ranked(GraphAlgorithms.personalizedPageRank(
+      endpointGraph(e), rankSources(e), iterations = 3))),
     "labelPropagation" -> (e => rows(GraphAlgorithms.labelPropagation(e, iterations = 3))),
     "triangleCountDF" -> (e => rows(GraphAlgorithms.triangleCountDF(e))),
     "katz" -> (e => rows(GraphAlgorithms.katz(e, iterations = 3))),

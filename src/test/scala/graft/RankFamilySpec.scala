@@ -74,6 +74,47 @@ class RankFamilySpec extends SparkSpec {
     }
   }
 
+  /** The schema line, then the (id, rank) rows in id order, nulls first. */
+  private def idRanks(df: DataFrame): (String, Seq[(String, Double)]) =
+    (df.schema.fields.map(f => s"${f.name} ${f.dataType.simpleString}").mkString(", "),
+      df.collect().toSeq.map(r => (String.valueOf(r.get(0)), r.getDouble(1)))
+        .sortBy { case (id, rank) => (id, rank) })
+
+  /** `run` with the switch on and off: the same column types, the same ids
+    * (duplicates and nulls included) and each rank within 1e-9. */
+  private def assertSwitchParity(run: => DataFrame, clue: String): Unit = {
+    val (onSchema, on) = idRanks(run)
+    val (offSchema, off) = withLocalRegimesOff(idRanks(run))
+    assert(onSchema === offSchema, clue)
+    assert(on.map(_._1) === off.map(_._1), clue)
+    on.zip(off).foreach { case ((v, a), (_, b)) =>
+      assert(math.abs(a - b) <= 1e-9, s"$clue: vertex $v, on $a, off $b") }
+  }
+
+  test("pageRank and personalizedPageRank: switch on = off on hostile graphs") {
+    import spark.implicits._
+    val props = map().cast("map<string,string>").as("properties")
+    def pg(ids: Seq[Option[Long]], es: Seq[(Long, Long)], directed: Boolean): PropertyGraph =
+      PropertyGraph(ids.toDF("id").select(col("id"), lit("").as("label"), props),
+        PropertyGraph.withEid(es.toDF("src", "dst").select(col("src"), col("dst"),
+          lit("E").as("type"), props)), directed)
+    // a duplicate node id (1) and a null one besides the seven nodes
+    val hostileIds = nodes.map(Some(_)) ++ Seq(Some(big + 1), None)
+    val graphs = Seq(
+      "hostile" -> pg(nodes.map(Some(_)), edges, directed = true),
+      "duplicate and null node ids" -> pg(hostileIds, edges, directed = true),
+      "empty edge frame" -> pg(hostileIds, Seq.empty, directed = true),
+      "undirected with a self-loop" -> pg(nodes.map(Some(_)), edges, directed = false))
+    // 99 is no node
+    val sources = Seq(big + 1, big + 4, big + 99).toDF("id")
+    for ((name, g) <- graphs; iterations <- Seq(0, 1, 3, 7)) {
+      val clue = s"$name, $iterations iterations"
+      assertSwitchParity(GraphAlgorithms.pageRank(g, 0.85, iterations, 2), s"pageRank, $clue")
+      assertSwitchParity(GraphAlgorithms.personalizedPageRank(g, sources, 0.85, iterations, 2),
+        s"ppr, $clue")
+    }
+  }
+
   test("weightedPageRank and katz: local regime equals the distributed loop on hostile inputs") {
     import spark.implicits._
     def rows(df: => DataFrame): (Seq[String], Seq[String]) =
