@@ -236,35 +236,96 @@ object GraphAlgorithms {
    * `src/frontend/JasmineGraphFrontEndProtocol.h:112-113`,
    * `JasmineGraphInstanceService.cpp:1650-1816`), which also does not
    * redistribute dangling mass. Edges whose src is not a node carry no
-   * rank and are dropped up front. Returns (id, rank), lazily.
+   * rank and are dropped up front. Returns (id, rank).
    *
-   * Runs on [[propagateRanks]]: one join and one aggregate per iteration
-   * over the persisted degree-annotated edge list, the vertex table joined
-   * once at the end. At 3 iterations on a cached 20-node graph that is 8
-   * jobs, 4 once the edge list is cached, where a vertex join per
-   * iteration ran 15 and 11.
+   * Local regime ([[localRanks]]): a graph whose oriented edge rows and
+   * node rows each fit 2M rows replays on the driver, gated and loaded by
+   * two probe collects. Above the cap, or with the switch off, it runs on
+   * [[propagateRanks]]: one join and one aggregate per iteration over the
+   * degree-annotated edge list, the vertex table joined once at the end.
+   * At 3 iterations on a cached 20-node graph that is 9 jobs, the last one
+   * materializing the ranks; a vertex join per iteration ran 15. Either
+   * way the result comes back materialized, with nothing left cached.
    */
   def pageRank(g: PropertyGraph, alpha: Double = 0.85, iterations: Int = 10,
-               checkpointInterval: Int = 6): DataFrame = {
-    val verts = g.nodes.select(col("id"))
-    propagateRanks(withOutDegree(g, verts), verts, lit(1.0),
-      lit(1.0 - alpha) + lit(alpha) * col("contrib"),
-      col("rank") / col("outdeg"), iterations, checkpointInterval)
-  }
+               checkpointInterval: Int = 6): DataFrame =
+    localRanks(g, None, alpha, iterations).getOrElse {
+      val verts = g.nodes.select(col("id"))
+      propagateRanks(withOutDegree(g, verts), verts, lit(1.0),
+        lit(1.0 - alpha) + lit(alpha) * col("contrib"),
+        col("rank") / col("outdeg"), iterations, checkpointInterval)
+    }
 
   /** The oriented edges of `g` whose src is a vertex of `verts` (id plus
-    * attributes), carrying the src's attributes and out-degree, persisted:
-    * [[propagateRanks]] scans it once per iteration. */
+    * attributes), carrying the src's attributes and out-degree. */
   private def withOutDegree(g: PropertyGraph, verts: DataFrame): DataFrame =
     g.orientedEdges.select(col("src"), col("dst"))
       .join(verts.withColumnRenamed("id", "src"), Seq("src"))
       .withColumn("outdeg", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /**
-   * The rank family's one loop ([[pageRank]], [[personalizedPageRank]] and
-   * the distributed [[weightedPageRank]] and [[katz]]): rank(v) = `rankOf`
+   * The driver replay of [[pageRank]] and, given `sources`, of
+   * [[personalizedPageRank]] (PageRank is PPR restarting at every node):
+   * r ← (1−α)·restart + α·Σ_{u→v} r(u)/outdeg(u) over primitive arrays,
+   * from r = restart. Two probes gate and load it, each under the 2M
+   * multigraph row cap: the (src, dst) rows of `g.orientedEdges`, then the
+   * node ids followed by the source ids, a union, so neither probe
+   * shuffles. Both cast to the node id type, where a value that does not
+   * cast matches no node, as in the distributed joins.
+   *
+   * Edges whose src is not a node carry no rank, multi-edges and
+   * self-loops count toward the out-degree as [[withOutDegree]]'s window
+   * counts them, and a contribution to a dst that is not a node is
+   * dropped. One row per node row, duplicate and null ids included, as
+   * the final vertex join emits them. None above the cap, with the switch
+   * off, for `iterations < 1`, or when an endpoint or source type does not
+   * cast exactly: the distributed joins compare in the wider type, which
+   * a cast to the node type matches only for one type or two integral
+   * ones.
+   */
+  private def localRanks(g: PropertyGraph, sources: Option[DataFrame], alpha: Double,
+      iterations: Int): Option[DataFrame] = {
+    val idType = g.nodes.schema("id").dataType
+    val edges = g.orientedEdges.select(col("src"), col("dst"))
+    val picked = sources.map(s => s.select(col(s.columns.head).as("id")))
+    def integral(t: DataType) = Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+    def exact(t: DataType) = t == idType || (integral(t) && integral(idType))
+    if (iterations < 1 || !stringCastReplayable(idType) ||
+        !(edges.schema ++ picked.map(_.schema.head)).forall(f => exact(f.dataType))) return None
+    val vertexRows = picked.foldLeft(g.nodes.select(col("id"), lit(true).as("node")))(
+      (v, s) => v.unionByName(s.select(col("id").try_cast(idType).as("id"), lit(false).as("node"))))
+    for (es <- collectRowsGated(edges.select(col("src").try_cast(idType),
+           col("dst").try_cast(idType)), 2000000L);
+         vs <- collectRowsGated(vertexRows, 2000000L)) yield {
+      val (nodes, picks) = vs.partition(_.getBoolean(1))
+      val in = new LocalGraph.Interner
+      nodes.foreach(r => if (!r.isNullAt(0)) in.intern(r.get(0)))
+      val n = in.ids.length
+      val restart = Array.fill(n)(if (sources.isEmpty) 1.0 else 0.0)
+      picks.foreach(r => in.idx.get(r.get(0)).foreach(restart(_) = 1.0))
+      val live = es.filter(r => in.idx.contains(r.get(0)))
+      val src = live.map(r => in.idx(r.get(0)))
+      val dst = live.map(r => in.idx.getOrElse(r.get(1), -1))
+      val outdeg = new Array[Int](n)
+      src.foreach(outdeg(_) += 1)
+      var rank = restart
+      for (_ <- 1 to iterations) {
+        val contrib = new Array[Double](n)
+        src.indices.foreach(e => if (dst(e) >= 0) contrib(dst(e)) += rank(src(e)) / outdeg(src(e)))
+        rank = Array.tabulate(n)(v => (1.0 - alpha) * restart(v) + alpha * contrib(v))
+      }
+      // a null id joins no contribution and no source
+      val nullRank = (1.0 - alpha) * (if (sources.isEmpty) 1.0 else 0.0)
+      LocalGraph.frame(g.nodes.sparkSession, Seq("id" -> idType, "rank" -> DoubleType),
+        nodes.toSeq.map(r => Row(r.get(0), in.idx.get(r.get(0)).fold(nullRank)(rank(_)))))
+    }
+  }
+
+  /**
+   * The rank family's one distributed loop ([[pageRank]],
+   * [[personalizedPageRank]], [[weightedPageRank]] and [[katz]] above
+   * their local caps): rank(v) = `rankOf`
    * over contrib(v) = Σ_{u→v} `edgeContrib` of u's rank, from `init`.
    *
    * A vertex's rank depends only on its own contribution and on
@@ -277,10 +338,14 @@ object GraphAlgorithms {
    * iterations so deep runs keep a flat plan.
    *
    * `edges`: (src, dst, per-edge columns, src attributes), only edges
-   * whose src is a vertex, persisted by the caller. `verts`: (id,
-   * attributes). `init` and `rankOf` read the attributes, `rankOf` also
-   * the non-null `contrib`; `edgeContrib` reads `rank` and the edge
-   * columns. Returns (id, rank).
+   * whose src is a vertex. `verts`: (id, attributes). `init` and `rankOf`
+   * read the attributes, `rankOf` also the non-null `contrib`;
+   * `edgeContrib` reads `rank` and the edge columns. Returns (id, rank),
+   * materialized: `edges` is persisted for the run and released after it,
+   * so nothing stays pinned and nothing recomputes lazily (dropping the
+   * persist and returning the lazy plan measured 30 jobs against 12 at 10
+   * iterations on a cached 20-node graph). With `iterations < 1` it returns
+   * the initial ranks, unmaterialized.
    */
   private def propagateRanks(edges: DataFrame, verts: DataFrame, init: Column,
       rankOf: Column, edgeContrib: Column, iterations: Int,
@@ -291,13 +356,16 @@ object GraphAlgorithms {
     def ranked(joined: DataFrame): DataFrame =
       joined.withColumn("contrib", coalesce(col("contrib"), lit(0)))
         .withColumn("rank", rankOf)
-    var c = contribs(edges.withColumn("rank", init))
+    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    var c = contribs(e.withColumn("rank", init))
     for (i <- 2 to iterations) {
       if ((i - 1) % checkpointInterval == 0) c = c.localCheckpoint(true)
-      c = contribs(ranked(edges.join(c.withColumnRenamed("dst", "src"), Seq("src"), "left")))
+      c = contribs(ranked(e.join(c.withColumnRenamed("dst", "src"), Seq("src"), "left")))
     }
-    ranked(verts.join(c.withColumnRenamed("dst", "id"), Seq("id"), "left"))
-      .select(col("id"), col("rank"))
+    val out = ranked(verts.join(c.withColumnRenamed("dst", "id"), Seq("id"), "left"))
+      .select(col("id"), col("rank")).localCheckpoint(true)
+    e.unpersist()
+    out
   }
 
   /**
@@ -348,21 +416,14 @@ object GraphAlgorithms {
     val outW = e.groupBy("src").agg(sum(col("w")).as("wout"))
     val withW = e.join(outW, "src")
       .select(col("src"), col("dst"), col("w"), col("wout"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
     val base = 1000000L * (alphaDen - alphaNum) / alphaDen
     val ranks = propagateRanks(withW, verts, lit(1000000L),
       expr(s"${base}L + $alphaNum * contrib DIV $alphaDen"),
       expr("rank * w DIV wout"), iterations, checkpointInterval)
-    // materialize before releasing the edge cache (the round-8 leak-free
-    // contract: nothing pinned after the call, no lazy recompute either)
-    val out = ranks
-      .select(col("id"), col("rank").as("rank_micro"),
-        (col("rank").cast("double") / lit(1000000.0)).as("rank"))
-      .localCheckpoint(true)
-    withW.unpersist()
-    out
+    ranks.select(col("id"), col("rank").as("rank_micro"),
+      (col("rank").cast("double") / lit(1000000.0)).as("rank"))
   }
 
   /** (id, <micro> BIGINT, <out> DOUBLE = micro/1e6): the rank replays'
@@ -438,18 +499,13 @@ object GraphAlgorithms {
     }
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
     val ranks = propagateRanks(e, verts, lit(1000000L),
       expr(s"1000000L + $alphaNum * contrib DIV $alphaDen"),
       col("rank"), iterations, checkpointInterval)
-    val out = ranks
-      .select(col("id"), col("rank").as("katz_micro"),
-        (col("rank").cast("double") / lit(1000000.0)).as("katz"))
-      .localCheckpoint(true)
-    e.unpersist()
-    out
+    ranks.select(col("id"), col("rank").as("katz_micro"),
+      (col("rank").cast("double") / lit(1000000.0)).as("katz"))
   }
 
   /**
@@ -2658,7 +2714,7 @@ object GraphAlgorithms {
    * distributed iteration costs several fixed-latency jobs, the
    * dominant term on small graphs.
    *
-   * LAZY contract (like [[pageRank]]): the distributed regime returns an
+   * LAZY contract: the distributed regime returns an
    * unmaterialized plan — consume it once, or `localCheckpoint`/`persist`
    * first when reading it multiple times, else each action recomputes
    * the full 2k-join recurrence. The internal edge persist's lifetime is
@@ -2694,10 +2750,10 @@ object GraphAlgorithms {
     var hub = ids.select(col("id"), lit(1L).as("hub"))
     var auth: DataFrame = null
     // iterations ≤ 6, so the whole recurrence COMPOSES into one lazy
-    // plan over the persisted edge list — exactly the [[pageRank]]
-    // posture (lazy return, identical per-iteration subtrees for
-    // Catalyst's exchange reuse, ContextCleaner reclaims the persist
-    // when the frame becomes unreachable). Eager per-step
+    // plan over the persisted edge list (lazy return, identical
+    // per-iteration subtrees for Catalyst's exchange reuse,
+    // ContextCleaner reclaims the persist when the frame becomes
+    // unreachable). Eager per-step
     // localCheckpoints here measured 36× wall for 10× data at sf1
     // (12 materializations of a 13.5M-edge frame).
     // shuffle_hash on the vertex-sized build sides: the edge exchanges
@@ -2748,21 +2804,23 @@ object GraphAlgorithms {
    * Personalized PageRank: [[pageRank]] with the uniform teleport replaced
    * by a restart onto `sources` — r_{t+1}(v) = (1−α)·[v ∈ S] + α·Σ
    * contribs. The standard random-walk-with-restart relevance score used
-   * for recommendation seeds. Same lazy [[propagateRanks]] loop as
-   * [[pageRank]]; each edge also carries its src's restart indicator.
-   * Sources that are not nodes are ignored.
+   * for recommendation seeds. Sources that are not nodes are ignored.
+   * Same two paths as [[pageRank]]: the driver replay [[localRanks]]
+   * below its cap, above it the [[propagateRanks]] loop, where each edge
+   * also carries its src's restart indicator.
    */
   def personalizedPageRank(g: PropertyGraph, sources: DataFrame,
                            alpha: Double = 0.85, iterations: Int = 5,
-                           checkpointInterval: Int = 6): DataFrame = {
-    val restart = g.nodes.select(col("id"))
-      .join(sources.select(col(sources.columns.head).as("id")).distinct()
-        .withColumn("r", lit(1.0)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("r"), lit(0.0)).as("restart"))
-    propagateRanks(withOutDegree(g, restart), restart, col("restart"),
-      lit(1.0 - alpha) * col("restart") + lit(alpha) * col("contrib"),
-      col("rank") / col("outdeg"), iterations, checkpointInterval)
-  }
+                           checkpointInterval: Int = 6): DataFrame =
+    localRanks(g, Some(sources), alpha, iterations).getOrElse {
+      val restart = g.nodes.select(col("id"))
+        .join(sources.select(col(sources.columns.head).as("id")).distinct()
+          .withColumn("r", lit(1.0)), Seq("id"), "left")
+        .select(col("id"), coalesce(col("r"), lit(0.0)).as("restart"))
+      propagateRanks(withOutDegree(g, restart), restart, col("restart"),
+        lit(1.0 - alpha) * col("restart") + lit(alpha) * col("contrib"),
+        col("rank") / col("outdeg"), iterations, checkpointInterval)
+    }
 
   /** Support (triangle membership count) per canonical edge: triangles
     * enumerated once via the id-ordered 3-join — a<b<c appears exactly
@@ -4098,7 +4156,7 @@ object GraphAlgorithms {
    * orientation halves on v). The per-iteration build side is
    * vertex-sized (dims as columns, so dims never multiplies the row
    * count), hash-hinted under the [[hits]] gate. The whole recurrence
-   * composes lazily like [[pageRank]] — consume once or persist first.
+   * composes lazily like [[hits]] — consume once or persist first.
    *
    * `edgeWeightCol` (the [[balancedPartition]] weighted form): the
    * neighbor sum becomes Σ w(u,v)·N(u) — parallel weighted edges merge

@@ -13,8 +13,10 @@ import graft.model.PropertyGraph
  * katz — on hostile inputs: an empty edge frame, isolated vertices,
  * self-loops, multi-edges, edges whose src or dst is not a node, and
  * 64-bit ids. The two float operators are checked against a plain-Scala
- * power iteration; the two exact-integer operators' local regime against
- * their distributed loop.
+ * power iteration, and with the local regimes switched on against off,
+ * also with duplicate and null node ids and undirected; the two
+ * exact-integer operators' local regime against their distributed loop.
+ * Job guards pin both paths' shape on a cached graph.
  */
 class RankFamilySpec extends SparkSpec {
 
@@ -135,25 +137,57 @@ class RankFamilySpec extends SparkSpec {
     }
   }
 
-  test("pageRank: 3 iterations launch 8 jobs, 4 once the edge list is cached (15 and 11 " +
-      "with a vertex join per iteration)") {
+  /** 20 nodes and 100 undirected edges, cached: the shape of the
+    * GraphCore JSON fixture. Sized by [[PropertyGraph.cache]] (one
+    * partition each), or cached in `parts` partitions, across which the
+    * distributed path has to shuffle. */
+  private def cachedFixture(parts: Option[Int] = None): PropertyGraph = {
     import spark.implicits._
-    // 20 nodes, 100 undirected edges, cached: the shape of the GraphCore
-    // JSON fixture
     val pairs = (0 until 20).flatMap(a => (1 to 5).map(k => (a, (a + k * 3) % 20)))
       .map { case (a, b) => (a.toString, b.toString) }
-    val props = map().cast(org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
-    val g = PropertyGraph((0 until 20).map(_.toString).toDF("id"), PropertyGraph.withEid(
+    val props = map().cast("map<string,string>")
+    val g0 = PropertyGraph((0 until 20).map(_.toString).toDF("id"), PropertyGraph.withEid(
       pairs.toDF("src", "dst").withColumn("type", lit("E")).withColumn("properties", props)),
-      isDirected = false).cache()
+      isDirected = false)
+    val g = parts.fold(g0.cache())(p => g0.copy(nodes = g0.nodes.repartition(p).cache(),
+      edges = g0.edges.repartition(p).cache()))
     g.nodes.count(); g.edges.count()
-    val (first, out) = jobsDuring(GraphAlgorithms.pageRank(g, 0.85, 3).collect())
+    g
+  }
+
+  private def cachedEntries: Int = org.apache.spark.sql.GraftTestAccess.cachedPlans(spark)
+
+  private def release(g: PropertyGraph): Unit = { g.nodes.unpersist(true); g.edges.unpersist(true) }
+
+  test("pageRank and personalizedPageRank on a cached graph: probe collects only, " +
+      "no shuffle, nothing cached") {
+    import spark.implicits._
+    val g = cachedFixture(Some(2))
+    val sources = Seq("1", "4", "99").toDF("id")
+    val before = cachedEntries
+    for ((name, call) <- Seq[(String, () => DataFrame)](
+        "pageRank" -> (() => GraphAlgorithms.pageRank(g, 0.85, 3)),
+        "personalizedPageRank" -> (() => GraphAlgorithms.personalizedPageRank(g, sources, 0.85, 3)))) {
+      val (jobs, out) = jobShapesDuring(call().collect())
+      assert(out.length === 20, name)
+      // the probes, then the collect of the emitted frame
+      val probes = jobs.filterNot(_._1.startsWith("collect at RankFamilySpec"))
+      assert(probes.nonEmpty && probes.forall(_._1.startsWith("collect at GraphAlgorithms")),
+        s"$name: ${jobs.mkString("\n")}")
+      assert(!jobs.exists(_._2), s"$name shuffles: ${jobs.mkString("\n")}")
+      assert(cachedEntries === before, name)
+    }
+    release(g)
+  }
+
+  test("pageRank with the switch off: 3 iterations launch 9 jobs (15 with a vertex join " +
+      "per iteration) and leave nothing cached") {
+    val g = cachedFixture()
+    val before = cachedEntries
+    val (jobs, out) = withLocalRegimesOff(jobsDuring(GraphAlgorithms.pageRank(g, 0.85, 3).collect()))
     assert(out.length === 20)
-    assert(first.size <= 8, first.mkString("\n"))
-    // a second call finds the degree-annotated edge list already cached
-    val (again, _) = jobsDuring(GraphAlgorithms.pageRank(g, 0.85, 3).collect())
-    assert(again.size <= 4, again.mkString("\n"))
-    spark.sharedState.cacheManager.clearCache()
+    assert(jobs.size <= 9, jobs.mkString("\n"))
+    assert(cachedEntries === before)
+    release(g)
   }
 }

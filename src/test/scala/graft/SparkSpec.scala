@@ -24,7 +24,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * that launched it ("collect at X.scala:N"), with its result. A marker
     * job drains the listener queue, which delivers in order. */
   def jobsDuring[T](body: => T): (Seq[String], T) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    val (jobs, result) = jobShapesDuring(body)
+    (jobs.map(_._1), result)
+  }
+
+  /** [[jobsDuring]] with, for each job, whether it ran a shuffle map
+    * stage (a skipped one, whose output a cache or an earlier job already
+    * holds, does not count). */
+  def jobShapesDuring[T](body: => T): (Seq[(String, Boolean)], T) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.SpanSugar._
@@ -33,7 +42,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a Dataset action runs its jobs on another thread, so their own call
     // site is that thread's; the SQL execution keeps the action's
     val sqlSites = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, (String, Seq[Int]))]()
+    val submitted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
@@ -44,8 +54,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         val own = js.stageInfos.sortBy(-_.stageId).headOption.fold("")(_.name)
         val site = Option(js.properties.getProperty("spark.sql.execution.id"))
           .flatMap(id => Option(sqlSites.get(id))).getOrElse(own)
-        jobs.add((Option(js.properties.getProperty("spark.job.tags")).getOrElse(""), site))
+        jobs.add((Option(js.properties.getProperty("spark.job.tags")).getOrElse(""),
+          (site, js.stageInfos.filter(org.apache.spark.sql.GraftTestAccess.isShuffleStage)
+            .map(_.stageId))))
       }
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        submitted.add(s.stageInfo.stageId)
     }
     sc.addSparkListener(listener)
     try {
@@ -56,7 +70,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       eventually(timeout(30.seconds)) {
         assert(jobs.asScala.exists(_._1.contains("jobs-marker")))
       }
-      (jobs.asScala.toSeq.collect { case (tags, site) if tags.contains("jobs-during") => site },
+      (jobs.asScala.toSeq.collect { case (tags, (site, shuffles)) if tags.contains("jobs-during") =>
+          (site, shuffles.exists(submitted.contains)) },
         result)
     } finally sc.removeSparkListener(listener)
   }
