@@ -267,22 +267,18 @@ object GraphAlgorithms {
   /**
    * The driver replay of [[pageRank]] and, given `sources`, of
    * [[personalizedPageRank]] (PageRank is PPR restarting at every node):
-   * r ← (1−α)·restart + α·Σ_{u→v} r(u)/outdeg(u) over primitive arrays,
-   * from r = restart. Two probes gate and load it, each under the 2M
-   * multigraph row cap: the (src, dst) rows of `g.orientedEdges`, then the
-   * node ids followed by the source ids, a union, so neither probe
-   * shuffles. Both cast to the node id type, where a value that does not
-   * cast matches no node, as in the distributed joins.
-   *
-   * Edges whose src is not a node carry no rank, multi-edges and
-   * self-loops count toward the out-degree as [[withOutDegree]]'s window
-   * counts them, and a contribution to a dst that is not a node is
-   * dropped. One row per node row, duplicate and null ids included, as
-   * the final vertex join emits them. None above the cap, with the switch
-   * off, for `iterations < 1`, or when an endpoint or source type does not
-   * cast exactly: the distributed joins compare in the wider type, which
-   * a cast to the node type matches only for one type or two integral
-   * ones.
+   * r ← (1−α)·restart + α·Σ_{u→v} r(u)/outdeg(u) from r = restart. Two
+   * probes gate and load it under the 2M multigraph row cap: the (src,
+   * dst) rows of `g.orientedEdges`, then the node ids followed by the
+   * source ids (a union, so neither probe shuffles), all cast to the node
+   * id type; a value that does not cast matches no node, as in the
+   * distributed joins. Multi-edges and self-loops count toward the
+   * out-degree, as [[withOutDegree]]'s window counts them. One row per
+   * node row, duplicate and null ids included, as the final vertex join
+   * emits them. None above the cap, with the switch off, for
+   * `iterations < 1`, or when an endpoint or source type is neither the
+   * node id type nor integral like it: the joins compare in the wider
+   * type, which the cast matches only then.
    */
   private def localRanks(g: PropertyGraph, sources: Option[DataFrame], alpha: Double,
       iterations: Int): Option[DataFrame] = {
@@ -342,10 +338,10 @@ object GraphAlgorithms {
    * read the attributes, `rankOf` also the non-null `contrib`;
    * `edgeContrib` reads `rank` and the edge columns. Returns (id, rank),
    * materialized: `edges` is persisted for the run and released after it,
-   * so nothing stays pinned and nothing recomputes lazily (dropping the
-   * persist and returning the lazy plan measured 30 jobs against 12 at 10
-   * iterations on a cached 20-node graph). With `iterations < 1` it returns
-   * the initial ranks, unmaterialized.
+   * so nothing stays pinned and nothing recomputes lazily (without the
+   * persist, the lazy plan ran 30 jobs against 28 at 10 iterations on a
+   * cached 20-node graph). With `iterations < 1` it returns the initial
+   * ranks, unmaterialized.
    */
   private def propagateRanks(edges: DataFrame, verts: DataFrame, init: Column,
       rankOf: Column, edgeContrib: Column, iterations: Int,
