@@ -8,9 +8,9 @@
 # perfbench/run.py builds and runs it. Pair i (0-based) runs both sides with
 # seed <first-seed>+i: the parent first in even pairs, the change first in
 # odd ones, so drift of the host's speed falls on both sides alike. Each run
-# gets --seconds $PERFBENCH_SECONDS (default 8, BENCHMARK.json's run_seconds)
-# and --trace 0. Prints each run's end-to-end metrics as it finishes, then
-# q1 / median / q3 of each metric per side. The checkout is not touched.
+# gets --seconds of BENCHMARK.json's run_seconds and --trace 0. Prints each
+# run's end-to-end metrics as it finishes, then q1 / median / q3 of each
+# metric per side. The checkout is not touched.
 set -euo pipefail
 if [ $# -ne 5 ]; then
   echo "usage: $0 <parent-rev> <change-rev> <workload> <pairs> <first-seed>" >&2
@@ -22,7 +22,7 @@ change=$(git rev-parse --verify "$2^{commit}")
 workload=$3
 pairs=$4
 seed0=$5
-seconds=${PERFBENCH_SECONDS:-8}
+seconds=$(python3 -c 'import json; print(json.load(open("BENCHMARK.json"))["run_seconds"])')
 work=${PERFBENCH_AB_DIR:-$(mktemp -d "${TMPDIR:-/tmp}/perfbench_ab.XXXXXX")}
 mkdir -p "$work"
 results="$work/results.jsonl"
