@@ -240,12 +240,11 @@ object GraphAlgorithms {
    *
    * Local regime ([[localRanks]]): a graph whose oriented edge rows and
    * node rows each fit 2M rows replays on the driver, gated and loaded by
-   * two probe collects. Above the cap, or with the switch off, it runs on
-   * [[propagateRanks]]: one join and one aggregate per iteration over the
-   * degree-annotated edge list, the vertex table joined once at the end.
-   * At 3 iterations on a cached 20-node graph that is 9 jobs, the last one
-   * materializing the ranks; a vertex join per iteration ran 15. Either
-   * way the result comes back materialized, with nothing left cached.
+   * two probe collects, and comes back as a local frame. Above the cap, or
+   * with the switch off, it runs on [[propagateRanks]], lazily: one join
+   * and one aggregate per iteration over the degree-annotated edge list,
+   * the vertex table joined once at the end. Collecting it at 3 iterations
+   * on a cached 20-node graph runs 7 jobs and leaves nothing cached.
    */
   def pageRank(g: PropertyGraph, alpha: Double = 0.85, iterations: Int = 10,
                checkpointInterval: Int = 6): DataFrame =
@@ -276,9 +275,11 @@ object GraphAlgorithms {
    * out-degree, as [[withOutDegree]]'s window counts them. One row per
    * node row, duplicate and null ids included, as the final vertex join
    * emits them. None above the cap, with the switch off, for
-   * `iterations < 1`, or when an endpoint or source type is neither the
-   * node id type nor integral like it: the joins compare in the wider
-   * type, which the cast matches only then.
+   * `iterations < 1`, when the node id type is neither a string nor
+   * integral (the interner's boxed equality is the joins' equality only
+   * for those), or when an endpoint or source type is neither the node id
+   * type nor integral like it: the joins compare in the wider type, which
+   * the cast matches only then.
    */
   private def localRanks(g: PropertyGraph, sources: Option[DataFrame], alpha: Double,
       iterations: Int): Option[DataFrame] = {
@@ -287,7 +288,7 @@ object GraphAlgorithms {
     val picked = sources.map(s => s.select(col(s.columns.head).as("id")))
     def integral(t: DataType) = Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
     def exact(t: DataType) = t == idType || (integral(t) && integral(idType))
-    if (iterations < 1 || !stringCastReplayable(idType) ||
+    if (iterations < 1 || !(idType == StringType || integral(idType)) ||
         !(edges.schema ++ picked.map(_.schema.head)).forall(f => exact(f.dataType))) return None
     val vertexRows = picked.foldLeft(g.nodes.select(col("id"), lit(true).as("node")))(
       (v, s) => v.unionByName(s.select(col("id").try_cast(idType).as("id"), lit(false).as("node"))))
@@ -334,14 +335,10 @@ object GraphAlgorithms {
    * iterations so deep runs keep a flat plan.
    *
    * `edges`: (src, dst, per-edge columns, src attributes), only edges
-   * whose src is a vertex. `verts`: (id, attributes). `init` and `rankOf`
-   * read the attributes, `rankOf` also the non-null `contrib`;
-   * `edgeContrib` reads `rank` and the edge columns. Returns (id, rank),
-   * materialized: `edges` is persisted for the run and released after it,
-   * so nothing stays pinned and nothing recomputes lazily (without the
-   * persist, the lazy plan ran 30 jobs against 28 at 10 iterations on a
-   * cached 20-node graph). With `iterations < 1` it returns the initial
-   * ranks, unmaterialized.
+   * whose src is a vertex; a caller that persists it releases it.
+   * `verts`: (id, attributes). `init` and `rankOf` read the attributes,
+   * `rankOf` also the non-null `contrib`; `edgeContrib` reads `rank` and
+   * the edge columns. Returns (id, rank), lazily.
    */
   private def propagateRanks(edges: DataFrame, verts: DataFrame, init: Column,
       rankOf: Column, edgeContrib: Column, iterations: Int,
@@ -352,16 +349,13 @@ object GraphAlgorithms {
     def ranked(joined: DataFrame): DataFrame =
       joined.withColumn("contrib", coalesce(col("contrib"), lit(0)))
         .withColumn("rank", rankOf)
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    var c = contribs(e.withColumn("rank", init))
+    var c = contribs(edges.withColumn("rank", init))
     for (i <- 2 to iterations) {
       if ((i - 1) % checkpointInterval == 0) c = c.localCheckpoint(true)
-      c = contribs(ranked(e.join(c.withColumnRenamed("dst", "src"), Seq("src"), "left")))
+      c = contribs(ranked(edges.join(c.withColumnRenamed("dst", "src"), Seq("src"), "left")))
     }
-    val out = ranked(verts.join(c.withColumnRenamed("dst", "id"), Seq("id"), "left"))
-      .select(col("id"), col("rank")).localCheckpoint(true)
-    e.unpersist()
-    out
+    ranked(verts.join(c.withColumnRenamed("dst", "id"), Seq("id"), "left"))
+      .select(col("id"), col("rank"))
   }
 
   /**
@@ -412,14 +406,21 @@ object GraphAlgorithms {
     val outW = e.groupBy("src").agg(sum(col("w")).as("wout"))
     val withW = e.join(outW, "src")
       .select(col("src"), col("dst"), col("w"), col("wout"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
     val base = 1000000L * (alphaDen - alphaNum) / alphaDen
     val ranks = propagateRanks(withW, verts, lit(1000000L),
       expr(s"${base}L + $alphaNum * contrib DIV $alphaDen"),
       expr("rank * w DIV wout"), iterations, checkpointInterval)
-    ranks.select(col("id"), col("rank").as("rank_micro"),
-      (col("rank").cast("double") / lit(1000000.0)).as("rank"))
+    // materialize before releasing the edge cache (the round-8 leak-free
+    // contract: nothing pinned after the call, no lazy recompute either)
+    val out = ranks
+      .select(col("id"), col("rank").as("rank_micro"),
+        (col("rank").cast("double") / lit(1000000.0)).as("rank"))
+      .localCheckpoint(true)
+    withW.unpersist()
+    out
   }
 
   /** (id, <micro> BIGINT, <out> DOUBLE = micro/1e6): the rank replays'
@@ -495,13 +496,18 @@ object GraphAlgorithms {
     }
     val e = edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val verts = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
     val ranks = propagateRanks(e, verts, lit(1000000L),
       expr(s"1000000L + $alphaNum * contrib DIV $alphaDen"),
       col("rank"), iterations, checkpointInterval)
-    ranks.select(col("id"), col("rank").as("katz_micro"),
-      (col("rank").cast("double") / lit(1000000.0)).as("katz"))
+    val out = ranks
+      .select(col("id"), col("rank").as("katz_micro"),
+        (col("rank").cast("double") / lit(1000000.0)).as("katz"))
+      .localCheckpoint(true)
+    e.unpersist()
+    out
   }
 
   /**
@@ -2704,7 +2710,7 @@ object GraphAlgorithms {
    * keeps the worst case far from Long overflow.
    *
    * Shape: two (join + aggregate) passes over the persisted edge list per
-   * iteration — the [[pageRank]] posture, survives the same scale-up.
+   * iteration.
    * Adaptive (the [[closenessCentrality]]/[[kCore]] pattern): ≤ 10M
    * raw edges run the recurrence driver-side over index arrays — each
    * distributed iteration costs several fixed-latency jobs, the
@@ -2713,8 +2719,8 @@ object GraphAlgorithms {
    * LAZY contract: the distributed regime returns an
    * unmaterialized plan — consume it once, or `localCheckpoint`/`persist`
    * first when reading it multiple times, else each action recomputes
-   * the full 2k-join recurrence. The internal edge persist's lifetime is
-   * GC/ContextCleaner-managed.
+   * the full 2k-join recurrence. The internal edge persist is not
+   * released: the cache manager still holds it after the call.
    */
   def hits(edges: DataFrame, iterations: Int = 3): DataFrame = {
     require(iterations >= 1 && iterations <= 6,

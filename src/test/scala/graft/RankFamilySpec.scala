@@ -180,13 +180,12 @@ class RankFamilySpec extends SparkSpec {
     release(g)
   }
 
-  test("pageRank with the switch off: 3 iterations launch 9 jobs (15 with a vertex join " +
-      "per iteration) and leave nothing cached") {
+  test("pageRank with the switch off: 3 iterations launch 7 jobs and leave nothing cached") {
     val g = cachedFixture()
     val before = cachedEntries
     val (jobs, out) = withLocalRegimesOff(jobsDuring(GraphAlgorithms.pageRank(g, 0.85, 3).collect()))
     assert(out.length === 20)
-    assert(jobs.size <= 9, jobs.mkString("\n"))
+    assert(jobs.size <= 7, jobs.mkString("\n"))
     assert(cachedEntries === before)
     release(g)
   }
