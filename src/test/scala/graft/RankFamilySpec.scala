@@ -14,7 +14,8 @@ import graft.model.PropertyGraph
  * self-loops, multi-edges, edges whose src or dst is not a node, and
  * 64-bit ids. The two float operators are checked against a plain-Scala
  * power iteration, and with the local regimes switched on against off,
- * also with duplicate and null node ids and undirected; the two
+ * also with duplicate and null node ids, undirected and with TINYINT
+ * node ids under BIGINT endpoints; the two
  * exact-integer operators' local regime against their distributed loop.
  * Job guards pin both paths' shape on a cached graph.
  */
@@ -106,7 +107,14 @@ class RankFamilySpec extends SparkSpec {
       "hostile" -> pg(nodes.map(Some(_)), edges, directed = true),
       "duplicate and null node ids" -> pg(hostileIds, edges, directed = true),
       "empty edge frame" -> pg(hostileIds, Seq.empty, directed = true),
-      "undirected with a self-loop" -> pg(nodes.map(Some(_)), edges, directed = false))
+      "undirected with a self-loop" -> pg(nodes.map(Some(_)), edges, directed = false),
+      // BIGINT endpoints under TINYINT node ids: 300 is no node, and a
+      // wrapping cast would turn it into node 44
+      "tinyint node ids" -> {
+        val t = pg(Seq(1L, 2L, 3L, 44L).map(Some(_)),
+          Seq((1L, 2L), (2L, 3L), (3L, 1L), (300L, 44L), (1L, 300L), (2L, 44L)), directed = true)
+        t.copy(nodes = t.nodes.withColumn("id", col("id").cast("tinyint")))
+      })
     // 99 is no node
     val sources = Seq(big + 1, big + 4, big + 99).toDF("id")
     for ((name, g) <- graphs; iterations <- Seq(0, 1, 3, 7)) {
