@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.algorithms.GraphAlgorithms
 import graft.model.PropertyGraph
@@ -21,6 +22,9 @@ import graft.sparql.Sparql
  * edge endpoints. Every gate is one probe collect that also loads the
  * rows ([[GraphAlgorithms.collectRowsGated]]); the job guards pin that
  * shape, with no count job, for the regimes that once counted first.
+ * The near-duplicate pair operators of [[Dedup]] are compared on hostile
+ * corpora (short, null and copied texts; duplicate, null and non-ASCII
+ * ids; INT, BIGINT, STRING and DOUBLE ids).
  */
 class LocalRegimeSwitchSpec extends SparkSpec {
 
@@ -379,5 +383,82 @@ class LocalRegimeSwitchSpec extends SparkSpec {
         jobs.head.startsWith("collect at GraphAlgorithms")) None else Some(s"$name: $jobs")
     }
     assert(shapes.isEmpty, shapes.mkString("\n"))
+  }
+
+  /** Ten 40-word texts, three exact and four one-word-edited copies, two
+    * equal texts and one text shorter than the shingle size, an empty
+    * and a null text: 22 documents. */
+  private val nearDupTexts: Seq[String] = {
+    val rnd = new scala.util.Random(5)
+    val words = Seq.fill(300)(rnd.alphanumeric.filter(_.isLetter)
+      .take(3 + rnd.nextInt(6)).mkString.toLowerCase)
+    val base = Seq.fill(10)(Seq.fill(40)(words(rnd.nextInt(words.size))).mkString(" "))
+    def edit(t: String): String = {
+      val w = t.split(" ")
+      w(rnd.nextInt(w.length)) = "zzz"
+      w.mkString(" ")
+    }
+    base ++ base.take(3) ++ base.slice(3, 7).map(edit) ++ Seq("ab", "ab", "abcd", "", null)
+  }
+
+  /** The (doc_id, text) frame of `nearDupTexts` under the ids `ids`, in
+    * two partitions. */
+  private def docs(idType: DataType, ids: Seq[Any]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      ids.zip(nearDupTexts).map { case (i, t) => Row(i, t) }, 2),
+      StructType(Seq(StructField("doc_id", idType), StructField("text", StringType))))
+
+  private val longIds: Seq[Any] = nearDupTexts.indices.map(i => 5000000000L + i)
+
+  /** Hostile corpora: the first copy of text 0 is document 10; with
+    * non-ASCII ids those two are U+FF21 and U+1F600, which Spark orders
+    * by their UTF-8 bytes (U+FF21 first) and Java by UTF-16 units
+    * (U+1F600 first). */
+  private def nearDupCorpora: Seq[(String, DataFrame)] = Seq(
+    "empty" -> docs(LongType, Nil),
+    "INT ids" -> docs(IntegerType, nearDupTexts.indices.map(i => i + 1)),
+    "BIGINT ids past Int.MaxValue" -> docs(LongType, longIds),
+    "STRING ids" -> docs(StringType, nearDupTexts.indices.map(i => s"d$i")),
+    "non-ASCII STRING ids" -> docs(StringType, nearDupTexts.indices.map {
+      case 0 => "\uFF21"
+      case 10 => "\uD83D\uDE00"
+      case i => s"d$i"
+    }),
+    "DOUBLE ids" -> docs(DoubleType, nearDupTexts.indices.map(i => i + 0.5)),
+    // documents 11 (a copy of text 1) and 12 (of text 2) share one id
+    "duplicate id" -> docs(LongType, longIds.updated(11, longIds(12))),
+    // document 3's edited copy has no id
+    "null id" -> docs(LongType, longIds.updated(13, null)))
+
+  /** The pair operators over a corpus and a benchmark side (documents 10
+    * on of the corpus, the copies, with the same ids and types). */
+  private val nearDupOps: Seq[(String, (DataFrame, DataFrame) => Seq[String])] = Seq(
+    "minhashPairs" -> ((d, _) => rows(Dedup.minhashPairs(d, "text", "doc_id", threshold = 0.8))),
+    "crossMinhashPairs" ->
+      ((d, b) => rows(Dedup.crossMinhashPairs(d, b, "text", "doc_id", threshold = 0.8))),
+    "simhashPairs" -> ((d, _) => rows(Dedup.simhashPairs(d, "text", "doc_id", maxHamming = 3))))
+
+  test("near-duplicate pairs: switch on = off on hostile corpora") {
+    def bench(d: DataFrame): DataFrame = {
+      val ids = d.collect().toSeq.drop(10).map(_.get(0))
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        ids.zip(nearDupTexts.drop(10)).map { case (i, t) => Row(i, t) }, 1), d.schema)
+    }
+    val cases = nearDupCorpora.map { case (name, d) => (name, d, bench(d)) } :+
+      // cross sides whose id types differ: an INT corpus, a BIGINT benchmark
+      (("INT corpus, BIGINT benchmark", docs(IntegerType, nearDupTexts.indices.map(i => i + 1)),
+        bench(docs(LongType, nearDupTexts.indices.map(i => i + 1L)))))
+    val results = for ((input, d, b) <- cases; (name, run) <- nearDupOps) yield {
+      val on = scala.util.Try(run(d, b))
+      val off = scala.util.Try(withLocalRegimesOff(run(d, b)))
+      (input, name, on, off)
+    }
+    val differ = results.collect { case (input, name, on, off) if on != off =>
+      s"$name on $input: on $on, off $off" }
+    assert(differ.isEmpty, differ.mkString("\n"))
+    // every operator finds pairs on a plain corpus: exact copies at least
+    results.filter(_._1 == "BIGINT ids past Int.MaxValue").foreach { case (_, name, on, _) =>
+      assert(on.get.length > 4, name)
+    }
   }
 }
