@@ -21,7 +21,10 @@
 #     per-replay ArrayBuffer.empty[Int] adjacency in GraphAlgorithms.scala
 #     (the replays read LocalGraph's CSR adjacencies), or a reference to
 #     the retired InternedEdges; a java.util.ArrayList in Sparql.scala
-#     (the Kleene replay emits through LocalGraph.frame too).
+#     (the Kleene replay emits through LocalGraph.frame too); a
+#     parallelize( or createDataFrame( in pipeline/Dedup.scala (the
+#     near-duplicate replays and the hyperplane matrix emit through
+#     LocalGraph.frame).
 #
 #   dev/check_local_gate.sh
 set -euo pipefail
@@ -121,6 +124,13 @@ buffers=$(grep -n 'ArrayBuffer\.empty\[Int\]' "$algs/GraphAlgorithms.scala" || t
 if [ -n "$buffers" ]; then
   echo "per-replay ArrayBuffer.empty[Int] adjacency (read LocalGraph's CSR):"
   echo "$buffers"
+  fail=1
+fi
+
+dedup=$(grep -nE 'parallelize\(|createDataFrame\(' "$src/graft/pipeline/Dedup.scala" || true)
+if [ -n "$dedup" ]; then
+  echo "parallelize( or createDataFrame( in Dedup.scala (emit through LocalGraph.frame):"
+  echo "$dedup"
   fail=1
 fi
 

@@ -156,9 +156,18 @@ case class SortedJaccard(left: Expression, right: Expression)
   override def prettyName: String = "sorted_jaccard"
   override def dataType: DataType = DoubleType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData].toLongArray()
-    val y = b.asInstanceOf[ArrayData].toLongArray()
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    SortedJaccard.of(a.asInstanceOf[ArrayData].toLongArray(), b.asInstanceOf[ArrayData].toLongArray())
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedJaccard =
+    copy(left = l, right = r)
+}
+
+object SortedJaccard {
+  /** |x∩y| / |x∪y| of two ascending, distinct arrays by one sorted merge:
+    * the expression's kernel, shared with the driver replay of
+    * [[graft.pipeline.Dedup.minhashPairs]]. */
+  def of(x: Array[Long], y: Array[Long]): Double = {
     var inter = 0
     var i = 0
     var j = 0
@@ -169,7 +178,4 @@ case class SortedJaccard(left: Expression, right: Expression)
     }
     inter.toDouble / (x.length + y.length - inter).toDouble
   }
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedJaccard =
-    copy(left = l, right = r)
 }

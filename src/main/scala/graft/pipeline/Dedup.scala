@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.algorithms.{Fixpoint, GraphAlgorithms}
+import graft.algorithms.{Fixpoint, GraphAlgorithms, LocalGraph}
+import graft.functions.SortedJaccard
 
 /**
  * Deduplication operators for training-data pipelines, exact → fuzzy:
@@ -176,6 +177,142 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select(col("idA"), col("idB"), round(col("jaccard"), 6).as("jaccard"))
 
+  // ----- driver replay of the pair operators ------------------------------
+
+  /** Caps of the driver replay of [[minhashPairs]], [[crossMinhashPairs]]
+    * and [[simhashPairs]]: the signature longs its probe loads (100 MB),
+    * the candidate pairs its buckets may hold (a hot bucket is quadratic)
+    * and the shingle-set elements it loads to verify them (100 MB). */
+  private val SigLongs = 12500000L
+  private val PairCap = 10000000L
+  private val SetElems = 12500000L
+
+  /** Whether the replay keys documents by ids of type `t`: integral or
+    * (UTF8_BINARY) string ids, whose boxed equality is Spark's. */
+  private def replayable(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => t == StringType
+  }
+
+  /** Whether the ids in column `c` of `rows` are unique and non-null. */
+  private def distinctIds(rows: Array[Row], c: Int): Boolean = {
+    val seen = new java.util.HashSet[Any]()
+    rows.forall(r => r.get(c) != null && seen.add(r.get(c)))
+  }
+
+  /** The document index pairs (x < y) equal on some band, each once, from
+    * its first equal band: `key(b, i)` buckets document i in band b and
+    * `equal(b, x, y)` compares two documents on it. With `split`, only
+    * pairs across it (x < split ≤ y) count — a cross join of the corpus
+    * `0 until split` with the benchmark after it. A pair is kept when
+    * `keep(x, y)`. None once the buckets hold more than [[PairCap]]
+    * pairs, counted before any is verified. */
+  private def bandPairs(n: Int, bands: Int, split: Option[Int], key: (Int, Int) => Long,
+      equal: (Int, Int, Int) => Boolean)(keep: (Int, Int) => Boolean): Option[Array[(Int, Int)]] = {
+    val out = Array.newBuilder[(Int, Int)]
+    var held = 0L
+    for (b <- 0 until bands) {
+      val buckets = (0 until n).groupBy(key(b, _)).values.filter(_.size > 1)
+      held += buckets.iterator.map { g =>
+        split.fold(g.size.toLong * (g.size - 1) / 2) { s =>
+          val a = g.count(_ < s).toLong
+          a * (g.size - a)
+        }
+      }.sum
+      if (held > PairCap) return None
+      for (g <- buckets; i <- g.indices; j <- i + 1 until g.size) {
+        val (x, y) = (g(i), g(j))
+        if (split.forall(s => x < s && y >= s) && equal(b, x, y) &&
+            !(0 until b).exists(equal(_, x, y)) && keep(x, y)) out += ((x, y))
+      }
+    }
+    Some(out.result())
+  }
+
+  /** The (idA, idB, `name`) frame of the index `pairs` over the document
+    * `ids`, each pair oriented idA < idB when `self`, in id order — Spark's
+    * order ([[LocalGraph.compareIds]]): strings by their UTF-8 bytes, where
+    * Java's `compareTo` would order by UTF-16 units and flip a pair such
+    * as U+FF21 and U+1F600. */
+  private def pairFrame(spark: org.apache.spark.sql.SparkSession, ids: Array[Any], idType: DataType,
+      self: Boolean, pairs: Seq[((Int, Int), Any)], name: String, t: DataType): DataFrame = {
+    val rows = pairs.map { case ((x, y), v) =>
+      if (self && LocalGraph.compareIds(ids(x), ids(y)) > 0) (ids(y), ids(x), v) else (ids(x), ids(y), v)
+    }.sortWith { case ((a1, b1, _), (a2, b2, _)) =>
+      val c = LocalGraph.compareIds(a1, a2)
+      c < 0 || c == 0 && LocalGraph.compareIds(b1, b2) < 0
+    }
+    LocalGraph.frame(spark, Seq("idA" -> idType, "idB" -> idType, name -> t),
+      rows.map { case (a, b, v) => Row(a, b, v) })
+  }
+
+  /** The driver replay of [[minhashPairs]] (`bench` None) and of
+    * [[crossMinhashPairs]]; None where it does not apply (their
+    * scaladoc). One probe collect loads (side, id, signature, bound) of
+    * both sides' documents with a signature, bound = char_length − k + 1
+    * being an upper bound on the size of the document's shingle set. A
+    * pair is a candidate when some band's signature slice is equal and it
+    * passes the agreement prefilter; one more collect loads the shingle
+    * sets of the candidate documents, computed by the executors, and the
+    * exact Jaccard is filtered unrounded, then rounded HALF_UP to 6
+    * places as Spark's `round` does. */
+  private def localMinhashPairs(corpus: DataFrame, bench: Option[DataFrame], textCol: String,
+      idCol: String, shingleSize: Int, numHashes: Int, bands: Int, threshold: Double,
+      prefilterMargin: Double): Option[DataFrame] = {
+    val sides = corpus +: bench.toSeq
+    val idType = corpus.schema(idCol).dataType
+    if (!replayable(idType) || sides.exists(_.schema(idCol).dataType != idType)) return None
+    val probe = sides.zipWithIndex.map { case (d, side) =>
+      d.select(lit(side).as("side"), col(idCol).as("id"),
+          minhashSigCol(textCol, shingleSize, numHashes).as("sig"),
+          (char_length(normalized(textCol)) - shingleSize + 1).as("bound"))
+        .where(col("sig").isNotNull)
+    }.reduce(_ unionByName _)
+    val docs = GraphAlgorithms.collectRowsGated(probe, SigLongs / numHashes)
+      .getOrElse(return None).sortBy(_.getInt(0))
+    val split = bench.map(_ => docs.count(_.getInt(0) == 0))
+    if (sides.indices.exists(side => !distinctIds(docs.filter(_.getInt(0) == side), 1)))
+      return None
+    val n = docs.length
+    val sig = new Array[Long](n * numHashes)
+    for (i <- 0 until n) {
+      val s = docs(i).getSeq[Long](2)
+      for (h <- 0 until numHashes) sig(i * numHashes + h) = s(h)
+    }
+    val rows = numHashes / bands
+    def equalOn(from: Int, until: Int, x: Int, y: Int): Int =
+      (from until until).count(h => sig(x * numHashes + h) == sig(y * numHashes + h))
+    val minAgree = math.ceil((threshold - prefilterMargin) * numHashes)
+    val cand = bandPairs(n, bands, split,
+      (b, i) => (b * rows until (b + 1) * rows).foldLeft(17L)((a, h) => a * 31 + sig(i * numHashes + h)),
+      (b, x, y) => equalOn(b * rows, (b + 1) * rows, x, y) == rows)(
+      (x, y) => equalOn(0, numHashes, x, y) >= minAgree).getOrElse(return None)
+    val members = cand.flatMap { case (x, y) => Seq(x, y) }.distinct
+    if (members.iterator.map(docs(_).getInt(3).toLong).sum > SetElems) return None
+    val ids = docs.map(_.get(1))
+    val sets: Map[(Int, Any), Array[Long]] =
+      if (members.isEmpty) Map.empty
+      else sides.zipWithIndex.flatMap { case (d, side) =>
+        val want = members.filter(docs(_).getInt(0) == side).map(ids)
+        if (want.isEmpty) None
+        else Some(d.where(col(idCol).isin(want.toIndexedSeq: _*))
+          .select(lit(side).as("side"), col(idCol).as("id"),
+            graft.functions.shingleSet(normalized(textCol), shingleSize).as("set"))
+          .where(col("set").isNotNull))
+      }.reduce(_ unionByName _).collect()
+        .map(r => (r.getInt(0), r.get(1)) -> r.getSeq[Long](2).toArray).toMap
+    val verified = cand.toSeq.flatMap { case (x, y) =>
+      for {
+        a <- sets.get((docs(x).getInt(0), ids(x)))
+        b <- sets.get((docs(y).getInt(0), ids(y)))
+        j = SortedJaccard.of(a, b) if j >= threshold
+      } yield ((x, y), java.math.BigDecimal.valueOf(j)
+        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue: Any)
+    }
+    Some(pairFrame(corpus.sparkSession, ids, idType, bench.isEmpty, verified,
+      "jaccard", DoubleType))
+  }
+
   /**
    * Near-duplicate pairs via banded LSH over MinHash signatures. Returns
    * (idA, idB, jaccard) with idA < idB and exact shingle-set Jaccard ≥
@@ -198,6 +335,27 @@ object Dedup {
    * persisted signatures and candidates, whose lifecycle the caller then
    * owns (clear with `spark.sharedState.cacheManager.clearCache()` or
    * accept the leak).
+   *
+   * Adaptive execution: with `eager = true`, one probe collect of the
+   * narrow (id, signature, shingle-set bound) projection gates and loads
+   * the documents through [[GraphAlgorithms.collectRowsGated]], before any
+   * shuffle, and the pairs replay on the driver ([[localMinhashPairs]]):
+   * the same candidates (a band's slice equal, the agreement prefilter),
+   * then one more collect of the candidate documents' shingle sets,
+   * computed by the executors, and the same exact Jaccard and rounding.
+   * The result is one local frame ([[LocalGraph.frame]]) with the id
+   * column's own type. On a one-partition corpus of 500 documents the
+   * call and a collect of its result run 3 jobs, against 9 on the
+   * distributed path. Fixed caps bound the driver's memory: 12.5M signature longs
+   * (~100 MB; 195,312 documents at 64 hashes), 10M candidate pairs in the
+   * buckets (a hot bucket is quadratic) and 12.5M shingle-set elements,
+   * checked on the probe's per-document bound before the sets load. It
+   * falls back to the distributed path, unchanged, with
+   * `spark.graft.localRegimes=off`, with `eager = false`, on a null or
+   * duplicated id among the documents with a signature, on an id type
+   * that is neither integral nor (UTF8_BINARY) string, and when any cap is
+   * exceeded. Ids are ordered as Spark orders them
+   * ([[LocalGraph.compareIds]]; strings by their UTF-8 bytes).
    */
   def minhashPairs(
       df: DataFrame, textCol: String, idCol: String,
@@ -205,6 +363,8 @@ object Dedup {
       threshold: Double = 0.8, prefilterMargin: Double = 0.25,
       eager: Boolean = true): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
+    if (eager) localMinhashPairs(df, None, textCol, idCol, shingleSize, numHashes, bands,
+      threshold, prefilterMargin).foreach(return _)
     // the signatures feed both sides of the bucket join and of the
     // prefilter, the candidates both verify sides: each is materialized
     // once (relying on runtime exchange reuse instead was observed NOT to
@@ -244,12 +404,23 @@ object Dedup {
    * training docs), the bucket join shuffles only (band, bucket, id), and
    * verification builds shingle sets for candidate documents only.
    * Everything is eagerly checkpointed — no cache blocks outlive the call.
+   *
+   * Adaptive execution: [[minhashPairs]]' driver replay, with one probe
+   * collect over the union of both sides (a side tag, id, signature and
+   * shingle-set bound) through [[GraphAlgorithms.collectRowsGated]], pairs
+   * across the sides only, and one collect of both sides' candidate
+   * shingle sets. Same caps (the signature longs of both sides together)
+   * and the same fallbacks, plus sides whose id types differ; a null or
+   * duplicated id falls back when it is within one side (one id on both
+   * sides is two documents, as on the distributed path).
    */
   def crossMinhashPairs(
       corpus: DataFrame, bench: DataFrame, textCol: String, idCol: String,
       shingleSize: Int = 5, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.8, prefilterMargin: Double = 0.25): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
+    localMinhashPairs(corpus, Some(bench), textCol, idCol, shingleSize, numHashes, bands,
+      threshold, prefilterMargin).foreach(return _)
     def sigsOf(df: DataFrame): DataFrame =
       sigTable(df, textCol, idCol, shingleSize, numHashes).localCheckpoint(true)
     val (cand, n) = Fixpoint.materialize(lshCandidates(sigsOf(corpus), sigsOf(bench),
@@ -425,9 +596,27 @@ object Dedup {
     * 16-bit chunks (any exact chunk match → candidate, guaranteeing recall
     * for Hamming distance ≤ 3 within wrong-chunks), then verify
     * bit_count(xor) ≤ maxHamming. `verifiable = false` switches to the
-    * xxhash64 production token hash (see [[simhashSigs]]). */
+    * xxhash64 production token hash (see [[simhashSigs]]).
+    *
+    * Adaptive execution: with `verifiable = true`, one probe collect of
+    * the narrow (id, sig) projection gates and loads the signatures through
+    * [[GraphAlgorithms.collectRowsGated]], before any shuffle, and the
+    * pairs replay on the driver ([[localSimhashPairs]]): the four chunks
+    * bucket the signatures and bitCount(xor) ≤ maxHamming verifies each
+    * pair, emitted as one local frame ([[LocalGraph.frame]]) with the id
+    * column's own type: 2 jobs with a collect of the result, against 3
+    * on the distributed path (a one-partition corpus of 500 documents). Caps:
+    * 195,312 signatures (as many documents as [[minhashPairs]]' replay
+    * loads at 64 hashes) and 10M candidate pairs in the buckets. It falls
+    * back to the distributed path, unchanged, with
+    * `spark.graft.localRegimes=off`, with `verifiable = false` (its
+    * signatures come out of an aggregate, a shuffle), on a null or
+    * duplicated id among the documents with a signature, on an id type
+    * that is neither integral nor (UTF8_BINARY) string, and when a cap is
+    * exceeded. */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String, maxHamming: Int = 3,
                    verifiable: Boolean = true): DataFrame = {
+    if (verifiable) localSimhashPairs(df, textCol, idCol, maxHamming).foreach(return _)
     val sigs = simhashSigs(df, textCol, idCol, verifiable)
     val chunked = sigs.select(col("id"), col("sig"),
       explode(transform(sequence(lit(0), lit(3)),
@@ -441,6 +630,26 @@ object Dedup {
       .withColumn("hamming", call_function("bit_count", col("sigA").bitwiseXOR(col("sigB"))))
       .where(col("hamming") <= maxHamming)
       .select(col("idA"), col("idB"), col("hamming"))
+  }
+
+  /** The driver replay of [[simhashPairs]]; None where it does not apply
+    * (its scaladoc). One probe collect loads the (id, sig) rows, the four
+    * 16-bit chunks bucket them, and bitCount(xor) ≤ maxHamming verifies
+    * each pair. */
+  private def localSimhashPairs(df: DataFrame, textCol: String, idCol: String,
+      maxHamming: Int): Option[DataFrame] = {
+    val idType = df.schema(idCol).dataType
+    if (!replayable(idType)) return None
+    val docs = GraphAlgorithms.collectRowsGated(simhashSigs(df, textCol, idCol), SigLongs / 64)
+      .getOrElse(return None)
+    if (!distinctIds(docs, 0)) return None
+    val sig = docs.map(_.getLong(1))
+    def chunk(c: Int, i: Int): Long = (sig(i) >>> (16 * c)) & 0xFFFFL
+    def hamming(x: Int, y: Int): Int = java.lang.Long.bitCount(sig(x) ^ sig(y))
+    val pairs = bandPairs(docs.length, 4, None, chunk, (c, x, y) => chunk(c, x) == chunk(c, y))(
+      hamming(_, _) <= maxHamming).getOrElse(return None)
+    Some(pairFrame(df.sparkSession, docs.map(_.get(0)), idType, self = true,
+      pairs.toSeq.map { case (x, y) => ((x, y), hamming(x, y): Any) }, "hamming", IntegerType))
   }
 
   // ----- embedding near-dup ----------------------------------------------
@@ -525,14 +734,9 @@ object Dedup {
     // aggregate(zip_with(vec, literal)) expressions per row — higher-order
     // functions don't codegen, costing ~22 ms/row and >1 MiB task
     // binaries. Identical planes, identical buckets, same candidates.
-    val spark = df.sparkSession
-    val planeSchema = StructType(StructField("pos", IntegerType, nullable = false) +:
-      (0 until planes).map(p => StructField(s"sg$p", DoubleType, nullable = false)))
-    val planeRows = (0 until dim).map { d =>
-      org.apache.spark.sql.Row.fromSeq(d +: (0 until planes).map(p => signs(p)(d)))
-    }
-    val planesDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(planeRows, 1), planeSchema)
+    val planesDf = LocalGraph.frame(df.sparkSession,
+      ("pos" -> IntegerType) +: (0 until planes).map(p => s"sg$p" -> DoubleType),
+      (0 until dim).map(d => Row.fromSeq(d +: (0 until planes).map(p => signs(p)(d)))))
 
     val exploded = clean.select(col(idCol).as("id"), posexplode(v).as(Seq("pos", "x")))
     val dotCols = (0 until planes).map(p => sum(col("x") * col(s"sg$p")).as(s"dot$p"))

@@ -11,7 +11,8 @@ import graft.pipeline.Dedup
  * `minhashPairs` / `crossMinhashPairs` against a plain-Scala replay of the
  * LSH contract (a band collides when its signature slice is equal, the
  * agreement prefilter, exact shingle-set Jaccard rounded to 6 places) on
- * planted corpora.
+ * planted corpora, with the switch on (the driver replay) and off; and
+ * the job shapes of both paths.
  */
 class MinhashParitySpec extends SparkSpec {
 
@@ -107,6 +108,8 @@ class MinhashParitySpec extends SparkSpec {
       val want = reference(corpus, None, t)
       assert(want.nonEmpty, name)
       assert(triples(Dedup.minhashPairs(corpus, "text", "doc_id", threshold = t)) === want, name)
+      assert(withLocalRegimesOff(triples(Dedup.minhashPairs(corpus, "text", "doc_id",
+        threshold = t))) === want, s"$name, switch off")
       assert(triples(Dedup.minhashPairs(corpus, "text", "doc_id", threshold = t, eager = false)) === want,
         s"$name, lazy")
       spark.sharedState.cacheManager.clearCache()
@@ -120,15 +123,40 @@ class MinhashParitySpec extends SparkSpec {
       assert(want.nonEmpty)
       assert(triples(Dedup.crossMinhashPairs(corpus, bench, "text", "doc_id", threshold = t)) === want,
         s"cross, threshold $t")
+      assert(withLocalRegimesOff(triples(Dedup.crossMinhashPairs(corpus, bench, "text", "doc_id",
+        threshold = t))) === want, s"cross, threshold $t, switch off")
     }
   }
 
   test("eager minhashPairs launches at most 10 jobs (18 with a posting-join verify)") {
     val corpus = docs.orderBy("doc_id").limit(40).unionByName(edited(12, 1000000))
       .localCheckpoint(true)
-    val (jobs, out) = jobsDuring(Dedup.minhashPairs(corpus, "text", "doc_id", threshold = 0.8).collect())
+    val (jobs, out) = withLocalRegimesOff(jobsDuring(
+      Dedup.minhashPairs(corpus, "text", "doc_id", threshold = 0.8).collect()))
     assert(out.nonEmpty)
     assert(jobs.size <= 10, jobs.mkString("\n"))
+  }
+
+  test("with the switch on, minhashPairs launches at most 3 jobs and simhashPairs 2, " +
+      "no shuffle, nothing cached") {
+    import org.apache.spark.sql.GraftTestAccess.cachedPlans
+    // two partitions: Spark's limit runs the probe collect as one job per
+    // partition it scans (the other gates' guards allow that too), so the
+    // probe counts as one collect action, all its jobs at one call site
+    val corpus = docs.orderBy("doc_id").limit(40).unionByName(edited(12, 1000000))
+      .localCheckpoint(true)
+    val calls: Seq[(String, Int, () => Array[org.apache.spark.sql.Row])] = Seq(
+      ("minhashPairs", 3, () => Dedup.minhashPairs(corpus, "text", "doc_id", threshold = 0.8).collect()),
+      ("simhashPairs", 2, () => Dedup.simhashPairs(corpus, "text", "doc_id", maxHamming = 3).collect()))
+    for ((name, bound, call) <- calls) {
+      val cached = cachedPlans(spark)
+      val (jobs, out) = jobShapesDuring(call())
+      val (probe, rest) = jobs.partition(_._1.startsWith("collect at GraphAlgorithms"))
+      assert(out.nonEmpty, name)
+      assert(probe.nonEmpty && probe.map(_._1).distinct.size == 1 && rest.size <= bound - 1 &&
+        jobs.forall(!_._2), s"$name:\n${jobs.mkString("\n")}")
+      assert(cachedPlans(spark) === cached, name)
+    }
   }
 
   test("the candidate-document semi-join shuffles no document text") {
@@ -151,7 +179,8 @@ class MinhashParitySpec extends SparkSpec {
       override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try {
+    // the distributed path: the driver replay runs no semi-join
+    try withLocalRegimesOff {
       assert(Dedup.minhashPairs(corpus, "text", "doc_id", threshold = 0.8).count() > 0)
       assert(Dedup.crossMinhashPairs(corpus, bench, "text", "doc_id", threshold = 0.8)
         .count() > 0)
