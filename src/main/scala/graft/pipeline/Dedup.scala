@@ -230,21 +230,17 @@ object Dedup {
   }
 
   /** The (idA, idB, `name`) frame of the index `pairs` over the document
-    * `ids`, each pair oriented idA < idB when `self`, in id order — Spark's
-    * order ([[LocalGraph.compareIds]]): strings by their UTF-8 bytes, where
+    * `ids`, each pair oriented idA < idB when `self` in Spark's order
+    * ([[LocalGraph.compareIds]]): strings by their UTF-8 bytes, where
     * Java's `compareTo` would order by UTF-16 units and flip a pair such
     * as U+FF21 and U+1F600. */
   private def pairFrame(spark: org.apache.spark.sql.SparkSession, ids: Array[Any], idType: DataType,
-      self: Boolean, pairs: Seq[((Int, Int), Any)], name: String, t: DataType): DataFrame = {
-    val rows = pairs.map { case ((x, y), v) =>
-      if (self && LocalGraph.compareIds(ids(x), ids(y)) > 0) (ids(y), ids(x), v) else (ids(x), ids(y), v)
-    }.sortWith { case ((a1, b1, _), (a2, b2, _)) =>
-      val c = LocalGraph.compareIds(a1, a2)
-      c < 0 || c == 0 && LocalGraph.compareIds(b1, b2) < 0
-    }
+      self: Boolean, pairs: Seq[((Int, Int), Any)], name: String, t: DataType): DataFrame =
     LocalGraph.frame(spark, Seq("idA" -> idType, "idB" -> idType, name -> t),
-      rows.map { case (a, b, v) => Row(a, b, v) })
-  }
+      pairs.map { case ((x, y), v) =>
+        if (self && LocalGraph.compareIds(ids(x), ids(y)) > 0) Row(ids(y), ids(x), v)
+        else Row(ids(x), ids(y), v)
+      })
 
   /** The driver replay of [[minhashPairs]] (`bench` None) and of
     * [[crossMinhashPairs]]; None where it does not apply (their

@@ -17,7 +17,8 @@ import graft.model.PropertyGraph
  * also with duplicate and null node ids, undirected and with TINYINT
  * node ids under BIGINT endpoints; the two
  * exact-integer operators' local regime against their distributed loop.
- * Job guards pin both paths' shape on a cached graph.
+ * Job guards pin both paths' shape on a cached graph, and that the
+ * switch-off weightedPageRank and katz stay lazy and leave nothing cached.
  */
 class RankFamilySpec extends SparkSpec {
 
@@ -195,6 +196,24 @@ class RankFamilySpec extends SparkSpec {
     assert(out.length === 20)
     assert(jobs.size <= 7, jobs.mkString("\n"))
     assert(cachedEntries === before)
+    release(g)
+  }
+
+  test("weightedPageRank and katz with the switch off stay lazy and leave nothing cached") {
+    val g = cachedFixture()
+    val e = g.edges.select(col("src"), col("dst"), lit(2L).as("weight"))
+    val before = cachedEntries
+    withLocalRegimesOff {
+      for ((name, call) <- Seq[(String, () => DataFrame)](
+          "weightedPageRank" -> (() => GraphAlgorithms.weightedPageRank(e, 85, 100, 3)),
+          "katz" -> (() => GraphAlgorithms.katz(e.select(col("src"), col("dst")), iterations = 3)))) {
+        // 3 iterations, under the checkpoint interval: no job until read
+        val (jobs, ranks) = jobsDuring(call())
+        assert(jobs.isEmpty, s"$name: ${jobs.mkString("\n")}")
+        assert(ranks.collect().length === 20, name)
+        assert(cachedEntries === before, name)
+      }
+    }
     release(g)
   }
 }
